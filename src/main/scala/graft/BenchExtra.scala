@@ -13,11 +13,12 @@ import graft.spark.PagesGen
   * Modes (args(0)):
   *  - "queries" [names...]: noop-time each named SparkEntry query (default:
   *    the Bench headline set), cold + 2 warm reps, one JSON line each.
-  *  - "corpus": decompose corpus_build (payload flatMap alone -> noop, then
-  *    + repartition write like the contract bench does).
   *  - "micro": single-threaded per-variant microbench of payload BUILD and
   *    kernel EXTRACT cost (the two sides of every extraction query).
   *  - "plan" <name> <outFile>: write .explain("formatted") of a query.
+  *
+  * The end-to-end production-path profile (stage and kernel-layer tables)
+  * lives in perfbench/.
   */
 object BenchExtra {
 
@@ -68,25 +69,6 @@ object BenchExtra {
           }
         }
 
-      case "corpus" =>
-        val replicas = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPLICAS", "20").toInt
-        val tmp = java.nio.file.Files.createTempDirectory(
-          java.nio.file.Paths.get("/dev/shm"), "graft-bx").toString
-        sys.addShutdownHook {
-          graft.spark.TableIO.deleteRecursively(new java.io.File(tmp))
-        }
-        spark.sparkContext.setJobDescription("bx:corpus flatMap -> noop")
-        val tGen = timed(noop(PagesGen.pagesBench(spark, sfDir, replicas).toDF()))
-        val tGen2 = timed(noop(PagesGen.pagesBench(spark, sfDir, replicas).toDF()))
-        spark.sparkContext.setJobDescription("bx:corpus full (repartition+write)")
-        val tFull = timed {
-          PagesGen.pagesBench(spark, sfDir, replicas).toDF()
-            .repartition(cpus).write.parquet(s"$tmp/pages")
-        }
-        val bytes = Option(new java.io.File(s"$tmp/pages").listFiles())
-          .map(_.filter(_.getName.endsWith(".parquet")).map(_.length()).sum).getOrElse(0L)
-        println(f"""{"corpus_gen_noop_cold":$tGen%.3f,"corpus_gen_noop_warm":$tGen2%.3f,"corpus_full_write":$tFull%.3f,"corpus_bytes":$bytes}""")
-
       case "micro" =>
         import spark.implicits._
         // One local (driver-side) pass: per-variant build + extract cost over
@@ -136,171 +118,9 @@ object BenchExtra {
           println(f"""{"micro":"rot_v$variant","n":${sub.length},"build_s":$tBuild%.3f,"extract_s":$tExtract%.3f,"rewrite_extract_s":$tRewrite%.3f}""")
         }
 
-      case "corpusparts" =>
-        import spark.implicits._
-        val replicas = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPLICAS", "20").toInt
-        val ds = PagesGen.pagesBench(spark, sfDir, replicas)
-        // warm
-        ds.toDF().write.format("noop").mode("overwrite").save()
-        val t0 = System.nanoTime()
-        val stats = ds.mapPartitions { it =>
-          val s = System.currentTimeMillis()
-          var n = 0L
-          var bytes = 0L
-          while (it.hasNext) { val r = it.next(); n += 1; bytes += r.html.length }
-          Iterator.single((org.apache.spark.TaskContext.getPartitionId(), n, bytes,
-            System.currentTimeMillis() - s))
-        }.collect()
-        val wall = (System.nanoTime() - t0) / 1e9
-        val times = stats.map(_._4)
-        println(f"""{"corpusparts_wall":$wall%.3f,"parts":${stats.length},"rows":${stats.map(_._2).sum},"bytes":${stats.map(_._3).sum},"task_ms_min":${times.min},"task_ms_med":${times.sorted.apply(times.length / 2)},"task_ms_max":${times.max},"task_ms_sum":${times.sum}}""")
-
-      case "kernel" =>
-        // Single-threaded phase profile of the extraction kernel over the
-        // bench-corpus payload shapes, with JIT warmup: where does a
-        // per-document microsecond go (open/xref vs content lex vs filters)?
-        import spark.implicits._
-        val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-          .select("doc_id", "text").as[(Long, String)].collect().take(1000)
-        for (variant <- 0 until 5) {
-          val built = docs.map { case (id, text) =>
-            val lines = (0 until 40).map(k => s"[p$k r0 d$id] $text")
-            if (variant == 4) graft.fixtures.PdfFixtures.htmlMultiPara(lines)
-            else graft.fixtures.PdfFixtures.multiLinePdf(lines, variant)
-          }
-          // warmup x2 then measure
-          built.foreach(p => Extract(p)); built.foreach(p => Extract(p))
-          val tAll = timed(built.foreach(p => Extract(p)))
-          var tOpen = 0.0
-          var tContent = 0.0
-          var tExtract = 0.0
-          if (variant != 4) {
-            val t0 = System.nanoTime()
-            val opened = built.map(graft.pdf.PdfDocument.open(_))
-            val t1 = System.nanoTime()
-            val contents = opened.map(d => d.allContentStreams(d.pages.head))
-            val t2 = System.nanoTime()
-            opened.zip(contents).foreach { case (d, c) =>
-              graft.pdf.TextExtractor.extractText(c, d.pages.head.resources)
-            }
-            val t3 = System.nanoTime()
-            tOpen = (t1 - t0) / 1e9; tContent = (t2 - t1) / 1e9; tExtract = (t3 - t2) / 1e9
-          }
-          val bytes = built.map(_.length.toLong).sum
-          println(f"""{"kernel":"v$variant","n":${built.length},"extract_all_s":$tAll%.3f,"open_s":$tOpen%.3f,"content_s":$tContent%.3f,"extracttext_s":$tExtract%.3f,"bytes":$bytes}""")
-        }
-        // html split: decode vs block extraction vs full Extract
-        {
-          val payloads = docs.map { case (id, text) =>
-            graft.fixtures.PdfFixtures.htmlMultiPara(
-              (0 until 40).map(k => s"[p$k r0 d$id] $text"))
-          }
-          def rep(f: => Unit): Double = { f; f; timed(f) }
-          val tDecode = rep { payloads.foreach(p => graft.html.HtmlExtract.extract(p)) }
-          val tFull = rep { payloads.foreach(p => Extract(p)) }
-          println(f"""{"kernel":"htmlsplit","htmlextract_s":$tDecode%.3f,"full_s":$tFull%.3f}""")
-        }
-
-        // open split: file parser (xref+trailer) vs full model load (v0)
-        {
-          val payloads = docs.map { case (id, text) =>
-            graft.fixtures.PdfFixtures.multiLinePdf(
-              (0 until 40).map(k => s"[p$k r0 d$id] $text"), 0)
-          }
-          def rep(f: => Unit): Double = { f; f; timed(f) }
-          val tParser = rep { payloads.foreach { p =>
-            val fp = new graft.pdf.PdfFileParser(p); fp.load() } }
-          val tOpen = rep { payloads.foreach(p => graft.pdf.PdfDocument.open(p)) }
-          val tExtractReal = rep { payloads.foreach { p =>
-            val d = graft.pdf.PdfDocument.open(p)
-            graft.pdf.TextExtractor.extractText(
-              d.allContentStreams(d.pages.head), d.pages.head.resources) } }
-          println(f"""{"kernel":"opensplit","parser_s":$tParser%.3f,"open_s":$tOpen%.3f,"open_extract_s":$tExtractReal%.3f}""")
-        }
-
-        // content parse vs full extractText split (v0 content)
-        {
-          val contents0 = docs.map { case (id, text) =>
-            graft.fixtures.PdfFixtures.multiLineContent(
-              (0 until 40).map(k => s"[p$k r0 d$id] $text"))
-          }
-          def rep(f: => Unit): Double = { f; f; timed(f) }
-          val tParse = rep { contents0.foreach(c => new graft.pdf.ContentParser(c).parse()) }
-          val tFull = rep { contents0.foreach(c =>
-            graft.pdf.TextExtractor.extractText(c, null)) }
-          println(f"""{"kernel":"split","parse_s":$tParse%.3f,"extracttext_s":$tFull%.3f}""")
-        }
-
-        // fixture build phases (corpus_build per-task work)
-        val sample = docs.take(1000)
-        def rep3(f: => Unit): Double = { f; f; timed(f) } // warm x2, time 3rd
-        val tContentB = rep3 { sample.foreach { case (id, text) =>
-          graft.fixtures.PdfFixtures.multiLineContent(
-            (0 until 40).map(k => s"[p$k r0 d$id] $text")) } }
-        val tLines = rep3 { sample.foreach { case (id, text) =>
-          (0 until 40).map(k => s"[p$k r0 d$id] $text") } }
-        val contents = sample.map { case (id, text) =>
-          graft.fixtures.PdfFixtures.multiLineContent(
-            (0 until 40).map(k => s"[p$k r0 d$id] $text")) }
-        val tFlate = rep3 { contents.foreach(graft.pdf.Filters.flateEncode(_)) }
-        println(f"""{"kernel":"build","lines_s":$tLines%.3f,"content_s":$tContentB%.3f,"flate_s":$tFlate%.3f}""")
-
-      case "abq" =>
-        // Interleaved A/B of named queries with spreadScan off vs on (same
-        // session, alternating reps — robust to this VM's neighbor noise).
-        val names = args.drop(1).toSeq
-        val reps = 3
-        for (name <- names) {
-          val fn = SparkEntry.queries(name)
-          val offs = new Array[Double](reps)
-          val ons = new Array[Double](reps)
-          for (r <- 0 until reps) {
-            spark.conf.set("spark.graft.spreadScan", "off")
-            offs(r) = timed(noop(fn(spark, sfDir)))
-            spark.conf.set("spark.graft.spreadScan", "auto")
-            ons(r) = timed(noop(fn(spark, sfDir)))
-          }
-          def fmt(a: Array[Double]) = a.map(v => f"$v%.3f").mkString("[", ",", "]")
-          println(s"""{"abq":"$name","off":${fmt(offs)},"on":${fmt(ons)},"min_off":${f"${offs.min}%.3f"},"min_on":${f"${ons.min}%.3f"}}""")
-        }
-
-      case "mh" =>
-        // minhash pipeline phase decomposition (warm, 2 reps each)
-        import org.apache.spark.sql.functions.col
-        val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-        def rep(f: => Unit): Double = { f; timed(f) }
-        val tCand = rep(noop(graft.ops.Dedup.minhashCandidatePairs(docs)))
-        val tPairs = rep(noop(graft.ops.Dedup.minhashDupPairs(spark, docs)))
-        val tGroups = rep(noop(graft.ops.Dedup.minhashDupGroupsCC(spark, docs)
-          .orderBy("doc_id")))
-        // signature stage alone: fused UDF to noop (no banding joins)
-        val tSig = rep(noop(graft.ops.Dedup.withMinhash(docs).select("doc_id", "mh_bands")))
-        println(f"""{"mh_sig":$tSig%.3f,"mh_candidates":$tCand%.3f,"mh_pairs":$tPairs%.3f,"mh_groups":$tGroups%.3f}""")
-
-      case "ab25" =>
-        // A/B the minhash ops with raw (1-partition) vs spread input,
-        // interleaved reps to decorrelate machine drift.
-        import org.apache.spark.sql.functions.col
-        val raw = () => spark.read.parquet(s"$sfDir/documents.parquet")
-        val spread = () => graft.spark.TableIO.spreadScan(
-          spark.read.parquet(s"$sfDir/documents.parquet"), "doc_id")
-        for (r <- 0 until 4) {
-          val tRawP = timed(noop(graft.ops.Dedup.minhashDupPairs(spark, raw())
-            .select(col("a"), col("b"), col("inter"), col("un")).orderBy("a", "b")))
-          val tSpreadP = timed(noop(graft.ops.Dedup.minhashDupPairs(spark, spread())
-            .select(col("a"), col("b"), col("inter"), col("un")).orderBy("a", "b")))
-          val tRawG = timed(noop(graft.ops.Dedup.minhashDupGroupsCC(spark, raw())
-            .orderBy("doc_id")))
-          val tSpreadG = timed(noop(graft.ops.Dedup.minhashDupGroupsCC(spark, spread())
-            .orderBy("doc_id")))
-          println(f"""{"ab25_rep":$r,"pairs_raw":$tRawP%.3f,"pairs_spread":$tSpreadP%.3f,"groups_raw":$tRawG%.3f,"groups_spread":$tSpreadG%.3f}""")
-        }
-
       case "plan" =>
         val name = args(1)
         val outFile = args(2)
-        if (args.length > 3 && args(3) == "nospread")
-          spark.conf.set("spark.graft.spreadScan", "off")
         val fn = SparkEntry.queries(name)
         val df = fn(spark, sfDir)
         val txt = df.queryExecution.explainString(

@@ -92,53 +92,50 @@ object Extract {
       try PdfDocument.open(payload)
       catch {
         case t: PdfTimeout => throw t // handled at the top level -> status=timeout
-        case e: PdfError   => return ExtractResult(Array.emptyByteArray, Nil, "error", safeMsg(e))
         case e: Exception  => return ExtractResult(Array.emptyByteArray, Nil, "error", safeMsg(e))
       }
-    if (doc.pages.length == 1) {
+    val pages = doc.pages
+    if (pages.length == 1) {
       // Single-page fast path (the common crawl case): the page's bytes ARE
       // the document bytes — skip the two full-buffer copies (BAOS write +
       // toByteArray) the page loop pays. Output identical: span [0, len) on
       // page 0, error contract unchanged (partial text + error row).
-      val page = doc.pages.head
-      val pe =
-        try {
-          val content = doc.allContentStreams(page)
-          TextExtractor.extractText(content, page.resources)
-        } catch {
-          case t: PdfTimeout => throw t
-          case e: Exception  => PageExtract(Array.emptyByteArray, Some(safeMsg(e)))
-        }
-      val spans = Seq(Span(0, 0L, pe.bytes.length.toLong))
-      return pe.error match {
-        case Some(msg) => ExtractResult(pe.bytes, spans, "error", msg)
-        case None      => ExtractResult(pe.bytes, spans, "ok", "")
-      }
+      val pe = extractPage(doc, pages.head)
+      return pdfResult(pe.bytes, Seq(Span(0, 0L, pe.bytes.length.toLong)), pe.error)
     }
     val buf = new java.io.ByteArrayOutputStream()
     val spans = scala.collection.mutable.ArrayBuffer.empty[Span]
+    var error: Option[String] = None
     var pageIdx = 0
-    for (page <- doc.pages) {
+    val it = pages.iterator
+    while (error.isEmpty && it.hasNext) {
       if (pageIdx > 0) buf.write('\n')
       val start = buf.size().toLong
-      val pe =
-        try {
-          val content = doc.allContentStreams(page)
-          TextExtractor.extractText(content, page.resources)
-        } catch {
-          case t: PdfTimeout => throw t // -> status=timeout at the top level
-          case e: Exception  => PageExtract(Array.emptyByteArray, Some(safeMsg(e)))
-        }
+      val pe = extractPage(doc, it.next())
       buf.write(pe.bytes)
       spans += Span(pageIdx, start, buf.size().toLong)
-      pe.error match {
-        case Some(msg) => return ExtractResult(buf.toByteArray, spans.toSeq, "error", msg)
-        case None      => ()
-      }
+      error = pe.error
       pageIdx += 1
     }
-    ExtractResult(buf.toByteArray, spans.toSeq, "ok", "")
+    pdfResult(buf.toByteArray, spans.toSeq, error)
   }
+
+  /** One page's golden extraction under the per-page error contract: any
+    * failure becomes the page's error (empty page text); a timeout
+    * propagates to the top level (status=timeout).
+    */
+  private def extractPage(doc: PdfDocument, page: PdfPage): PageExtract =
+    try TextExtractor.extractText(doc.allContentStreams(page), page.resources)
+    catch {
+      case t: PdfTimeout => throw t
+      case e: Exception  => PageExtract(Array.emptyByteArray, Some(safeMsg(e)))
+    }
+
+  private def pdfResult(bytes: Array[Byte], spans: Seq[Span], error: Option[String]): ExtractResult =
+    error match {
+      case Some(msg) => ExtractResult(bytes, spans, "error", msg)
+      case None      => ExtractResult(bytes, spans, "ok", "")
+    }
 
   /** HTML branch: boilerplate strip; one span per kept block. */
   def extractHtml(payload: Array[Byte]): ExtractResult = {

@@ -534,23 +534,6 @@ object Dedup {
       .select(col("id").as(idCol), col("dup_group"))
   }
 
-  /** Per-doc dup-group assignment: canonical = min id among verified LSH
-    * neighbors (single-pass approximation — one shuffle, no iteration; use
-    * minhashDupGroupsCC for the full transitive closure).
-    */
-  def minhashDupGroups(spark: SparkSession, docs: DataFrame,
-                       idCol: String = "doc_id", textCol: String = "text",
-                       threshold: Double = 0.7): DataFrame = {
-    val pairs = minhashDupPairs(spark, docs, idCol, textCol, threshold)
-    val neighborMin = pairs.select(col("b").as("id"), col("a").as("nbr"))
-      .union(pairs.select(col("a").as("id"), col("b").as("nbr")))
-      .groupBy("id").agg(min("nbr").as("min_nbr"))
-    docs.select(col(idCol).as("id"))
-      .join(neighborMin, Seq("id"), "left")
-      .withColumn("dup_group", least(col("id"), coalesce(col("min_nbr"), col("id"))))
-      .select(col("id").as(idCol), col("dup_group"))
-  }
-
   // ---------------------------------------------------------------- simhash
 
   /** 64-bit SimHash over unigram tokens. The per-token hash is FNV-1a 64
@@ -673,23 +656,6 @@ object Dedup {
     docs.select(col(idCol).as("id"))
       .join(labels, Seq("id"), "left")
       .withColumn("dup_group", coalesce(col("label"), col("id")))
-      .select(col("id").as(idCol), col("dup_group"))
-  }
-
-  /** Per-doc simhash dup-group: min id over {self} + all docs whose simhash
-    * is within maxDist. Value-level aggregation only (scales with DISTINCT
-    * simhash count, not group sizes); simhashDupGroupsCC gives the full
-    * transitive closure.
-    */
-  def simhashDupGroups(docs: DataFrame, idCol: String = "doc_id",
-                       textCol: String = "text", maxDist: Int = 3): DataFrame = {
-    val pairs = simhashDupPairs(docs, idCol, textCol, maxDist)
-    val neighborMin = pairs.select(col("b").as("id"), col("a").as("nbr"))
-      .union(pairs.select(col("a").as("id"), col("b").as("nbr")))
-      .groupBy("id").agg(min("nbr").as("min_nbr"))
-    docs.select(col(idCol).as("id"))
-      .join(neighborMin, Seq("id"), "left")
-      .withColumn("dup_group", least(col("id"), coalesce(col("min_nbr"), col("id"))))
       .select(col("id").as(idCol), col("dup_group"))
   }
 

@@ -1,20 +1,22 @@
 package graft.ops
 
-import scala.util.hashing.MurmurHash3
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Similarity search over an embedding column (array<float>).
+/** Similarity search over an embedding column (array<float>). Every top-k
+  * variant scores with the quantized integer dot product, so a SQL oracle
+  * reproduces scores and tie-breaks bit-for-bit.
   *
-  *  - bruteForceTopK is the exact baseline: broadcast the (small) query set,
-  *    one scan over the corpus, per-partition top-k via window rank. The dot
-  *    product runs in codegen'd `zip_with`/`aggregate` SQL functions — no
-  *    UDF in the hot path.
-  *  - lshTopK is the scale path: random-hyperplane signatures bucket the
-  *    corpus (computed once, reusable as a materialized column); queries
-  *    probe their own bucket plus hamming-1 neighbors, so the candidate set
-  *    is corpus/2^bits * (1+bits) instead of the full corpus.
+  *  - bruteForceTopKQuant is the exact baseline: broadcast the (small) query
+  *    set, one scan over the corpus, per-partition top-k via window rank.
+  *    The dot product runs in codegen'd `zip_with`/`aggregate` SQL
+  *    functions — no UDF in the hot path.
+  *  - lshTopKQuant is the scale path: random-hyperplane signatures bucket
+  *    the corpus (computed once, reusable as a materialized column); queries
+  *    probe their own bucket plus the buckets within a hamming radius, so
+  *    the candidate set is a small fraction of the corpus.
+  *  - ivfTopKQuant partitions the corpus into cells around deterministic
+  *    integer centroids; queries scan only their nearest cells.
   *  - signatures are Long (up to 62 planes) and `bitsFor` scales with corpus
   *    size UNCAPPED: at 10^12 vectors it picks ~35 bits (~2^35 buckets,
   *    ~32 rows each) where a fixed 12-bit cap would leave 10^8-row buckets.
@@ -41,27 +43,8 @@ object Similarity {
       s"ELSE ${dot(a, b)} / (sqrt(${dot(a, a)}) * sqrt(${dot(b, b)})) END"
   }
 
-  /** Exact top-k nearest neighbors (cosine) for each query id. */
-  def bruteForceTopK(spark: SparkSession, embeddings: DataFrame, queryIds: Seq[Long],
-                     k: Int = 10, idCol: String = "vec_id",
-                     embCol: String = "embedding"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val queries = broadcast(
-      embeddings.filter(col(idCol).isInCollection(queryIds))
-        .select(col(idCol).as("query_id"), col(embCol).as("qe")))
-    val scored = embeddings.select(col(idCol), col(embCol))
-      .crossJoin(queries)
-      .filter(col(idCol) =!= col("query_id"))
-      .withColumn("cosine", expr(cosineExpr(embCol, "qe")))
-    val w = Window.partitionBy("query_id").orderBy(col("cosine").desc, col(idCol))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col(idCol).as("neighbor_id"), col("cosine"), col("rank"))
-  }
-
-  /** Exact top-k by QUANTIZED INTEGER dot product — same plan as
-    * bruteForceTopK but with engine-exact arithmetic, so a SQL oracle can
-    * reproduce scores AND tie-breaks bit-for-bit.
+  /** Exact top-k nearest neighbors for each query id by QUANTIZED INTEGER
+    * dot product.
     */
   def bruteForceTopKQuant(spark: SparkSession, embeddings: DataFrame, queryIds: Seq[Long],
                           k: Int = 10, idCol: String = "vec_id",
@@ -151,32 +134,7 @@ object Similarity {
 
   /** Approximate top-k: probe the query's bucket and all buckets within
     * hamming `probeRadius`. Recall improves with probes; candidates stay
-    * ~corpus * |probes| / 2^bits.
-    */
-  def lshTopK(spark: SparkSession, embeddings: DataFrame, queryIds: Seq[Long],
-              k: Int = 10, idCol: String = "vec_id",
-              embCol: String = "embedding",
-              bits: Int = DefaultSignatureBits,
-              probeRadius: Int = 2): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val bucketed = withLshBucket(embeddings, embCol, bits)
-    val probesUdf = udf((sig: Long) => probeSet(sig, bits, probeRadius))
-    val queries = broadcast(
-      bucketed.filter(col(idCol).isInCollection(queryIds))
-        .select(col(idCol).as("query_id"), col(embCol).as("qe"), col("lsh_bucket").as("qb"))
-        .withColumn("probe", explode(probesUdf(col("qb"))))
-        .select("query_id", "qe", "probe"))
-    val scored = bucketed
-      .join(queries, col("lsh_bucket") === col("probe"))
-      .filter(col(idCol) =!= col("query_id"))
-      .withColumn("cosine", expr(cosineExpr(embCol, "qe")))
-    val w = Window.partitionBy("query_id").orderBy(col("cosine").desc, col(idCol))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col(idCol).as("neighbor_id"), col("cosine"), col("rank"))
-  }
-
-  /** lshTopK with QUANTIZED-INTEGER scoring: with the integer signatures the
+    * ~corpus * |probes| / 2^bits. With the integer signatures the
     * complete pipeline (bucket assignment, multi-probe, candidate scoring,
     * tie-breaks) is exact cross-engine arithmetic — DuckDB-oracle-checkable
     * end to end.
@@ -209,211 +167,8 @@ object Similarity {
 
   // --------------------------------------------------------------- IVF ANN
 
-  /** nLists sizing: ~sqrt(n) cells keeps cell size ~sqrt(n) (the classic IVF
-    * balance point: probe cost ~ nProbe*n/nLists, centroid scan ~ nLists).
-    * UNCAPPED in corpus size like bitsFor: 10^12 vectors -> 10^6 cells.
-    */
-  def listsFor(corpusSize: Long): Int =
-    math.max(2, math.ceil(math.sqrt(math.max(1.0, corpusSize.toDouble))).toInt)
-
-  private def nearestIdx(v: Array[Double], cs: Array[Array[Double]]): Int = {
-    var best = 0
-    var bestD = Double.MaxValue
-    var i = 0
-    while (i < cs.length) {
-      val c = cs(i)
-      var d = 0.0
-      var j = 0
-      while (j < c.length) { val t = c(j) - v(j); d += t * t; j += 1 }
-      if (d < bestD) { bestD = d; best = i }
-      i += 1
-    }
-    best
-  }
-
-  /** Assignment lists are scanned two-level above this many centroids; a
-    * small centroid set is cheaper to scan directly.
-    */
-  val DirectAssignMaxLists = 32
-
-  /** Two-level coarse-over-coarse centroid index: the nLists centroids are
-    * themselves clustered (tiny driver-side Lloyd) into ~sqrt(nLists)
-    * super-centroids. A row then scans all supers plus only the member
-    * centroids of its `superProbes` nearest supers — per-row distance
-    * evals ~ sqrt(L)·(1 + superProbes·avgMembers/sqrt(L)) instead of L,
-    * the sublinear-assignment requirement at nLists ~ 10^6 (10^12 rows).
-    * Super-boundary assignment is approximate; IVF is already approximate,
-    * and ScaleSpec pins BOTH end-to-end recall and the eval budget.
-    * Returns (superCentroids, memberCentroidIndices per super).
-    */
-  private[ops] def buildSuperIndex(cents: Array[Array[Double]], nSuper: Int,
-                                   iters: Int = 5): (Array[Array[Double]], Array[Array[Int]]) = {
-    val L = cents.length
-    val k = math.max(1, math.min(nSuper, L))
-    var supers = Array.tabulate(k)(i => cents((i.toLong * L / k).toInt).clone())
-    var it = 0
-    while (it <= iters) {
-      val groups = Array.fill(k)(scala.collection.mutable.ArrayBuffer.empty[Int])
-      var ci = 0
-      while (ci < L) { groups(nearestIdx(cents(ci), supers)) += ci; ci += 1 }
-      val members = groups.map(_.toArray)
-      if (it == iters) return (supers, members)
-      supers = Array.tabulate(k) { si =>
-        val g = members(si)
-        if (g.isEmpty) supers(si) // empty super keeps its position
-        else {
-          val m = new Array[Double](cents(0).length)
-          for (c <- g) {
-            var d = 0
-            while (d < m.length) { m(d) += cents(c)(d); d += 1 }
-          }
-          var d = 0
-          while (d < m.length) { m(d) /= g.length; d += 1 }
-          m
-        }
-      }
-      it += 1
-    }
-    throw new IllegalStateException("unreachable")
-  }
-
-  /** IVF (inverted-file) ANN: a k-means coarse quantizer partitions the
-    * corpus into `nLists` cells; queries scan only their `nProbe` closest
-    * cells. The scale path when LSH's hash-only buckets under-fit the data
-    * distribution: cells follow the actual cluster structure, so at 10^12
-    * vectors nLists ~ sqrt(n) keeps cells ~10^6 rows and a 16-probe query
-    * touches ~0.0016% of the corpus. Centroids train on a sample (driver
-    * default 100k rows) and live broadcast; assignment is one scan.
-    *
-    * `rowCount`: pass the (approximate) corpus size when known — it sizes
-    * the training-sample fraction and the default nLists WITHOUT an extra
-    * full `count()` pass over the corpus (at 100 TB that pass costs more
-    * than the training). rowCount < 0 falls back to one count().
-    * `nLists` < 0 picks listsFor(rowCount) (~sqrt n).
-    */
-  def ivfTopK(spark: SparkSession, embeddings: DataFrame, queryIds: Seq[Long],
-              k: Int = 10, nLists: Int = -1, nProbe: Int = 4,
-              idCol: String = "vec_id", embCol: String = "embedding",
-              seed: Long = 42L, trainSample: Int = 100000,
-              rowCount: Long = -1L, superProbes: Int = 2,
-              distEvals: Option[org.apache.spark.util.LongAccumulator] = None): DataFrame = {
-    import org.apache.spark.ml.clustering.KMeans
-    import org.apache.spark.ml.functions.array_to_vector
-    import org.apache.spark.sql.expressions.Window
-    val withVec = embeddings
-      .withColumn("__vec", array_to_vector(col(embCol).cast("array<double>")))
-    val n = if (rowCount >= 0) rowCount else withVec.count()
-    if (n == 0)
-      return spark.emptyDataFrame
-        .select(lit(0L).as("query_id"), lit(0L).as("neighbor_id"),
-          lit(0.0).as("cosine"), lit(0).as("rank"))
-        .limit(0)
-    val lists = if (nLists > 0) nLists else listsFor(n)
-    val train =
-      if (n > trainSample)
-        withVec.sample(withReplacement = false, trainSample.toDouble / n, seed)
-      else withVec
-    // k is clamped by the TRAINING SAMPLE size, not the corpus: at 10^12
-    // rows listsFor asks for ~10^6 cells but training runs on ~trainSample
-    // points — requesting more clusters than training points degenerates
-    // the quantizer silently. (Raise trainSample alongside nLists when
-    // cell-count targets grow.)
-    val trainCap = math.min(n, trainSample.toLong)
-    val model = new KMeans()
-      .setK(math.max(2, math.min(lists.toLong, trainCap).toInt))
-      .setSeed(seed).setMaxIter(10).setFeaturesCol("__vec").fit(train)
-    val centroids = model.clusterCenters.map(_.toArray)
-    // --- assignment: SUBLINEAR in nLists via the two-level centroid index
-    // (a per-row linear scan is 10^6 distance evals/row at the 10^12-row
-    // design point). Small centroid sets scan directly. `distEvals` counts
-    // actual distance evaluations for the ScaleSpec sublinearity pin.
-    val actualLists = centroids.length
-    val direct = actualLists <= DirectAssignMaxLists
-    // 1.5x sqrt(L) supers: centroid clustering is skewed in practice, so a
-    // few extra supers keep the probed member count (the dominant term)
-    // well under the eval budget.
-    val (supers, superMembers) =
-      if (direct) (Array.empty[Array[Double]], Array.empty[Array[Int]])
-      else buildSuperIndex(centroids, math.ceil(1.5 * math.sqrt(actualLists)).toInt)
-    val bcCents = spark.sparkContext.broadcast(centroids)
-    val bcSupers = spark.sparkContext.broadcast(supers)
-    val bcMembers = spark.sparkContext.broadcast(superMembers)
-    val probesN = math.max(1, superProbes)
-    val assignUdf = udf((vf: Seq[Float]) => {
-      val v = new Array[Double](vf.length)
-      var d = 0
-      while (d < v.length) { v(d) = vf(d).toDouble; d += 1 }
-      val cents = bcCents.value
-      if (direct) {
-        distEvals.foreach(_.add(cents.length))
-        nearestIdx(v, cents)
-      } else {
-        val sup = bcSupers.value
-        val mem = bcMembers.value
-        // rank supers, keep the probesN nearest
-        val sDist = new Array[Double](sup.length)
-        var si = 0
-        while (si < sup.length) {
-          val c = sup(si)
-          var dist = 0.0
-          var j = 0
-          while (j < c.length) { val t = c(j) - v(j); dist += t * t; j += 1 }
-          sDist(si) = dist
-          si += 1
-        }
-        var evals = sup.length.toLong
-        // rank only NON-EMPTY supers: an empty super keeps a stale position
-        // (buildSuperIndex) and probing it would yield zero member evals —
-        // the row would silently fall back to centroid 0
-        val order = sDist.zipWithIndex.filter(p => mem(p._2).nonEmpty)
-          .sortBy(_._1).take(probesN).map(_._2)
-        var best = 0
-        var bestD = Double.MaxValue
-        for (s <- order; ci <- mem(s)) {
-          val c = cents(ci)
-          var dist = 0.0
-          var j = 0
-          while (j < c.length) { val t = c(j) - v(j); dist += t * t; j += 1 }
-          evals += 1
-          if (dist < bestD || (dist == bestD && ci < best)) { bestD = dist; best = ci }
-        }
-        distEvals.foreach(_.add(evals))
-        best
-      }
-    })
-    val assigned = embeddings.withColumn("list_id", assignUdf(col(embCol)))
-    // Probe lists per query: closest centroids by L2 (the quantizer metric),
-    // computed driver-side (centroids are tiny).
-    val queryVecs = embeddings.filter(col(idCol).isInCollection(queryIds))
-      .select(col(idCol), col(embCol)).collect()
-      .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray).toMap
-    val probeRows = queryVecs.toSeq.flatMap { case (qid, qv) =>
-      centroids.zipWithIndex.map { case (c, ci) =>
-        var d = 0.0
-        var i = 0
-        while (i < c.length) { val t = c(i) - qv(i); d += t * t; i += 1 }
-        (qid, ci, d)
-      }.sortBy(_._3).take(nProbe).map(p => (qid, p._2))
-    }
-    import spark.implicits._
-    val probes = broadcast(probeRows.toDF("query_id", "probe_list"))
-    val queries = broadcast(
-      embeddings.filter(col(idCol).isInCollection(queryIds))
-        .select(col(idCol).as("query_id"), col(embCol).as("qe")))
-    val scored = assigned
-      .join(probes, col("list_id") === col("probe_list"))
-      .join(queries, "query_id")
-      .filter(col(idCol) =!= col("query_id"))
-      .withColumn("cosine", expr(cosineExpr(embCol, "qe")))
-    val w = Window.partitionBy("query_id").orderBy(col("cosine").desc, col(idCol))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col(idCol).as("neighbor_id"), col("cosine"), col("rank"))
-  }
-
-  /** Deterministic, INTEGER-EXACT IVF ANN — the driver-gate variant (the
-    * k-means `ivfTopK` above is the production quantizer). Every step is
-    * exact integer arithmetic, so a plain-SQL oracle reproduces the whole
+  /** Deterministic, INTEGER-EXACT IVF ANN. Every step is exact integer
+    * arithmetic, so a plain-SQL oracle reproduces the whole
     * pipeline bit-for-bit:
     *  - vectors quantize as q_d = round(v_d * 1000) (BIGINT);
     *  - initial centroids = quantized embeddings of the `nLists` vec_ids
@@ -426,8 +181,8 @@ object Similarity {
     *    (an empty cell keeps its initial centroid);
     *  - the inverted lists are the assignment under the stepped centroids.
     * Queries probe their `nProbe` nearest stepped centroids and score the
-    * candidates with the quantized integer dot product. Distribution shape
-    * matches `ivfTopK`: centroids are tiny driver-side state (2 collects of
+    * candidates with the quantized integer dot product. Centroids are tiny
+    * driver-side state (2 collects of
     * nLists rows), assignment is one scan, probing is a broadcast join.
     */
   def ivfTopKQuant(spark: SparkSession, embeddings: DataFrame, queryIds: Seq[Long],

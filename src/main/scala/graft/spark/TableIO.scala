@@ -91,11 +91,6 @@ object TableIO {
     * so downstream queries (all ORDER BY'd) are byte-identical either way.
     */
   def spreadScan(df: DataFrame, keyCol: String = null): DataFrame = {
-    // Operational escape hatch (also the A/B lever for measurement): the
-    // spread only pays off when the downstream per-row work outweighs the
-    // extra exchange + task-scheduling cost, which callers assess per site.
-    if (df.sparkSession.conf.getOption("spark.graft.spreadScan").contains("off"))
-      return df
     val target = df.sparkSession.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions >= target) df
     else if (keyCol != null) df.repartition(target, col(keyCol))

@@ -31,7 +31,7 @@ class OpsSpec extends AnyFunSuite {
     assert(pairs.contains((1L, 4L)), "exact-dup pair missed")
     assert(!pairs.exists(p => p._1 == 3L || p._2 == 3L), "false positive on unrelated doc")
 
-    val groups = Dedup.minhashDupGroups(spark, docs, threshold = 0.6)
+    val groups = Dedup.minhashDupGroupsCC(spark, docs, threshold = 0.6)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(groups(1L) == 1L && groups(2L) == 1L && groups(4L) == 1L)
     assert(groups(3L) == 3L)
@@ -235,8 +235,8 @@ class OpsSpec extends AnyFunSuite {
   test("CC dup groups collapse similarity chains the single pass cannot") {
     import spark.implicits._
     // A ~ B (J=0.82) and B ~ C (J=0.79) but A !~ C (J=0.65 < 0.7): the
-    // transitive component is {1,2,3}; the single-pass min-neighbor
-    // heuristic leaves doc 3 pointing at 2.
+    // transitive component is {1,2,3}. Doc 3's only verified neighbour is
+    // 2, so a single min-neighbour pass would leave it pointing at 2.
     val base = (1 to 30).map(i => s"tok$i")
     val a = base.mkString(" ")
     val b = (base ++ (31 to 36).map(i => s"tok$i")).mkString(" ")
@@ -248,9 +248,6 @@ class OpsSpec extends AnyFunSuite {
     val cc = Dedup.minhashDupGroupsCC(spark, docs)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(cc == Map(1L -> 1L, 2L -> 1L, 3L -> 1L))
-    val single = Dedup.minhashDupGroups(spark, docs)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(single(3L) == 2L) // the documented one-pass approximation
   }
 
   test("simhashDupGroupsCC closes hamming chains transitively") {
@@ -424,10 +421,14 @@ class OpsSpec extends AnyFunSuite {
       (2L, Array(0.0f, 1.0f, 0.0f)),
       (3L, Array(-1.0f, 0.0f, 0.0f)),
       (4L, Array(0.95f, 0.05f, 0.0f))).toDF("vec_id", "embedding")
-    val top = Similarity.bruteForceTopK(spark, vecs, Seq(0L), k = 3)
+    val top = Similarity.bruteForceTopKQuant(spark, vecs, Seq(0L), k = 3)
       .orderBy("rank").collect().map(_.getLong(1))
     assert(top.take(2).toSet == Set(1L, 4L)) // the two closest
     assert(top(2) == 2L)
+    // quantized scores are exact integers: a rerun ranks identically
+    val again = Similarity.bruteForceTopKQuant(spark, vecs, Seq(0L), k = 3)
+      .orderBy("rank").collect().map(_.getLong(1))
+    assert(again.toSeq == top.toSeq)
   }
 
   test("ANN: LSH top-k recalls bucket-mates and never errors") {
@@ -435,9 +436,9 @@ class OpsSpec extends AnyFunSuite {
     val rnd = new scala.util.Random(7)
     val vecs = (0L until 200L).map(i =>
       (i, Array.fill(16)(rnd.nextFloat() * 2 - 1))).toDF("vec_id", "embedding")
-    val brute = Similarity.bruteForceTopK(spark, vecs, Seq(0L), k = 5)
+    val brute = Similarity.bruteForceTopKQuant(spark, vecs, Seq(0L), k = 5)
       .collect().map(_.getLong(1)).toSet
-    val lsh = Similarity.lshTopK(spark, vecs, Seq(0L), k = 5, bits = 3)
+    val lsh = Similarity.lshTopKQuant(spark, vecs, Seq(0L), k = 5, bits = 3)
       .collect().map(_.getLong(1)).toSet
     assert(lsh.nonEmpty)
     // probing 1-bit neighborhoods should recall at least one true neighbor

@@ -6,9 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.Extract
 
-/** ContentCreator + Draw: reference operand layout, parse round-trip
-  * through our own ContentParser, arrow line endings, shape painter
-  * dispatch, and an author-with-creator end-to-end extraction.
+/** ContentCreator: reference operand layout, parse round-trip through our
+  * own ContentParser, and an author-with-creator end-to-end extraction.
   */
 class ContentCreatorSpec extends AnyFunSuite {
 
@@ -48,41 +47,6 @@ class ContentCreatorSpec extends AnyFunSuite {
     assert(new String(tj.params.head.asInstanceOf[PdfStr].bytes, ISO_8859_1) == "hello")
     val tjArr = ops.find(_.operand == "TJ").get.params.head.asInstanceOf[PdfArr]
     assert(tjArr.length == 3)
-  }
-
-  test("arrow line endings splice arrowhead points into the path") {
-    // plain line: 4 points; one arrow end: 7; both ends: 4 + 3 + 3 = 3+5+...
-    // (reference splice: end2 -> 7 points, then end1 adds 3 head + drops
-    // first/last of the current path -> 5 interior + 6 = 11)
-    def pathPoints(l: Draw.Line): Int = {
-      val content = new String(l.draw()._1, ISO_8859_1)
-      "(?m)^.* [ml]$".r.findAllIn(content).size
-    }
-    val base = Draw.Line(0, 0, 100, 0, Draw.Rgb(0, 0, 0), width = 2)
-    assert(pathPoints(base) == 4)
-    assert(pathPoints(base.copy(ending2 = Draw.EndingArrow)) == 7)
-    assert(pathPoints(base.copy(ending1 = Draw.EndingArrow,
-      ending2 = Draw.EndingArrow)) == 11)
-    // arrow geometry widens the bbox beyond the plain band
-    val (_, plain) = base.draw()
-    val (_, arrow) = base.copy(ending2 = Draw.EndingArrow).draw()
-    assert(arrow.ury > plain.ury && arrow.lly < plain.lly)
-  }
-
-  test("shape painter dispatch: B for fill+border, f fill-only, S border-only") {
-    def tail(bytes: Array[Byte]): String =
-      new String(bytes, ISO_8859_1).linesIterator.toSeq.takeRight(2).head
-    val both = Draw.Rectangle(0, 0, 10, 10, fill = Some(Draw.Rgb(1, 1, 1)),
-      border = Some((Draw.Rgb(0, 0, 0), 1)))
-    val fillOnly = Draw.Rectangle(0, 0, 10, 10, fill = Some(Draw.Rgb(1, 1, 1)))
-    val borderOnly = Draw.Circle(0, 0, 10, 10, border = Some((Draw.Rgb(0, 0, 0), 1)))
-    assert(tail(both.draw()._1) == "B")
-    assert(tail(fillOnly.draw()._1) == "f")
-    assert(tail(borderOnly.draw()._1) == "S")
-    // circle: 4 bezier segments, bbox = the circumscribed square + stroke
-    val (cb, cbox) = borderOnly.draw()
-    assert("(?m)^.* c$".r.findAllIn(new String(cb, ISO_8859_1)).size == 4)
-    assert(math.abs(cbox.urx - 10.0) < 1e-6 && math.abs(cbox.llx) < 1e-6)
   }
 
   test("a creator-built page extracts through the golden kernel") {

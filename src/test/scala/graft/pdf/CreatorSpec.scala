@@ -48,6 +48,41 @@ class CreatorSpec extends AnyFunSuite {
     assert(graft.Extract(doc).text == "café €9 — naïve œuvre")
   }
 
+  test("width tables match their pinned AFM digests; Courier is 600 throughout") {
+    // SHA-256 over a canonical listing ("U+XXXX width" lines in codepoint
+    // order) of each table. The pins were taken while the Helvetica,
+    // Helvetica-Bold and WinAnsi tables still cross-checked glyph-for-glyph
+    // against Adobe's AFM files; an edited table must be re-verified
+    // against the AFM data before it is re-pinned.
+    def digest(table: Map[Char, Int]): String = {
+      val listing = table.toSeq.sortBy(_._1)
+        .map { case (c, w) => f"U+${c.toInt}%04X $w\n" }.mkString
+      java.security.MessageDigest.getInstance("SHA-256")
+        .digest(listing.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        .map(b => f"${b & 0xff}%02x").mkString
+    }
+    val pins = Seq(
+      ("Helvetica", Creator.HelveticaWidths,
+        "c43d363c5f6cacaff39e1b937e720cfe7e281de11eeada3777d09d769c99b6a6"),
+      ("Helvetica-Bold", Creator.HelveticaBoldWidths,
+        "220959bb339493d7a36504d7d135ce3096582e247dfd16f8443ff6594828fbc6"),
+      ("Helvetica WinAnsi", Creator.HelveticaWinAnsiWidths,
+        "a8696d35147ddeb6c0da04e564001cae4930a0d062385797cdb299b397414869"),
+      ("Times-Roman", Creator.TimesRomanWidths,
+        "b730c17952ae9b36b64a4b44dc7aa188e7d147bbb3ca6c1c9b1a4d58180d514f"),
+      ("Times-Bold", Creator.TimesBoldWidths,
+        "c07b84d14aa304b38d9b64f613d395500813f65ffde8a5bd12b62c6bb2394eea"),
+      ("Times-Italic", Creator.TimesItalicWidths,
+        "387211afead308a987a5892a3b317b6c2263b0ea8f18c134fd0a3f35a3d6d7de"),
+      ("Times-BoldItalic", Creator.TimesBoldItalicWidths,
+        "636bd6e3d570ad2afcb455ab602314c98ae0ea2d517e686537242d551bda4c65"))
+    assert(pins.map { case (face, table, _) => face -> digest(table) } ==
+      pins.map { case (face, _, want) => face -> want })
+    for (face <- Seq("Courier", "Courier-Bold", "Courier-Oblique", "Courier-BoldOblique");
+         c <- ' ' to '~')
+      assert(Creator.widthOf(face, c).contains(600), s"$face '$c'")
+  }
+
   test("standard-14 families: distinct AFM tables per face") {
     // spot-check values straight from the AFM data: Times-Roman 'W'=944
     // but Times-Bold 'W'=1000; Helvetica-Bold 'i'=278 vs Helvetica 222;

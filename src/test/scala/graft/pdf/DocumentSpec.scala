@@ -306,6 +306,25 @@ class DocumentSpec extends AnyFunSuite {
     assert(r.spans == Seq(graft.Span(0, 0, 8), graft.Span(1, 9, 17)))
   }
 
+  test("two pages, second aborts -> first page + partial text, error status") {
+    // The page loop's abort: page 1 is kept whole, page 2 contributes the
+    // text before the unknown colorspace, and no later page is read.
+    val bld = new PdfFixtures.Builder()
+    bld.obj(1, "<< /Type /Catalog /Pages 2 0 R >>")
+    bld.obj(2, "<< /Type /Pages /Kids [3 0 R 5 0 R] /Count 2 /MediaBox [0 0 612 792] >>")
+    bld.obj(3, s"<< /Type /Page /Parent 2 0 R /Resources ${PdfFixtures.defaultResources} /Contents 4 0 R >>")
+    val c1 = "BT /F1 12 Tf (page one) Tj ET".getBytes(UTF_8)
+    bld.stream(4, s"<< /Length ${c1.length} >>", c1)
+    bld.obj(5, "<< /Type /Page /Parent 2 0 R /Contents 6 0 R >>")
+    val c2 = "BT (partial) Tj ET /NoSuchCS CS BT (never) Tj ET".getBytes(UTF_8)
+    bld.stream(6, s"<< /Length ${c2.length} >>", c2)
+    val r = Extract(bld.build())
+    assert(r.status == "error")
+    assert(r.text == "page one" + "\n" + "partial")
+    assert(r.spans == Seq(graft.Span(0, 0, 8), graft.Span(1, 9, 16)))
+    assert(r.error.contains("Unsupported colorspace"))
+  }
+
   test("resources inherited from Pages node") {
     val r = Extract(PdfFixtures.inheritedResources("inherited"))
     assert(r.status == "ok", r.error)
@@ -464,6 +483,30 @@ class DocumentSpec extends AnyFunSuite {
     assert(notPopup.status == "error" && notPopup.error.contains("popup annotation"))
     // Popup null is fine (annotations.go:947-949).
     assert(Extract(doc("[<< /Subtype /Ink /Popup null >>]")).status == "ok")
+    // Line / Square / Circle markup dicts as an annotation author writes
+    // them (indirect, /AP appearance form, border style, interior colour),
+    // each with an indirect /Popup: all validate and text is unaffected.
+    val form = "q 1 0 0 rg 0 2 m 100 2 l 100 0 l 0 0 l f Q".getBytes(ISO_8859_1)
+    val shapes = doc("[5 0 R 6 0 R 7 0 R]", b => {
+      b.obj(5, "<< /Type /Annot /Subtype /Line /L [100 100 200 150] " +
+        "/LE [/None /ClosedArrow] /C [1 0 0] /IC [1 0 0] /BS << /Type /Border /W 2 >> " +
+        "/Rect [100 100 200 152] /CA 0.5 /AP << /N 9 0 R >> /Popup 8 0 R >>")
+      b.obj(6, "<< /Type /Annot /Subtype /Square /Rect [50 300 130 340] " +
+        "/C [0 0 1] /IC [0 1 0] /BS << /Type /Border /W 2 >> /Popup 8 0 R >>")
+      b.obj(7, "<< /Type /Annot /Subtype /Circle /Rect [300 500 360 560] " +
+        "/C [0 0 0] /IC [] /Popup 8 0 R >>")
+      b.obj(8, "<< /Type /Annot /Subtype /Popup /Rect [0 0 1 1] /Parent 5 0 R >>")
+      b.stream(9, s"<< /Type /XObject /Subtype /Form /BBox [0 0 100 2] /Length ${form.length} >>", form)
+    })
+    val sr = Extract(shapes)
+    assert(sr.status == "ok", sr.error)
+    assert(sr.text == "x")
+    // A shape whose /Popup is another markup annotation errors like /Text.
+    val badShape = Extract(doc("[5 0 R]", b => {
+      b.obj(5, "<< /Type /Annot /Subtype /Circle /Rect [0 0 9 9] /Popup 6 0 R >>")
+      b.obj(6, "<< /Type /Annot /Subtype /Square /Rect [0 0 9 9] >>")
+    }))
+    assert(badShape.status == "error" && badShape.error.contains("popup annotation"))
   }
 
   test("XrefLine strict classifier agrees with the regex matchers") {

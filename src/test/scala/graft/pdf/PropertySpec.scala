@@ -123,22 +123,6 @@ class PropertySpec extends AnyFunSuite {
       PdfImages.imagesOf(java.util.Arrays.copyOf(base, rnd.nextInt(base.length + 1)))
   }
 
-  test("property: TTF parse fails only as PdfError under corruption") {
-    val rnd = new java.util.Random(0x77fL)
-    val base = java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("/root/reference/testfiles/roboto/Roboto-Regular.ttf"))
-    for (_ <- 0 until 60) {
-      val m = base.clone()
-      (0 to rnd.nextInt(8)).foreach(_ => m(rnd.nextInt(m.length)) = rnd.nextInt(256).toByte)
-      try { TtfParser.parse(m); () }
-      catch { case _: PdfError => () } // only the typed error may escape
-    }
-    for (_ <- 0 until 20) {
-      try { TtfParser.parse(java.util.Arrays.copyOf(base, rnd.nextInt(base.length + 1))); () }
-      catch { case _: PdfError => () }
-    }
-  }
-
   test("property: random corruption never throws (status ok/error/empty)") {
     val base = PdfFixtures.s06("corruption target document")
     val cases = for {

@@ -165,55 +165,65 @@ class WriterSpec extends AnyFunSuite {
     assert(java.util.Arrays.equals(once(), once()))
   }
 
-  test("annotator: hand-computed line appearance polygon (horizontal, w=2)") {
-    import Annotator._
-    // theta=0, mul=1 -> Vs=(0,1); V1..V4 = (0,2),(10,2),(10,0),(0,0): the
-    // reference draws the stroke as a filled band ABOVE the segment
-    // (shapes.go:216-233 quirk, not centered)
-    val b = line(LineDef(0, 0, 10, 0, Rgb(1, 0, 0), width = 2))
-    val content = new String(b.formContent, ISO_8859_1)
-    assert(content == "q\n1.000000 0.000000 0.000000 rg\n" +
-      "0.000000 2.000000 m\n10.000000 2.000000 l\n" +
-      "10.000000 0.000000 l\n0.000000 0.000000 l\nf\nQ\n")
-    assert(b.bbox == (0.0, 0.0, 10.0, 2.0))
-    assert(b.rect == (0.0, 0.0, 10.0, 2.0))
-  }
-
   test("annotator: line/square/circle appearance streams round-trip + validate") {
-    import Annotator._
-    val annots = Seq(
-      line(LineDef(100, 100, 200, 150, Rgb(1, 0, 0), width = 2, opacity = 0.5)),
-      rectangle(RectDef(50, 300, 80, 40, fill = Some(Rgb(0, 1, 0)),
-        border = Some((Rgb(0, 0, 1), 2)))),
-      circle(RectDef(300, 500, 60, 60, fill = None,
-        border = Some((Rgb(0, 0, 0), 1)))))
-    val doc = authorAnnotated("annotated page", annots)
+    // A page carrying the three shape annotations as an annotator writes
+    // them: indirect markup dicts sharing an indirect /Popup, each with an
+    // /AP Form XObject whose painter op tail is 'f' (filled line band),
+    // 'B' (fill+border square) or 'S' (border-only circle as 4 beziers).
+    val lineForm = ("q\n1.000000 0.000000 0.000000 rg\n/gs1 gs\n" +
+      "0.000000 2.000000 m\n10.000000 2.000000 l\n" +
+      "10.000000 0.000000 l\n0.000000 0.000000 l\nf\nQ\n").getBytes(ISO_8859_1)
+    val squareForm = ("q\n0.000000 1.000000 0.000000 rg\n0.000000 0.000000 1.000000 RG\n" +
+      "2.000000 w\n1.000000 1.000000 m\n79.000000 1.000000 l\n79.000000 39.000000 l\n" +
+      "1.000000 39.000000 l\nh\nB\nQ\n").getBytes(ISO_8859_1)
+    val circleForm = ("q\n0.000000 0.000000 0.000000 RG\n1.000000 w\n" +
+      "60.000000 30.000000 m\n60.000000 46.569000 46.569000 60.000000 30.000000 60.000000 c\n" +
+      "13.431000 60.000000 0.000000 46.569000 0.000000 30.000000 c\n" +
+      "0.000000 13.431000 13.431000 0.000000 30.000000 0.000000 c\n" +
+      "46.569000 0.000000 60.000000 13.431000 60.000000 30.000000 c\n" +
+      "h\nS\nQ\n").getBytes(ISO_8859_1)
+    val bld = new graft.fixtures.PdfFixtures.Builder()
+    bld.obj(1, "<< /Type /Catalog /Pages 2 0 R >>")
+    bld.obj(2, "<< /Type /Pages /Kids [3 0 R] /Count 1 >>")
+    bld.obj(3, "<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] " +
+      s"/Resources ${graft.fixtures.PdfFixtures.defaultResources} /Contents 4 0 R " +
+      "/Annots [5 0 R 6 0 R 7 0 R] >>")
+    val c = "BT /F1 12 Tf (annotated page) Tj ET".getBytes(ISO_8859_1)
+    bld.stream(4, s"<< /Length ${c.length} >>", c)
+    bld.obj(5, "<< /Type /Annot /Subtype /Line /L [100 100 200 150] /C [1 0 0] " +
+      "/BS << /Type /Border /W 2 >> /Rect [100 100 200 152] /CA 0.5 " +
+      "/AP << /N 9 0 R >> /Popup 8 0 R >>")
+    bld.obj(6, "<< /Type /Annot /Subtype /Square /Rect [50 300 130 340] /C [0 0 1] " +
+      "/IC [0 1 0] /BS << /Type /Border /W 2 >> /AP << /N 10 0 R >> /Popup 8 0 R >>")
+    bld.obj(7, "<< /Type /Annot /Subtype /Circle /Rect [300 500 360 560] /C [0 0 0] " +
+      "/BS << /Type /Border /W 1 >> /AP << /N 11 0 R >> /Popup 8 0 R >>")
+    bld.obj(8, "<< /Type /Annot /Subtype /Popup /Rect [0 0 1 1] /Parent 5 0 R >>")
+    bld.stream(9, "<< /Type /XObject /Subtype /Form /BBox [0 0 10 2] " +
+      "/Resources << /ExtGState << /gs1 << /CA 0.5 /ca 0.5 >> >> >> " +
+      s"/Length ${lineForm.length} >>", lineForm)
+    bld.stream(10, "<< /Type /XObject /Subtype /Form /BBox [0 0 80 40] " +
+      s"/Length ${squareForm.length} >>", squareForm)
+    bld.stream(11, "<< /Type /XObject /Subtype /Form /BBox [0 0 60 60] " +
+      s"/Length ${circleForm.length} >>", circleForm)
+    val doc = bld.build()
     // the kernel opens it: loadAnnotations validates all three markup dicts
-    val opened = PdfDocument.open(doc)
-    assert(opened.pages.length == 1)
+    assert(PdfDocument.open(doc).pages.length == 1)
     assert(Extract(doc).status == "ok")
     assert(Extract(doc).text == "annotated page")
-    // the appearance forms are enumerable Form XObjects with the expected
-    // painter op tails: filled line 'f', fill+border square 'B',
-    // border-only circle 'S' drawn as 4 beziers
-    val s = new String(doc, ISO_8859_1)
-    assert(s.contains("/Subtype /Line") && s.contains("/Subtype /Square") &&
-      s.contains("/Subtype /Circle"))
-    assert(s.contains("/ExtGState")) // opacity 0.5 -> gs1 on the line form
-    val circleContent = new String(annots(2).formContent, ISO_8859_1)
-    assert("(?m)^.* c$".r.findAllIn(circleContent).size == 4)
-    assert(circleContent.endsWith("h\nS\nQ\n"))
-    val squareContent = new String(annots(1).formContent, ISO_8859_1)
-    assert(squareContent.contains(" RG\n2.000000 w\n") &&
-      squareContent.endsWith("h\nB\nQ\n"))
-    // x42 shape: writer rewrite round-trips; annotations survive and the
-    // reopened file revalidates through loadAnnotations
+    // x42 shape: writer rewrite round-trips; annotations and their
+    // appearance streams survive and the reopened file revalidates
+    // through loadAnnotations
     val rew = PdfWriter.rewrite(doc)
-    assert(Extract(rew).text == "annotated page")
+    val r = Extract(rew)
+    assert(r.status == "ok", r.error)
+    assert(r.text == "annotated page")
+    assert(PdfDocument.open(rew).pages.length == 1)
     val rs = new String(rew, ISO_8859_1)
     assert(rs.contains("/Subtype /Line") && rs.contains("/Subtype /Square") &&
-      rs.contains("/Subtype /Circle"))
-    assert(PdfDocument.open(rew).pages.length == 1)
+      rs.contains("/Subtype /Circle") && rs.contains("/Subtype /Popup"))
+    assert(rs.contains("/ExtGState"))
+    for (form <- Seq(lineForm, squareForm, circleForm))
+      assert(rs.contains(new String(form, ISO_8859_1)))
   }
 
   test("rewrite flattens object streams and strips encryption") {
