@@ -143,8 +143,7 @@ object Bench {
     */
   private def extractionPass(spark: SparkSession, path: String, k: Int): (Long, Long) = {
     import spark.implicits._
-    val ds = Pipeline.extract(spark, spark.read.parquet(path).coalesce(k), "bench",
-      numPartitions = -1)
+    val ds = Pipeline.extract(spark, spark.read.parquet(path).coalesce(k), "bench")
     // Typed Dataset fold (no RDD): count rows while forcing full extraction.
     ds.mapPartitions { it =>
       var n = 0L
@@ -285,11 +284,11 @@ object Bench {
       "x40_image_decode", "x42_writer_roundtrip", "x43_pdf_images")
     val failed = scala.collection.mutable.ArrayBuffer.empty[String]
     val queryTimesWarm = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    for (name <- headline) SparkEntry.queries.get(name) match {
+    for (name <- headline) SparkEntry.gates.find(_.name == name).map(_.run) match {
       case None =>
         // A renamed/missing headline query must not silently vanish from
         // the driver-contract output.
-        System.err.println(s"[bench] $name missing from SparkEntry.queries")
+        System.err.println(s"[bench] $name missing from SparkEntry.gates")
         queryTimes(name) = -1.0
         failed += name
       case Some(fn) =>

@@ -11,7 +11,7 @@ import graft.spark.PagesGen
   * lives here.
   *
   * Modes (args(0)):
-  *  - "queries" [names...]: noop-time each named SparkEntry query (default:
+  *  - "queries" [names...]: noop-time each named SparkEntry gate (default:
   *    the Bench headline set), cold + 2 warm reps, one JSON line each.
   *  - "micro": single-threaded per-variant microbench of payload BUILD and
   *    kernel EXTRACT cost (the two sides of every extraction query).
@@ -58,7 +58,7 @@ object BenchExtra {
             "x28_winnow", "x29_ann_ivf", "x39_bpe_merges", "x40_image_decode",
             "x42_writer_roundtrip", "x43_pdf_images")
         for (name <- names) {
-          SparkEntry.queries.get(name) match {
+          SparkEntry.gates.find(_.name == name).map(_.run) match {
             case None => println(s"""{"query":"$name","error":"missing"}""")
             case Some(fn) =>
               spark.sparkContext.setJobDescription(s"bx:$name")
@@ -121,8 +121,8 @@ object BenchExtra {
       case "plan" =>
         val name = args(1)
         val outFile = args(2)
-        val fn = SparkEntry.queries(name)
-        val df = fn(spark, sfDir)
+        val df = SparkEntry.gates.find(_.name == name)
+          .getOrElse(sys.error(s"unknown gate: $name")).run(spark, sfDir)
         val txt = df.queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode)
         java.nio.file.Files.write(java.nio.file.Paths.get(outFile),

@@ -48,20 +48,32 @@ object Extract {
   def apply(payload: Array[Byte], maxBytesPerDoc: Int): ExtractResult =
     apply(payload, maxBytesPerDoc, DefaultTimeoutMs)
 
-  def apply(payload: Array[Byte], maxBytesPerDoc: Int, timeoutMs: Long): ExtractResult = {
+  def apply(payload: Array[Byte], maxBytesPerDoc: Int, timeoutMs: Long): ExtractResult =
+    guarded(payload, maxBytesPerDoc, timeoutMs, failedResult) {
+      if (isPdf(payload)) extractPdf(payload)
+      else extractHtml(payload)
+    }
+
+  private val failedResult: (String, String) => ExtractResult =
+    (status, msg) => ExtractResult(Array.emptyByteArray, Nil, status, msg)
+
+  /** The per-document guard of every kernel path (text and image
+    * extraction): empty and oversize payloads short-circuit, `body` runs
+    * under the per-document Deadline (always cleared), and any failure
+    * becomes `failed(status, message)`. Statuses: empty | skipped_oversize
+    * | timeout | error.
+    */
+  private[graft] def guarded[T](payload: Array[Byte], maxBytesPerDoc: Int, timeoutMs: Long,
+                                failed: (String, String) => T)(body: => T): T =
     try {
-      if (payload == null || payload.length == 0)
-        return ExtractResult(Array.emptyByteArray, Nil, "empty", "")
-      if (payload.length > maxBytesPerDoc)
-        return ExtractResult(Array.emptyByteArray, Nil, "skipped_oversize", "")
-      if (timeoutMs > 0) Deadline.set(System.nanoTime() + timeoutMs * 1000000L)
-      try {
-        if (isPdf(payload)) extractPdf(payload)
-        else extractHtml(payload)
-      } finally Deadline.clear()
+      if (payload == null || payload.length == 0) failed("empty", "")
+      else if (payload.length > maxBytesPerDoc) failed("skipped_oversize", "")
+      else {
+        if (timeoutMs > 0) Deadline.set(System.nanoTime() + timeoutMs * 1000000L)
+        try body finally Deadline.clear()
+      }
     } catch {
-      case _: PdfTimeout =>
-        ExtractResult(Array.emptyByteArray, Nil, "timeout", "per-document time budget exceeded")
+      case _: PdfTimeout => failed("timeout", "per-document time budget exceeded")
       case ie: InterruptedException =>
         // Task cancellation (Spark kills speculative/cancelled tasks via
         // interrupt) must propagate, not become a data row.
@@ -73,9 +85,8 @@ object Extract {
         // unwound and the depth caps make it a document property, not a VM
         // corruption)
       case e: Throwable => // absolute backstop: a kernel bug must not fail the task
-        ExtractResult(Array.emptyByteArray, Nil, "error", safeMsg(e))
+        failed("error", safeMsg(e))
     }
-  }
 
   def isPdf(payload: Array[Byte]): Boolean =
     payload.length >= 5 &&

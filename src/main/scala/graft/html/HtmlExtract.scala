@@ -237,11 +237,6 @@ object HtmlExtract {
     new String(bytes, cs)
   }
 
-  /** A/B lever for the bulk text-run path (interleaved same-JVM comparison;
-    * see OPTIMIZATION_r06.md). Semantics of both paths are identical.
-    */
-  @volatile private[graft] var bulkRuns = true
-
   @inline private def isWs(c: Char): Boolean =
     c <= ' ' && (c == ' ' || c == '\t' || c == '\r' || c == '\n' || c == '\f' || c == 0x0b)
 
@@ -312,9 +307,12 @@ object HtmlExtract {
     }
 
     /** Text-run fast path over [from, until) of the source: no substring
-      * allocation and whole non-whitespace spans appended in bulk. Entity-
-      * bearing runs and title text fall back to appendText — state updates
-      * (pendingWs, started, linkChars) are identical per character.
+      * allocation; non-whitespace spans are copied into a reusable char
+      * buffer (String.getChars, an intrinsic arraycopy) and the whole run
+      * is appended to the block builder ONCE — a builder call per run, not
+      * per word. Entity-bearing runs and title text fall back to
+      * appendText; state updates (pendingWs, started, linkChars) are
+      * identical per character to appendText's.
       */
     def appendRun(src: String, from: Int, until: Int): Unit = {
       if (inTitle) { appendText(src.substring(from, until)); return }
@@ -322,63 +320,31 @@ object HtmlExtract {
       if (amp >= 0 && amp < until) { appendText(src.substring(from, until)); return }
       var started = current.sb.nonEmpty
       var k = from
-      if (bulkRuns) {
-        // Bulk path: spans are copied into a reusable char buffer
-        // (String.getChars, an intrinsic arraycopy) and the whole run is
-        // appended to the block builder ONCE — a builder call per run, not
-        // per word. State updates (pendingWs, started, linkChars) are
-        // identical per character to the classic loop below.
-        if (runBuf == null || runBuf.length < until - from + 1)
-          runBuf = new Array[Char](math.max(until - from + 1, 256))
-        val buf = runBuf
-        var len = 0
-        while (k < until) {
-          val c = src.charAt(k)
-          if (isWs(c)) {
-            pendingWs = true
-            k += 1
-          } else {
-            if (pendingWs && started) {
-              buf(len) = ' '; len += 1
-              if (linkDepth > 0) current.linkChars += 1
-            }
-            var e = k + 1
-            while (e < until && !isWs(src.charAt(e))) e += 1
-            src.getChars(k, e, buf, len)
-            len += e - k
-            if (linkDepth > 0) current.linkChars += e - k
-            started = true
-            pendingWs = false
-            k = e
+      if (runBuf == null || runBuf.length < until - from + 1)
+        runBuf = new Array[Char](math.max(until - from + 1, 256))
+      val buf = runBuf
+      var len = 0
+      while (k < until) {
+        val c = src.charAt(k)
+        if (isWs(c)) {
+          pendingWs = true
+          k += 1
+        } else {
+          if (pendingWs && started) {
+            buf(len) = ' '; len += 1
+            if (linkDepth > 0) current.linkChars += 1
           }
-        }
-        if (len > 0) current.sb.underlying.append(buf, 0, len)
-      } else {
-        while (k < until) {
-          val c = src.charAt(k)
-          if (c == ' ' || c == '\t' || c == '\r' || c == '\n' || c == '\f' || c == 0x0b) {
-            pendingWs = true
-            k += 1
-          } else {
-            if (pendingWs && started) {
-              current.sb.append(' ')
-              if (linkDepth > 0) current.linkChars += 1
-            }
-            var e = k + 1
-            while (e < until && {
-              val d = src.charAt(e)
-              d != ' ' && d != '\t' && d != '\r' && d != '\n' && d != '\f' && d != 0x0b
-            }) e += 1
-            // java.lang.StringBuilder overload (CharSequence, from, until) —
-            // the scala wrapper would resolve (src, k, e) to append(Any).
-            current.sb.underlying.append(src, k, e)
-            if (linkDepth > 0) current.linkChars += e - k
-            started = true
-            pendingWs = false
-            k = e
-          }
+          var e = k + 1
+          while (e < until && !isWs(src.charAt(e))) e += 1
+          src.getChars(k, e, buf, len)
+          len += e - k
+          if (linkDepth > 0) current.linkChars += e - k
+          started = true
+          pendingWs = false
+          k = e
         }
       }
+      if (len > 0) current.sb.underlying.append(buf, 0, len)
       current.inContent = current.inContent || contentDepth > 0
       current.boilerplate = current.boilerplate || boilerDepth > 0
     }

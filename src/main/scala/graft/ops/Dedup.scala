@@ -166,14 +166,6 @@ object Dedup {
     (inter, sa.size + sb.size - inter)
   }
 
-  /** doc_id -> (signature, band keys). */
-  def withMinhash(docs: DataFrame, textCol: String = "text"): DataFrame = {
-    val sigUdf = udf((s: String) => minhashSignature(s))
-    val bandUdf = udf((sig: Seq[Long]) => bandKeys(sig.toArray))
-    docs.withColumn("mh_sig", sigUdf(col(textCol)))
-      .withColumn("mh_bands", bandUdf(col("mh_sig")))
-  }
-
   /** FNV-1a 64 over the little-endian bytes of a signature, seeded —
     * two seeds give the two independent halves of the 128-bit group key.
     */

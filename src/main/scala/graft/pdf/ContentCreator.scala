@@ -2,14 +2,15 @@ package graft.pdf
 
 import scala.collection.mutable
 
-/** Programmatic content-stream builder — re-creates the reference's
-  * ContentCreator (contentstream/creator.go: the full 61-op Add_* surface,
-  * float params as PdfReal) with the reference's byte layout
-  * (contentstream/contentstream.go:78-101: each param DefaultWriteString +
-  * one space, then the operand and a newline). Serialization reuses
-  * PdfWriter.serializeDirect, so operands like Tj strings get the exact
-  * DefaultWriteString escape set; the output parses back through our own
-  * ContentParser (round-trip pinned in ContentCreatorSpec).
+/** Programmatic content-stream builder — the text-operator subset of the
+  * reference's ContentCreator (contentstream/creator.go Add_* builders,
+  * float params as PdfReal) that Creator's layouts use, with the
+  * reference's byte layout (contentstream/contentstream.go:78-101: each
+  * param DefaultWriteString + one space, then the operand and a newline).
+  * Serialization reuses PdfWriter.serializeDirect, so operands like Tj
+  * strings get the exact DefaultWriteString escape set; the output parses
+  * back through our own ContentParser (round-trip pinned in
+  * ContentCreatorSpec).
   */
 final class ContentCreator {
   private val ops = mutable.ArrayBuffer.empty[(String, Seq[PdfObj])]
@@ -21,8 +22,6 @@ final class ContentCreator {
     ops += ((operand, params))
     this
   }
-
-  def operations: Seq[(String, Seq[PdfObj])] = ops.toSeq
 
   def bytes: Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream()
@@ -38,101 +37,16 @@ final class ContentCreator {
   }
 
   private def f(vals: Double*): Seq[PdfObj] = vals.map(PdfReal(_))
-  private def n(name: String): PdfObj = PdfName(name)
-
-  // ---- graphics state (creator.go:43-170)
-  def add_q(): this.type = add("q")
-  def add_Q(): this.type = add("Q")
-  def add_Do(name: String): this.type = add("Do", n(name))
-  def add_cm(a: Double, b: Double, c: Double, d: Double, e: Double, ff: Double): this.type =
-    add("cm", f(a, b, c, d, e, ff): _*)
-  def translate(tx: Double, ty: Double): this.type = add_cm(1, 0, 0, 1, tx, ty)
-  def scale(sx: Double, sy: Double): this.type = add_cm(sx, 0, 0, sy, 0, 0)
-  def rotateDeg(angle: Double): this.type = {
-    val u = angle * math.Pi / 180.0
-    add_cm(math.cos(u), math.sin(u), -math.sin(u), math.cos(u), 0, 0)
-  }
-  def add_w(lineWidth: Double): this.type = add("w", f(lineWidth): _*)
-  def add_J(lineCapStyle: String): this.type = add("J", n(lineCapStyle))
-  def add_j(lineJoinStyle: String): this.type = add("j", n(lineJoinStyle))
-  def add_M(miterLimit: Double): this.type = add("M", f(miterLimit): _*)
-  def add_d(dashArray: Seq[Long], dashPhase: Long): this.type =
-    add("d", PdfArr(dashArray.map(PdfInt(_): PdfObj): _*), PdfInt(dashPhase))
-  def add_ri(intent: String): this.type = add("ri", n(intent))
-  def add_i(flatness: Double): this.type = add("i", f(flatness): _*)
-  def add_gs(dictName: String): this.type = add("gs", n(dictName))
-
-  // ---- path construction (creator.go:173-237)
-  def add_m(x: Double, y: Double): this.type = add("m", f(x, y): _*)
-  def add_l(x: Double, y: Double): this.type = add("l", f(x, y): _*)
-  def add_c(x1: Double, y1: Double, x2: Double, y2: Double, x3: Double, y3: Double): this.type =
-    add("c", f(x1, y1, x2, y2, x3, y3): _*)
-  def add_v(x2: Double, y2: Double, x3: Double, y3: Double): this.type =
-    add("v", f(x2, y2, x3, y3): _*)
-  def add_y(x1: Double, y1: Double, x3: Double, y3: Double): this.type =
-    add("y", f(x1, y1, x3, y3): _*)
-  def add_h(): this.type = add("h")
-  def add_re(x: Double, y: Double, width: Double, height: Double): this.type =
-    add("re", f(x, y, width, height): _*)
-
-  // ---- path painting (creator.go:240-311)
-  def add_S(): this.type = add("S")
-  def add_s(): this.type = add("s")
-  def add_f(): this.type = add("f")
-  def add_f_starred(): this.type = add("f*")
-  def add_B(): this.type = add("B")
-  def add_B_starred(): this.type = add("B*")
-  def add_b(): this.type = add("b")
-  def add_b_starred(): this.type = add("b*")
-  def add_n(): this.type = add("n")
-
-  // ---- clipping (creator.go:314-326)
-  def add_W(): this.type = add("W")
-  def add_W_starred(): this.type = add("W*")
-
-  // ---- color (creator.go:332-449)
-  def add_CS(name: String): this.type = add("CS", n(name))
-  def add_cs(name: String): this.type = add("cs", n(name))
-  def add_SC(c: Double*): this.type = add("SC", f(c: _*): _*)
-  def add_SCN(c: Double*): this.type = add("SCN", f(c: _*): _*)
-  def add_SCN_pattern(name: String, c: Double*): this.type =
-    add("SCN", f(c: _*) :+ n(name): _*)
-  def add_scn(c: Double*): this.type = add("scn", f(c: _*): _*)
-  def add_scn_pattern(name: String, c: Double*): this.type =
-    add("scn", f(c: _*) :+ n(name): _*)
-  def add_G(gray: Double): this.type = add("G", f(gray): _*)
-  def add_g(gray: Double): this.type = add("g", f(gray): _*)
-  def add_RG(r: Double, g: Double, b: Double): this.type = add("RG", f(r, g, b): _*)
-  def add_rg(r: Double, g: Double, b: Double): this.type = add("rg", f(r, g, b): _*)
-  def add_K(c: Double, m: Double, y: Double, k: Double): this.type =
-    add("K", f(c, m, y, k): _*)
-  def add_k(c: Double, m: Double, y: Double, k: Double): this.type =
-    add("k", f(c, m, y, k): _*)
-
-  // ---- shading (creator.go:452)
-  def add_sh(name: String): this.type = add("sh", n(name))
 
   // ---- text (creator.go:465-611)
   def add_BT(): this.type = add("BT")
   def add_ET(): this.type = add("ET")
-  def add_Tc(charSpace: Double): this.type = add("Tc", f(charSpace): _*)
-  def add_Tw(wordSpace: Double): this.type = add("Tw", f(wordSpace): _*)
-  def add_Tz(scale: Double): this.type = add("Tz", f(scale): _*)
-  def add_TL(leading: Double): this.type = add("TL", f(leading): _*)
   def add_Tf(fontName: String, fontSize: Double): this.type =
-    add("Tf", n(fontName), PdfReal(fontSize))
-  def add_Tr(render: Long): this.type = add("Tr", PdfInt(render))
-  def add_Ts(rise: Double): this.type = add("Ts", f(rise): _*)
+    add("Tf", PdfName(fontName), PdfReal(fontSize))
   def add_Td(tx: Double, ty: Double): this.type = add("Td", f(tx, ty): _*)
-  def add_TD(tx: Double, ty: Double): this.type = add("TD", f(tx, ty): _*)
   def add_Tm(a: Double, b: Double, c: Double, d: Double, e: Double, ff: Double): this.type =
     add("Tm", f(a, b, c, d, e, ff): _*)
-  def add_Tstar(): this.type = add("T*")
   def add_Tj(text: Array[Byte]): this.type = add("Tj", PdfStr(text))
   def add_Tj(text: String): this.type =
     add_Tj(text.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-  def add_quote(text: Array[Byte]): this.type = add("'", PdfStr(text))
-  def add_quotes(text: Array[Byte], aw: Double, ac: Double): this.type =
-    add("\"", PdfReal(aw), PdfReal(ac), PdfStr(text))
-  def add_TJ(objs: PdfObj*): this.type = add("TJ", PdfArr(objs: _*))
 }

@@ -97,9 +97,6 @@ object PdfEncrypt {
     java.util.Arrays.copyOf(enc, 32) // back half zeros (never compared)
   }
 
-  /** Algorithm 4: the /U value for R2 (RC4 of the padding). */
-  def alg4U(ekey: Array[Byte]): Array[Byte] = rc4(ekey, PasswordPadding)
-
   /** Per-object key (crypt_filters.go makeKey): MD5(ekey + objNum LE24 +
     * genNum LE16 [+ "sAlT" for AES]) truncated to min(len+5, 16).
     */

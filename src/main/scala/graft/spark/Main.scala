@@ -9,8 +9,8 @@ import org.apache.spark.sql.SparkSession
   *   --input  <pages parquet/iceberg-layout path>        \
   *   --warehouse <output warehouse path>                 \
   *   [--run-id <id>] [--buckets 4096] [--batch-buckets 64] \
-  *   [--partitions -1] [--max-bytes-per-doc 67108864] \
-  *   [--timeout-ms 30000] [--vacuum true] [--table-summary true]
+  *   [--max-bytes-per-doc 67108864] [--timeout-ms 30000] \
+  *   [--vacuum true] [--table-summary true]
   * }}}
   *
   * Reads the Common-Crawl-shaped pages table, runs the resumable extraction
@@ -36,10 +36,6 @@ object Main {
     val batchBuckets = opts.getOrElse("batch-buckets", "16").toInt
     require(buckets > 0, s"--buckets must be positive, got $buckets")
     require(batchBuckets > 0, s"--batch-buckets must be positive, got $batchBuckets")
-    // -1 (default) = NO pre-kernel shuffle: the dedup window's url-hash
-    // partitioning feeds the kernel. Pass 0 / N to opt into an explicit
-    // url-hash spread for measured-skew inputs.
-    val partitions = opts.getOrElse("partitions", "-1").toInt
     val maxBytes = opts.getOrElse("max-bytes-per-doc",
       graft.Extract.DefaultMaxBytesPerDoc.toString).toInt
     val timeoutMs = opts.getOrElse("timeout-ms",
@@ -62,7 +58,7 @@ object Main {
     val pages = spark.read.parquet(input)
     val t0 = System.nanoTime()
     val snap = TableIO.runResumable(spark, pages, warehouse, runId,
-      numBuckets = buckets, batchBuckets = batchBuckets, numPartitions = partitions,
+      numBuckets = buckets, batchBuckets = batchBuckets,
       maxBytesPerDoc = maxBytes, timeoutMs = timeoutMs)
     val sec = (System.nanoTime() - t0) / 1e9
 

@@ -8,8 +8,8 @@ import org.apache.spark.util.CollectionAccumulator
 
 import graft.Extract
 
-/** The extraction pipeline: scan -> dedup-by-url -> salt/partition ->
-  * mapPartitions kernel -> extracted rows (+ per-partition lineage).
+/** The extraction pipeline: scan -> dedup-by-url -> mapPartitions kernel
+  * -> extracted rows (+ per-partition lineage).
   *
   * Scale design (SURVEY.md §2.10, §4.3):
   *  - dedup keeps the LATEST capture per url (window by warc_ts desc) — one
@@ -46,35 +46,19 @@ object Pipeline {
       spark: SparkSession,
       pages: DataFrame,
       runId: String,
-      numPartitions: Int = -1,
       maxBytesPerDoc: Int = DefaultMaxBytesPerDoc,
       lineageAcc: CollectionAccumulator[LineageRow] = null,
       timeoutMs: Long = Extract.DefaultTimeoutMs): Dataset[ExtractedRow] = {
     import spark.implicits._
     // Project to the kernel's columns BEFORE typing the Dataset: the pages
     // table's text/lang never reach the kernel, so selecting them forced
-    // every extraction scan to decode (and any opt-in repartition to
-    // shuffle) ~12 KB/doc of dead data (guide §6 column pruning).
-    val base = pages
-      .select("url", "warc_ts", "html")
-      .as[KernelInRow]
-    // DEFAULT (-1) is NO pre-kernel shuffle: the scan's own partitioning
+    // every extraction scan to decode ~12 KB/doc of dead data (guide §6
+    // column pruning). No pre-kernel shuffle: the scan's own partitioning
     // (spark.sql.files.maxPartitionBytes-sized splits, or the url-hash
     // partitioning left by dedupLatest's window) already spreads the work —
     // re-shuffling the full payload bytes would be the single biggest data
-    // movement in the job. Pass numPartitions > 0 to opt IN to an explicit
-    // url-hash spread for inputs with measured partition skew
-    // (e.g. size-sorted ingest files), or 0 for defaultParallelism spread.
-    val typed =
-      if (numPartitions < 0) base
-      else {
-        val parts =
-          if (numPartitions > 0) numPartitions
-          else spark.sparkContext.defaultParallelism
-        base.repartition(parts, col("url"))
-      }
-
-    typed.mapPartitions { it =>
+    // movement in the job.
+    pages.select("url", "warc_ts", "html").as[KernelInRow].mapPartitions { it =>
       val pid = TaskContext.getPartitionId()
       val startedAt = System.currentTimeMillis()
       var inputRows = 0L
@@ -132,29 +116,27 @@ object Pipeline {
     * dedup window already hash-partitions rows by url, so extraction runs
     * directly on those partitions (no second shuffle).
     */
-  def run(spark: SparkSession, pages: DataFrame, runId: String,
-          numPartitions: Int = -1): Dataset[ExtractedRow] =
-    extract(spark, dedupLatest(pages), runId, numPartitions)
+  def run(spark: SparkSession, pages: DataFrame, runId: String): Dataset[ExtractedRow] =
+    extract(spark, dedupLatest(pages), runId)
 
   /** IMAGE extraction over a pages table: the multimodal bridge as a
-    * first-class pipeline operator. One mapPartitions pass (same
-    * no-pre-shuffle default as text extraction) enumerates + decodes every
-    * raster of every PDF payload through PdfImages and emits one ImageRow
-    * per image with integer statistics, plus a marker row (source "none")
-    * per image-less document so lineage never loses documents. The FULL
-    * extract guard set applies per document: empty / oversize payloads and
-    * non-PDFs keep taxonomy marker rows, the per-document Deadline makes a
-    * hostile spinning PDF a `timeout` row instead of a stuck task, and the
-    * Extract-style Throwable backstop turns any kernel defect into an
-    * `error` row (interrupts and OOM still propagate). Raw samples stay
-    * inside the partition — at 100 TB the images table carries statistics
-    * and identities, with decoded bytes re-derivable downstream.
+    * first-class pipeline operator. One mapPartitions pass (no
+    * pre-shuffle, like text extraction) enumerates + decodes every raster
+    * of every PDF payload through PdfImages and emits one ImageRow per
+    * image with integer statistics, plus a marker row (source "none") per
+    * image-less document so lineage never loses documents. Each document
+    * runs under text extraction's own guard (Extract.guarded): empty /
+    * oversize payloads and non-PDFs keep taxonomy marker rows, the
+    * per-document Deadline makes a hostile spinning PDF a `timeout` row
+    * instead of a stuck task, and the Throwable backstop turns any kernel
+    * defect into an `error` row (interrupts and OOM still propagate). Raw
+    * samples stay inside the partition — at 100 TB the images table carries
+    * statistics and identities, with decoded bytes re-derivable downstream.
     */
   def extractImages(spark: SparkSession, pages: DataFrame,
                     maxBytesPerDoc: Int = DefaultMaxBytesPerDoc,
                     timeoutMs: Long = Extract.DefaultTimeoutMs): Dataset[ImageRow] = {
     import spark.implicits._
-    import graft.pdf.{Deadline, PdfTimeout}
     pages.select("url", "warc_ts", "html").as[KernelInRow]
       .mapPartitions { it =>
         it.flatMap { row =>
@@ -163,27 +145,19 @@ object Pipeline {
             Iterator.single(ImageRow(row.url, -1, -1, "none", 0, 0, 0, 0,
               if (payload == null) 0L else payload.length.toLong, 0L,
               nErrors, status))
-          if (payload == null || payload.length == 0) marker("empty", 0)
-          else if (payload.length > maxBytesPerDoc) marker("skipped_oversize", 0)
-          else if (!graft.Extract.isPdf(payload)) marker("non_pdf", 0)
-          else {
-            try {
-              if (timeoutMs > 0) Deadline.set(System.nanoTime() + timeoutMs * 1000000L)
-              val scan =
-                try graft.pdf.PdfImages.imagesOf(graft.pdf.PdfDocument.open(payload))
-                finally Deadline.clear()
+          // timeout and error count as the document's one error
+          def failed(status: String, msg: String): Iterator[ImageRow] =
+            marker(status, if (status == "timeout" || status == "error") 1 else 0)
+          Extract.guarded(payload, maxBytesPerDoc, timeoutMs, failed) {
+            if (!Extract.isPdf(payload)) marker("non_pdf", 0)
+            else {
+              val scan = graft.pdf.PdfImages.imagesOf(graft.pdf.PdfDocument.open(payload))
               if (scan.images.isEmpty) marker("ok", scan.nErrors)
               else scan.images.iterator.map { im =>
                 ImageRow(row.url, im.page, im.idx, im.source, im.width,
                   im.height, im.bpc, im.components, im.data.length.toLong,
                   im.band0Sum, scan.nErrors, "ok")
               }
-            } catch {
-              case _: PdfTimeout => marker("timeout", 1)
-              case ie: InterruptedException =>
-                Thread.currentThread().interrupt(); throw ie
-              case fatal: OutOfMemoryError => throw fatal
-              case _: Throwable => marker("error", 1) // Extract-style backstop
             }
           }
         }

@@ -154,7 +154,6 @@ object TableIO {
       runId: String,
       numBuckets: Int = 16,
       batchBuckets: Int = 4,
-      numPartitions: Int = -1,
       failAfterBatches: Int = -1,
       maxBytesPerDoc: Int = Pipeline.DefaultMaxBytesPerDoc,
       timeoutMs: Long = graft.Extract.DefaultTimeoutMs): Snapshot = {
@@ -185,7 +184,7 @@ object TableIO {
       else withBucket0
     try {
       runBatches(spark, withBucket, warehouse, runId, numBuckets, batchBuckets,
-        numPartitions, failAfterBatches, maxBytesPerDoc, timeoutMs, todo)
+        failAfterBatches, maxBytesPerDoc, timeoutMs, todo)
     } finally if (multiBatch) withBucket.unpersist(blocking = false)
   }
 
@@ -196,7 +195,6 @@ object TableIO {
       runId: String,
       numBuckets: Int,
       batchBuckets: Int,
-      numPartitions: Int,
       failAfterBatches: Int,
       maxBytesPerDoc: Int,
       timeoutMs: Long,
@@ -210,7 +208,7 @@ object TableIO {
       val subset = withBucket.filter(col("__bucket").isInCollection(batch)).drop("__bucket")
       val lineageAcc: CollectionAccumulator[LineageRow] =
         spark.sparkContext.collectionAccumulator[LineageRow](s"lineage-$runId-$batchesDone")
-      val extracted = Pipeline.extract(spark, subset, runId, numPartitions,
+      val extracted = Pipeline.extract(spark, subset, runId,
         maxBytesPerDoc = maxBytesPerDoc, lineageAcc = lineageAcc, timeoutMs = timeoutMs)
       val dataDir = s"$warehouse/data/batch-${snap.version + 1}-${UUID.randomUUID().toString.take(8)}"
       extracted.write.mode(SaveMode.ErrorIfExists).parquet(dataDir)

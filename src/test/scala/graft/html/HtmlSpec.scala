@@ -6,6 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.Extract
 import graft.fixtures.PdfFixtures
+import graft.html.HtmlExtract.HtmlResult
 
 /** HTML fixtures h01-h05 (FIXTURES.md §4; goldens are self-defined — the
   * reference has no HTML code).
@@ -220,31 +221,31 @@ class HtmlSpec extends AnyFunSuite {
   }
 
   test("bulk text-run path is byte-identical to the classic per-span path") {
-    // The r06 bulk appendRun (one builder call per run via a char buffer)
-    // must match the classic loop char-for-char: whitespace collapse,
-    // pendingWs carry across runs ("click <a>here</a>"), link-density
-    // counting, control chars (NOT whitespace), long runs, empty blocks.
+    // appendRun (one builder call per run via a char buffer) against
+    // goldens recorded from the classic per-span loop it replaced:
+    // whitespace collapse, pendingWs carry across runs ("click <a>here</a>"),
+    // link-density counting (word and separator chars inside links decide
+    // the last two cases), control chars (NOT whitespace), long runs,
+    // empty blocks.
     val cases = Seq(
-      "<p>a  b\tc\nde\ff</p>",
-      "<p> lead</p><p>trail </p><p>\t\n</p>",
-      "<p>click <a href='x'>here</a> now and some more padding text to keep</p>",
-      "<article>insidectrl chars stay</article>",
-      "<div>" + ("word " * 60) + "</div>",
-      "<h1>h</h1><nav>drop me</nav><p></p>",
-      "<title>a\n b </title><body><p>body text long enough to be kept ok yes</p>",
-      "plain text with no tags at all but long enough to keep as a block",
-      "<p>" + ("x" * 4096) + " tail</p>",
-      "<ul><li>one</li><li>two</li></ul><a>linky</a><p>mixed <a>l</a> t</p>")
-    for (html <- cases) {
-      val saved = HtmlExtract.bulkRuns
-      try {
-        HtmlExtract.bulkRuns = true
-        val bulk = HtmlExtract.extract(html)
-        HtmlExtract.bulkRuns = false
-        val classic = HtmlExtract.extract(html)
-        assert(bulk == classic, s"paths diverge on: ${html.take(60)}")
-      } finally HtmlExtract.bulkRuns = saved
-    }
-    assert(HtmlExtract.bulkRuns) // default stays the fast path
+      "<p>a  b\tc\nde\ff</p>" -> HtmlResult("", Seq()),
+      "<p> lead</p><p>trail </p><p>\t\n</p>" -> HtmlResult("", Seq()),
+      "<p>click <a href='x'>here</a> now and some more padding text to keep</p>" ->
+        HtmlResult("", Seq("click here now and some more padding text to keep")),
+      "<article>in\u0001side\u001fctrl chars stay</article>" ->
+        HtmlResult("", Seq("in\u0001side\u001fctrl chars stay")),
+      "<div>" + ("word " * 60) + "</div>" -> HtmlResult("", Seq(Seq.fill(60)("word").mkString(" "))),
+      "<h1>h</h1><nav>drop me</nav><p></p>" -> HtmlResult("", Seq()),
+      "<title>a\n b </title><body><p>body text long enough to be kept ok yes</p>" ->
+        HtmlResult("a b", Seq("body text long enough to be kept ok yes")),
+      "plain text with no tags at all but long enough to keep as a block" ->
+        HtmlResult("", Seq("plain text with no tags at all but long enough to keep as a block")),
+      "<p>" + ("x" * 4096) + " tail</p>" -> HtmlResult("", Seq(("x" * 4096) + " tail")),
+      "<ul><li>one</li><li>two</li></ul><a>linky</a><p>mixed <a>l</a> t</p>" -> HtmlResult("", Seq()),
+      "<div>see <a href='y'>a long link label that dominates this block</a> ok</div>" ->
+        HtmlResult("", Seq()),
+      "<p>plain words before the link <a>a b c d e f g h i j</a></p>" -> HtmlResult("", Seq()))
+    for ((html, golden) <- cases)
+      assert(HtmlExtract.extract(html) == golden, s"diverges on: ${html.take(60)}")
   }
 }

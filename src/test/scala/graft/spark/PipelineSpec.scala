@@ -223,17 +223,21 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("extraction plan: single shuffle (repartition), kernel in one mapPartitions") {
+    // The production plan (dedup -> kernel): dedupLatest's url-hash window
+    // exchange is the only shuffle; the kernel runs on its partitions.
     val pages = PagesGen.smokeTable(spark)
-    val ds = Pipeline.extract(spark, pages, "plan", numPartitions = 4)
+    val ds = Pipeline.run(spark, pages, "plan")
     val plan = ds.queryExecution.executedPlan.toString
-    // exactly one exchange below the kernel (the url repartition)
-    assert(plan.contains("Exchange"))
+    val exchanges = plan.linesIterator.filter(_.contains("Exchange")).toList
+    assert(exchanges.length == 1, s"expected only the dedup exchange:\n$plan")
+    assert(exchanges.head.contains("hashpartitioning(url"), exchanges.head)
+    assert(plan.contains("Window"), plan) // the exchange feeds dedupLatest's window
     assert(plan.contains("SerializeFromObject")) // typed kernel present
   }
 
   test("extraction plan DEFAULT: no pre-kernel shuffle (scan partitions feed the kernel)") {
     val pages = PagesGen.smokeTable(spark)
-    val ds = Pipeline.extract(spark, pages, "plan-default") // numPartitions = -1
+    val ds = Pipeline.extract(spark, pages, "plan-default")
     val plan = ds.queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"), s"default path must not shuffle payloads:\n$plan")
   }
