@@ -42,13 +42,8 @@ object Extract {
     */
   val DefaultTimeoutMs: Long = 30000L
 
-  def apply(payload: Array[Byte]): ExtractResult =
-    apply(payload, DefaultMaxBytesPerDoc, DefaultTimeoutMs)
-
-  def apply(payload: Array[Byte], maxBytesPerDoc: Int): ExtractResult =
-    apply(payload, maxBytesPerDoc, DefaultTimeoutMs)
-
-  def apply(payload: Array[Byte], maxBytesPerDoc: Int, timeoutMs: Long): ExtractResult =
+  def apply(payload: Array[Byte], maxBytesPerDoc: Int = DefaultMaxBytesPerDoc,
+            timeoutMs: Long = DefaultTimeoutMs): ExtractResult =
     guarded(payload, maxBytesPerDoc, timeoutMs, failedResult) {
       if (isPdf(payload)) extractPdf(payload)
       else extractHtml(payload)

@@ -587,6 +587,7 @@ object PdfFixtures {
     * encrypted payload (no strings in the fixture's object graph).
     */
   def sEncrypted(text: String, docId: Long, aes: Boolean): Array[Byte] = {
+    import graft.pdf.PdfCrypt.{alg2Key, alg5U, objectKey}
     import graft.pdf.PdfEncrypt._
     val content = contentFor(text)
     val p = -1
@@ -873,6 +874,7 @@ object PdfFixtures {
     * (crossrefs.go:317-321). Empty user password.
     */
   def sEncryptedObjstm(text: String, docId: Long): Array[Byte] = {
+    import graft.pdf.PdfCrypt.{alg2Key, alg5U, objectKey}
     import graft.pdf.PdfEncrypt._
     val p = -1
     val id0 = java.security.MessageDigest.getInstance("MD5")

@@ -1,7 +1,6 @@
 package graft.pdf
 
 import java.nio.charset.StandardCharsets.ISO_8859_1
-import java.security.MessageDigest
 
 import javax.crypto.Cipher
 import javax.crypto.spec.{IvParameterSpec, SecretKeySpec}
@@ -14,7 +13,8 @@ import PdfObjs._
   * (strings + streams; /Parent //Prev //Last keys and Sig /Contents skipped;
   * XRef-type streams never encrypted).
   *
-  * Only decryption is implemented (the engine never writes encrypted PDFs).
+  * The key derivations in the companion object are pure; PdfEncrypt (the
+  * writer side) reuses them.
   */
 final class PdfCrypt private[pdf] (
     val v: Int,
@@ -58,56 +58,9 @@ final class PdfCrypt private[pdf] (
     false
   }
 
-  private def padded(pass: Array[Byte]): Array[Byte] = {
-    val key = new Array[Byte](32)
-    val n = math.min(32, pass.length)
-    System.arraycopy(pass, 0, key, 0, n)
-    if (n < 32) System.arraycopy(PasswordPadding, 0, key, n, 32 - n)
-    key
-  }
-
-  /** Algorithm 2: file encryption key (crypt.go:1223-1264). */
-  def alg2(pass: Array[Byte]): Array[Byte] = {
-    val h = CryptoPool.md5()
-    h.update(padded(pass))
-    h.update(o)
-    val pb = new Array[Byte](4)
-    var i = 0
-    while (i < 4) { pb(i) = ((p >> (8 * i)) & 0xff).toByte; i += 1 }
-    h.update(pb)
-    h.update(id0)
-    if (r >= 4 && !encryptMetadata)
-      h.update(Array[Byte](0xff.toByte, 0xff.toByte, 0xff.toByte, 0xff.toByte))
-    var hashb = h.digest()
-    if (r >= 3) {
-      var k = 0
-      while (k < 50) {
-        val h2 = CryptoPool.md5()
-        h2.update(hashb, 0, length / 8)
-        hashb = h2.digest()
-        k += 1
-      }
-      java.util.Arrays.copyOf(hashb, length / 8)
-    } else java.util.Arrays.copyOf(hashb, 5)
-  }
-
-  /** alg3Key (crypt.go:1267-1289). */
-  private def alg3Key(pass: Array[Byte]): Array[Byte] = {
-    var h = CryptoPool.md5()
-    h.update(padded(pass))
-    if (r >= 3) {
-      var i = 0
-      while (i < 50) {
-        val hashb = h.digest()
-        h = CryptoPool.md5()
-        h.update(hashb)
-        i += 1
-      }
-    }
-    val encKey = h.digest()
-    if (r == 2) java.util.Arrays.copyOf(encKey, 5)
-    else java.util.Arrays.copyOf(encKey, length / 8)
-  }
+  /** Algorithm 2: file encryption key. */
+  def alg2(pass: Array[Byte]): Array[Byte] =
+    alg2Key(pass, o, p, id0, r, length, encryptMetadata)
 
   /** Algorithm 4 (R2 U value). */
   private def alg4(upass: Array[Byte]): (Array[Byte], Array[Byte]) = {
@@ -118,17 +71,7 @@ final class PdfCrypt private[pdf] (
   /** Algorithm 5 (R>=3 U value; only the first 16 bytes matter for auth). */
   private[pdf] def alg5(upass: Array[Byte]): (Array[Byte], Array[Byte]) = {
     val ekey = alg2(upass)
-    val h = CryptoPool.md5()
-    h.update(PasswordPadding)
-    h.update(id0)
-    var encrypted = rc4(ekey, h.digest())
-    var i = 0
-    while (i < 19) {
-      val ekey2 = ekey.map(b => (b ^ (i + 1)).toByte)
-      encrypted = rc4(ekey2, encrypted)
-      i += 1
-    }
-    (java.util.Arrays.copyOf(encrypted, 32), ekey) // back half zero (not compared)
+    (alg5U(ekey, id0), ekey)
   }
 
   /** Algorithm 6: user password check (crypt.go:1414-1453). */
@@ -149,7 +92,7 @@ final class PdfCrypt private[pdf] (
 
   /** Algorithm 7: owner password check (crypt.go:1455-1490). */
   private def alg7(opass: Array[Byte]): Boolean = {
-    val encKey = alg3Key(opass)
+    val encKey = alg3Key(opass, r, length)
     var decrypted: Array[Byte] = null
     if (r == 2) decrypted = rc4(encKey, o)
     else if (r >= 3) {
@@ -244,19 +187,7 @@ final class PdfCrypt private[pdf] (
     val fd = cryptFilters.getOrElse(filterName, throw new PdfError(s"Unknown crypt filter ($filterName)"))
     fd.cfm match {
       case "AESV3" => encryptionKey
-      case "V2" | "AESV2" =>
-        val isAes = fd.cfm == "AESV2"
-        val ekey = encryptionKey
-        val key = new Array[Byte](ekey.length + 5 + (if (isAes) 4 else 0))
-        System.arraycopy(ekey, 0, key, 0, ekey.length)
-        var i = 0
-        while (i < 3) { key(ekey.length + i) = ((objNum >> (8 * i)) & 0xff).toByte; i += 1 }
-        i = 0
-        while (i < 2) { key(ekey.length + 3 + i) = ((genNum >> (8 * i)) & 0xff).toByte; i += 1 }
-        if (isAes) { key(ekey.length + 5) = 0x73; key(ekey.length + 6) = 0x41
-          key(ekey.length + 7) = 0x6c; key(ekey.length + 8) = 0x54 }
-        val hashb = CryptoPool.md5().digest(key)
-        if (ekey.length + 5 < 16) java.util.Arrays.copyOf(hashb, ekey.length + 5) else hashb
+      case "V2" | "AESV2" => objectKey(encryptionKey, objNum, genNum, isAes = fd.cfm == "AESV2")
       case "" => null // identity
       case other => throw new PdfError(s"unsupported crypt filter: $other")
     }
@@ -367,6 +298,92 @@ object PdfCrypt {
     0x28, 0xBF, 0x4E, 0x5E, 0x4E, 0x75, 0x8A, 0x41, 0x64, 0x00, 0x4E, 0x56, 0xFF,
     0xFA, 0x01, 0x08, 0x2E, 0x2E, 0x00, 0xB6, 0xD0, 0x68, 0x3E, 0x80, 0x2F, 0x0C,
     0xA9, 0xFE, 0x64, 0x53, 0x69, 0x7A).map(_.toByte)
+
+  def padded(pass: Array[Byte]): Array[Byte] = {
+    val key = new Array[Byte](32)
+    val n = math.min(32, pass.length)
+    System.arraycopy(pass, 0, key, 0, n)
+    if (n < 32) System.arraycopy(PasswordPadding, 0, key, n, 32 - n)
+    key
+  }
+
+  /** Algorithm 2: file encryption key (crypt.go:1223-1264). */
+  def alg2Key(pass: Array[Byte], o: Array[Byte], p: Int, id0: Array[Byte], r: Int,
+              lengthBits: Int, encryptMetadata: Boolean = true): Array[Byte] = {
+    val h = CryptoPool.md5()
+    h.update(padded(pass))
+    h.update(o)
+    val pb = new Array[Byte](4)
+    var i = 0
+    while (i < 4) { pb(i) = ((p >> (8 * i)) & 0xff).toByte; i += 1 }
+    h.update(pb)
+    h.update(id0)
+    if (r >= 4 && !encryptMetadata)
+      h.update(Array[Byte](0xff.toByte, 0xff.toByte, 0xff.toByte, 0xff.toByte))
+    var hashb = h.digest()
+    if (r >= 3) {
+      var k = 0
+      while (k < 50) {
+        val h2 = CryptoPool.md5()
+        h2.update(hashb, 0, lengthBits / 8)
+        hashb = h2.digest()
+        k += 1
+      }
+      java.util.Arrays.copyOf(hashb, lengthBits / 8)
+    } else java.util.Arrays.copyOf(hashb, 5)
+  }
+
+  /** alg3Key (crypt.go:1267-1289): the owner-password RC4 key. */
+  def alg3Key(pass: Array[Byte], r: Int, lengthBits: Int): Array[Byte] = {
+    var h = CryptoPool.md5()
+    h.update(padded(pass))
+    if (r >= 3) {
+      var i = 0
+      while (i < 50) {
+        val hashb = h.digest()
+        h = CryptoPool.md5()
+        h.update(hashb)
+        i += 1
+      }
+    }
+    val encKey = h.digest()
+    if (r == 2) java.util.Arrays.copyOf(encKey, 5)
+    else java.util.Arrays.copyOf(encKey, lengthBits / 8)
+  }
+
+  /** Algorithm 5: the R>=3 U value for file key `ekey` (32 bytes, back half
+    * zero — only the first 16 are compared).
+    */
+  def alg5U(ekey: Array[Byte], id0: Array[Byte]): Array[Byte] = {
+    val h = CryptoPool.md5()
+    h.update(PasswordPadding)
+    h.update(id0)
+    var encrypted = rc4(ekey, h.digest())
+    var i = 0
+    while (i < 19) {
+      val ekey2 = ekey.map(b => (b ^ (i + 1)).toByte)
+      encrypted = rc4(ekey2, encrypted)
+      i += 1
+    }
+    java.util.Arrays.copyOf(encrypted, 32)
+  }
+
+  /** Per-object key of the V2/AESV2 filters (crypt_filters.go makeKey):
+    * MD5(ekey + objNum LE24 + genNum LE16 [+ "sAlT" for AES]) truncated to
+    * min(len+5, 16).
+    */
+  def objectKey(ekey: Array[Byte], objNum: Long, genNum: Long, isAes: Boolean): Array[Byte] = {
+    val key = new Array[Byte](ekey.length + 5 + (if (isAes) 4 else 0))
+    System.arraycopy(ekey, 0, key, 0, ekey.length)
+    var i = 0
+    while (i < 3) { key(ekey.length + i) = ((objNum >> (8 * i)) & 0xff).toByte; i += 1 }
+    i = 0
+    while (i < 2) { key(ekey.length + 3 + i) = ((genNum >> (8 * i)) & 0xff).toByte; i += 1 }
+    if (isAes) { key(ekey.length + 5) = 0x73; key(ekey.length + 6) = 0x41
+      key(ekey.length + 7) = 0x6c; key(ekey.length + 8) = 0x54 }
+    val hashb = CryptoPool.md5().digest(key)
+    if (ekey.length + 5 < 16) java.util.Arrays.copyOf(hashb, ekey.length + 5) else hashb
+  }
 
   /** Hand-rolled RC4 (no provider dependence). */
   def rc4(key: Array[Byte], data: Array[Byte]): Array[Byte] = {

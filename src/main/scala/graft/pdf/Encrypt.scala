@@ -1,77 +1,23 @@
 package graft.pdf
 
-import java.security.MessageDigest
-
 import javax.crypto.Cipher
 import javax.crypto.spec.{IvParameterSpec, SecretKeySpec}
 
-import PdfCrypt.{rc4, PasswordPadding}
+import PdfCrypt.{alg3Key, padded, rc4}
 
-/** FORWARD direction of the PDF standard security handler, used only by the
-  * fixture builders to author encrypted test documents (the engine itself
-  * only decrypts — graft.pdf.Crypt). Algorithms 2/3/5 mirror the spec (and
-  * crypt.go's derivations) so the kernel's authenticate() accepts the output
-  * with the empty user password.
+/** FORWARD direction of the PDF standard security handler, used by the
+  * writer and the fixture builders to author encrypted documents. The key
+  * derivations (algorithms 2, 3's owner key, 5 and the per-object key) are
+  * the reader's own, in `object PdfCrypt`, so the kernel's authenticate()
+  * accepts the output by construction.
   */
 object PdfEncrypt {
-
-  def padded(pass: Array[Byte]): Array[Byte] = {
-    val key = new Array[Byte](32)
-    val n = math.min(32, pass.length)
-    System.arraycopy(pass, 0, key, 0, n)
-    if (n < 32) System.arraycopy(PasswordPadding, 0, key, n, 32 - n)
-    key
-  }
-
-  private def md5(parts: Array[Byte]*): Array[Byte] = {
-    val h = CryptoPool.md5()
-    parts.foreach(h.update)
-    h.digest()
-  }
-
-  /** Algorithm 2: file encryption key (R3/R4, 50x re-hash of the first
-    * length/8 bytes — mirrors Crypt.alg2 exactly).
-    */
-  def alg2Key(upass: Array[Byte], o: Array[Byte], p: Int, id0: Array[Byte],
-              r: Int, lengthBits: Int, encryptMetadata: Boolean = true): Array[Byte] = {
-    val h = CryptoPool.md5()
-    h.update(padded(upass))
-    h.update(o)
-    val pb = new Array[Byte](4)
-    var i = 0
-    while (i < 4) { pb(i) = ((p >> (8 * i)) & 0xff).toByte; i += 1 }
-    h.update(pb)
-    h.update(id0)
-    if (r >= 4 && !encryptMetadata)
-      h.update(Array[Byte](0xff.toByte, 0xff.toByte, 0xff.toByte, 0xff.toByte))
-    var hashb = h.digest()
-    if (r >= 3) {
-      var k = 0
-      while (k < 50) {
-        val h2 = CryptoPool.md5()
-        h2.update(hashb, 0, lengthBits / 8)
-        hashb = h2.digest()
-        k += 1
-      }
-      java.util.Arrays.copyOf(hashb, lengthBits / 8)
-    } else java.util.Arrays.copyOf(hashb, 5)
-  }
 
   /** Algorithm 3: the /O value. RC4 chain over padded(upass) with the owner
     * key XOR i ASCENDING (decryption unchains with 19-i).
     */
   def alg3O(opass: Array[Byte], upass: Array[Byte], r: Int, lengthBits: Int): Array[Byte] = {
-    // owner key: MD5(padded(opass)); R>=3: 50x MD5 over the FULL digest.
-    var h = CryptoPool.md5()
-    h.update(padded(opass))
-    var digest = h.digest()
-    if (r >= 3) {
-      var i = 0
-      while (i < 50) { digest = md5(digest); i += 1 }
-    }
-    val encKey =
-      if (r == 2) java.util.Arrays.copyOf(digest, 5)
-      else java.util.Arrays.copyOf(digest, lengthBits / 8)
+    val encKey = alg3Key(opass, r, lengthBits)
     var s = padded(upass)
     if (r == 2) s = rc4(encKey, s)
     else {
@@ -83,36 +29,6 @@ object PdfEncrypt {
       }
     }
     s
-  }
-
-  /** Algorithm 5: the /U value for R>=3 (first 16 bytes significant). */
-  def alg5U(ekey: Array[Byte], id0: Array[Byte]): Array[Byte] = {
-    var enc = rc4(ekey, md5(PasswordPadding, id0))
-    var i = 0
-    while (i < 19) {
-      val k = ekey.map(b => (b ^ (i + 1)).toByte)
-      enc = rc4(k, enc)
-      i += 1
-    }
-    java.util.Arrays.copyOf(enc, 32) // back half zeros (never compared)
-  }
-
-  /** Per-object key (crypt_filters.go makeKey): MD5(ekey + objNum LE24 +
-    * genNum LE16 [+ "sAlT" for AES]) truncated to min(len+5, 16).
-    */
-  def objectKey(ekey: Array[Byte], objNum: Long, genNum: Long, isAes: Boolean): Array[Byte] = {
-    val key = new Array[Byte](ekey.length + 5 + (if (isAes) 4 else 0))
-    System.arraycopy(ekey, 0, key, 0, ekey.length)
-    var i = 0
-    while (i < 3) { key(ekey.length + i) = ((objNum >> (8 * i)) & 0xff).toByte; i += 1 }
-    i = 0
-    while (i < 2) { key(ekey.length + 3 + i) = ((genNum >> (8 * i)) & 0xff).toByte; i += 1 }
-    if (isAes) {
-      key(ekey.length + 5) = 0x73; key(ekey.length + 6) = 0x41
-      key(ekey.length + 7) = 0x6c; key(ekey.length + 8) = 0x54
-    }
-    val hashb = CryptoPool.md5().digest(key)
-    if (ekey.length + 5 < 16) java.util.Arrays.copyOf(hashb, ekey.length + 5) else hashb
   }
 
   /** AES-128-CBC encrypt with explicit IV prepended + PKCS#5 padding (the

@@ -252,8 +252,8 @@ object PdfWriter {
     * /Encrypt dictionary is appended as an extra clear object, and the
     * trailer gains /Encrypt + /ID. Key material: O via Algorithm 3, file
     * key via Algorithm 2 (128-bit), U via Algorithm 5, per-object keys via
-    * the objNum/genNum md5 salt (+"sAlT" for AES) — the writer-side mirror
-    * of the reader's Crypt.scala derivations.
+    * the objNum/genNum md5 salt (+"sAlT" for AES) — the reader's own
+    * derivations in `object PdfCrypt`.
     */
   def writeFileEncrypted(objects: Seq[(Long, PdfObj)],
                          trailerEntries: Seq[(String, PdfObj)],
@@ -263,11 +263,11 @@ object PdfWriter {
     val v = if (enc.aes) 4 else 2
     val id0 = md5(b("graft-wid-" + enc.seed))
     val o = PdfEncrypt.alg3O(enc.ownerPass, enc.userPass, r, 128)
-    val key = PdfEncrypt.alg2Key(enc.userPass, o, -1, id0, r, 128)
-    val u = PdfEncrypt.alg5U(key, id0)
+    val key = PdfCrypt.alg2Key(enc.userPass, o, -1, id0, r, 128)
+    val u = PdfCrypt.alg5U(key, id0)
     val encObjects = objects.zipWithIndex.map { case ((orig, body), i) =>
       val outNum = i + 1L // writeFile's renumbering, mirrored here
-      val okey = PdfEncrypt.objectKey(key, outNum, 0, enc.aes)
+      val okey = PdfCrypt.objectKey(key, outNum, 0, enc.aes)
       var ivCounter = 0
       def nextIv(): Array[Byte] = {
         ivCounter += 1

@@ -10,13 +10,14 @@ import org.apache.spark.sql.SparkSession
   *   --warehouse <output warehouse path>                 \
   *   [--run-id <id>] [--buckets 4096] [--batch-buckets 64] \
   *   [--max-bytes-per-doc 67108864] [--timeout-ms 30000] \
-  *   [--vacuum true] [--table-summary true]
+  *   [--vacuum true]
   * }}}
   *
   * Reads the Common-Crawl-shaped pages table, runs the resumable extraction
   * job (dedup -> salted kernel -> snapshot-committed output + lineage), and
   * prints a one-line JSON summary. Re-running after a kill resumes from the
-  * last committed snapshot.
+  * last committed snapshot. The cumulative status histogram is
+  * `TableIO.readData(spark, warehouse).get.groupBy("status").count()`.
   *
   * Cluster sizing notes (100 TB scale):
   *  - buckets: choose so one bucket batch fits the cluster comfortably
@@ -28,6 +29,21 @@ import org.apache.spark.sql.SparkSession
   */
 object Main {
   def main(args: Array[String]): Unit = {
+    // On a real cluster spark-submit provides master/conf; defaults below
+    // only apply when launched standalone.
+    val spark = SparkSession.builder()
+      .appName("graft-extract")
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
+      .config("spark.sql.adaptive.skewJoin.enabled", "true")
+      .getOrCreate()
+    GraftFunctions.register(spark) // expose extract_text to SQL users too
+    try println(run(spark, args))
+    finally spark.stop()
+  }
+
+  /** Runs the job on `spark` and returns the one-line JSON summary. */
+  def run(spark: SparkSession, args: Array[String]): String = {
     val opts = parseArgs(args)
     val input = opts.getOrElse("input", sys.error("--input required"))
     val warehouse = opts.getOrElse("warehouse", sys.error("--warehouse required"))
@@ -44,16 +60,6 @@ object Main {
     // killed runs) before this run commits new ones.
     val doVacuum = opts.getOrElse("vacuum", "false").toBoolean
 
-    // On a real cluster spark-submit provides master/conf; defaults below
-    // only apply when launched standalone.
-    val spark = SparkSession.builder()
-      .appName(s"graft-extract-$runId")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .getOrCreate()
-    GraftFunctions.register(spark) // expose extract_text to SQL users too
-
     val vacuumed = if (doVacuum) TableIO.vacuum(warehouse).length else 0
     val pages = spark.read.parquet(input)
     val t0 = System.nanoTime()
@@ -62,32 +68,15 @@ object Main {
       maxBytesPerDoc = maxBytes, timeoutMs = timeoutMs)
     val sec = (System.nanoTime() - t0) / 1e9
 
-    // THIS RUN's health comes from its own lineage rows (tiny — one per
-    // task partition), not a whole-table aggregate: on a resumed job the
-    // table unions every prior run's output, which would both hide a
-    // this-run error spike and re-scan the full table on every invocation.
-    import org.apache.spark.sql.functions.{col, sum => fsum}
-    val runStats = TableIO.readLineage(spark, warehouse) match {
-      case Some(lin) =>
-        val r = lin.filter(col("run_id") === runId)
-          .agg(fsum("input_rows"), fsum("ok_rows"), fsum("err_rows")).head()
-        def g(i: Int): Long = if (r.isNullAt(i)) 0L else r.getLong(i)
-        s"""{"input":${g(0)},"ok":${g(1)},"err":${g(2)}}"""
-      case None => """{"input":0,"ok":0,"err":0}"""
-    }
-    // Optional cumulative table histogram (full-table scan — off by default).
-    val tableStatuses =
-      if (opts.getOrElse("table-summary", "false").toBoolean)
-        TableIO.readData(spark, warehouse) match {
-          case Some(out) => out.groupBy("status").count().collect()
-            .map(r => s""""${r.getString(0)}":${r.getLong(1)}""").mkString(""","table_statuses":{""", ",", "}")
-          case None => ""
-        }
-      else ""
+    // THIS RUN's health comes from its own lineage rows in the manifests
+    // (tiny — one per task partition), not a whole-table aggregate: on a
+    // resumed job the table unions every prior run's output, which would
+    // both hide a this-run error spike and re-scan the full table.
+    val mine = TableIO.lineage(warehouse).filter(_.run_id == runId)
+    val runStats =
+      s"""{"input":${mine.map(_.input_rows).sum},"ok":${mine.map(_.ok_rows).sum},"err":${mine.map(_.err_rows).sum}}"""
     val wall = "%.1f".formatLocal(java.util.Locale.ROOT, sec)
-    println(
-      s"""{"run_id":"$runId","snapshot":${snap.version},"committed_buckets":${snap.committedBuckets.size},"wall_sec":$wall,"vacuumed_dirs":$vacuumed,"run_lineage":$runStats$tableStatuses}""")
-    spark.stop()
+    s"""{"run_id":"$runId","snapshot":${snap.version},"committed_buckets":${snap.committedBuckets.size},"wall_sec":$wall,"vacuumed_dirs":$vacuumed,"run_lineage":$runStats}"""
   }
 
   private def parseArgs(args: Array[String]): Map[String, String] = {

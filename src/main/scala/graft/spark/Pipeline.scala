@@ -20,11 +20,10 @@ import graft.Extract
   *    partition beats range-by-size, which would cluster the whales);
   *    per-doc byte cap (skipped_oversize) bounds the worst straggler;
   *  - lineage: accumulated per task partition (one row per partition —
-  *    thousands of rows at cluster scale, trivially collectible).
+  *    thousands of rows at cluster scale, trivially collectible; TableIO
+  *    commits them in the batch's snapshot manifest).
   */
 object Pipeline {
-
-  val DefaultMaxBytesPerDoc: Int = Extract.DefaultMaxBytesPerDoc
 
   /** Keep the latest capture per url (SURVEY §2.10 dedup). Ties on warc_ts
     * (same-second recrawls) break deterministically by payload hash so the
@@ -46,7 +45,7 @@ object Pipeline {
       spark: SparkSession,
       pages: DataFrame,
       runId: String,
-      maxBytesPerDoc: Int = DefaultMaxBytesPerDoc,
+      maxBytesPerDoc: Int = Extract.DefaultMaxBytesPerDoc,
       lineageAcc: CollectionAccumulator[LineageRow] = null,
       timeoutMs: Long = Extract.DefaultTimeoutMs): Dataset[ExtractedRow] = {
     import spark.implicits._
@@ -66,7 +65,16 @@ object Pipeline {
       var errRows = 0L
       var bytesIn = 0L
       var bytesOut = 0L
-      val out = it.map { row =>
+      // Lineage flush on task completion: it also fires when a downstream
+      // limit() stops consuming early, and its wall clock covers the task's
+      // own output write. Completion listeners run before the task reports,
+      // so accumulator updates made there count once per successful task.
+      if (lineageAcc != null) Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit] { _ =>
+        val now = System.currentTimeMillis()
+        lineageAcc.add(LineageRow(runId, pid, inputRows, okRows, errRows,
+          bytesIn, bytesOut, now - startedAt, startedAt, now))
+      })
+      it.map { row =>
         inputRows += 1
         val payload = row.html
         bytesIn += (if (payload == null) 0 else payload.length)
@@ -78,37 +86,11 @@ object Pipeline {
           warc_ts = row.warc_ts,
           text = r.text,
           text_bytes = r.textBytes,
-          spans = r.spans.map(s => SpanRow(s.page, s.start, s.end)),
+          spans = r.spans,
           status = r.status,
           error = r.error,
           partition_id = pid)
       }
-      // Lineage flush: once on exhaustion (accurate wall clock) and, as a
-      // safety net, on task completion — a downstream limit() that stops
-      // consuming early would otherwise never reach the exhaustion path.
-      // Completion listeners run before the task reports, so accumulator
-      // updates made there still count exactly once per successful task.
-      final class LineageIterator extends Iterator[ExtractedRow] {
-        def hasNext: Boolean = {
-          val h = out.hasNext
-          if (!h) flush()
-          h
-        }
-        def next(): ExtractedRow = out.next()
-        @volatile private var flushed = false
-        def flush(): Unit = if (!flushed && lineageAcc != null) {
-          flushed = true
-          lineageAcc.add(LineageRow(runId, pid, inputRows, okRows, errRows,
-            bytesIn, bytesOut, System.currentTimeMillis() - startedAt,
-            startedAt, System.currentTimeMillis()))
-        }
-      }
-      val wrapped = new LineageIterator
-      if (lineageAcc != null) {
-        val tc = TaskContext.get()
-        if (tc != null) tc.addTaskCompletionListener[Unit](_ => wrapped.flush())
-      }
-      wrapped
     }
   }
 
@@ -134,7 +116,7 @@ object Pipeline {
     * statistics and identities, with decoded bytes re-derivable downstream.
     */
   def extractImages(spark: SparkSession, pages: DataFrame,
-                    maxBytesPerDoc: Int = DefaultMaxBytesPerDoc,
+                    maxBytesPerDoc: Int = Extract.DefaultMaxBytesPerDoc,
                     timeoutMs: Long = Extract.DefaultTimeoutMs): Dataset[ImageRow] = {
     import spark.implicits._
     pages.select("url", "warc_ts", "html").as[KernelInRow]

@@ -22,8 +22,6 @@ final case class KernelInRow(
     warc_ts: Timestamp,
     html: Array[Byte])
 
-final case class SpanRow(page: Int, start: Long, end: Long)
-
 /** Output table row (SURVEY.md §1.2). `text` is the UTF-8 view; `text_bytes`
   * carries the exact extracted bytes for the byte-identity invariant.
   */
@@ -32,7 +30,7 @@ final case class ExtractedRow(
     warc_ts: Timestamp,
     text: String,
     text_bytes: Array[Byte],
-    spans: Seq[SpanRow],
+    spans: Seq[graft.Span],
     status: String,
     error: String,
     partition_id: Int)

@@ -6,6 +6,9 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
+import com.fasterxml.jackson.databind.{DeserializationFeature, JsonNode, PropertyNamingStrategies}
+import com.fasterxml.jackson.databind.json.JsonMapper
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.CollectionAccumulator
@@ -15,31 +18,45 @@ import org.apache.spark.util.CollectionAccumulator
   *
   *   warehouse/
   *     data/<batch-dir>/part-*.parquet       (immutable once committed)
-  *     lineage/<batch-dir>/part-*.parquet
   *     metadata/v{N}.json                    (snapshot manifest)
   *     metadata/version-hint.text            (atomic pointer to current N)
   *
   * A snapshot manifest lists committed input BUCKETS (the resume unit) and
-  * the data/lineage files that hold them. Commit = write files -> write
-  * manifest v{N+1} -> atomically replace version-hint. A killed job restarts
-  * from the last committed snapshot: buckets in the manifest are skipped.
+  * the data dirs that hold them, and carries its own batch's lineage rows
+  * (SURVEY §7.6: lineage commits with the data, like Delta Lake's
+  * commitInfo.operationMetrics). Commit = write data files -> write manifest
+  * v{N+1} -> atomically replace version-hint. A killed job restarts from the
+  * last committed snapshot: buckets in the manifest are skipped.
   * Bucket-level granularity scales to 10^12 rows (manifests stay tiny) where
   * a per-url ledger could not. The trait boundary swaps to real Iceberg
   * (`spark.read.format("iceberg")`) outside the sandbox.
   */
 object TableIO {
 
-  /** numBuckets is persisted because resume correctness depends on the
-    * url->bucket assignment being IDENTICAL across runs: a different bucket
-    * count would silently remap urls, duplicating/missing documents.
-    * 0 = unknown (pre-v2 manifests).
+  /** One snapshot manifest, `metadata/v{version}.json`. `committedBuckets`
+    * (sorted) and `dataDirs` are cumulative; `lineage` holds only this
+    * commit's rows, sorted by partition. numBuckets is persisted because
+    * resume correctness depends on the url->bucket assignment being
+    * IDENTICAL across runs: a different bucket count would silently remap
+    * urls, duplicating/missing documents.
     */
   final case class Snapshot(
       version: Int,
-      committedBuckets: Set[Int],
+      numBuckets: Int,
+      committedBuckets: Seq[Int],
       dataDirs: Seq[String],
-      lineageDirs: Seq[String],
-      numBuckets: Int = 0)
+      lineage: Seq[LineageRow])
+
+  /** The manifest codec: snake_case keys; a missing or unknown key (e.g. a
+    * manifest of another format) fails the read, naming the key.
+    */
+  private val manifestJson = JsonMapper.builder()
+    .addModule(DefaultScalaModule)
+    .propertyNamingStrategy(PropertyNamingStrategies.SNAKE_CASE)
+    .enable(DeserializationFeature.FAIL_ON_MISSING_CREATOR_PROPERTIES)
+    .build()
+  private val manifestKeys: Set[String] =
+    manifestJson.valueToTree[JsonNode](Snapshot(0, 0, Nil, Nil, Nil)).fieldNames.asScala.toSet
 
   private def metaDir(warehouse: String): Path = Paths.get(warehouse, "metadata")
   private def hintFile(warehouse: String): Path = metaDir(warehouse).resolve("version-hint.text")
@@ -99,28 +116,41 @@ object TableIO {
 
   def currentSnapshot(warehouse: String): Option[Snapshot] = {
     val hint = hintFile(warehouse)
-    if (!Files.exists(hint)) return None
-    val v = new String(Files.readAllBytes(hint), UTF_8).trim.toInt
-    val manifest = metaDir(warehouse).resolve(s"v$v.json")
-    if (!Files.exists(manifest)) return None
-    Some(parseManifest(v, new String(Files.readAllBytes(manifest), UTF_8)))
+    if (!Files.exists(hint)) None
+    else readManifest(warehouse, new String(Files.readAllBytes(hint), UTF_8).trim.toInt)
   }
 
-  /** Commit a new snapshot: previous content + this batch. Atomic via
-    * write-manifest-then-rename-hint.
+  private def readManifest(warehouse: String, version: Int): Option[Snapshot] = {
+    val manifest = metaDir(warehouse).resolve(s"v$version.json")
+    def fail(why: String, cause: Throwable = null) =
+      throw new IllegalStateException(s"unreadable snapshot manifest $manifest: $why", cause)
+    if (!Files.exists(manifest)) None
+    else try {
+      // Jackson reports a missing field before an unknown one; check the keys
+      // first, so a manifest of another format is refused by its own key.
+      val tree = manifestJson.readTree(manifest.toFile)
+      tree.fieldNames.asScala.find(!manifestKeys(_)).foreach(k => fail(s"unknown field '$k'"))
+      Some(manifestJson.treeToValue(tree, classOf[Snapshot]))
+    } catch {
+      case e: com.fasterxml.jackson.core.JacksonException => fail(e.getOriginalMessage, e)
+    }
+  }
+
+  /** Commit a new snapshot: previous content + this batch's buckets, data
+    * dir and lineage rows. Atomic via write-manifest-then-rename-hint.
     */
-  def commit(warehouse: String, buckets: Set[Int], dataDir: Option[String],
-             lineageDir: Option[String], numBuckets: Int = 0): Snapshot = {
+  def commit(warehouse: String, buckets: Set[Int], dataDir: String,
+             lineage: Seq[LineageRow], numBuckets: Int): Snapshot = {
     Files.createDirectories(metaDir(warehouse))
     val prev = currentSnapshot(warehouse)
     val next = Snapshot(
       version = prev.map(_.version + 1).getOrElse(1),
-      committedBuckets = prev.map(_.committedBuckets).getOrElse(Set.empty) ++ buckets,
-      dataDirs = prev.map(_.dataDirs).getOrElse(Nil) ++ dataDir.toSeq,
-      lineageDirs = prev.map(_.lineageDirs).getOrElse(Nil) ++ lineageDir.toSeq,
-      numBuckets = if (numBuckets > 0) numBuckets else prev.map(_.numBuckets).getOrElse(0))
+      numBuckets = numBuckets,
+      committedBuckets = (prev.map(_.committedBuckets).getOrElse(Nil) ++ buckets).distinct.sorted,
+      dataDirs = prev.map(_.dataDirs).getOrElse(Nil) :+ dataDir,
+      lineage = lineage.sortBy(_.partition_id))
     val manifest = metaDir(warehouse).resolve(s"v${next.version}.json")
-    Files.write(manifest, renderManifest(next).getBytes(UTF_8))
+    manifestJson.writeValue(manifest.toFile, next)
     val tmp = metaDir(warehouse).resolve(s".version-hint.${next.version}.tmp")
     Files.write(tmp, next.version.toString.getBytes(UTF_8))
     Files.move(tmp, hintFile(warehouse), StandardCopyOption.ATOMIC_MOVE,
@@ -134,18 +164,25 @@ object TableIO {
       spark.read.parquet(s.dataDirs: _*)
     }
 
-  def readLineage(spark: SparkSession, warehouse: String): Option[DataFrame] =
-    currentSnapshot(warehouse).filter(_.lineageDirs.nonEmpty).map { s =>
-      spark.read.parquet(s.lineageDirs: _*)
-    }
+  /** Every committed lineage row, read from manifests v1..v{current}. */
+  def lineage(warehouse: String): Seq[LineageRow] =
+    currentSnapshot(warehouse).toSeq
+      .flatMap(s => (1 to s.version).flatMap(readManifest(warehouse, _)))
+      .flatMap(_.lineage)
+
+  def readLineage(spark: SparkSession, warehouse: String): Option[DataFrame] = {
+    import spark.implicits._
+    Some(lineage(warehouse)).filter(_.nonEmpty).map(_.toDF())
+  }
 
   /** Resumable extraction job over a pages table.
     *
     * Input rows are assigned to `numBuckets` buckets by url hash; buckets are
     * processed in `batchBuckets`-sized batches, each committed as one
-    * snapshot. On restart, committed buckets are skipped (partition-pruned at
-    * the scan by the bucket predicate). `failAfterBatches` injects a crash
-    * for the kill/resume integration test.
+    * snapshot with its data dir and lineage rows. On restart, committed
+    * buckets are skipped (partition-pruned at the scan by the bucket
+    * predicate). `failAfterBatches` injects a crash for the kill/resume
+    * integration test.
     */
   def runResumable(
       spark: SparkSession,
@@ -155,17 +192,17 @@ object TableIO {
       numBuckets: Int = 16,
       batchBuckets: Int = 4,
       failAfterBatches: Int = -1,
-      maxBytesPerDoc: Int = Pipeline.DefaultMaxBytesPerDoc,
+      maxBytesPerDoc: Int = graft.Extract.DefaultMaxBytesPerDoc,
       timeoutMs: Long = graft.Extract.DefaultTimeoutMs): Snapshot = {
-    import java.util.UUID
-    currentSnapshot(warehouse).foreach { s =>
-      if (s.numBuckets > 0 && s.numBuckets != numBuckets)
+    val prev = currentSnapshot(warehouse)
+    prev.foreach { s =>
+      if (s.numBuckets != numBuckets)
         throw new IllegalArgumentException(
           s"warehouse $warehouse was committed with numBuckets=${s.numBuckets}; " +
             s"resuming with numBuckets=$numBuckets would remap url->bucket " +
             "assignments and duplicate/miss documents")
     }
-    val done: Set[Int] = currentSnapshot(warehouse).map(_.committedBuckets).getOrElse(Set.empty)
+    val done = prev.map(_.committedBuckets.toSet).getOrElse(Set.empty[Int])
     val todo = (0 until numBuckets).filterNot(done.contains)
     val multiBatch = todo.length > batchBuckets
     // The dedup window is a full shuffle of the input; without a persist,
@@ -183,48 +220,26 @@ object TableIO {
         withBucket0.persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
       else withBucket0
     try {
-      runBatches(spark, withBucket, warehouse, runId, numBuckets, batchBuckets,
-        failAfterBatches, maxBytesPerDoc, timeoutMs, todo)
+      var snap = prev.getOrElse(Snapshot(0, numBuckets, Nil, Nil, Nil))
+      for ((batch, batchesDone) <- todo.grouped(batchBuckets).zipWithIndex) {
+        if (failAfterBatches >= 0 && batchesDone >= failAfterBatches)
+          throw new RuntimeException(s"injected failure after $batchesDone batches")
+        val subset = withBucket.filter(col("__bucket").isInCollection(batch)).drop("__bucket")
+        val lineageAcc: CollectionAccumulator[LineageRow] =
+          spark.sparkContext.collectionAccumulator[LineageRow](s"lineage-$runId-$batchesDone")
+        val extracted = Pipeline.extract(spark, subset, runId,
+          maxBytesPerDoc = maxBytesPerDoc, lineageAcc = lineageAcc, timeoutMs = timeoutMs)
+        val dataDir = s"$warehouse/data/batch-${snap.version + 1}-${java.util.UUID.randomUUID().toString.take(8)}"
+        extracted.write.mode(SaveMode.ErrorIfExists).parquet(dataDir)
+        // Task retries / speculation can flush duplicate lineage rows (Spark
+        // only guarantees exactly-once accumulator updates inside actions):
+        // keep the LAST attempt per partition.
+        val lineageRows = lineageAcc.value.asScala.toSeq
+          .groupBy(_.partition_id).values.map(_.maxBy(_.committed_at)).toSeq
+        snap = commit(warehouse, batch.toSet, dataDir, lineageRows, numBuckets)
+      }
+      snap
     } finally if (multiBatch) withBucket.unpersist(blocking = false)
-  }
-
-  private def runBatches(
-      spark: SparkSession,
-      withBucket: DataFrame,
-      warehouse: String,
-      runId: String,
-      numBuckets: Int,
-      batchBuckets: Int,
-      failAfterBatches: Int,
-      maxBytesPerDoc: Int,
-      timeoutMs: Long,
-      todo: Seq[Int]): Snapshot = {
-    import java.util.UUID
-    var batchesDone = 0
-    var snap = currentSnapshot(warehouse).getOrElse(Snapshot(0, Set.empty, Nil, Nil))
-    for (batch <- todo.grouped(batchBuckets)) {
-      if (failAfterBatches >= 0 && batchesDone >= failAfterBatches)
-        throw new RuntimeException(s"injected failure after $batchesDone batches")
-      val subset = withBucket.filter(col("__bucket").isInCollection(batch)).drop("__bucket")
-      val lineageAcc: CollectionAccumulator[LineageRow] =
-        spark.sparkContext.collectionAccumulator[LineageRow](s"lineage-$runId-$batchesDone")
-      val extracted = Pipeline.extract(spark, subset, runId,
-        maxBytesPerDoc = maxBytesPerDoc, lineageAcc = lineageAcc, timeoutMs = timeoutMs)
-      val dataDir = s"$warehouse/data/batch-${snap.version + 1}-${UUID.randomUUID().toString.take(8)}"
-      extracted.write.mode(SaveMode.ErrorIfExists).parquet(dataDir)
-      val lineageDir = s"$warehouse/lineage/batch-${snap.version + 1}-${UUID.randomUUID().toString.take(8)}"
-      // Task retries / speculation can flush duplicate lineage rows (Spark
-      // only guarantees exactly-once accumulator updates inside actions):
-      // keep the LAST attempt per partition.
-      val lineageRows = lineageAcc.value.asScala.toSeq
-        .groupBy(r => (r.run_id, r.partition_id))
-        .values.map(_.maxBy(_.committed_at)).toSeq
-      import spark.implicits._
-      lineageRows.toDF().write.mode(SaveMode.ErrorIfExists).parquet(lineageDir)
-      snap = commit(warehouse, batch.toSet, Some(dataDir), Some(lineageDir), numBuckets)
-      batchesDone += 1
-    }
-    snap
   }
 
   /** Recursive delete (shared by vacuum and scratch-dir cleanup). */
@@ -233,20 +248,20 @@ object TableIO {
     f.delete()
   }
 
-  /** Remove UNREFERENCED batch directories (left by jobs that wrote data or
-    * lineage files and died before their manifest committed — commit order
-    * is files -> manifest -> hint, so a crash can strand fully-written
+  /** Remove UNREFERENCED batch directories under data/ (left by jobs that
+    * wrote data files and died before their manifest committed — commit
+    * order is files -> manifest -> hint, so a crash can strand fully-written
     * dirs). Every dir referenced by the CURRENT snapshot is kept — since
-    * each commit carries the previous snapshot's dir lists forward, that is
+    * each commit carries the previous snapshot's dir list forward, that is
     * every committed dir ever; only stranded uncommitted output is removed
     * (Iceberg's removeOrphanFiles analogue). Returns the deleted dirs.
     *
-    * Matching is by BATCH-DIR NAME under the warehouse's own data/ and
-    * lineage/ roots — never by resolved path. Manifests store the dir
-    * strings exactly as the committing run spelled its --warehouse arg, so
-    * path-level comparison would break (and delete committed data!) when a
-    * later run spells the same warehouse differently (relative vs absolute
-    * cwd, symlinked components). Batch names are unique (UUID suffix).
+    * Matching is by BATCH-DIR NAME under the warehouse's own data/ root —
+    * never by resolved path. Manifests store the dir strings exactly as the
+    * committing run spelled its --warehouse arg, so path-level comparison
+    * would break (and delete committed data!) when a later run spells the
+    * same warehouse differently (relative vs absolute cwd, symlinked
+    * components). Batch names are unique (UUID suffix).
     *
     * `minAgeMs` guards the race with a CONCURRENT writer: a job between its
     * file write and its manifest commit has dirs that look orphaned but are
@@ -257,78 +272,18 @@ object TableIO {
   val DefaultVacuumMinAgeMs: Long = 24L * 3600 * 1000
 
   def vacuum(warehouse: String, minAgeMs: Long = DefaultVacuumMinAgeMs): Seq[String] = {
-    val snap = currentSnapshot(warehouse)
-    def names(dirs: Seq[String]): Set[String] =
-      dirs.map(p => Paths.get(p).getFileName.toString).toSet
-    val keepData = snap.map(s => names(s.dataDirs)).getOrElse(Set.empty)
-    val keepLineage = snap.map(s => names(s.lineageDirs)).getOrElse(Set.empty)
+    val keep = currentSnapshot(warehouse).toSeq
+      .flatMap(_.dataDirs.map(p => Paths.get(p).getFileName.toString)).toSet
     val cutoff = System.currentTimeMillis() - minAgeMs
-    val removed = mutable.ArrayBuffer.empty[String]
-    for ((root, keep) <- Seq("data" -> keepData, "lineage" -> keepLineage)) {
-      val dir = Paths.get(warehouse, root)
-      if (Files.isDirectory(dir)) {
-        val listing = Files.list(dir)
-        try {
-          listing.iterator().asScala.foreach { child =>
-            if (!keep.contains(child.getFileName.toString) &&
-              child.toFile.lastModified() < cutoff) {
-              deleteRecursively(child.toFile)
-              removed += child.toAbsolutePath.normalize.toString
-            }
-          }
-        } finally listing.close()
-      }
-    }
-    removed.toSeq
-  }
-
-  // ------------------------------------------------------- manifest (JSON)
-
-  private def renderManifest(s: Snapshot): String = {
-    def arr(xs: Seq[String]): String = xs.map(x => "\"" + x.replace("\\", "\\\\").replace("\"", "\\\"") + "\"").mkString("[", ",", "]")
-    s"""{"version":${s.version},"num_buckets":${s.numBuckets},"committed_buckets":${s.committedBuckets.toSeq.sorted.mkString("[", ",", "]")},"data_dirs":${arr(s.dataDirs)},"lineage_dirs":${arr(s.lineageDirs)}}"""
-  }
-
-  private def parseManifest(version: Int, json: String): Snapshot = {
-    // Minimal parser for our own fixed-shape manifest.
-    def intArray(key: String): Seq[Int] = {
-      val m = java.util.regex.Pattern.compile("\"" + key + "\":\\[([^\\]]*)\\]").matcher(json)
-      if (!m.find()) Nil
-      else m.group(1).split(",").toSeq.map(_.trim).filter(_.nonEmpty).map(_.toInt)
-    }
-    def strArray(key: String): Seq[String] = {
-      // Scan to the MATCHING ']' with full quote/escape awareness: a regex
-      // stopping at the first ']' would truncate on a ']' inside a dir path
-      // (e.g. --warehouse '/tmp/wh[1]') and silently drop committed dirs —
-      // which vacuum() would then sweep as orphans.
-      val start = json.indexOf("\"" + key + "\":[")
-      if (start < 0) return Nil
-      var i = start + key.length + 4
-      val out = mutable.ArrayBuffer.empty[String]
-      var inStr = false
-      var esc = false
-      val sb = new java.lang.StringBuilder
-      var done = false
-      while (!done && i < json.length) {
-        val c = json.charAt(i)
-        if (inStr) {
-          if (esc) { sb.append(c); esc = false }
-          else if (c == '\\') esc = true
-          else if (c == '"') { out += sb.toString; sb.setLength(0); inStr = false }
-          else sb.append(c)
-        } else {
-          if (c == '"') inStr = true
-          else if (c == ']') done = true
-        }
-        i += 1
-      }
-      out.toSeq
-    }
-    def intField(key: String): Int = {
-      val m = java.util.regex.Pattern.compile("\"" + key + "\":(\\d+)").matcher(json)
-      if (m.find()) m.group(1).toInt else 0
-    }
-    Snapshot(version, intArray("committed_buckets").toSet,
-      strArray("data_dirs"), strArray("lineage_dirs"), intField("num_buckets"))
+    val dir = Paths.get(warehouse, "data")
+    if (!Files.isDirectory(dir)) return Nil
+    val listing = Files.list(dir)
+    try listing.iterator().asScala.filter { child =>
+      !keep.contains(child.getFileName.toString) && child.toFile.lastModified() < cutoff
+    }.map { child =>
+      deleteRecursively(child.toFile)
+      child.toAbsolutePath.normalize.toString
+    }.toList
+    finally listing.close()
   }
 }

@@ -71,10 +71,10 @@ class PipelineSpec extends AnyFunSuite {
     val wh = Files.createTempDirectory("wh-vac").toString
     TableIO.runResumable(spark, docs.toDF(), wh, "vac", numBuckets = 4, batchBuckets = 2)
     val before = TableIO.readData(spark, wh).get.count()
-    // Strand two orphan dirs: a crashed batch's data output and its lineage.
+    // Strand two orphan dirs: the data output of two crashed batches.
     val orphanData = new java.io.File(s"$wh/data/batch-99-deadbeef")
-    val orphanLin = new java.io.File(s"$wh/lineage/batch-99-deadbeef")
-    orphanData.mkdirs(); orphanLin.mkdirs()
+    val orphanData2 = new java.io.File(s"$wh/data/batch-3-cafef00d")
+    orphanData.mkdirs(); orphanData2.mkdirs()
     Files.writeString(orphanData.toPath.resolve("part-junk.parquet"), "junk")
     // Default min-age guard: a FRESH stranded dir (possibly a concurrent
     // writer mid-commit) must NOT be swept...
@@ -82,9 +82,9 @@ class PipelineSpec extends AnyFunSuite {
     assert(orphanData.exists())
     // ...but once old enough it is.
     val removed = TableIO.vacuum(wh, minAgeMs = 0)
-    assert(removed.toSet == Set(orphanData.getCanonicalPath, orphanLin.getCanonicalPath),
+    assert(removed.toSet == Set(orphanData.getCanonicalPath, orphanData2.getCanonicalPath),
       removed.toString)
-    assert(!orphanData.exists() && !orphanLin.exists())
+    assert(!orphanData.exists() && !orphanData2.exists())
     // Committed data untouched, table still reads identically.
     assert(TableIO.readData(spark, wh).get.count() == before)
     assert(TableIO.vacuum(wh, minAgeMs = 0).isEmpty) // idempotent
@@ -92,16 +92,73 @@ class PipelineSpec extends AnyFunSuite {
 
   test("manifest round-trips dirs containing ']' (vacuum must not mistake them for orphans)") {
     val wh = Files.createTempDirectory("wh-br[1]").toString
-    TableIO.commit(wh, Set(0), Some(s"$wh/data/batch-1-x"), Some(s"$wh/lineage/batch-1-x"), 4)
+    val rows = Seq(
+      LineageRow("run \"q\" [2]", 1, 5, 4, 1, 500, 40, 7, 1000, 1007),
+      LineageRow("run]\"", 0, 3, 3, 0, 300, 30, 6, 1000, 1006))
+    TableIO.commit(wh, Set(0), s"$wh/data/batch-1-x", rows, 4)
     val rt = TableIO.currentSnapshot(wh).get
     // A ']' inside the path previously truncated the regex-parsed arrays to
     // Nil — and vacuum would then sweep every committed dir.
     assert(rt.dataDirs == Seq(s"$wh/data/batch-1-x"), rt.dataDirs)
-    assert(rt.lineageDirs == Seq(s"$wh/lineage/batch-1-x"))
+    // The lineage rows round-trip too, sorted by partition.
+    assert(rt.lineage == rows.sortBy(_.partition_id), rt.lineage)
+    assert(TableIO.lineage(wh) == rows.sortBy(_.partition_id))
     new java.io.File(s"$wh/data/batch-1-x").mkdirs()
-    new java.io.File(s"$wh/lineage/batch-1-x").mkdirs()
     assert(TableIO.vacuum(wh, minAgeMs = 0).isEmpty)
     assert(new java.io.File(s"$wh/data/batch-1-x").exists())
+  }
+
+  test("lineage commits atomically with its batch") {
+    import spark.implicits._
+    val docs = (0 until 60).map { i =>
+      PageRow(f"https://atom/doc-$i%04d", new java.sql.Timestamp(PagesGen.BaseTs + i),
+        PdfFixtures.s01(s"atomic doc $i"), "", "en")
+    }
+    val wh = Files.createTempDirectory("wh-atom").toString
+    intercept[RuntimeException] {
+      TableIO.runResumable(spark, docs.toDF(), wh, "atom", numBuckets = 8,
+        batchBuckets = 2, failAfterBatches = 2)
+    }
+    // The killed job's committed lineage counts exactly its committed rows.
+    val committed = TableIO.readData(spark, wh).get.count()
+    assert(committed > 0 && committed < 60)
+    assert(TableIO.lineage(wh).map(_.input_rows).sum == committed)
+    assert(TableIO.currentSnapshot(wh).get.lineage.nonEmpty)
+    assert(!new java.io.File(s"$wh/lineage").exists())
+    assert(new java.io.File(wh).list().toSet == Set("data", "metadata"))
+    // A manifest in the older format (lineage in parquet dirs) is refused,
+    // and the error names the field it does not know.
+    val v = TableIO.currentSnapshot(wh).get.version
+    Files.writeString(java.nio.file.Paths.get(wh, "metadata", s"v$v.json"),
+      s"""{"version":$v,"num_buckets":8,"committed_buckets":[0,1,2,3],""" +
+        s""""data_dirs":["$wh/data/batch-1-x"],"lineage_dirs":["$wh/lineage/batch-1-x"]}""")
+    val e = intercept[IllegalStateException](TableIO.currentSnapshot(wh))
+    assert(e.getMessage.contains("lineage_dirs"), e.getMessage)
+    // So is one missing a field.
+    Files.writeString(java.nio.file.Paths.get(wh, "metadata", s"v$v.json"),
+      s"""{"version":$v,"committed_buckets":[0],"data_dirs":[],"lineage":[]}""")
+    val e2 = intercept[IllegalStateException](TableIO.currentSnapshot(wh))
+    assert(e2.getMessage.contains("num_buckets"), e2.getMessage)
+  }
+
+  test("spark.Main: summary line reports this run's lineage from the manifests") {
+    import spark.implicits._
+    val docs = (0 until 30).map { i =>
+      PageRow(f"https://main/doc-$i%04d", new java.sql.Timestamp(PagesGen.BaseTs + i),
+        PdfFixtures.s01(s"main doc $i"), "", "en")
+    }
+    val dir = Files.createTempDirectory("main-run").toString
+    docs.toDF().write.parquet(s"$dir/pages")
+    def run(runId: String): String = Main.run(spark, Array("--input", s"$dir/pages",
+      "--warehouse", s"$dir/wh", "--run-id", runId, "--buckets", "4", "--batch-buckets", "2"))
+    val first = run("m1")
+    assert(first.contains(""""run_id":"m1","snapshot":2,"committed_buckets":4,"""), first)
+    assert(first.endsWith(""""run_lineage":{"input":30,"ok":30,"err":0}}"""), first)
+    // Everything is committed: a second run adds no snapshot and no lineage.
+    val second = run("m2")
+    assert(second.contains(""""run_id":"m2","snapshot":2,"""), second)
+    assert(second.endsWith(""""run_lineage":{"input":0,"ok":0,"err":0}}"""), second)
+    TableIO.deleteRecursively(new java.io.File(dir))
   }
 
   test("t3 kill/resume: killed job restarts from last committed snapshot, no dups/missing") {
