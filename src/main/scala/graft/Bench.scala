@@ -98,7 +98,7 @@ object Bench {
     * defense against those (interference only ever ADDS time), and the
     * emitted `wall_outlier` flag marks reps far above the level median.
     */
-  private final case class Rep(wall: Double, steal: Double, stealClean: Boolean)
+  private[graft] final case class Rep(wall: Double, steal: Double, stealClean: Boolean)
 
   private def rep(cpuSet: Set[Int], activeTasks: Int)(f: => Unit): Rep = {
     val s0 = stealSeconds(cpuSet)
@@ -116,6 +116,19 @@ object Bench {
   private def best(reps: Seq[Rep]): Double = {
     val clean = reps.filter(_.stealClean)
     (if (clean.nonEmpty) clean else reps).map(_.wall).min
+  }
+
+  /** `wall_outlier` per rep: wall > 2x the level's median wall, flagging
+    * reps slow for reasons the steal counter cannot see (neighbor bandwidth/
+    * frequency interference); such reps never win the min anyway. The
+    * median is over the steal-clean reps, else over all (like `best`):
+    * steal-dirty reps would drag it up and hide real outliers.
+    */
+  private[graft] def wallOutliers(reps: Seq[Rep]): Seq[Boolean] = {
+    val clean = reps.filter(_.stealClean)
+    val walls = (if (clean.nonEmpty) clean else reps).map(_.wall).sorted
+    val med = if (walls.isEmpty) 0.0 else walls(walls.length / 2)
+    reps.map(r => med > 0 && r.wall > 2.0 * med)
   }
 
   /** Minimal JSON string-escape for env-derived values in the output line. */
@@ -339,15 +352,10 @@ object Bench {
     val qsWarm = queryTimesWarm.map { case (k, v) => s""""$k":${"%.3f".formatLocal(java.util.Locale.ROOT, v)}""" }
       .mkString("{", ",", "}")
     val failedJson = failed.map(n => "\"" + n + "\"").mkString("[", ",", "]")
-    def repJson(reps: Seq[Rep]): String = {
-      // wall_outlier: > 2x the level's median wall — flags reps that are
-      // slow for reasons the steal counter cannot see (neighbor bandwidth/
-      // frequency interference); such reps never win the min anyway.
-      val walls = reps.map(_.wall).sorted
-      val med = if (walls.isEmpty) 0.0 else walls(walls.length / 2)
-      reps.map(r => s"""{"wall":${"%.3f".formatLocal(java.util.Locale.ROOT, r.wall)},"steal":${"%.3f".formatLocal(java.util.Locale.ROOT, r.steal)},"steal_clean":${r.stealClean},"wall_outlier":${med > 0 && r.wall > 2.0 * med}}""")
-        .mkString("[", ",", "]")
-    }
+    def repJson(reps: Seq[Rep]): String =
+      reps.zip(wallOutliers(reps)).map { case (r, outlier) =>
+        s"""{"wall":${"%.3f".formatLocal(java.util.Locale.ROOT, r.wall)},"steal":${"%.3f".formatLocal(java.util.Locale.ROOT, r.steal)},"steal_clean":${r.stealClean},"wall_outlier":$outlier}"""
+      }.mkString("[", ",", "]")
     val widths = Seq(lo, mid, hi).map(k => math.min(scanParts, k))
     val meta =
       s""""level_widths":[${widths.mkString(",")}],"ok_rate":${"%.4f".formatLocal(java.util.Locale.ROOT, okRate)},"pinned":$pinned,"unpinned":$unpinned,"steal_clean_reps":[${repsLo.count(_.stealClean)},${repsMid.count(_.stealClean)},${repsHi.count(_.stealClean)}],"reps_lo":${repJson(repsLo.toSeq)},"reps_mid":${repJson(repsMid.toSeq)},"reps_hi":${repJson(repsHi.toSeq)}"""

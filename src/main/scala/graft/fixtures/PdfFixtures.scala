@@ -396,14 +396,13 @@ object PdfFixtures {
     bld.build()
   }
 
-  /** sShading: page carrying the full shading/pattern model surface —
+  /** sShading: page carrying shading and pattern objects —
     * an axial (Type-2) shading with an exponential tint function behind a
     * `sh` op, a SHADING pattern (/PatternType 2 -> the same shading) and a
     * TILING pattern stream (/PatternType 1, cell draws a rect), both
     * installed via `/Pattern cs /PatX scn`. The extractor drops sh/scn
     * (pattern names are exempt from the component-count check), so the
-    * text must still extract byte-identically; PdfShadingModel validates
-    * the dicts in ShadingSpec.
+    * text must still extract byte-identically (ShadingSpec).
     */
   def sShading(text: String): Array[Byte] = {
     val esc = new String(escapeStringText(text), ISO_8859_1)

@@ -637,20 +637,6 @@ object Dedup {
     cross.unionByName(intra)
   }
 
-  /** Per-doc simhash dup-group via FULL connected components over the
-    * hamming<=maxDist pairs (transitive closure; see connectedComponents).
-    */
-  def simhashDupGroupsCC(docs: DataFrame, idCol: String = "doc_id",
-                         textCol: String = "text", maxDist: Int = 3,
-                         maxIter: Int = 100): DataFrame = {
-    val pairs = simhashDupPairs(docs, idCol, textCol, maxDist)
-    val labels = connectedComponents(pairs.select("a", "b"), maxIter)
-    docs.select(col(idCol).as("id"))
-      .join(labels, Seq("id"), "left")
-      .withColumn("dup_group", coalesce(col("label"), col("id")))
-      .select(col("id").as(idCol), col("dup_group"))
-  }
-
   // ------------------------------------------------------- n-gram jaccard
 
   /** Distinct lowercase character n-gram count per document — the set

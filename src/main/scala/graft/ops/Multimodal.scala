@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Multimodal column plumbing: images/audio/video ride as opaque `binary`
@@ -236,20 +236,5 @@ object Multimodal {
         }
       }
     }
-  }
-
-  /** Frame-sample plumbing for "video": pick every nth byte-block as a frame
-    * key and emit (doc_id, frame_idx, frame_hash) — the schema/batch shape of
-    * real frame sampling.
-    */
-  def frameSample(media: Dataset[MediaRow], everyN: Int = 64): DataFrame = {
-    import media.sparkSession.implicits._
-    media.flatMap { row =>
-      val body = if (row.media == null || row.media.length <= 5) Array.emptyByteArray
-      else row.media.drop(5)
-      body.grouped(everyN).zipWithIndex.map { case (block, idx) =>
-        (row.doc_id, idx, scala.util.hashing.MurmurHash3.bytesHash(block).toLong)
-      }
-    }.toDF("doc_id", "frame_idx", "frame_hash")
   }
 }

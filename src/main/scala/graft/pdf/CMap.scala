@@ -68,6 +68,7 @@ final class CMap {
   * sections; /CMapName and /CMapType captured.
   */
 object CMapParser {
+  import PdfTokens.eofExit
 
   private sealed trait Tok
   private final case class TName(name: String) extends Tok
@@ -243,156 +244,43 @@ object CMapParser {
   }
 
   // ------------------------------------------------------------------ lexer
-
-  private def eofExit(): Nothing = throw new EofExit
-
-  private def skipSpaces(cur: ByteCursor): Unit = {
-    while (!cur.atEof && isWhiteSpace(cur.peekByte)) cur.readByte()
-  }
-
-  private def parseComment(cur: ByteCursor): Unit = {
-    skipSpaces(cur)
-    var isFirst = true
-    var done = false
-    while (!done) {
-      val b = cur.peekByte
-      if (b == -1) eofExit()
-      if (isFirst && b != '%') throw new PdfError("Comment should start with %")
-      isFirst = false
-      if (b != '\r' && b != '\n') cur.readByte()
-      else done = true
-    }
-  }
+  // Strings, names and hex strings are the shared PdfTokens productions;
+  // EOF ends the section (PdfTokens.eofExit) as in the content grammar.
 
   private def parseObject(cur: ByteCursor): Tok = {
-    skipSpaces(cur)
+    cur.skipWhitespace()
     while (true) {
-      if (cur.remaining < 2) eofExit()
+      if (cur.remaining < 2) throw new EofExit
       val b0 = cur.peekByte; val b1 = cur.peekAt(1)
-      if (b0 == '%') { parseComment(cur); skipSpaces(cur) }
-      else if (b0 == '/') return parseName(cur)
-      else if (b0 == '(') return parseString(cur)
+      if (b0 == '%') cur.skipComments(eofExit)
+      else if (b0 == '/') return TName(PdfTokens.name(cur, eofExit))
+      else if (b0 == '(') return TString(PdfTokens.literalString(cur, eofExit))
       else if (b0 == '[') return parseArray(cur)
       else if (b0 == '<' && b1 == '<') return parseDict(cur)
-      else if (b0 == '<') return parseHexString(cur)
-      else if (isDecimalDigit(b0) || (b0 == '-' && isDecimalDigit(b1))) return parseNumber(cur)
+      else if (b0 == '<') {
+        val bytes = PdfTokens.hexDigits(cur, eofExit)
+        return THex(bytes.length, bytes)
+      } else if (isDecimalDigit(b0) || (b0 == '-' && isDecimalDigit(b1))) return parseNumber(cur)
       else return parseOperand(cur)
     }
     throw new IllegalStateException("unreachable")
   }
 
-  private def parseName(cur: ByteCursor): TName = {
-    val r = new ByteArrayOutputStream()
-    var nameStarted = false
-    var done = false
-    while (!done) {
-      val b = cur.peekByte
-      if (b == -1) done = true // EOF tolerated
-      else if (!nameStarted) {
-        if (b == '/') { nameStarted = true; cur.readByte() }
-        else throw new PdfError(s"Invalid name: (${b.toChar})")
-      } else {
-        if (isWhiteSpace(b)) done = true
-        else if (b == '/' || b == '[' || b == '(' || b == ']' || b == '<' || b == '>') done = true
-        else if (b == '#') {
-          val hexcode = cur.peek(3)
-          if (hexcode.length < 3) eofExit()
-          cur.discard(3)
-          val hi = Character.digit(hexcode(1), 16); val lo = Character.digit(hexcode(2), 16)
-          if (hi < 0 || lo < 0) throw new PdfError("invalid hex escape in name")
-          r.write((hi << 4) | lo)
-        } else r.write(cur.readByte())
-      }
-    }
-    TName(new String(r.toByteArray, ISO_8859_1))
-  }
-
-  private def parseString(cur: ByteCursor): TString = {
-    cur.readByte()
-    val buf = new ByteArrayOutputStream()
-    var count = 1
-    while (true) {
-      val pb = cur.peekByte
-      if (pb == -1) eofExit()
-      if (pb == '\\') {
-        cur.readByte()
-        val b = cur.readByte()
-        if (b == -1) eofExit()
-        if (isOctalDigit(b)) {
-          if (cur.remaining < 2) eofExit()
-          var code = (b - '0').toLong
-          var extra = 0
-          while (extra < 2 && isOctalDigit(cur.peekAt(extra))) {
-            code = code * 8 + (cur.peekAt(extra) - '0')
-            extra += 1
-          }
-          cur.discard(extra)
-          buf.write((code & 0xff).toInt)
-        } else b match {
-          case 'n' => buf.write('\n')
-          case 'r' => buf.write('\r')
-          case 't' => buf.write('\t')
-          case 'b' => buf.write('\b')
-          case 'f' => buf.write('\f')
-          case '(' => buf.write('(')
-          case ')' => buf.write(')')
-          case '\\' => buf.write('\\')
-          case _ => ()
-        }
-      } else {
-        if (pb == '(') count += 1
-        else if (pb == ')') {
-          count -= 1
-          if (count == 0) { cur.readByte(); return TString(buf.toByteArray) }
-        }
-        buf.write(cur.readByte())
-      }
-    }
-    throw new IllegalStateException("unreachable")
-  }
-
-  /** Hex token: numBytes = decoded length = ceil(hexdigits/2); only hex
-    * chars kept (cmap/parser.go:269-303).
-    */
-  private def parseHexString(cur: ByteCursor): THex = {
-    cur.readByte()
-    val buf = new StringBuilder
-    var done = false
-    while (!done) {
-      skipSpaces(cur)
-      val b = cur.peekByte
-      if (b == -1) eofExit()
-      if (b == '>') { cur.readByte(); done = true }
-      else {
-        cur.readByte()
-        if ((b >= '0' && b <= '9') || (b >= 'a' && b <= 'f') || (b >= 'A' && b <= 'F'))
-          buf.append(b.toChar)
-      }
-    }
-    if (buf.length % 2 == 1) buf.append('0')
-    val bytes = ObjLexer.hexDecodeLenient(buf.toString)
-    THex(buf.length / 2, bytes)
-  }
-
-  private val depthTl = new ThreadLocal[Array[Int]] { override def initialValue() = Array(0) }
-
   private def parseArray(cur: ByteCursor): TArray = {
-    val d = depthTl.get()
-    d(0) += 1
-    if (d(0) > 500) { d(0) -= 1; throw new PdfError("nesting depth exceeded") }
+    cur.enter()
     try {
       cur.readByte()
       val items = mutable.ArrayBuffer.empty[Tok]
       var done = false
       while (!done) {
-        skipSpaces(cur)
+        cur.skipWhitespace()
         val b = cur.peekByte
-        if (b == -1) eofExit()
+        if (b == -1) throw new EofExit
         if (b == ']') { cur.readByte(); done = true }
         else items += parseObject(cur)
       }
       TArray(items.toSeq)
-    } finally d(0) -= 1
+    } finally cur.leave()
   }
 
   private def parseDict(cur: ByteCursor): TDict = {
@@ -401,19 +289,19 @@ object CMapParser {
     if (cur.readByte() != '<') throw new PdfError("Invalid dict")
     var done = false
     while (!done) {
-      skipSpaces(cur)
-      if (cur.remaining < 2) eofExit()
+      cur.skipWhitespace()
+      if (cur.remaining < 2) throw new EofExit
       if (cur.peekByte == '>' && cur.peekAt(1) == '>') {
         cur.readByte(); cur.readByte(); done = true
       } else {
-        val key = parseName(cur).name
-        skipSpaces(cur)
+        val key = PdfTokens.name(cur, eofExit)
+        cur.skipWhitespace()
         d(key) = parseObject(cur)
         // optional "def" keyword after entries
-        skipSpaces(cur)
+        cur.skipWhitespace()
         val p3 = cur.peek(3)
         if (p3.length == 3 && PdfPatterns.str(p3) == "def") cur.discard(3)
-        else if (p3.length < 3) eofExit()
+        else if (p3.length < 3) throw new EofExit
       }
     }
     TDict(d.toMap)

@@ -10,8 +10,9 @@ import PdfObjs._
 /** One content-stream operation: accumulated params + the operand keyword. */
 final case class ContentOp(operand: String, params: mutable.ArrayBuffer[PdfObj])
 
-/** Content-stream lexer (pdf/contentstream/parser.go). Near-clone of the
-  * file-layer lexer with deliberate differences, all replicated here:
+/** Content-stream lexer (pdf/contentstream/parser.go). Strings, names and
+  * hex strings are the shared `PdfTokens` productions; what differs from
+  * the file layer is replicated here:
   *  - input gets a trailing "\n" so the last operand terminates;
   *  - EOF anywhere mid-token is a CLEAN end of stream (operand dropped);
   *  - '+' does NOT start a number (it starts an operand);
@@ -20,21 +21,9 @@ final case class ContentOp(operand: String, params: mutable.ArrayBuffer[PdfObj])
   *  - "BI" triggers inline-image parsing with the <ws>EI<ws> state machine.
   */
 final class ContentParser(content0: Array[Byte]) {
-  import ContentParser.MaxNestingDepth
+  import PdfTokens.eofExit
   // virtual trailing '\n' (parser.go:32) without copying the payload
   private val cur = new ByteCursor(content0, trailingNewline = true)
-  // one long-view per parser for the string-delimiter SWAR scans
-  private val scanView = ByteScan.viewOf(content0)
-  // JVM stacks are fixed-size (Go's grow): cap recursive nesting so a
-  // pathological [[[[... becomes a clean parse error, not a StackOverflowError.
-  private var depth = 0
-  private def enter(): Unit = {
-    depth += 1
-    if (depth > MaxNestingDepth) throw new PdfError("nesting depth exceeded")
-  }
-  private def leave(): Unit = depth -= 1
-
-  private def eofExit(): Nothing = throw new EofExit
 
   // Two-entry MRU over operand byte patterns: real streams alternate a tiny
   // operand set (Td/Tj runs), so most ops skip the per-op String allocation
@@ -93,154 +82,12 @@ final class ContentParser(content0: Array[Byte]) {
     operations
   }
 
-  private def skipSpaces(): Unit = {
-    // Hot loop (runs between every token): advance over the backing array
-    // directly instead of a peek/read virtual-call pair per byte; the
-    // virtual trailing '\n' (pos == data.length) is handled by the cursor
-    // tail loop. Semantics identical.
-    val data = cur.data
-    val dlen = data.length
-    var p = cur.pos
-    while (p < dlen && isWhiteSpace(data(p) & 0xff)) p += 1
-    cur.pos = p
-    while (!cur.atEof && isWhiteSpace(cur.peekByte)) cur.readByte()
-  }
-
-  private def skipComments(): Unit = {
-    while (true) { // iterative: one pass per comment line
-      skipSpaces()
-      var isFirst = true
-      var done = false
-      while (!done) {
-        val b = cur.peekByte
-        if (b == -1) eofExit()
-        if (isFirst && b != '%') return
-        isFirst = false
-        if (b != '\r' && b != '\n') cur.readByte()
-        else done = true
-      }
-    }
-  }
-
-  /** parser.go:126-171: EOF tolerated; invalid start is a hard error. */
-  private def parseName(): PdfName = {
-    val r = new ByteArrayOutputStream()
-    var nameStarted = false
-    var done = false
-    while (!done) {
-      val b = cur.peekByte
-      if (b == -1) done = true
-      else if (!nameStarted) {
-        if (b == '/') { nameStarted = true; cur.readByte() }
-        else throw new PdfError(s"Invalid name: (${b.toChar})")
-      } else {
-        if (isWhiteSpace(b)) done = true
-        else if (b == '/' || b == '[' || b == '(' || b == ']' || b == '<' || b == '>') done = true
-        else if (b == '#') {
-          val hexcode = cur.peek(3)
-          if (hexcode.length < 3) eofExit()
-          cur.discard(3)
-          val hi = Character.digit(hexcode(1), 16); val lo = Character.digit(hexcode(2), 16)
-          if (hi < 0 || lo < 0) throw new PdfError("invalid hex escape in name")
-          r.write((hi << 4) | lo)
-        } else r.write(cur.readByte())
-      }
-    }
-    PdfName(new String(r.toByteArray, ISO_8859_1))
-  }
-
   private def parseNumber(): PdfObj = ObjLexer.parseNumberFrom(cur)
 
-  /** parser.go:255-335. The FAST PATH covers the dominant case — a literal
-    * string with no escape and no nested '(' closed before EOF: one scan
-    * over the backing array + one copy, instead of a peek/read/BAOS-write
-    * triple (each a virtual call, BAOS also synchronized) per byte. Strings
-    * are most of a text-bearing content stream's bytes, so this is the
-    * single hottest loop of extraction. Any '\\' or '(' before the close
-    * falls back to the original byte-at-a-time loop UNMOVED from cur.pos —
-    * semantics (nesting, octal/named escapes, EOF-exit) are byte-identical.
-    */
-  private def parseString(): PdfStr = {
-    cur.readByte()
-    val data = cur.data
-    val dlen = data.length
-    val start = cur.pos
-    // First delimiter decides the shape exactly like the old 3-compare byte
-    // loop did (')' before any '\\'/'(' -> simple; otherwise fall back):
-    // ByteScan returns the identical index, 8 bytes per step.
-    val idx = ByteScan.firstStringDelim(scanView, data, start, dlen)
-    if (idx >= 0 && data(idx) == ')') {
-      cur.pos = idx + 1
-      return new PdfStr(java.util.Arrays.copyOfRange(data, start, idx))
-    }
-    val r = new ByteArrayOutputStream()
-    var count = 1
-    while (true) {
-      val pb = cur.peekByte
-      if (pb == -1) eofExit()
-      if (pb == '\\') {
-        cur.readByte()
-        val b = cur.readByte()
-        if (b == -1) eofExit()
-        if (isOctalDigit(b)) {
-          if (cur.remaining < 2) eofExit()
-          var code = (b - '0').toLong
-          var extra = 0
-          while (extra < 2 && isOctalDigit(cur.peekAt(extra))) {
-            code = code * 8 + (cur.peekAt(extra) - '0')
-            extra += 1
-          }
-          cur.discard(extra)
-          r.write((code & 0xff).toInt)
-        } else {
-          b match {
-            case 'n' => r.write('\n')
-            case 'r' => r.write('\r')
-            case 't' => r.write('\t')
-            case 'b' => r.write('\b')
-            case 'f' => r.write('\f')
-            case '(' => r.write('(')
-            case ')' => r.write(')')
-            case '\\' => r.write('\\')
-            case _ => // unknown escape dropped
-          }
-        }
-      } else {
-        if (pb == '(') count += 1
-        else if (pb == ')') {
-          count -= 1
-          if (count == 0) { cur.readByte(); return new PdfStr(r.toByteArray) }
-        }
-        r.write(cur.readByte())
-      }
-    }
-    throw new IllegalStateException("unreachable")
-  }
-
-  /** parser.go:338-369: ONLY hex chars are kept here. */
-  private def parseHexString(): PdfStr = {
-    cur.readByte()
-    val tmp = new StringBuilder
-    var done = false
-    while (!done) {
-      skipSpaces()
-      val b = cur.peekByte
-      if (b == -1) eofExit()
-      if (b == '>') { cur.readByte(); done = true }
-      else {
-        cur.readByte()
-        if ((b >= '0' && b <= '9') || (b >= 'a' && b <= 'f') || (b >= 'A' && b <= 'F'))
-          tmp.append(b.toChar)
-      }
-    }
-    if (tmp.length % 2 == 1) tmp.append('0')
-    new PdfStr(ObjLexer.hexDecodeLenient(tmp.toString))
-  }
-
   private def parseArray(): PdfArr = {
-    enter()
+    cur.enter()
     try parseArray0()
-    finally leave()
+    finally cur.leave()
   }
 
   private def parseArray0(): PdfArr = {
@@ -248,9 +95,9 @@ final class ContentParser(content0: Array[Byte]) {
     cur.readByte()
     var done = false
     while (!done) {
-      skipSpaces()
+      cur.skipWhitespace()
       val b = cur.peekByte
-      if (b == -1) eofExit()
+      if (b == -1) throw new EofExit
       if (b == ']') { cur.readByte(); done = true }
       else {
         val (obj, _) = parseObject()
@@ -262,10 +109,10 @@ final class ContentParser(content0: Array[Byte]) {
 
   private def parseBool(): PdfBool = {
     var bb = cur.peek(4)
-    if (bb.length < 4) eofExit()
+    if (bb.length < 4) throw new EofExit
     if (PdfPatterns.str(bb) == "true") { cur.discard(4); return PdfBool(true) }
     bb = cur.peek(5)
-    if (bb.length < 5) eofExit()
+    if (bb.length < 5) throw new EofExit
     if (PdfPatterns.str(bb) == "false") { cur.discard(5); return PdfBool(false) }
     throw new PdfError("Unexpected boolean string")
   }
@@ -274,9 +121,9 @@ final class ContentParser(content0: Array[Byte]) {
 
   /** parser.go:429-494 with the glued-null workaround. */
   private def parseDict(): PdfDict = {
-    enter()
+    cur.enter()
     try parseDict0()
-    finally leave()
+    finally cur.leave()
   }
 
   private def parseDict0(): PdfDict = {
@@ -285,20 +132,20 @@ final class ContentParser(content0: Array[Byte]) {
     if (cur.readByte() != '<') throw new PdfError("Invalid dict")
     var done = false
     while (!done) {
-      skipSpaces()
-      if (cur.remaining < 2) eofExit()
+      cur.skipWhitespace()
+      if (cur.remaining < 2) throw new EofExit
       if (cur.peekByte == '>' && cur.peekAt(1) == '>') {
         cur.readByte(); cur.readByte(); done = true
       } else {
-        val keyName = parseName().name
+        val keyName = PdfTokens.name(cur, eofExit)
         var handled = false
         if (keyName.length > 4 && keyName.endsWith("null")) {
           val newKey = keyName.substring(0, keyName.length - 4)
-          skipSpaces()
+          cur.skipWhitespace()
           if (cur.peekByte == '/') { dict.set(newKey, PdfNull); handled = true }
         }
         if (!handled) {
-          skipSpaces()
+          cur.skipWhitespace()
           val (v, _) = parseObject()
           dict.set(keyName, v)
         }
@@ -324,7 +171,7 @@ final class ContentParser(content0: Array[Byte]) {
       // peekAt is relative to cur.pos (== start here): covers the virtual
       // trailing '\n' (whitespace -> terminates) and true EOF (-1).
       val c = if (p < dlen) data(p) & 0xff else cur.peekAt(p - start)
-      if (c == -1) eofExit()
+      if (c == -1) throw new EofExit
       if (isDelimiter(c) || isWhiteSpace(c)) done = true
       else p += 1
     }
@@ -335,14 +182,14 @@ final class ContentParser(content0: Array[Byte]) {
 
   /** parser.go:521-591. Returns (object, isOperand). */
   def parseObject(): (PdfObj, Boolean) = {
-    skipSpaces()
+    cur.skipWhitespace()
     while (true) {
-      if (cur.remaining < 2) eofExit()
+      if (cur.remaining < 2) throw new EofExit
       val b0 = cur.peekByte; val b1 = cur.peekAt(1)
-      if (b0 == '%') skipComments()
-      else if (b0 == '/') return (parseName(), false)
-      else if (b0 == '(') return (parseString(), false)
-      else if (b0 == '<' && b1 != '<') return (parseHexString(), false)
+      if (b0 == '%') cur.skipComments(eofExit)
+      else if (b0 == '/') return (PdfName(PdfTokens.name(cur, eofExit)), false)
+      else if (b0 == '(') return (new PdfStr(PdfTokens.literalString(cur, eofExit)), false)
+      else if (b0 == '<' && b1 != '<') return (new PdfStr(PdfTokens.hexDigits(cur, eofExit)), false)
       else if (b0 == '[') return (parseArray(), false)
       else if (isFloatDigit(b0) || (b0 == '-' && isFloatDigit(b1))) return (parseNumber(), false)
       else if (b0 == '<' && b1 == '<') return (parseDict(), false)
@@ -370,7 +217,7 @@ final class ContentParser(content0: Array[Byte]) {
   def parseInlineImage(): InlineImage = {
     val props = new PdfDict
     while (true) {
-      skipSpaces()
+      cur.skipWhitespace()
       val (obj, isOperand) = parseObject()
       if (!isOperand) {
         val param = obj match {
@@ -398,14 +245,14 @@ final class ContentParser(content0: Array[Byte]) {
         else if (operand == "ID") {
           // Skip one whitespace byte if present.
           val b = cur.peekByte
-          if (b == -1) eofExit()
+          if (b == -1) throw new EofExit
           if (isWhiteSpace(b)) cur.discard(1)
           val stream = new ByteArrayOutputStream()
           var state = 0
           val skipBytes = new ByteArrayOutputStream()
           while (true) {
             val c = cur.readByte()
-            if (c == -1) eofExit() // "Unable to find end of image EI"
+            if (c == -1) throw new EofExit // "Unable to find end of image EI"
             state match {
               case 0 =>
                 if (isWhiteSpace(c)) { skipBytes.reset(); skipBytes.write(c); state = 1 }
@@ -437,8 +284,6 @@ final class ContentParser(content0: Array[Byte]) {
 }
 
 object ContentParser {
-  val MaxNestingDepth = 500
-
   /** Known operand keywords interned to avoid a String allocation per op
     * (Table A.1 operator summary; unknown operands still allocate).
     */

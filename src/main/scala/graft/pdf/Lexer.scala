@@ -29,6 +29,135 @@ object PdfPatterns {
   def str(b: Array[Byte]): String = new String(b, ISO_8859_1)
 }
 
+/** Token productions shared by the three grammars the reference lexes
+  * separately: file-layer objects (pdf/core/parser.go), content streams
+  * (pdf/contentstream/parser.go) and ToUnicode CMaps
+  * (pdf/internal/cmap/parser.go). Their string, name and hex-string rules
+  * agree except for what EOF means, so each production takes the grammar's
+  * EOF action: the file layer throws PdfError with the given message
+  * (`ObjLexer.eofError`), the content and CMap layers end the stream
+  * (`eofExit`).
+  */
+object PdfTokens {
+  /** EOF action of the content-stream and CMap grammars: a clean end. */
+  val eofExit: String => Nothing = _ => throw new EofExit
+
+  /** Literal string after its '(' (pdf/core/parser.go:300-380): balanced
+    * parens, octal escapes (1-3 digits), named escapes; UNKNOWN escape chars
+    * are dropped entirely (including the line-continuation
+    * backslash-newline case).
+    *
+    * Fast path for the dominant case, a string with no escape and no nested
+    * '(' closed before EOF: ByteScan finds the first delimiter 8 bytes per
+    * step and the span is copied once. Anything else falls back to the
+    * byte-at-a-time loop from the unmoved cursor.
+    */
+  def literalString(cur: ByteCursor, eof: String => Nothing): Array[Byte] = {
+    cur.readByte() // consume '('
+    val data = cur.data
+    val start = cur.pos
+    val idx = ByteScan.firstStringDelim(cur.scanView, data, start, data.length)
+    if (idx >= 0 && data(idx) == ')') {
+      cur.pos = idx + 1
+      return java.util.Arrays.copyOfRange(data, start, idx)
+    }
+    val r = new ByteArrayOutputStream()
+    var count = 1
+    while (true) {
+      val pb = cur.peekByte
+      if (pb == -1) eof("EOF in string")
+      if (pb == '\\') {
+        cur.readByte()
+        val b = cur.readByte()
+        if (b == -1) eof("EOF in string escape")
+        if (isOctalDigit(b)) {
+          if (cur.remaining < 2) eof("EOF in string octal")
+          var code = (b - '0').toLong
+          var extra = 0
+          while (extra < 2 && isOctalDigit(cur.peekAt(extra))) {
+            code = code * 8 + (cur.peekAt(extra) - '0')
+            extra += 1
+          }
+          cur.discard(extra)
+          r.write((code & 0xff).toInt)
+        } else {
+          b match {
+            case 'n' => r.write('\n')
+            case 'r' => r.write('\r')
+            case 't' => r.write('\t')
+            case 'b' => r.write('\b')
+            case 'f' => r.write('\f')
+            case '(' => r.write('(')
+            case ')' => r.write(')')
+            case '\\' => r.write('\\')
+            case _ => // dropped entirely (reference switch falls through)
+          }
+        }
+      } else {
+        if (pb == '(') count += 1
+        else if (pb == ')') {
+          count -= 1
+          if (count == 0) { cur.readByte(); return r.toByteArray }
+        }
+        r.write(cur.readByte())
+      }
+    }
+    throw new IllegalStateException("unreachable")
+  }
+
+  /** '/'-led name (pdf/core/parser.go:173-221) with #xx escapes, ended by
+    * whitespace, a delimiter or EOF. EOF before the name starts gives the
+    * empty name; any other first byte is an error. Bytes map 1:1 to chars
+    * (latin-1).
+    */
+  def name(cur: ByteCursor, eof: String => Nothing): String = {
+    val b0 = cur.peekByte
+    if (b0 == -1) return ""
+    if (b0 != '/') throw new PdfError(s"Invalid name: (${b0.toChar})")
+    cur.readByte()
+    val r = new java.lang.StringBuilder
+    while (true) {
+      val b = cur.peekByte
+      if (b == -1 || isWhiteSpace(b) ||
+          b == '/' || b == '[' || b == '(' || b == ']' || b == '<' || b == '>') return r.toString
+      if (b == '#') {
+        val hexcode = cur.peek(3)
+        if (hexcode.length < 3) eof("EOF in name hex escape")
+        cur.discard(3)
+        val hi = Character.digit(hexcode(1), 16); val lo = Character.digit(hexcode(2), 16)
+        if (hi < 0 || lo < 0) throw new PdfError("invalid hex escape in name")
+        r.append(((hi << 4) | lo).toChar)
+      } else r.append(cur.readByte().toChar)
+    }
+    throw new IllegalStateException("unreachable")
+  }
+
+  /** Hex string after its '<' keeping ONLY hex digits
+    * (pdf/contentstream/parser.go:338-369, cmap/parser.go:269-303); an odd
+    * digit count pads a trailing '0'.
+    */
+  def hexDigits(cur: ByteCursor, eof: String => Nothing): Array[Byte] = {
+    cur.readByte() // consume '<'
+    val out = new ByteArrayOutputStream()
+    var hi = -1
+    while (true) {
+      cur.skipWhitespace()
+      val b = cur.readByte()
+      if (b == -1) eof("EOF in hex string")
+      if (b == '>') {
+        if (hi >= 0) out.write(hi << 4)
+        return out.toByteArray
+      }
+      val d = Character.digit(b, 16)
+      if (d >= 0) {
+        if (hi < 0) hi = d
+        else { out.write((hi << 4) | d); hi = -1 }
+      }
+    }
+    throw new IllegalStateException("unreachable")
+  }
+}
+
 /** File-layer object lexer over a byte cursor. Faithful to the reference's
   * PdfParser lexing productions (pdf/core/parser.go:74-645), including its
   * quirks: unknown string escapes dropped, unparseable floats -> 0.0,
@@ -39,52 +168,14 @@ object PdfPatterns {
   * treat as fatal throw PdfError("EOF") here (document layer aborts anyway).
   */
 final class ObjLexer(val cur: ByteCursor) {
+  import ObjLexer.eofError
   import PdfPatterns._
 
-  // Fixed-size JVM stacks: cap recursive nesting (see ContentParser).
-  private var depth = 0
-  private def enter(): Unit = {
-    depth += 1
-    if (depth > 500) throw new PdfError("nesting depth exceeded")
-  }
-  private def leave(): Unit = depth -= 1
+  /** pdf/core/parser.go:74-90 (EOF here surfaces at the next peek). */
+  def skipSpaces(): Int = cur.skipWhitespace()
 
-  /** pdf/core/parser.go:74-90 (EOF here surfaces at the next peek). Runs
-    * between every file-layer token: advance over the backing array
-    * directly, with the cursor loop handling any virtual tail byte.
-    */
-  def skipSpaces(): Int = {
-    val data = cur.data
-    val dlen = data.length
-    val start = cur.pos
-    var p = start
-    while (p < dlen && isWhiteSpace(data(p) & 0xff)) p += 1
-    cur.pos = p
-    var cnt = p - start
-    var b = cur.readByte()
-    while (b != -1 && isWhiteSpace(b)) { cnt += 1; b = cur.readByte() }
-    if (b != -1) cur.unreadByte()
-    cnt
-  }
-
-  /** pdf/core/parser.go:93-120. Multi-line comments are handled iteratively
-    * (the reference recurses per line; fixed JVM stacks cannot).
-    */
-  def skipComments(): Unit = {
-    while (true) {
-      skipSpaces()
-      var isFirst = true
-      var done = false
-      while (!done) {
-        val b = cur.peekByte
-        if (b == -1) throw new PdfError("EOF")
-        if (isFirst && b != '%') return
-        isFirst = false
-        if (b != '\r' && b != '\n') cur.readByte()
-        else done = true
-      }
-    }
-  }
+  /** pdf/core/parser.go:93-120. */
+  def skipComments(): Unit = cur.skipComments(eofError)
 
   /** pdf/core/parser.go:123-151. */
   def readComment(): String = {
@@ -116,32 +207,10 @@ final class ObjLexer(val cur: ByteCursor) {
     r.toString
   }
 
-  /** pdf/core/parser.go:173-221. Name bytes accumulate raw (latin-1). */
+  /** pdf/core/parser.go:173-221; comments before the name are skipped. */
   def parseName(): PdfName = {
-    val r = new ByteArrayOutputStream()
-    var nameStarted = false
-    var done = false
-    while (!done) {
-      val b = cur.peekByte
-      if (b == -1) done = true // EOF tolerated (object streams)
-      else if (!nameStarted) {
-        if (b == '/') { nameStarted = true; cur.readByte() }
-        else if (b == '%') { readComment(); skipSpaces() }
-        else throw new PdfError(s"Invalid name: (${b.toChar})")
-      } else {
-        if (isWhiteSpace(b)) done = true
-        else if (b == '/' || b == '[' || b == '(' || b == ']' || b == '<' || b == '>') done = true
-        else if (b == '#') {
-          val hexcode = cur.peek(3)
-          if (hexcode.length < 3) throw new PdfError("EOF in name hex escape")
-          cur.discard(3)
-          val hi = Character.digit(hexcode(1), 16); val lo = Character.digit(hexcode(2), 16)
-          if (hi < 0 || lo < 0) throw new PdfError("invalid hex escape in name")
-          r.write((hi << 4) | lo)
-        } else r.write(cur.readByte())
-      }
-    }
-    PdfName(new String(r.toByteArray, ISO_8859_1))
+    while (cur.peekByte == '%') { readComment(); skipSpaces() }
+    PdfName(PdfTokens.name(cur, eofError))
   }
 
   /** pdf/core/parser.go:243-297: sign allowed at start and after 'e';
@@ -150,55 +219,8 @@ final class ObjLexer(val cur: ByteCursor) {
     */
   def parseNumber(): PdfObj = ObjLexer.parseNumberFrom(cur)
 
-  /** pdf/core/parser.go:300-380: balanced parens, octal escapes (1-3 digits),
-    * named escapes; UNKNOWN escape chars are dropped entirely (including the
-    * line-continuation backslash-newline case).
-    */
-  def parseString(): PdfStr = {
-    cur.readByte() // consume '('
-    val r = new ByteArrayOutputStream()
-    var count = 1
-    while (true) {
-      val pb = cur.peekByte
-      if (pb == -1) throw new PdfError("EOF in string")
-      if (pb == '\\') {
-        cur.readByte()
-        val b = cur.readByte()
-        if (b == -1) throw new PdfError("EOF in string escape")
-        if (isOctalDigit(b)) {
-          if (cur.remaining < 2) throw new PdfError("EOF in string octal")
-          var code = (b - '0').toLong
-          var extra = 0
-          while (extra < 2 && isOctalDigit(cur.peekAt(extra))) {
-            code = code * 8 + (cur.peekAt(extra) - '0')
-            extra += 1
-          }
-          cur.discard(extra)
-          r.write((code & 0xff).toInt)
-        } else {
-          b match {
-            case 'n' => r.write('\n')
-            case 'r' => r.write('\r')
-            case 't' => r.write('\t')
-            case 'b' => r.write('\b')
-            case 'f' => r.write('\f')
-            case '(' => r.write('(')
-            case ')' => r.write(')')
-            case '\\' => r.write('\\')
-            case _ => // dropped entirely (reference switch falls through)
-          }
-        }
-      } else {
-        if (pb == '(') count += 1
-        else if (pb == ')') {
-          count -= 1
-          if (count == 0) { cur.readByte(); return new PdfStr(r.toByteArray) }
-        }
-        r.write(cur.readByte())
-      }
-    }
-    throw new IllegalStateException("unreachable")
-  }
+  /** pdf/core/parser.go:300-380. */
+  def parseString(): PdfStr = new PdfStr(PdfTokens.literalString(cur, eofError))
 
   /** pdf/core/parser.go:384-411: keeps ALL non-whitespace bytes; non-hex
     * bytes make the final hex decode fail silently -> empty result tail
@@ -223,9 +245,9 @@ final class ObjLexer(val cur: ByteCursor) {
 
   /** pdf/core/parser.go:414-440. */
   def parseArray(): PdfArr = {
-    enter()
+    cur.enter()
     try parseArray0()
-    finally leave()
+    finally cur.leave()
   }
 
   private def parseArray0(): PdfArr = {
@@ -347,9 +369,9 @@ final class ObjLexer(val cur: ByteCursor) {
 
   /** pdf/core/parser.go:578-645 including the glued "/Keynull" workaround. */
   def parseDict(): PdfDict = {
-    enter()
+    cur.enter()
     try parseDict0()
-    finally leave()
+    finally cur.leave()
   }
 
   private def parseDict0(): PdfDict = {
@@ -385,6 +407,9 @@ final class ObjLexer(val cur: ByteCursor) {
 }
 
 object ObjLexer {
+  /** EOF action of the file-layer grammar: a PdfError with the message. */
+  private val eofError: String => Nothing = msg => throw new PdfError(msg)
+
   /** Shared numeric production (file layer and content layer are identical
     * here; reference: pdf/core/parser.go:243-297 / contentstream/parser.go:193-252).
     */

@@ -241,4 +241,56 @@ final class ByteCursor(val data: Array[Byte], trailingNewline: Boolean = false) 
     pos = math.min(off, len.toLong).toInt
   }
   def offset: Long = pos.toLong
+
+  /** Skip PDF whitespace; returns the number of bytes skipped. Runs between
+    * every token, so it walks the backing array directly, then the virtual
+    * trailing '\n' if that is next.
+    */
+  def skipWhitespace(): Int = {
+    val start = pos
+    var p = pos
+    while (p < data.length && PdfObjs.isWhiteSpace(data(p) & 0xff)) p += 1
+    while (p < len && PdfObjs.isWhiteSpace(byteAt(p))) p += 1
+    pos = p
+    p - start
+  }
+
+  /** Skip whitespace and any run of '%' comment lines (pdf/core/parser.go:93-120;
+    * iterative, where the reference recurses per line). EOF runs the
+    * grammar's EOF action.
+    */
+  def skipComments(eof: String => Nothing): Unit = {
+    while (true) {
+      skipWhitespace()
+      var b = peekByte
+      if (b == -1) eof("EOF")
+      if (b != '%') return
+      while (b != '\r' && b != '\n') {
+        readByte()
+        b = peekByte
+        if (b == -1) eof("EOF")
+      }
+    }
+  }
+
+  // Nesting depth of the recursive productions reading this cursor (arrays,
+  // dicts). JVM stacks are fixed-size (Go's grow), so a pathological
+  // [[[[... becomes a clean parse error, not a StackOverflowError.
+  private var depth = 0
+  def enter(): Unit = {
+    depth += 1
+    if (depth > ByteCursor.MaxNestingDepth) throw new PdfError("nesting depth exceeded")
+  }
+  def leave(): Unit = depth -= 1
+
+  // long view of `data` for ByteScan, made on first use
+  private var view: java.nio.ByteBuffer = null
+  def scanView: java.nio.ByteBuffer = {
+    if (view == null) view = ByteScan.viewOf(data)
+    view
+  }
+}
+
+object ByteCursor {
+  val MaxNestingDepth = 500
 }

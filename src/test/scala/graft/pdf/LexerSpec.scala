@@ -243,4 +243,30 @@ class LexerSpec extends AnyFunSuite {
     assert(lexer("-12 ").parseObject() == PdfInt(-12))
     assert(lexer("null and more").parseObject() == PdfNull)
   }
+
+  test("EOF contract: the file-layer, content and CMap grammars on the same truncated tokens") {
+    // file layer: every EOF is a PdfError naming where it hit
+    val cut = Seq(
+      "(abc" -> "EOF in string",
+      "(a\\" -> "EOF in string escape",
+      "(a\\1" -> "EOF in string octal",
+      "/a#4" -> "EOF in name hex escape",
+      "<41" -> "EOF in hex string")
+    for ((tok, msg) <- cut)
+      assert(intercept[PdfError](lexer(tok).parseObject()).getMessage == msg, s"for $tok")
+    // content: EOF is a clean end keeping the operations before the cut, but
+    // the virtual trailing "\n" completes "#4" into an invalid name escape
+    for ((tok, _) <- cut) {
+      def ops = new ContentParser(("q " + tok).getBytes(ISO_8859_1)).parse()
+      if (tok == "/a#4")
+        assert(intercept[PdfError](ops).getMessage == "invalid hex escape in name")
+      else assert(ops.map(_.operand) == Seq("q") && ops.head.params.isEmpty, s"for $tok")
+    }
+    // CMap: EOF ends the section, keeping the map built before the cut
+    for ((tok, _) <- cut) {
+      val cmap = CMapParser.load(("1 beginbfchar <01> <0041> <02> " + tok).getBytes(ISO_8859_1))
+      val got = cmap.codeMap.map(_.map { case (k, v) => k -> new String(v, ISO_8859_1) }.toMap)
+      assert(got.toSeq == Seq(Map(1L -> "A"), Map.empty, Map.empty, Map.empty), s"for $tok")
+    }
+  }
 }

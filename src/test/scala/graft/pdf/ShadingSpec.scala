@@ -6,63 +6,11 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.Extract
 import graft.fixtures.PdfFixtures
-import graft.pdf.PdfShadingModel._
 
-/** Shading/pattern model objects: validation per model/shading.go +
-  * pattern.go over the sShading fixture, error taxonomy, and the
-  * extraction/rewrite round trip of the shading-bearing page.
+/** The shading/pattern-bearing page (rotation variant 23): extraction and
+  * the rewrite round trip must not be disturbed by the objects it carries.
   */
 class ShadingSpec extends AnyFunSuite {
-
-  private def openFixture() = PdfDocument.open(PdfFixtures.sShading("shade me"))
-
-  test("axial shading validates: type 2, DeviceRGB, Coords 4, exponential fn") {
-    val doc = openFixture()
-    val sh = shadingFromObject(PdfRef(5, 0), doc.resolveObj)
-    assert(sh.shadingType == 2)
-    assert(sh.colorSpace == CsDeviceRGB)
-    assert(sh.coords.get.length == 4)
-    assert(sh.functions.length == 1)
-    assert(!sh.antiAlias && sh.bbox.isEmpty)
-  }
-
-  test("shading pattern resolves its /Shading; tiling pattern decodes its cell") {
-    val doc = openFixture()
-    val p2 = patternFromObject(PdfRef(7, 0), doc.resolveObj)
-    assert(p2.patternType == 2)
-    val sp = p2.asInstanceOf[ShadingPattern]
-    assert(sp.shading.shadingType == 2)
-    assert(sp.matrix.get.length == 6)
-    val p1 = patternFromObject(PdfRef(8, 0), doc.resolveObj)
-    assert(p1.patternType == 1)
-    val tp = p1.asInstanceOf[TilingPattern]
-    assert(tp.isColored)
-    assert((tp.bbox, tp.xStep, tp.yStep) == ((0.0, 0.0, 10.0, 10.0), 10.0, 10.0))
-    assert(new String(tp.cellContent, ISO_8859_1) == "0 0 5 5 re f")
-  }
-
-  test("validation errors match the reference taxonomy") {
-    val resolve: PdfObj => PdfObj = identity
-    // missing ShadingType
-    intercept[PdfError] { shadingFromObject(PdfDict("ColorSpace" -> PdfName("DeviceRGB")), resolve) }
-    // out-of-range type
-    intercept[PdfError] {
-      shadingFromObject(PdfDict("ShadingType" -> PdfInt(9),
-        "ColorSpace" -> PdfName("DeviceRGB")), resolve)
-    }
-    // missing ColorSpace
-    intercept[PdfError] { shadingFromObject(PdfDict("ShadingType" -> PdfInt(2)), resolve) }
-    // axial Coords wrong length
-    intercept[PdfError] {
-      shadingFromObject(PdfDict("ShadingType" -> PdfInt(2),
-        "ColorSpace" -> PdfName("DeviceGray"),
-        "Coords" -> PdfArr(PdfInt(0), PdfInt(1))), resolve)
-    }
-    // tiling pattern must be a stream
-    intercept[PdfError] { patternFromObject(PdfDict("PatternType" -> PdfInt(1)), resolve) }
-    // pattern type out of range
-    intercept[PdfError] { patternFromObject(PdfDict("PatternType" -> PdfInt(3)), resolve) }
-  }
 
   test("shading page extracts byte-identically and survives the writer") {
     val doc = PdfFixtures.sShading("shade me")
