@@ -29,59 +29,74 @@ object XrefEntry {
 
 private final case class ObjStm(n: Int, ds: Array[Byte], offsets: Map[Int, Long])
 
-/** Strict whole-line classifier for the two canonical xref-table line shapes
-  * — the hot loop of every classic-xref open ran TWO regex matchers per
-  * entry line. A line is classified here ONLY when it is exactly
-  * `digits S+ digits S*$` (subsection) or `digits S+ digits S+ [nf] S*$`
-  * (entry) from position 0 with digit counts whose Int/Long parses cannot
-  * overflow; everything else (prefix junk the regexes' find() would skip,
-  * oversized numbers whose .toInt must keep throwing, trailer/noise lines)
-  * returns null and falls back to the original regex path, byte-identical.
-  * Strict-match results equal the regex results: leftmost-greedy \d+ from
-  * position 0 yields the same groups.
+/** One xref-table line (pdf/core/parser.go:684-789): a subsection header
+  * `(\d+)S+(\d+)S*$` or an entry `(\d+)S+(\d+)S+([nf])S*$`, tried in that
+  * order with find() and Go's `$`, the end of the text. (Java's `$` would
+  * also match before a final U+0085, which a latin-1 line may end in.) The
+  * line is read backward: after the trailing S run, a digit ends a
+  * subsection and an 'n' or 'f' an entry. Digit and S runs are maximal, so
+  * group 1 is the whole digit run the leftmost match starts with. Returns
+  * null for any other line. The groups are parsed with the reference's
+  * calls, so a number too large for them throws NumberFormatException.
   */
 private[pdf] object XrefLine {
-  /** kind: 1 = subsection(first), 2 = entry(first, gen, 'n'|'f'). */
-  final class Parsed(val kind: Int, val first: Long, val gen: Long, val nf: Char)
+  /** kind: 1 = subsection(first), 2 = entry(first, gen, isN). */
+  final class Parsed(val kind: Int, val first: Long, val gen: Int, val isN: Boolean)
 
   def classify(txt: String): Parsed = {
-    val L = txt.length
-    var p = 0
-    var a = 0L; var nA = 0
-    while (p < L && { val c = txt.charAt(p); c >= '0' && c <= '9' } && nA < 19) {
-      a = a * 10 + (txt.charAt(p) - '0'); p += 1; nA += 1
-    }
-    if (nA == 0 || nA >= 19) return null
-    var nS = 0
-    while (p < L && isSp(txt.charAt(p))) { p += 1; nS += 1 }
-    if (nS == 0) return null
-    var b = 0L; var nB = 0
-    while (p < L && { val c = txt.charAt(p); c >= '0' && c <= '9' } && nB < 19) {
-      b = b * 10 + (txt.charAt(p) - '0'); p += 1; nB += 1
-    }
-    if (nB == 0 || nB >= 19) return null
-    // Trailing whitespace then either end (subsection) or [nf] then S*$.
-    var q = p
-    while (q < L && isSp(txt.charAt(q))) q += 1
-    if (q == L) {
-      // subsection (S*$ allows zero trailing spaces): the caller replays
-      // group(1).toInt, so an Int overflow must fall back to the regex path
-      // to keep throwing exactly as before
-      if (a > Int.MaxValue) return null
-      return new Parsed(1, a, b, ' ')
-    }
-    if (q == p) return null // [nf] must be S-separated from the gen digits
-    val c = txt.charAt(q)
-    if (c != 'n' && c != 'f') return null
-    var r = q + 1
-    while (r < L && isSp(txt.charAt(r))) r += 1
-    if (r != L) return null
-    if (b > Int.MaxValue) return null // gen .toInt must keep throwing via regex
-    new Parsed(2, a, b, c)
+    // start of the S (digit) run that ends at `end`
+    def spacesTo(end: Int): Int = { var p = end; while (p > 0 && isSpace(txt.charAt(p - 1))) p -= 1; p }
+    def digitsTo(end: Int): Int = { var p = end; while (p > 0 && isDigit(txt.charAt(p - 1))) p -= 1; p }
+    val e = spacesTo(txt.length)
+    val entry = e > 0 && { val c = txt.charAt(e - 1); c == 'n' || c == 'f' }
+    val genEnd = if (entry) spacesTo(e - 1) else e
+    val genStart = digitsTo(genEnd)
+    val firstEnd = spacesTo(genStart)
+    val firstStart = digitsTo(firstEnd)
+    if ((entry && genEnd == e - 1) || genStart == genEnd || firstEnd == genStart ||
+      firstStart == firstEnd) return null
+    val first = txt.substring(firstStart, firstEnd)
+    if (!entry) new Parsed(1, first.toInt.toLong, 0, false)
+    else new Parsed(2, first.toLong, txt.substring(genStart, genEnd).toInt, txt.charAt(e - 1) == 'n')
   }
 
-  @inline private def isSp(c: Char): Boolean =
-    c == ' ' || c == '\t' || c == '\n' || c == '\f' || c == '\r'
+  @inline private def isDigit(c: Char): Boolean = c >= '0' && c <= '9'
+}
+
+/** The object header `(\d+)S+(\d+)S+obj` (pdf/core/parser.go:23-33) with
+  * find() semantics over data[from, until): the leftmost match, or null. A
+  * match can only start at the first digit of a run (digit and S runs are
+  * maximal), so each run is tried once.
+  */
+private[pdf] final class ObjHeader(val start: Int, numEnd: Int, genStart: Int, genEnd: Int,
+                                   val end: Int) {
+  /** Groups 1 and 2: the object and generation numbers. */
+  def num(data: Array[Byte]): String = new String(data, start, numEnd - start, ISO_8859_1)
+  def gen(data: Array[Byte]): String = new String(data, genStart, genEnd - genStart, ISO_8859_1)
+}
+
+private[pdf] object ObjHeader {
+  def find(data: Array[Byte], from: Int, until: Int): ObjHeader = {
+    def digits(i0: Int): Int = { var i = i0; while (i < until && isDecimalDigit(data(i) & 0xff)) i += 1; i }
+    def spaces(i0: Int): Int = { var i = i0; while (i < until && isSpace(data(i) & 0xff)) i += 1; i }
+    var i = from
+    while (i < until) {
+      if (!isDecimalDigit(data(i) & 0xff)) i += 1
+      else {
+        val numEnd = digits(i)
+        val genStart = spaces(numEnd)
+        if (genStart > numEnd) {
+          val genEnd = digits(genStart)
+          val o = spaces(genEnd)
+          if (genEnd > genStart && o > genEnd && o + 3 <= until &&
+            data(o) == 'o' && data(o + 1) == 'b' && data(o + 2) == 'j')
+            return new ObjHeader(i, numEnd, genStart, genEnd, o + 3)
+        }
+        i = numEnd
+      }
+    }
+    null
+  }
 }
 
 /** File-layer parser for one in-memory PDF document. Mirrors the reference's
@@ -221,9 +236,8 @@ final class PdfFileParser(val data: Array[Byte]) {
 
   /** pdf/core/parser.go:1040-1075 dispatch. */
   private def parseXref(): PdfDict = {
-    val bb = str(cur.peek(20))
-    if (indirectObject.matcher(bb).find()) parseXrefStream(None)
-    else if (xrefTable.matcher(bb).find()) parseXrefTable()
+    if (headerAtCursor() != null) parseXrefStream(None)
+    else if (xrefTable.matcher(str(cur.peek(20))).find()) parseXrefTable()
     else {
       repairSeekXrefMarker()
       parseXrefTable()
@@ -241,40 +255,16 @@ final class PdfFileParser(val data: Array[Byte]) {
       lex.skipSpaces()
       if (cur.atEof) throw new PdfError("EOF in xref table")
       val txt = lex.readTextLine()
-      // Strict-canonical lines bypass the two regex matchers the loop ran
-      // per entry line (XrefLine classifies only shapes whose regex result
-      // is provably identical; anything unusual — prefix junk, oversized
-      // numbers — returns null and takes the original regex path).
-      val fast = XrefLine.classify(txt)
-      // Subsection/entry line, fast-classified or regex-matched; -1 = neither.
-      var subFirst = -1L
-      var entFirst = -1L
-      var entGen = 0
-      var entIsN = false
-      if (fast != null) {
-        if (fast.kind == 1) subFirst = fast.first
-        else { entFirst = fast.first; entGen = fast.gen.toInt; entIsN = fast.nf == 'n' }
-      } else {
-        val m1 = xrefSubsection.matcher(txt)
-        if (m1.find()) subFirst = m1.group(1).toInt.toLong
-        else {
-          val m2 = xrefEntry.matcher(txt)
-          if (m2.find()) {
-            entFirst = m2.group(1).toLong
-            entGen = m2.group(2).toInt
-            entIsN = m2.group(3).toLowerCase == "n"
-          }
-        }
-      }
-      if (subFirst >= 0) {
-        curObjNum = subFirst.toInt
+      val line = XrefLine.classify(txt)
+      if (line != null && line.kind == 1) {
+        curObjNum = line.first.toInt
         insideSubsection = true
-      } else if (entFirst >= 0) {
+      } else if (line != null) {
         if (!insideSubsection) throw new PdfError("Xref invalid format")
-        if (entIsN && entFirst > 1) {
+        if (line.isN && line.first > 1) {
           val existing = xrefs.get(curObjNum)
-          if (existing.isEmpty || entGen > existing.get.generation)
-            xrefs(curObjNum) = XrefEntry.table(curObjNum, entGen, entFirst)
+          if (existing.isEmpty || line.gen > existing.get.generation)
+            xrefs(curObjNum) = XrefEntry.table(curObjNum, line.gen, line.first)
         }
         curObjNum += 1
       } else if (txt.length > 6 && txt.startsWith("trailer")) {
@@ -472,15 +462,12 @@ final class PdfFileParser(val data: Array[Byte]) {
           if (i == 0) ok = false
         }
         if (ok) {
+          // the scanned signature is data[objOffset, k]
           val objOffset = (k + 1).toLong - (bufLen - i)
-          val sb = new StringBuilder
-          var j = i + 1
-          while (j < bufLen) { sb.append(lastAt(k, j).toChar); j += 1 }
-          sb.append('j')
-          val m = indirectObject.matcher(sb.toString)
-          if (!m.find()) throw new PdfError("Unable to detect indirect object signature")
-          val objNum = m.group(1).toInt
-          val genNum = m.group(2).toInt
+          val h = ObjHeader.find(data, objOffset.toInt, k + 1)
+          if (h == null) throw new PdfError("Unable to detect indirect object signature")
+          val objNum = h.num(data).toInt
+          val genNum = h.gen(data).toInt
           val existing = table.get(objNum)
           if (existing.isEmpty || existing.get.generation < genNum)
             table(objNum) = XrefEntry.table(objNum, genNum, objOffset)
@@ -691,57 +678,20 @@ final class PdfFileParser(val data: Array[Byte]) {
     }
   }
 
+  /** The object header in the 20 bytes at the cursor, as the reference peeks. */
+  private def headerAtCursor(): ObjHeader =
+    ObjHeader.find(data, cur.pos, math.min(cur.pos + 20, data.length))
+
   /** pdf/core/parser.go:1318-1490, including the non-conformant stream-EOL
     * handling and the next-xref-offset length correction.
     */
   def parseIndirectObject(): PdfObj = {
-    // FAST PATH: "N G obj" matched directly at the cursor within the same
-    // 20-byte window the regex sees (xref offsets point straight at the
-    // header in well-formed files) — skips two matcher runs + two window
-    // copies per object. Any deviation (leading offset, overlong header)
-    // falls back to the regex path with identical accept/reject behavior.
-    var objNum = -1L
-    var genNum = -1L
-    locally {
-      val data = cur.data
-      val win = math.min(cur.pos + 20, data.length)
-      var p = cur.pos
-      // the regex's \s class ([\t\n\f\r ]) — narrower than the PDF
-      // whitespace set (no NUL); keep them identical so accept/reject
-      // matches the fallback bit-for-bit
-      def rws(c: Int): Boolean =
-        c == '\t' || c == '\n' || c == '\f' || c == '\r' || c == ' '
-      var n1 = -1L
-      while (p < win && isDecimalDigit(data(p) & 0xff)) {
-        n1 = (if (n1 < 0) 0 else n1) * 10 + (data(p) - '0'); p += 1
-      }
-      if (n1 >= 0 && p < win && rws(data(p) & 0xff)) {
-        while (p < win && rws(data(p) & 0xff)) p += 1
-        var n2 = -1L
-        while (p < win && isDecimalDigit(data(p) & 0xff)) {
-          n2 = (if (n2 < 0) 0 else n2) * 10 + (data(p) - '0'); p += 1
-        }
-        if (n2 >= 0 && p < win && rws(data(p) & 0xff)) {
-          while (p < win && rws(data(p) & 0xff)) p += 1
-          if (p + 3 <= win && data(p) == 'o' && data(p + 1) == 'b' && data(p + 2) == 'j') {
-            objNum = n1; genNum = n2
-            cur.pos = p + 3
-          }
-        }
-      }
-    }
-    if (objNum < 0) {
-      val bb = str(cur.peek(20))
-      val m = indirectObject.matcher(bb)
-      if (!m.find()) throw new PdfError("Unable to detect indirect object signature")
-      cur.discard(m.start()) // tolerate a small offset
-      val hlen = m.end() - m.start()
-      val hb = str(cur.readExact(hlen))
-      val m2 = indirectObject.matcher(hb)
-      if (!m2.find()) throw new PdfError("Unable to detect indirect object signature")
-      objNum = m2.group(1).toLong
-      genNum = m2.group(2).toLong
-    }
+    // the header may sit anywhere in the window; the cursor moves past it
+    val h = headerAtCursor()
+    if (h == null) throw new PdfError("Unable to detect indirect object signature")
+    val objNum = h.num(data).toLong
+    val genNum = h.gen(data).toLong
+    cur.pos = h.end
     var inner: PdfObj = null
 
     while (true) {

@@ -6,9 +6,13 @@ import java.util.regex.Pattern
 
 import PdfObjs._
 
-/** Shared regexes of the file-layer parser. These mirror the reference's
-  * object-signature regexes (pdf/core/parser.go:23-33); `\s` is written as an
-  * explicit class to match Go's definition ([\t\n\f\r ]) rather than Java's.
+/** Regexes of the file-layer parser's cold paths (version, EOF, startxref
+  * and xref markers). These mirror the reference's object-signature regexes
+  * (pdf/core/parser.go:23-33); `\s` is written as an explicit class to match
+  * Go's definition ([\t\n\f\r ]) rather than Java's. The shapes read once
+  * per token or line (references, numbers, object headers, xref-table
+  * lines) are hand-written matchers of the same patterns:
+  * `ObjLexer.parseObject`, `ObjHeader` and `XrefLine`.
   */
 object PdfPatterns {
   private final val S = "[\\t\\n\\f\\r ]"
@@ -16,14 +20,11 @@ object PdfPatterns {
   val eof: Pattern = Pattern.compile("%%EOF")
   val xrefTable: Pattern = Pattern.compile(s"$S*xref$S*")
   val startXref: Pattern = Pattern.compile(s"startx?ref$S*(\\d+)")
-  val numeric: Pattern = Pattern.compile("^[\\+-.]*([0-9.]+)")
-  val exponential: Pattern = Pattern.compile("^[\\+-.]*([0-9.]+)e[\\+-.]*([0-9.]+)")
-  val reference: Pattern = Pattern.compile(s"^$S*(\\d+)$S+(\\d+)$S+R")
-  val indirectObject: Pattern = Pattern.compile(s"(\\d+)$S+(\\d+)$S+obj")
-  val xrefSubsection: Pattern = Pattern.compile(s"(\\d+)$S+(\\d+)$S*$$")
-  val xrefEntry: Pattern = Pattern.compile(s"(\\d+)$S+(\\d+)$S+([nf])$S*$$")
   val repairXrefTable: Pattern = Pattern.compile(s"[\\r\\n]$S*(xref)$S*[\\r\\n]")
   val repairXrefStart: Pattern = Pattern.compile(s"${S}xref$S*")
+
+  /** The class S above: NUL is PDF whitespace but not in it. */
+  def isSpace(c: Int): Boolean = c == ' ' || c == '\t' || c == '\n' || c == '\f' || c == '\r'
 
   /** Bytes→String for regex matching: latin-1 keeps a 1:1 byte↔char mapping. */
   def str(b: Array[Byte]): String = new String(b, ISO_8859_1)
@@ -276,9 +277,12 @@ final class ObjLexer(val cur: ByteCursor) {
   /** pdf/core/parser.go:484-487: null = discard 4 bytes. */
   def parseNull(): PdfObj = { cur.discard(4); PdfNull }
 
-  /** pdf/core/parser.go:491-574. Dispatch order matters: null/false/true ->
-    * reference regex -> numeric regex -> exponential regex; reference
-    * consumed via read-until-'R'.
+  /** pdf/core/parser.go:491-574. The reference peeks 15 bytes and tries,
+    * in order, the null/false/true prefixes, the reference pattern
+    * `^S*(\d+)S+(\d+)S+R`, the numeric pattern `^[\+-.]*([0-9.]+)` and an
+    * exponential pattern that only matches where the numeric one does.
+    * `skipSpaces` has just run, so the window never starts with S, and the
+    * checks below decide exactly what those patterns decide on it.
     */
   def parseObject(): PdfObj = {
     skipSpaces()
@@ -291,80 +295,55 @@ final class ObjLexer(val cur: ByteCursor) {
       else if (b0 == '<' && b1 == '<') return parseDict()
       else if (b0 == '<') return parseHexString()
       else if (b0 == '%') { readComment(); skipSpaces() }
-      else {
-        // Fast dispatch over the same 15-byte window the regexes saw,
-        // without the byte-copy + string + matcher allocations (this runs
-        // once per file-layer token). Two shapes are decided here, both
-        // exact replicas of the anchored patterns on a window that cannot
-        // start with whitespace (skipSpaces just ran, so the reference
-        // pattern's leading S* is always empty; maximal digit/space runs
-        // need no backtracking):
-        //  - "D+ S+ D+ S+ R" with 'R' inside the window -> PdfRef with the
-        //    same two groups the regex + consume-through-R path produced
-        //    (the scanned 'R' IS the first 'R': an earlier one could only
-        //    sit inside a digit/space run, impossible);
-        //  - "[+-.]* digit" -> the numeric pattern matches -> parseNumber.
-        // Anything else (null/true/false, all-dot backtracking corners,
-        // window-truncated shapes) falls through to the original path.
-        @inline def at(i: Int): Int = cur.peekAt(i)
-        // the regex S class [\t\n\f\r ] — NOT the PDF whitespace class,
-        // which additionally holds NUL; a NUL-separated "12<NUL>0 R" must
-        // keep failing the reference pattern exactly like the regex does
-        @inline def isRegexSpace(c: Int): Boolean =
-          c == ' ' || c == '\t' || c == '\n' || c == '\f' || c == '\r'
-        var p = 0
-        while (p < 15 && isDecimalDigit(at(p))) p += 1
-        if (p > 0 && p < 15) {
-          var q = p
-          while (q < 15 && isRegexSpace(at(q))) q += 1
-          if (q > p && q < 15) {
-            var r = q
-            while (r < 15 && isDecimalDigit(at(r))) r += 1
-            if (r > q && r < 15) {
-              var s = r
-              while (s < 15 && isRegexSpace(at(s))) s += 1
-              if (s > r && s < 15 && at(s) == 'R') {
-                var n1 = 0L; var i1 = 0
-                while (i1 < p) { n1 = n1 * 10 + (at(i1) - '0'); i1 += 1 }
-                var n2 = 0L; var i2 = q
-                while (i2 < r) { n2 = n2 * 10 + (at(i2) - '0'); i2 += 1 }
-                cur.discard(s + 1) // through the 'R', like the consume loop
-                return PdfRef(n1, n2)
-              }
-            }
-          }
-        }
-        if (p == 0) {
-          // leading [+-.]* then a digit -> numeric pattern matches
-          var t = 0
-          while (t < 15 && { val c = at(t); c == '+' || c == '-' || c == '.' }) t += 1
-          if (t < 15 && isDecimalDigit(at(t)) && t > 0) return parseNumber()
-        } else if (p == 15 || !isWhiteSpace(at(p))) {
-          // digit-led token that is NOT a reference: numeric matches
-          return parseNumber()
-        }
-        val peekStr = PdfPatterns.str(cur.peek(15))
-        if (peekStr.length > 3 && peekStr.startsWith("null")) return parseNull()
-        if (peekStr.length > 4 && peekStr.startsWith("false")) return parseBool()
-        if (peekStr.length > 3 && peekStr.startsWith("true")) return parseBool()
-        val mRef = reference.matcher(peekStr)
-        if (mRef.find()) {
-          // Consume through 'R' (reference: ReadBytes('R')).
-          val consumed = new StringBuilder
-          var c = cur.readByte()
-          while (c != -1 && c != 'R') { consumed.append(c.toChar); c = cur.readByte() }
-          if (c == -1) throw new PdfError("EOF reading reference")
-          consumed.append('R')
-          val m2 = reference.matcher(consumed.toString)
-          if (!m2.find()) throw new PdfError("Unable to parse reference")
-          return PdfRef(m2.group(1).toLong, m2.group(2).toLong)
-        }
-        if (numeric.matcher(peekStr).find()) return parseNumber()
-        if (exponential.matcher(peekStr).find()) return parseNumber()
-        throw new PdfError("Object parsing error - unexpected pattern")
-      }
+      else if (isDecimalDigit(b0)) return refOrNumber()
+      else if (startsWith("null")) return parseNull()
+      else if (startsWith("false") || startsWith("true")) return parseBool()
+      else if (numericLead()) return parseNumber()
+      else throw new PdfError("Object parsing error - unexpected pattern")
     }
     throw new IllegalStateException("unreachable")
+  }
+
+  private def startsWith(word: String): Boolean = {
+    var i = 0
+    while (i < word.length && cur.peekAt(i) == word.charAt(i)) i += 1
+    i == word.length
+  }
+
+  /** A digit-led token: `D+ S+ D+ S+ R` inside the window is a reference,
+    * consumed through the 'R' (digit and S runs are maximal, so the regex
+    * has no other way to match); anything else matches the numeric pattern.
+    */
+  private def refOrNumber(): PdfObj = {
+    // end of the digit (S) run that starts at i0, within the window
+    def digits(i0: Int): Int = { var i = i0; while (i < 15 && isDecimalDigit(cur.peekAt(i))) i += 1; i }
+    def spaces(i0: Int): Int = { var i = i0; while (i < 15 && isSpace(cur.peekAt(i))) i += 1; i }
+    def value(from: Int, until: Int): Long = {
+      var v = 0L; var i = from
+      while (i < until) { v = v * 10 + (cur.peekAt(i) - '0'); i += 1 }
+      v
+    }
+    val p = digits(1); val q = spaces(p); val r = digits(q); val s = spaces(r)
+    if (q > p && r > q && s > r && s < 15 && cur.peekAt(s) == 'R') {
+      val ref = PdfRef(value(0, p), value(q, r))
+      cur.discard(s + 1)
+      ref
+    } else parseNumber()
+  }
+
+  /** `^[\+-.]*[0-9.]+` on the window. `[\+-.]` is the range '+'..'.', so
+    * it holds ',' too; a '.' in the leading run can also serve as the
+    * `[0-9.]`, so the pattern matches when the run holds a '.' or a digit
+    * follows it inside the window.
+    */
+  private def numericLead(): Boolean = {
+    var t = 0
+    var dot = false
+    while (t < 15 && { val c = cur.peekAt(t); c >= '+' && c <= '.' }) {
+      if (cur.peekAt(t) == '.') dot = true
+      t += 1
+    }
+    dot || (t < 15 && isDecimalDigit(cur.peekAt(t)))
   }
 
   /** pdf/core/parser.go:578-645 including the glued "/Keynull" workaround. */

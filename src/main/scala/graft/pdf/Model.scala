@@ -207,9 +207,7 @@ object PdfColorspace {
   */
 final class PdfResources(
     val font: PdfObj, // raw /Font entry (dict or ref), traced on lookup
-    val colorspaceNames: Seq[String],
-    val colorspaces: Map[String, PdfColorspace],
-    val hasColorspaceDict: Boolean) {
+    val colorspaces: Map[String, PdfColorspace]) {
 
   /** GetFontByName (pdf/model/resources.go:217-233). */
   def getFontByName(name: String): Option[PdfObj] = {
@@ -226,7 +224,7 @@ final class PdfResources(
 }
 
 object PdfResources {
-  val empty = new PdfResources(null, Nil, Map.empty, hasColorspaceDict = false)
+  val empty = new PdfResources(null, Map.empty)
 
   /** NewPdfPageResourcesFromDict + colorspace-map construction
     * (pdf/model/page.go:879-907). Colorspace parse errors propagate: they
@@ -234,12 +232,9 @@ object PdfResources {
     */
   def fromDict(dict: PdfDict, resolve: PdfObj => PdfObj): PdfResources = {
     val font = dict.get("Font")
-    var names = mutable.ArrayBuffer.empty[String]
     val csMap = mutable.HashMap.empty[String, PdfColorspace]
-    var hasCs = false
     var csObj = dict.get("ColorSpace")
     if (csObj != null && csObj != PdfNull) {
-      hasCs = true
       csObj match {
         case io: PdfIndirect => csObj = io.obj
         case r: PdfRef       => csObj = PdfObjs.traceToDirect(resolve(r))
@@ -247,14 +242,11 @@ object PdfResources {
       }
       csObj match {
         case d: PdfDict =>
-          for (k <- d.keys) {
-            names += k
-            csMap(k) = PdfColorspace.fromObject(d.get(k), resolve)
-          }
+          for (k <- d.keys) csMap(k) = PdfColorspace.fromObject(d.get(k), resolve)
         case _ => throw new PdfError("CS attribute type error")
       }
     }
-    new PdfResources(font, names.toSeq, csMap.toMap, hasCs)
+    new PdfResources(font, csMap.toMap)
   }
 }
 
@@ -269,22 +261,6 @@ final class PdfDocument(val parser: PdfFileParser,
                         val passwords: Seq[Array[Byte]] = Nil) {
   private val traversed = java.util.Collections.newSetFromMap(
     new java.util.IdentityHashMap[PdfObj, java.lang.Boolean]())
-
-  /** Flattened outline titles (the reader.go:415-449 GetOutlinesFlattened
-    * surface): item titles indented 2 spaces per depth; a "+" line precedes
-    * each descent into children. Ordering reproduces the reference's
-    * flattenFunc exactly: it recurses Next BEFORE First, so all sibling
-    * titles are emitted before any children, and the children blocks appear
-    * in REVERSE sibling order (the deepest recursion unwinds first).
-    */
-  private val outlineTitles = mutable.ArrayBuffer.empty[String]
-  def outlinesFlattened: Seq[String] = outlineTitles.toSeq
-
-  /** Lightweight outline tree node built during validation; flattened after. */
-  private final class ONode(val title: Option[String]) {
-    var first: ONode = null
-    var next: ONode = null
-  }
 
   val pages: Seq[PdfPage] = loadStructure()
 
@@ -366,127 +342,75 @@ final class PdfDocument(val parser: PdfFileParser,
           case _: PdfDict =>
             val visited = java.util.Collections.newSetFromMap(
               new java.util.IdentityHashMap[PdfObj, java.lang.Boolean]())
-            val root = buildOutlineTree(io, visited, isRoot = true, depth = 0)
-            flattenOutline(root)
+            buildOutlineTree(io, visited, depth = 0)
           case _ => throw new PdfError("Outline indirect object should contain a dictionary")
         }
       case _ => throw new PdfError("Outline root should be an indirect object")
     }
   }
 
-  private def titleString(dict: PdfDict): String = {
-    // Raw-byte preserving decode (ISO-8859-1 maps bytes 1:1 to chars): the
-    // reference's Go string([]byte) keeps /Title bytes untouched — a UTF-8
-    // decode would U+FFFD-corrupt the common UTF-16BE (<FEFF...>) titles
-    // and break byte identity if outlines ever feed an output column.
+  /** An item's Title must trace to a string (outlines.go:143-146). */
+  private def checkTitle(dict: PdfDict): Unit =
     PdfObjs.traceToDirect(traceToObject(dict.get("Title"))) match {
-      case s: PdfStr => new String(s.bytes, java.nio.charset.StandardCharsets.ISO_8859_1)
+      case _: PdfStr => ()
       case _         => throw new PdfError("Title not a string")
     }
-  }
 
-  /** Build + validate the outline tree in DOCUMENT order (the reference's
+  /** Validate one outline sibling chain in DOCUMENT order (the reference's
     * buildOutlineTree walk, reader.go:259-404 — so validation errors fire in
-    * the same order), returning the head node of this sibling chain.
+    * the same order). `obj` is the traced head; Next chains are followed
+    * ITERATIVELY (a million-sibling flat outline must not recurse a million
+    * deep), and only from items.
     */
-  private def buildOutlineTree(obj: PdfObj, visited: java.util.Set[PdfObj],
-                               isRoot: Boolean, depth: Int): ONode = {
+  private def buildOutlineTree(obj: PdfObj, visited: java.util.Set[PdfObj], depth: Int): Unit = {
     if (depth > 1000) throw new PdfError("outline nesting depth exceeded")
-    obj match {
-      case io: PdfIndirect =>
-        if (visited.contains(io)) return null // cycle: stop (see loadOutlines doc)
-        visited.add(io)
-        val dict = io.obj match {
-          case d: PdfDict => d
-          case _          => throw new PdfError("Not a dictionary object")
-        }
-        val title = dict.get("Title")
-        val head = new ONode(
-          if (title != null) Some(titleString(dict)) else None)
-        if (title != null) {
-          // Outline ITEM: Title must trace to a string; Count must be int.
-          dict.get("Count") match {
-            case null | PdfInt(_) => ()
-            case _                => throw new PdfError("Count not an integer")
-          }
-        }
-        dict.get("First") match {
-          case null => ()
-          case f =>
-            traceToObject(f) match {
-              case PdfNull => ()
-              case fo => head.first = buildOutlineTree(fo, visited, isRoot = false, depth = depth + 1)
-            }
-        }
-        if (title != null) { // Next chains only followed on items — ITERATIVE
-          // (a million-sibling flat outline must not recurse a million deep)
-          var tail = head
-          var next = dict.get("Next")
-          while (next != null) {
-            traceToObject(next) match {
-              case PdfNull => next = null
-              case no: PdfIndirect =>
-                if (visited.contains(no)) next = null
-                else {
-                  visited.add(no)
-                  val nd = no.obj match {
-                    case d: PdfDict => d
-                    case _          => throw new PdfError("Not a dictionary object")
-                  }
-                  val nt = nd.get("Title")
-                  val node = new ONode(
-                    if (nt != null) Some(titleString(nd)) else None)
-                  if (nt != null) {
-                    nd.get("Count") match {
-                      case null | PdfInt(_) => ()
-                      case _                => throw new PdfError("Count not an integer")
-                    }
-                  }
-                  nd.get("First") match {
-                    case null => ()
-                    case f2 =>
-                      traceToObject(f2) match {
-                        case PdfNull => ()
-                        case fo2 => node.first =
-                          buildOutlineTree(fo2, visited, isRoot = false, depth = depth + 1)
-                      }
-                  }
-                  tail.next = node
-                  tail = node
-                  next = if (nt != null) nd.get("Next") else null
+    var node = obj
+    while (node != null) {
+      node match {
+        case io: PdfIndirect =>
+          if (visited.contains(io)) node = null // cycle: stop (see loadOutlines doc)
+          else {
+            visited.add(io)
+            node = outlineNode(io, visited, depth) match {
+              case null => null
+              case next =>
+                traceToObject(next) match {
+                  case PdfNull => null
+                  case no      => no
                 }
-              case _ => throw new PdfError("Outline container not an indirect object")
             }
           }
-        }
-        head
-      case _ => throw new PdfError("Outline container not an indirect object")
+        case _ => throw new PdfError("Outline container not an indirect object")
+      }
     }
   }
 
-  /** Flatten in the REFERENCE's order (reader.go:415-449 flattenFunc): item
-    * titles across the whole sibling chain first (Next is recursed before
-    * First), then each sibling's "+" + children block in REVERSE sibling
-    * order (the Next-recursion unwinds before the First descent runs).
+  /** One outline node: an ITEM (it has a Title) needs a string Title and an
+    * int Count; its First child chain is validated before its siblings.
+    * Returns the item's raw Next, or null when the node is not an item.
     */
-  private def flattenOutline(root: ONode): Unit = {
-    def walk(head: ONode, depth: Int): Unit = {
-      if (head == null) return
-      val sibs = mutable.ArrayBuffer.empty[ONode]
-      var n = head
-      while (n != null) {
-        sibs += n
-        // flattenFunc only recurses Next inside the isItem branch
-        n = if (n.title.isDefined) n.next else null
-      }
-      for (s <- sibs if s.title.isDefined)
-        outlineTitles += ("  " * depth) + s.title.get
-      for (s <- sibs.reverse if s.first != null) {
-        outlineTitles += ("  " * depth) + "+"
-        walk(s.first, depth + 1)
+  private def outlineNode(io: PdfIndirect, visited: java.util.Set[PdfObj], depth: Int): PdfObj = {
+    val dict = io.obj match {
+      case d: PdfDict => d
+      case _          => throw new PdfError("Not a dictionary object")
+    }
+    val isItem = dict.get("Title") != null
+    if (isItem) {
+      checkTitle(dict)
+      dict.get("Count") match {
+        case null | PdfInt(_) => ()
+        case _                => throw new PdfError("Count not an integer")
       }
     }
-    walk(root, 0)
+    dict.get("First") match {
+      case null => ()
+      case f =>
+        traceToObject(f) match {
+          case PdfNull => ()
+          case fo      => buildOutlineTree(fo, visited, depth + 1)
+        }
+    }
+    if (isItem) dict.get("Next") else null
   }
 
   /** loadForms (reader.go:447-498): AcroForm must trace to a dictionary (or

@@ -60,7 +60,6 @@ final class PdfDict extends PdfObj {
 
   /** Go-style: returns null when absent (mirrors dict.Get returning nil). */
   def get(key: String): PdfObj = map.getOrElse(key, null)
-  def getOpt(key: String): Option[PdfObj] = map.get(key)
   def set(key: String, v: PdfObj): Unit = {
     if (!map.contains(key)) order += key
     map(key) = v
@@ -225,7 +224,6 @@ final class ByteCursor(val data: Array[Byte], trailingNewline: Boolean = false) 
 
   def readByte(): Int =
     if (pos < len) { val b = byteAt(pos); pos += 1; b } else -1
-  def unreadByte(): Unit = if (pos > 0) pos -= 1
   def discard(n: Int): Int = {
     val d = math.max(0, math.min(n, len - pos)); pos += d; d
   }

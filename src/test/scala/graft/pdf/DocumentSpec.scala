@@ -1,6 +1,6 @@
 package graft.pdf
 
-import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.charset.StandardCharsets.{ISO_8859_1, UTF_8}
 import java.nio.file.{Files, Paths}
 
 import org.scalatest.funsuite.AnyFunSuite
@@ -22,7 +22,7 @@ class DocumentSpec extends AnyFunSuite {
   test("parseIndirectObject header: fast path, offset fallback, NUL rejection") {
     import java.nio.charset.StandardCharsets.ISO_8859_1
     def parserOver(src: String) = new PdfFileParser(src.getBytes(ISO_8859_1))
-    // exact "N G obj" at the cursor (fast path)
+    // exact "N G obj" at the cursor
     val p1 = parserOver("7 0 obj\n(hi)\nendobj\n")
     p1.parseIndirectObject() match {
       case ind: PdfIndirect =>
@@ -30,7 +30,7 @@ class DocumentSpec extends AnyFunSuite {
         assert(new String(ind.obj.asInstanceOf[PdfStr].bytes, ISO_8859_1) == "hi")
       case other => fail(s"unexpected $other")
     }
-    // small leading junk: the regex fallback tolerates the offset
+    // small leading junk: the leftmost header in the 20-byte window wins
     val p2 = parserOver("xx12 0 obj\n<< /A 5 >>\nendobj\n")
     p2.parseIndirectObject() match {
       case ind: PdfIndirect =>
@@ -39,7 +39,7 @@ class DocumentSpec extends AnyFunSuite {
       case other => fail(s"unexpected $other")
     }
     // NUL-separated header: NUL is PDF whitespace but NOT in the header
-    // pattern's class — must reject exactly like the regex always did
+    // pattern's class, so the header is rejected
     val p3 = parserOver("12\u0000 0 obj\n(x)\nendobj\n")
     assertThrows[PdfError](p3.parseIndirectObject())
     // ...while ordinary multi-space separation stays accepted
@@ -413,25 +413,6 @@ class DocumentSpec extends AnyFunSuite {
     assert(ok.status == "ok", ok.error)
   }
 
-  test("outline titles flattened (GetOutlinesFlattened-style)") {
-    import java.nio.charset.StandardCharsets.ISO_8859_1
-    val bld = new PdfFixtures.Builder()
-    bld.obj(1, "<< /Type /Catalog /Pages 2 0 R /Outlines 5 0 R >>")
-    bld.obj(2, "<< /Type /Pages /Kids [3 0 R] /Count 1 >>")
-    bld.obj(3, s"<< /Type /Page /Parent 2 0 R /Resources ${PdfFixtures.defaultResources} /Contents 4 0 R >>")
-    val c = "BT (x) Tj ET".getBytes(ISO_8859_1)
-    bld.stream(4, s"<< /Length ${c.length} >>", c)
-    bld.obj(5, "<< /Type /Outlines /First 6 0 R >>")
-    bld.obj(6, "<< /Title (Chapter 1) /Next 8 0 R /First 7 0 R >>")
-    bld.obj(7, "<< /Title (Section 1.1) >>")
-    bld.obj(8, "<< /Title (Chapter 2) >>")
-    val doc = PdfDocument.open(bld.build())
-    // Reference flattenFunc order (reader.go:415-449): Next recursed BEFORE
-    // First, so sibling titles come before any children block.
-    assert(doc.outlinesFlattened ==
-      Seq("+", "  Chapter 1", "  Chapter 2", "  +", "    Section 1.1"))
-  }
-
   test("page attribute validation: bad boxes/Rotate/LastModified/Annots error the doc") {
     import java.nio.charset.StandardCharsets.ISO_8859_1
     def pageWith(extra: String): Array[Byte] = {
@@ -510,9 +491,10 @@ class DocumentSpec extends AnyFunSuite {
   }
 
   test("XrefLine strict classifier agrees with the regex matchers") {
-    // The r06 fast path must classify a line IDENTICALLY to the original
-    // regex pair (m1 first, then m2) or return null (fall back). Property-
-    // check over canonical, whitespace-variant, hostile and junk shapes.
+    import XrefOracle._
+    // corners: prefix junk (find() semantics), whitespace variants, the
+    // subsection/entry shapes glued or short, and numbers too large for
+    // the reference's .toInt/.toLong (which must keep throwing)
     val lines = Seq(
       "0000000015 00000 n", "0000000000 65535 f", "0 46", "12 3",
       "0000000015 00000 n ", "15 0 n", "15\t0\tn", "2 7\r", "9 1 f",
@@ -521,27 +503,191 @@ class DocumentSpec extends AnyFunSuite {
       "12  0   n  ", "007 008", "12 34n", "123 456 7", "1 2 3 n",
       "99999999999999999999 0 n", "12 99999999999999999999",
       "2147483647 1", "2147483648 1", "15 2147483648 n", "-1 2 n",
-      "3.5 2", "1234", "0000000015\n00000 n")
-    for (txt <- lines) {
-      val fast = XrefLine.classify(txt)
-      val m1 = PdfPatterns.xrefSubsection.matcher(txt)
-      val m2 = PdfPatterns.xrefEntry.matcher(txt)
-      if (fast != null && fast.kind == 1) {
-        assert(m1.find(), s"fast=sub but regex sub misses: '$txt'")
-        assert(m1.group(1).toLong == fast.first, s"sub first differs: '$txt'")
-      } else if (fast != null && fast.kind == 2) {
-        assert(!m1.find(), s"fast=entry but regex sub matches first: '$txt'")
-        assert(m2.find(), s"fast=entry but regex entry misses: '$txt'")
-        assert(m2.group(1).toLong == fast.first, s"entry first differs: '$txt'")
-        assert(m2.group(2).toLong == fast.gen, s"entry gen differs: '$txt'")
-        assert(m2.group(3) == fast.nf.toString, s"entry nf differs: '$txt'")
-      }
-      // fast == null is always allowed: the caller replays the regexes.
+      "3.5 2", "1234", "0000000015\n00000 n", "0 6 1", "x9 8 f \f",
+      "0000000015 00000 n\u0085", "12 0\u0085", "12 0 n\u0085 ")
+    for (txt <- lines) assert(classified(txt) == oracle(txt), s"line '${esc(txt)}'")
+    assert(oracle("abc 12 0 n") == "entry 12 0 n")
+    assert(oracle("2147483648 1") == "java.lang.NumberFormatException: For input string: \"2147483648\"")
+    assert(oracle("15 2147483648 n") == "java.lang.NumberFormatException: For input string: \"2147483648\"")
+    // Go's `$` is the end of the text; Java's also matches before a final
+    // U+0085 (byte 0x85 in a latin-1 line), so the Java pattern would take
+    // this line as an entry where the reference sees noise
+    val javaDollar = java.util.regex.Pattern.compile(
+      "(\\d+)[\\t\\n\\f\\r ]+(\\d+)[\\t\\n\\f\\r ]+([nf])[\\t\\n\\f\\r ]*$")
+    assert(javaDollar.matcher("0000000015 00000 n\u0085").find())
+    assert(XrefLine.classify("0000000015 00000 n\u0085") == null)
+    // seeded property loop over an alphabet biased toward the shape
+    val rnd = new scala.util.Random(20261018L)
+    val kinds = scala.collection.mutable.Map.empty[String, Int].withDefaultValue(0)
+    for (_ <- 0 until 120000) {
+      val txt =
+        if (rnd.nextBoolean()) shaped(rnd, Array("n", "f", "", "R", "x", "n\u0085", "f \u0085"))
+        else randomText(rnd, atoms, 1 + rnd.nextInt(9))
+      val want = oracle(txt)
+      assert(classified(txt) == want, s"line '${esc(txt)}'")
+      kinds(want.takeWhile(_ != ' ')) += 1
     }
-    // Oversize numbers MUST fall back (the .toInt/.toLong throw is part of
-    // the original semantics).
-    assert(XrefLine.classify("99999999999999999999 0 n") == null)
-    assert(XrefLine.classify("2147483648 1") == null)
-    assert(XrefLine.classify("15 2147483648 n") == null)
+    assert(kinds("sub") > 1000 && kinds("entry") > 1000 && kinds("noise") > 1000 &&
+      kinds("java.lang.NumberFormatException:") > 100, kinds.toString)
   }
+
+  test("object header finder equals the regex find() on every window") {
+    import XrefOracle._
+    val header = java.util.regex.Pattern.compile(s"(\\d+)$S+(\\d+)$S+obj")
+    def oracleFind(b: Array[Byte], from: Int, until: Int): String = {
+      val m = header.matcher(new String(b, from, until - from, ISO_8859_1))
+      if (m.find()) s"${from + m.start()}-${from + m.end()} ${m.group(1)} ${m.group(2)}" else "none"
+    }
+    def found(b: Array[Byte], from: Int, until: Int): String = ObjHeader.find(b, from, until) match {
+      case null => "none"
+      case h    => s"${h.start}-${h.end} ${h.num(b)} ${h.gen(b)}"
+    }
+    def check(src: String, from: Int): String = {
+      val b = src.getBytes(ISO_8859_1)
+      val until = math.min(from + 20, b.length)
+      val want = oracleFind(b, from, until)
+      assert(found(b, from, until) == want, s"window '${esc(src)}' from $from")
+      want
+    }
+    assert(check("xx12 0 obj\n", 0) == "2-10 12 0")
+    assert(check("1 2 3 obj", 0) == "2-9 2 3")
+    assert(check("12\u0000 0 obj", 0) == "none")
+    assert(check("123456789012 0 obj", 0) == "0-18 123456789012 0")
+    assert(check("1234567890123456 0 obj", 0) == "none") // "obj" ends past the window
+    assert(check("7 0 ob", 0) == "none")
+    val rnd = new scala.util.Random(20261019L)
+    var matched = 0
+    for (_ <- 0 until 120000) {
+      val src =
+        if (rnd.nextBoolean()) shaped(rnd, Array("obj", "obj", "ob", "Obj", "R"))
+        else randomText(rnd, atoms, rnd.nextInt(12))
+      val from = rnd.nextInt(math.min(src.length, 6) + 1)
+      if (check(src, from) != "none") matched += 1
+    }
+    assert(matched > 2000, s"$matched")
+  }
+
+  test("xref table golden: two subsections, free and junk-led entries, a noise line, glued trailer") {
+    import XrefOracle._
+    val p = new PdfFileParser(xrefGoldenPdf.getBytes(ISO_8859_1))
+    p.load()
+    val want = Map(1 -> 9L, 2 -> 58L, 3 -> 115L, 4 -> 217L, 5 -> 299L)
+    def table(p: PdfFileParser) = p.xrefs.map { case (n, e) =>
+      assert(e.xtype == XrefEntry.TableEntry && e.objectNumber == n && e.generation == 0)
+      n -> e.offset
+    }.toMap
+    assert(table(p) == want)
+    assert(p.trailer.get("Size") == PdfInt(7))
+    // every offset is right: the page tree loads without any repair
+    val doc = new PdfDocument(p)
+    assert(doc.pages.length == 1)
+    assert(table(p) == want)
+    val r = Extract(xrefGoldenPdf.getBytes(ISO_8859_1))
+    assert(r.status == "ok", r.error)
+    assert(r.text == "xref golden")
+    assert(r.spans == Seq(graft.Span(0, 0L, 11L)))
+    // a subsection number past Int.MaxValue throws the reference's .toInt
+    val big = Extract(xrefGoldenPdf.replace("4 3\n", "4294967296 3\n").getBytes(ISO_8859_1))
+    assert(big.status == "error")
+    assert(big.error == "For input string: \"4294967296\"")
+  }
+
+  test("xref entry line ending in byte 0x85 is noise, as with Go's end-of-text $") {
+    import XrefOracle._
+    val src = xrefGoldenPdf.replace("0000000299 00000 n \n", "0000000299 00000 n\u0085\n")
+    assert(src != xrefGoldenPdf)
+    val p = new PdfFileParser(src.getBytes(ISO_8859_1))
+    p.load()
+    // object 5's line is skipped, so the free line after it numbers object 5
+    assert(p.xrefs.keySet == Set(1, 2, 3, 4))
+  }
+}
+
+/** Oracles and inputs for the file-layer matcher specs: the reference's
+  * xref-line regexes (pdf/core/parser.go:23-33) written with Go semantics
+  * (`\z` for Go's end-of-text `$`), and a seeded text generator biased
+  * toward the characters these shapes are made of.
+  */
+private object XrefOracle {
+  import java.util.regex.Pattern
+  val S = "[\\t\\n\\f\\r ]"
+  private val subsection = Pattern.compile(s"(\\d+)$S+(\\d+)$S*\\z")
+  private val entry = Pattern.compile(s"(\\d+)$S+(\\d+)$S+([nf])$S*\\z")
+
+  private def outcome(f: => String): String =
+    try f catch { case e: Exception => s"${e.getClass.getName}: ${e.getMessage}" }
+
+  /** The reference's per-line decision: subsection first, then entry. */
+  def oracle(txt: String): String = outcome {
+    val m1 = subsection.matcher(txt)
+    if (m1.find()) s"sub ${m1.group(1).toInt}"
+    else {
+      val m2 = entry.matcher(txt)
+      if (m2.find()) {
+        val first = m2.group(1).toLong
+        s"entry $first ${m2.group(2).toInt} ${m2.group(3)}"
+      } else "noise"
+    }
+  }
+
+  def classified(txt: String): String = outcome {
+    XrefLine.classify(txt) match {
+      case null              => "noise"
+      case l if l.kind == 1  => s"sub ${l.first}"
+      case l                 => s"entry ${l.first} ${l.gen} ${if (l.isN) "n" else "f"}"
+    }
+  }
+
+  val atoms: Array[String] = Array(
+    "0", "1", "2", "7", "9", "0", "1", "5", "00000", "65535", "2147483648", "99999999999",
+    " ", " ", " ", "\t", "\n", "\f", "\r", "\u0000", "+", ",", "-", ".",
+    "n", "f", "n", "f", "R", "obj", "\u0085", "x")
+
+  def randomText(rnd: scala.util.Random, alphabet: Array[String], n: Int): String = {
+    val sb = new StringBuilder
+    for (_ <- 0 until n) sb.append(alphabet(rnd.nextInt(alphabet.length)))
+    sb.toString
+  }
+
+  private val digitRuns = Array("0", "1", "7", "12", "0000000015", "00000", "65535",
+    "2147483647", "2147483648", "99999999999999999999")
+  private val seps = Array(" ", "  ", "\t", "\f", "\r", "\n", "\u0000", " \u0000", "")
+
+  /** Mostly near misses of `D S D S tail`: digit runs, separators (NUL and
+    * none among them) and one of `tails`, between a few random atoms.
+    */
+  def shaped(rnd: scala.util.Random, tails: Array[String]): String = {
+    def pick(a: Array[String]) = a(rnd.nextInt(a.length))
+    randomText(rnd, atoms, rnd.nextInt(3)) + pick(digitRuns) + pick(seps) + pick(digitRuns) +
+      pick(seps) + pick(tails) + pick(seps) + randomText(rnd, atoms, rnd.nextInt(2))
+  }
+
+  def esc(s: String): String =
+    s.flatMap(c => if (c < ' ' || c > '~') f"\\x${c.toInt}%02x" else c.toString)
+
+  /** A hand-written classic-xref document. Every offset in its table is
+    * counted by hand (the object starts are noted on the right), so the
+    * table, not `PdfFixtures.Builder`, is what the golden pins.
+    */
+  val xrefGoldenPdf: String =
+    "%PDF-1.4\n" +
+      "1 0 obj\n<< /Type /Catalog /Pages 2 0 R >>\nendobj\n" + // 9
+      "2 0 obj\n<< /Type /Pages /Kids [3 0 R] /Count 1 >>\nendobj\n" + // 58
+      "3 0 obj\n<< /Type /Page /Parent 2 0 R /Resources << /Font << /F1 5 0 R >> >> " +
+      "/Contents 4 0 R >>\nendobj\n" + // 115
+      "4 0 obj\n<< /Length 32 >>\nstream\nBT /F1 12 Tf (xref golden) Tj ET\nendstream\nendobj\n" + // 217
+      "5 0 obj\n<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>\nendobj\n" + // 299
+      "xref\n" + // 369
+      "0 4\n" +
+      "0000000000 65535 f \n" +
+      "abc 9 0 n\n" + // leading junk: find() takes "9 0 n"
+      "a noise line the table skips\n" +
+      "0000000058 00000 n \n" +
+      "0000000115 00000 n \n" +
+      "4 3\n" +
+      "0000000217 00000 n \n" +
+      "0000000299 00000 n \n" +
+      "0000000017 00001 f \n" +
+      "trailer<< /Size 7 /Root 1 0 R >>\n" +
+      "startxref\n369\n%%EOF\n"
 }

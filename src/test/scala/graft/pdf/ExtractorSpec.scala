@@ -121,7 +121,7 @@ endbfrange
     val tuStream = new PdfStream(5, 0, PdfDict("Length" -> PdfInt(cmap.length)), cmap)
     val fontDict = PdfDict("Type" -> PdfName("Font"), "ToUnicode" -> tuStream)
     val fonts = PdfDict("F1" -> fontDict)
-    val res = new PdfResources(fonts, Nil, Map.empty, hasColorspaceDict = false)
+    val res = new PdfResources(fonts, Map.empty)
     val content = "BT /F1 12 Tf <000100020042> Tj ET"
     val r = TextExtractor.extractText(content.getBytes(ISO_8859_1), res)
     assert(r.error.isEmpty)

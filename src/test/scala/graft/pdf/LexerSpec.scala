@@ -212,36 +212,50 @@ class LexerSpec extends AnyFunSuite {
   }
 
   test("parseObject fast dispatch equals the reference-regex decision") {
-    // The r06 window-scan dispatch must classify references exactly like
-    // the anchored regex did on the 15-byte peek: same groups when it
-    // matches, never a reference when the regex would not match (incl. the
-    // NUL corner — NUL is PDF whitespace but NOT in the regex S class).
+    import LexerSpec.RegexDispatch
+    def outcome(src: String, parse: ObjLexer => PdfObj): String = {
+      val lex = lexer(src)
+      try s"${parse(lex)} @${lex.cur.pos}"
+      catch { case e: Exception => s"${e.getClass.getName}: ${e.getMessage} @${lex.cur.pos}" }
+    }
+    def check(src: String): String = {
+      val want = outcome(src, RegexDispatch.parseObject)
+      assert(outcome(src, _.parseObject()) == want, s"input '${XrefOracle.esc(src)}'")
+      want
+    }
+    // corners: references in and past the window, the NUL corner (NUL is
+    // PDF whitespace but NOT in the regex S class), ',' inside the
+    // [\+-.] range, a '.'-run with no digit, and the null/bool prefixes
     val snippets = Seq(
       "12 0 R", "1 0 R /Next", "12 0 R\n", "007 008 R", "12  0   R",
       "12\t0\tR", "12 0 Rx", "12 0R", "1 2 3 R", "12 x", "12.5]",
       "123456789012345 0 R", "12 345678901234 R", "12 0 q",
       "12\u0000" + "0 R", "12 \u0000" + "0 R", "-12 ", "+12 ", ".5 ", "-.002 ",
-      "3e2 ", "12", "0 R", "12 R")
-    for (s <- snippets) {
-      val window = s.take(15)
-      val mRef = PdfPatterns.reference.matcher(window)
-      val expectRef = mRef.find()
-      val lex = lexer(s)
-      val obj =
-        try Right(lex.parseObject())
-        catch { case e: PdfError => Left(e.getMessage) }
-      if (expectRef)
-        assert(obj == Right(PdfRef(mRef.group(1).toLong, mRef.group(2).toLong)),
-          s"expected ref for '${s.replace("\u0000", "\\0")}', got $obj")
-      else
-        assert(!obj.exists(_.isInstanceOf[PdfRef]),
-          s"unexpected ref for '${s.replace("\u0000", "\\0")}': $obj")
-    }
+      "3e2 ", "12", "0 R", "12 R", ",5", "+.", "..", "+-", "+,,,,,,,,,,,,,,,5", "-e5",
+      "null", "nul", "nullx", "true", "tru", "falsey", "fals", "x", "e5")
+    for (s <- snippets) check(s)
     // exact values on the corners
-    assert(lexer("12\u0000" + "0 R").parseObject() == PdfInt(12)) // NUL kills the ref
-    assert(lexer("12.5]").parseObject() == PdfReal(12.5))
-    assert(lexer("-12 ").parseObject() == PdfInt(-12))
-    assert(lexer("null and more").parseObject() == PdfNull)
+    assert(check("12\u0000" + "0 R") == "PdfInt(12) @2") // NUL kills the ref
+    assert(check("12 0 R /Next") == "PdfRef(12,0) @6")
+    assert(check("12.5]") == "PdfReal(12.5) @4")
+    assert(check("-12 ") == "PdfInt(-12) @3")
+    assert(check("null and more") == "PdfNull @4")
+    assert(check("+.") == "PdfReal(0.0) @2")
+    assert(check(",5") == "graft.pdf.PdfError: invalid integer '' @0")
+    assert(check("123456789012345 0 R") == "PdfInt(123456789012345) @15")
+    assert(check("xy") == "graft.pdf.PdfError: Object parsing error - unexpected pattern @0")
+    // seeded property loop: both dispatches on the same inputs
+    val rnd = new scala.util.Random(20261017L)
+    val alphabet = XrefOracle.atoms ++ Array("null", "true", "false", "e", "0", "3", " ", ".")
+    val kinds = scala.collection.mutable.Map.empty[String, Int].withDefaultValue(0)
+    for (_ <- 0 until 120000) {
+      val src =
+        if (rnd.nextBoolean()) XrefOracle.shaped(rnd, Array("R", "R", "n", "obj", "e", ""))
+        else XrefOracle.randomText(rnd, alphabet, 1 + rnd.nextInt(8))
+      kinds(check(src).takeWhile(c => c != '(' && c != ' ')) += 1
+    }
+    for (k <- Seq("PdfRef", "PdfInt", "PdfReal", "PdfNull", "PdfBool", "graft.pdf.PdfError:"))
+      assert(kinds(k) > 500, kinds.toString)
   }
 
   test("EOF contract: the file-layer, content and CMap grammars on the same truncated tokens") {
@@ -267,6 +281,56 @@ class LexerSpec extends AnyFunSuite {
       val cmap = CMapParser.load(("1 beginbfchar <01> <0041> <02> " + tok).getBytes(ISO_8859_1))
       val got = cmap.codeMap.map(_.map { case (k, v) => k -> new String(v, ISO_8859_1) }.toMap)
       assert(got.toSeq == Seq(Map(1L -> "A"), Map.empty, Map.empty, Map.empty), s"for $tok")
+    }
+  }
+}
+
+object LexerSpec {
+  /** The reference's dispatch (pdf/core/parser.go:491-574) as it is written
+    * there, regexes and all: the oracle for `ObjLexer.parseObject`. The
+    * productions it dispatches to are the lexer's own.
+    */
+  object RegexDispatch {
+    import java.util.regex.Pattern
+    private val S = "[\\t\\n\\f\\r ]"
+    private val reference = Pattern.compile(s"^$S*(\\d+)$S+(\\d+)$S+R")
+    private val numeric = Pattern.compile("^[\\+-.]*([0-9.]+)")
+    private val exponential = Pattern.compile("^[\\+-.]*([0-9.]+)e[\\+-.]*([0-9.]+)")
+
+    def parseObject(lex: ObjLexer): PdfObj = {
+      val cur = lex.cur
+      lex.skipSpaces()
+      while (true) {
+        if (cur.remaining < 2) throw new PdfError("EOF parsing object")
+        val b0 = cur.peekByte; val b1 = cur.peekAt(1)
+        if (b0 == '/') return lex.parseName()
+        else if (b0 == '(') return lex.parseString()
+        else if (b0 == '[') return lex.parseArray()
+        else if (b0 == '<' && b1 == '<') return lex.parseDict()
+        else if (b0 == '<') return lex.parseHexString()
+        else if (b0 == '%') { lex.readComment(); lex.skipSpaces() }
+        else {
+          val peekStr = new String(cur.peek(15), ISO_8859_1)
+          if (peekStr.length > 3 && peekStr.startsWith("null")) return lex.parseNull()
+          if (peekStr.length > 4 && peekStr.startsWith("false")) return lex.parseBool()
+          if (peekStr.length > 3 && peekStr.startsWith("true")) return lex.parseBool()
+          if (reference.matcher(peekStr).find()) {
+            // consume through 'R' (the reference's ReadBytes('R')), re-match
+            val consumed = new StringBuilder
+            var c = cur.readByte()
+            while (c != -1 && c != 'R') { consumed.append(c.toChar); c = cur.readByte() }
+            if (c == -1) throw new PdfError("EOF reading reference")
+            consumed.append('R')
+            val m = reference.matcher(consumed.toString)
+            if (!m.find()) throw new PdfError("Unable to parse reference")
+            return PdfRef(m.group(1).toLong, m.group(2).toLong)
+          }
+          if (numeric.matcher(peekStr).find()) return lex.parseNumber()
+          if (exponential.matcher(peekStr).find()) return lex.parseNumber()
+          throw new PdfError("Object parsing error - unexpected pattern")
+        }
+      }
+      throw new IllegalStateException("unreachable")
     }
   }
 }

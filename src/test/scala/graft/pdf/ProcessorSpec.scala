@@ -52,8 +52,7 @@ class ProcessorSpec extends AnyFunSuite {
     // /CS0 from resources: ICCBased N=3 -> sc expects 3 components.
     val icc = new PdfStream(9, 0, PdfDict("N" -> PdfInt(3)), Array.emptyByteArray)
     val csArr = PdfArr(PdfName("ICCBased"), icc)
-    val res = new PdfResources(null, Seq("CS0"),
-      Map("CS0" -> PdfColorspace.fromObject(csArr, identity)), hasColorspaceDict = true)
+    val res = new PdfResources(null, Map("CS0" -> PdfColorspace.fromObject(csArr, identity)))
     assert(extract("/CS0 cs 0.1 0.2 0.3 scn BT (ok) Tj ET", res).error.isEmpty)
     val bad = extract("/CS0 cs 0.1 scn BT (x) Tj ET", res)
     assert(bad.error.contains("Invalid number of parameters"))
