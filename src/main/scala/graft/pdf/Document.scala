@@ -27,6 +27,42 @@ object XrefEntry {
     XrefEntry(ObjectStream, num, 0, 0, osNum, osIdx)
 }
 
+/** The parser's xref map, plus the sorted offsets that stream-length
+  * validation searches. Every write reaches `addOne`, `subtractOne` or
+  * `clear` (the inherited `update`, `++=` and friends call them), and each
+  * drops the sorted copy, so it is rebuilt after xref-stream loads and
+  * repairs, on the next query.
+  */
+final class XrefTable extends mutable.AbstractMap[Int, XrefEntry] {
+  private val entries = mutable.HashMap.empty[Int, XrefEntry]
+  private var sortedOffsets: Array[Long] = null
+
+  def get(num: Int): Option[XrefEntry] = entries.get(num)
+  def iterator: Iterator[(Int, XrefEntry)] = entries.iterator
+  override def size: Int = entries.size
+  def addOne(kv: (Int, XrefEntry)): this.type = { entries.addOne(kv); sortedOffsets = null; this }
+  def subtractOne(num: Int): this.type = { entries.subtractOne(num); sortedOffsets = null; this }
+  override def clear(): Unit = { entries.clear(); sortedOffsets = null }
+
+  /** The least entry offset above `offset`, or 0 when there is none
+    * (pdf/core/parser.go:1277-1285, a scan of every xref per stream): one
+    * binary search, so validating all n streams costs O(n log n), not O(n²).
+    */
+  def nextOffsetAfter(offset: Long): Long = {
+    if (sortedOffsets == null) {
+      sortedOffsets = entries.valuesIterator.map(_.offset).toArray
+      java.util.Arrays.sort(sortedOffsets)
+    }
+    var lo = 0
+    var hi = sortedOffsets.length
+    while (lo < hi) {
+      val mid = (lo + hi) >>> 1
+      if (sortedOffsets(mid) > offset) hi = mid else lo = mid + 1
+    }
+    if (lo < sortedOffsets.length) sortedOffsets(lo) else 0L
+  }
+}
+
 private final case class ObjStm(n: Int, ds: Array[Byte], offsets: Map[Int, Long])
 
 /** One xref-table line (pdf/core/parser.go:684-789): a subsection header
@@ -109,7 +145,7 @@ final class PdfFileParser(val data: Array[Byte]) {
   val cur = new ByteCursor(data)
   val lex = new ObjLexer(cur)
 
-  val xrefs = mutable.HashMap.empty[Int, XrefEntry]
+  val xrefs = new XrefTable
   private val objstms = mutable.HashMap.empty[Int, ObjStm]
   val objCache = mutable.HashMap.empty[Int, PdfObj]
   var trailer: PdfDict = _
@@ -652,17 +688,6 @@ final class PdfFileParser(val data: Array[Byte]) {
 
   // --------------------------------------------------- indirect object parse
 
-  /** Next-highest xref offset, for stream-length validation
-    * (pdf/core/parser.go:1277-1285).
-    */
-  private def xrefNextObjectOffset(offset: Long): Long = {
-    var nextOffset = 0L
-    for (x <- xrefs.values) {
-      if (x.offset > offset && (x.offset < nextOffset || nextOffset == 0)) nextOffset = x.offset
-    }
-    nextOffset
-  }
-
   /** Stream /Length tracing with the recursion guard
     * (pdf/core/parser.go:1289-1313).
     */
@@ -737,7 +762,7 @@ final class PdfFileParser(val data: Array[Byte]) {
         if (streamLength < 0) throw new PdfError("Stream needs to be longer than 0")
         // Validate/correct against the next xref offset (parser.go:1441-1455).
         val streamStartOffset = cur.offset
-        val nextObjectOffset = xrefNextObjectOffset(streamStartOffset)
+        val nextObjectOffset = xrefs.nextOffsetAfter(streamStartOffset)
         if (streamStartOffset + streamLength > nextObjectOffset && nextObjectOffset > streamStartOffset) {
           val newLength = nextObjectOffset - streamStartOffset - 17
           if (newLength < 0) throw new PdfError("Invalid stream length, going past boundaries")

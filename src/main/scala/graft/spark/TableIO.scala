@@ -175,13 +175,46 @@ object TableIO {
     Some(lineage(warehouse)).filter(_.nonEmpty).map(_.toDF())
   }
 
+  /** Parquet writer options of every committed data file. The table is
+    * written once and read by every consumer, so it is stored as compactly
+    * as the columns allow:
+    *  - zstd (Iceberg's default codec) instead of Spark's snappy;
+    *  - no dictionary on `url`, `text` and `text_bytes`: their values never
+    *    repeat, so the writer hashed every value only to throw the
+    *    dictionary away again; `status`, `error` and `partition_id` keep it;
+    *  - no min/max statistics on `text` and `text_bytes`: untruncated, they
+    *    copy whole documents into every footer, and a min/max range of
+    *    document texts prunes almost nothing;
+    *  - no `_SUCCESS` marker: the snapshot manifest is the commit record.
+    * The read side needs no option: the footers say all of this.
+    */
+  private val DataFileOptions: Map[String, String] = Map(
+    "compression" -> "zstd",
+    "parquet.enable.dictionary#url" -> "false",
+    "parquet.enable.dictionary#text" -> "false",
+    "parquet.enable.dictionary#text_bytes" -> "false",
+    "parquet.column.statistics.enabled#text" -> "false",
+    "parquet.column.statistics.enabled#text_bytes" -> "false",
+    "mapreduce.fileoutputcommitter.marksuccessfuljobs" -> "false")
+
+  /** The deduped input rows of the `todo` buckets, tagged with their
+    * `__bucket`. The bucket is a function of url alone, so filtering the
+    * committed buckets out BEFORE the dedup window changes no surviving row,
+    * and a resume shuffles and persists only what it still has to do.
+    */
+  private[spark] def pendingInput(pages: DataFrame, numBuckets: Int, todo: Seq[Int]): DataFrame = {
+    val bucket = pmod(xxhash64(col("url")), lit(numBuckets)).cast("int")
+    val pending = if (todo.length == numBuckets) pages else pages.filter(bucket.isInCollection(todo))
+    Pipeline.dedupLatest(pending).withColumn("__bucket", bucket)
+  }
+
   /** Resumable extraction job over a pages table.
     *
     * Input rows are assigned to `numBuckets` buckets by url hash; buckets are
     * processed in `batchBuckets`-sized batches, each committed as one
     * snapshot with its data dir and lineage rows. On restart, committed
-    * buckets are skipped (partition-pruned at the scan by the bucket
-    * predicate). `failAfterBatches` injects a crash for the kill/resume
+    * buckets are skipped (filtered out by the bucket predicate before the
+    * dedup shuffle). `failAfterBatches` injects a crash for the kill/resume
     * integration test.
     */
   def runResumable(
@@ -212,9 +245,7 @@ object TableIO {
     // and let each batch filter the cached partitions instead; released in
     // the finally. (The real-Iceberg deployment writes the input physically
     // bucketed so the scan itself prunes; this is the portable equivalent.)
-    val withBucket0 = Pipeline
-      .dedupLatest(pages)
-      .withColumn("__bucket", pmod(xxhash64(col("url")), lit(numBuckets)).cast("int"))
+    val withBucket0 = pendingInput(pages, numBuckets, todo)
     val withBucket =
       if (multiBatch)
         withBucket0.persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
@@ -230,7 +261,7 @@ object TableIO {
         val extracted = Pipeline.extract(spark, subset, runId,
           maxBytesPerDoc = maxBytesPerDoc, lineageAcc = lineageAcc, timeoutMs = timeoutMs)
         val dataDir = s"$warehouse/data/batch-${snap.version + 1}-${java.util.UUID.randomUUID().toString.take(8)}"
-        extracted.write.mode(SaveMode.ErrorIfExists).parquet(dataDir)
+        extracted.write.mode(SaveMode.ErrorIfExists).options(DataFileOptions).parquet(dataDir)
         // Task retries / speculation can flush duplicate lineage rows (Spark
         // only guarantees exactly-once accumulator updates inside actions):
         // keep the LAST attempt per partition.

@@ -601,6 +601,62 @@ class DocumentSpec extends AnyFunSuite {
     // object 5's line is skipped, so the free line after it numbers object 5
     assert(p.xrefs.keySet == Set(1, 2, 3, 4))
   }
+
+  /** The reference's next-object offset (pdf/core/parser.go:1277-1285):
+    * a scan of every xref entry.
+    */
+  private def linearNextOffset(p: PdfFileParser, offset: Long): Long = {
+    var next = 0L
+    for (x <- p.xrefs.values)
+      if (x.offset > offset && (x.offset < next || next == 0)) next = x.offset
+    next
+  }
+
+  private def assertNextOffsetsLinear(p: PdfFileParser, what: String): Unit =
+    for (off <- 0L to p.fileSize + 1)
+      assert(p.xrefs.nextOffsetAfter(off) == linearNextOffset(p, off), s"$what at offset $off")
+
+  test("next xref offset: the binary search equals the linear scan, before and after repairs") {
+    for (v <- 0 until graft.spark.PagesGen.PdfVariants) {
+      val bytes = graft.spark.PagesGen.payloadFor(v, s"rotation $v", v)
+      val doc = PdfDocument.open(bytes)
+      assertNextOffsetsLinear(doc.parser, s"variant $v after load")
+      doc.pages.foreach(doc.allContentStreams)
+      assertNextOffsetsLinear(doc.parser, s"variant $v after reading its content")
+    }
+    // Object 4's xref offset points 2 bytes into its header, so reading it
+    // fails and the top-down repair rebuilds the map with the true offset.
+    // The sorted offsets are built before the repair; a stale copy would
+    // disagree with the scan after it.
+    val src = new String(PdfFixtures.s01("repaired"), ISO_8859_1)
+    val at = src.indexOf("\n4 0 obj") + 1
+    val broken = src.replace(f"$at%010d 00000 n", f"${at + 2}%010d 00000 n")
+    assert(broken != src)
+    val p = new PdfFileParser(broken.getBytes(ISO_8859_1))
+    p.load()
+    assert(p.xrefs(4).offset == at + 2)
+    assertNextOffsetsLinear(p, "before the repair")
+    val doc = new PdfDocument(p)
+    assert(new String(doc.allContentStreams(doc.pages.head), ISO_8859_1).contains("(repaired)"))
+    assert(p.xrefs(4).offset == at)
+    assertNextOffsetsLinear(p, "after the repair")
+  }
+
+  test("a document of 60k content streams extracts within the per-document deadline") {
+    // A scan of every xref per stream grows with the square of the stream
+    // count: 9.5 s at 20k streams on 4 vCPUs, past the 30 s deadline at 60k.
+    val n = 60000
+    val bld = new PdfFixtures.Builder()
+    bld.obj(1, "<< /Type /Catalog /Pages 2 0 R >>")
+    bld.obj(2, "<< /Type /Pages /Kids [3 0 R] /Count 1 /MediaBox [0 0 612 792] >>")
+    bld.obj(3, s"<< /Type /Page /Parent 2 0 R /Resources ${PdfFixtures.defaultResources} " +
+      s"/Contents [${(4 until 4 + n).map(i => s"$i 0 R").mkString(" ")}] >>")
+    bld.streamAuto(4, "<<", "BT /F1 12 Tf (many streams) Tj ET".getBytes(ISO_8859_1))
+    for (i <- 5 until 4 + n) bld.streamAuto(i, "<<", "q Q".getBytes(ISO_8859_1))
+    val r = Extract(bld.build())
+    assert(r.status == "ok", r.error)
+    assert(r.text == "many streams")
+  }
 }
 
 /** Oracles and inputs for the file-layer matcher specs: the reference's

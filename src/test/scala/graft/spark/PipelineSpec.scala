@@ -203,6 +203,108 @@ class PipelineSpec extends AnyFunSuite {
     assert(e.getMessage.contains("numBuckets"))
   }
 
+  /** 48 rotation documents (two of each PDF family) plus the smoke table's
+    * statuses and duplicate url, staged as parquet: a local relation would
+    * let the optimizer fold filters into the data, out of the plan.
+    */
+  private def stagedRotationPages(dir: String): org.apache.spark.sql.DataFrame = {
+    import spark.implicits._
+    val docs = (0 until 48).map { i =>
+      val v = i % PagesGen.PdfVariants
+      PageRow(f"https://rot/doc-$i%03d", new java.sql.Timestamp(PagesGen.BaseTs + i),
+        PagesGen.payloadFor(i.toLong, s"rotation doc $i family $v", v), "", "en")
+    }
+    docs.toDF().union(PagesGen.smokeTable(spark)).write.parquet(s"$dir/pages")
+    spark.read.parquet(s"$dir/pages")
+  }
+
+  test("committed data files are zstd with plain, statistics-free text columns") {
+    import org.apache.parquet.column.Encoding
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.metadata.CompressionCodecName
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import scala.jdk.CollectionConverters._
+    import spark.implicits._
+    val dir = Files.createTempDirectory("wh-files").toString
+    val pages = stagedRotationPages(dir)
+    val wh = s"$dir/wh"
+    val snap = TableIO.runResumable(spark, pages, wh, "files", numBuckets = 4, batchBuckets = 2)
+    assert(snap.dataDirs.length == 2)
+    val conf = spark.sessionState.newHadoopConf()
+    val plain = Set("url", "text", "text_bytes")
+    val dictionary = Set("status", "error", "partition_id")
+    val noStats = Set("text", "text_bytes")
+    var files = 0
+    for (d <- snap.dataDirs) {
+      val names = new java.io.File(d).list().toSet
+      assert(!names.contains("_SUCCESS") && !names.contains("._SUCCESS.crc"), names)
+      for (f <- names.filter(_.endsWith(".parquet"))) {
+        files += 1
+        val path = new org.apache.hadoop.fs.Path(s"$d/$f")
+        val reader = ParquetFileReader.open(HadoopInputFile.fromPath(path, conf))
+        try for (block <- reader.getFooter.getBlocks.asScala; c <- block.getColumns.asScala) {
+          val column = c.getPath.toArray.head
+          val where = s"$f ${c.getPath.toDotString}"
+          assert(c.getCodec == CompressionCodecName.ZSTD, where)
+          val dict = c.hasDictionaryPage ||
+            c.getEncodings.asScala.exists(e => e == Encoding.RLE_DICTIONARY || e == Encoding.PLAIN_DICTIONARY)
+          if (plain(column)) assert(!dict, s"$where: ${c.getEncodings}")
+          if (dictionary(column)) assert(dict, s"$where: ${c.getEncodings}")
+          if (noStats(column)) assert(!c.getStatistics.hasNonNullValue, s"$where: ${c.getStatistics}")
+        } finally reader.close()
+      }
+    }
+    assert(files > 0)
+    // The committed rows are the in-memory pipeline's rows, byte for byte.
+    // partition_id is left out: it names the task, not the document.
+    def key(r: ExtractedRow) =
+      (r.url, r.warc_ts, r.text, r.text_bytes.toSeq, r.spans, r.status, r.error)
+    val committed = TableIO.readData(spark, wh).get.as[ExtractedRow].collect().map(key).sortBy(_._1)
+    val inMemory = Pipeline.run(spark, pages, "files").collect().map(key).sortBy(_._1)
+    assert(committed.length == 55)
+    assert(committed.toSeq == inMemory.toSeq)
+    assert(committed.map(_._6).toSet == Set("ok", "error", "empty"))
+    TableIO.deleteRecursively(new java.io.File(dir))
+  }
+
+  test("resume dedups only the pending buckets: their filter sits below the window's exchange") {
+    import org.apache.spark.sql.execution.FilterExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    val dir = Files.createTempDirectory("wh-pending").toString
+    val pages = stagedRotationPages(dir)
+    val wh = s"$dir/wh"
+    intercept[RuntimeException] {
+      TableIO.runResumable(spark, pages, wh, "pending", numBuckets = 8, batchBuckets = 2,
+        failAfterBatches = 2)
+    }
+    val done = TableIO.currentSnapshot(wh).get.committedBuckets.toSet
+    assert(done.size == 4)
+    def bucketFiltersBelowExchange(df: org.apache.spark.sql.DataFrame): Seq[FilterExec] = {
+      val plan = df.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan
+        case p                        => p
+      }
+      for {
+        w <- plan.collect { case w: WindowExec => w }
+        e <- w.collect { case e: ShuffleExchangeExec => e }
+        f <- e.child.collect { case f: FilterExec if f.condition.sql.contains("xxhash64") => f }
+      } yield f
+    }
+    val resumed = TableIO.pendingInput(pages, 8, (0 until 8).filterNot(done))
+    assert(bucketFiltersBelowExchange(resumed).length == 1, resumed.queryExecution.executedPlan)
+    val fresh = TableIO.pendingInput(pages, 8, 0 until 8)
+    assert(bucketFiltersBelowExchange(fresh).isEmpty, fresh.queryExecution.executedPlan)
+    // The early filter changes no surviving row.
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("url", "warc_ts", "__bucket").collect().map(_.toString).sorted.toSeq
+    val pending = rows(resumed)
+    assert(pending.nonEmpty)
+    assert(pending == rows(fresh.filter(!col("__bucket").isin(done.toSeq: _*))))
+    TableIO.deleteRecursively(new java.io.File(dir))
+  }
+
   test("parquetRowCount reads footer metadata only, matches count()") {
     val p = "/root/testdata/sf0.001/documents.parquet"
     assert(TableIO.parquetRowCount(spark, p) == spark.read.parquet(p).count())
