@@ -2,6 +2,8 @@ package graft
 
 import java.nio.charset.StandardCharsets.UTF_8
 
+import scala.collection.mutable
+
 import graft.pdf._
 import graft.pdf.{Deadline, PdfTimeout}
 import graft.html.HtmlExtract
@@ -88,42 +90,22 @@ object Extract {
       payload(0) == '%' && payload(1) == 'P' && payload(2) == 'D' &&
       payload(3) == 'F' && payload(4) == '-'
 
-  /** PDF branch: open -> page list -> per-page golden extraction. Pages are
-    * joined with "\n"; spans record each page's [start,end) in textBytes.
-    * Any page-level error aborts with the partial text accumulated so far
-    * (matching the reference's ExtractText error contract).
+  /** PDF branch: open -> page list -> per-page golden extraction, one line
+    * per page. Any page-level error aborts with the partial text up to and
+    * including that page (matching the reference's ExtractText error
+    * contract).
     */
-  def extractPdf(payload: Array[Byte]): ExtractResult = {
-    val doc =
-      try PdfDocument.open(payload)
-      catch {
-        case t: PdfTimeout => throw t // handled at the top level -> status=timeout
-        case e: Exception  => return ExtractResult(Array.emptyByteArray, Nil, "error", safeMsg(e))
-      }
-    val pages = doc.pages
-    if (pages.length == 1) {
-      // Single-page fast path (the common crawl case): the page's bytes ARE
-      // the document bytes — skip the two full-buffer copies (BAOS write +
-      // toByteArray) the page loop pays. Output identical: span [0, len) on
-      // page 0, error contract unchanged (partial text + error row).
-      val pe = extractPage(doc, pages.head)
-      return pdfResult(pe.bytes, Seq(Span(0, 0L, pe.bytes.length.toLong)), pe.error)
-    }
-    val buf = new java.io.ByteArrayOutputStream()
-    val spans = scala.collection.mutable.ArrayBuffer.empty[Span]
+  private def extractPdf(payload: Array[Byte]): ExtractResult = {
+    val doc = PdfDocument.open(payload)
+    val pages = mutable.ArrayBuffer.empty[Array[Byte]]
     var error: Option[String] = None
-    var pageIdx = 0
-    val it = pages.iterator
+    val it = doc.pages.iterator
     while (error.isEmpty && it.hasNext) {
-      if (pageIdx > 0) buf.write('\n')
-      val start = buf.size().toLong
       val pe = extractPage(doc, it.next())
-      buf.write(pe.bytes)
-      spans += Span(pageIdx, start, buf.size().toLong)
+      pages += pe.bytes
       error = pe.error
-      pageIdx += 1
     }
-    pdfResult(buf.toByteArray, spans.toSeq, error)
+    joinLines(pages, error)
   }
 
   /** One page's golden extraction under the per-page error contract: any
@@ -137,66 +119,36 @@ object Extract {
       case e: Exception  => PageExtract(Array.emptyByteArray, Some(safeMsg(e)))
     }
 
-  private def pdfResult(bytes: Array[Byte], spans: Seq[Span], error: Option[String]): ExtractResult =
-    error match {
-      case Some(msg) => ExtractResult(bytes, spans, "error", msg)
-      case None      => ExtractResult(bytes, spans, "ok", "")
-    }
-
-  /** HTML branch: boilerplate strip; one span per kept block. */
-  def extractHtml(payload: Array[Byte]): ExtractResult = {
+  /** HTML branch: boilerplate strip; the title (if any), then one line per
+    * kept block. Neither holds a '\n' (block text turns it into a space, the
+    * title collapse splits on it), so each part is exactly one line. Per-part
+    * UTF-8 equals whole-text UTF-8: the '\n' join char cannot complete a
+    * surrogate pair, and a lone surrogate encodes to '?' either way.
+    */
+  private def extractHtml(payload: Array[Byte]): ExtractResult = {
     val res = HtmlExtract.extract(payload)
-    // Output bytes assembled directly from the parts (title, then blocks,
-    // joined by '\n') — the res.text mkString built a full intermediate
-    // String only to be encoded once and discarded. Per-part UTF-8 equals
-    // whole-string UTF-8 here: the '\n' join char cannot complete a
-    // surrogate pair, and a lone surrogate encodes to '?' either way.
-    val bytes: Array[Byte] = {
-      val title = res.title
-      val blocks = res.blocks
-      val nParts = (if (title.nonEmpty) 1 else 0) + blocks.length
-      if (nParts == 0) Array.emptyByteArray
-      else {
-        val enc = new Array[Array[Byte]](nParts)
-        var j = 0
-        if (title.nonEmpty) { enc(0) = title.getBytes(UTF_8); j = 1 }
-        for (b <- blocks) { enc(j) = b.getBytes(UTF_8); j += 1 }
-        var total = nParts - 1 // the joining '\n' bytes
-        var i = 0
-        while (i < nParts) { total += enc(i).length; i += 1 }
-        val out = new Array[Byte](total)
-        var off = 0
-        i = 0
-        while (i < nParts) {
-          if (i > 0) { out(off) = '\n'; off += 1 }
-          System.arraycopy(enc(i), 0, out, off, enc(i).length)
-          off += enc(i).length
-          i += 1
-        }
-        out
-      }
+    val lines = if (res.title.nonEmpty) res.title +: res.blocks else res.blocks
+    joinLines(lines.iterator.map(_.getBytes(UTF_8)).toIndexedSeq, None)
+  }
+
+  /** The one line join of both branches: `parts` joined with '\n', one
+    * Span(i, start, end) per part, status error if `error` is set. A single
+    * part is the output itself, uncopied.
+    */
+  private def joinLines(parts: collection.IndexedSeq[Array[Byte]], error: Option[String]): ExtractResult = {
+    val bytes =
+      if (parts.length == 1) parts(0)
+      else new Array[Byte](math.max(0, parts.length - 1) + parts.iterator.map(_.length).sum)
+    val spans = List.newBuilder[Span]
+    var off = 0
+    for (i <- parts.indices) {
+      if (i > 0) { bytes(off) = '\n'; off += 1 }
+      val p = parts(i)
+      if (p ne bytes) System.arraycopy(p, 0, bytes, off, p.length)
+      spans += Span(i, off.toLong, (off + p.length).toLong)
+      off += p.length
     }
-    // Span per output line (title counts as line 0 when present). Line
-    // boundaries are found on the ENCODED bytes: UTF-8 never embeds 0x0A
-    // inside a multi-byte sequence, so segments between '\n' bytes are
-    // exactly the per-line byte lengths the old split + re-encode computed
-    // (split("\n", -1) semantics: n newlines -> n+1 segments, trailing
-    // empties kept).
-    val spans = scala.collection.mutable.ArrayBuffer.empty[Span]
-    if (bytes.length > 0) {
-      var idx = 0
-      var start = 0
-      var i = 0
-      while (i <= bytes.length) {
-        if (i == bytes.length || bytes(i) == '\n') {
-          spans += Span(idx, start.toLong, i.toLong)
-          idx += 1
-          start = i + 1
-        }
-        i += 1
-      }
-    }
-    ExtractResult(bytes, spans.toSeq, "ok", "")
+    ExtractResult(bytes, spans.result(), if (error.isEmpty) "ok" else "error", error.getOrElse(""))
   }
 
   private def safeMsg(e: Throwable): String = {

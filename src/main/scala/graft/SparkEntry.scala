@@ -533,14 +533,9 @@ object SparkEntry {
       // in DuckDB -> hash-stable oracle).
       val emb = s.read.parquet(s"$dir/embeddings.parquet")
       val minId = emb.agg(min("vec_id")).head().getLong(0)
-      val q = broadcast(emb.filter(col("vec_id") === minId)
-        .select(col("embedding").as("qe")))
-      emb.filter(col("vec_id") =!= minId)
-        .crossJoin(q)
-        .withColumn("dot", expr(Similarity.QuantDotExpr))
-        .select(col("vec_id").as("neighbor_id"), col("dot"))
+      Similarity.bruteForceTopKQuant(s, emb, Seq(minId), k = 10)
+        .select(col("neighbor_id"), col("dot"))
         .orderBy(col("dot").desc, col("neighbor_id"))
-        .limit(10)
     }, oracleSql =
       ("WITH mn AS (SELECT min(vec_id) AS mid FROM embeddings), " +
         "q AS (SELECT embedding AS qe FROM embeddings, mn WHERE vec_id = mid) " +

@@ -243,12 +243,15 @@ object HtmlExtract {
   def extract(html: String): HtmlResult = {
     val n = html.length
     var i = 0
-    // Reusable span buffer for the bulk text-run path: a run's output never
-    // exceeds its input length + 1 (one separator space may lead the run;
-    // every other separator replaces >= 1 whitespace char).
+    // Reusable span buffer for the text-run routine: a run's output never
+    // exceeds its (decoded) length + 1 (one separator space may lead the
+    // run; every other separator replaces >= 1 whitespace char).
     var runBuf: Array[Char] = null
 
-    var title = ""
+    // Title text: each run appended after one ' ', collapsed once at the end
+    // (collapsing is a split-and-join on ' ', so collapsing once gives the
+    // same tokens as collapsing after every run).
+    val title = new java.lang.StringBuilder
     var inTitle = false
     var boilerDepth = 0
     var contentDepth = 0
@@ -278,54 +281,29 @@ object HtmlExtract {
       pendingWs = false
     }
 
-    def appendText(raw: String): Unit = {
-      val decoded = decodeEntities(raw)
-      if (inTitle) {
-        title = collapseWs(title + " " + decoded)
-        return
-      }
-      var started = current.sb.nonEmpty
-      var k = 0
-      while (k < decoded.length) {
-        val c = decoded.charAt(k)
-        if (c == ' ' || c == '\t' || c == '\r' || c == '\n' || c == '\f' || c == 0x0b) {
-          pendingWs = true
-        } else {
-          if (pendingWs && started) {
-            current.sb.append(' ')
-            if (linkDepth > 0) current.linkChars += 1
-          }
-          current.sb.append(c)
-          if (linkDepth > 0) current.linkChars += 1
-          started = true
-          pendingWs = false
-        }
-        k += 1
-      }
-      current.inContent = current.inContent || contentDepth > 0
-      current.boilerplate = current.boilerplate || boilerDepth > 0
-    }
-
-    /** Text-run fast path over [from, until) of the source: no substring
-      * allocation; non-whitespace spans are copied into a reusable char
-      * buffer (String.getChars, an intrinsic arraycopy) and the whole run
-      * is appended to the block builder ONCE — a builder call per run, not
-      * per word. Entity-bearing runs and title text fall back to
-      * appendText; state updates (pendingWs, started, linkChars) are
-      * identical per character to appendText's.
+    /** The one text-run routine, over [from, until) of the source. A run
+      * with an '&' inside it is entity-decoded first; title text goes to the
+      * title. Block text is collapsed per character: whitespace sets
+      * pendingWs, and each non-whitespace span (after one separator space,
+      * if pending) is copied into a reusable char buffer that is appended
+      * to the block builder once per run.
       */
     def appendRun(src: String, from: Int, until: Int): Unit = {
-      if (inTitle) { appendText(src.substring(from, until)); return }
-      val amp = src.indexOf('&', from)
-      if (amp >= 0 && amp < until) { appendText(src.substring(from, until)); return }
+      var s = src
+      var lo = from
+      var hi = until
+      var amp = from
+      while (amp < until && src.charAt(amp) != '&') amp += 1
+      if (amp < until) { s = decodeEntities(src.substring(from, until)); lo = 0; hi = s.length }
+      if (inTitle) { title.append(' ').append(s, lo, hi); return }
       var started = current.sb.nonEmpty
-      var k = from
-      if (runBuf == null || runBuf.length < until - from + 1)
-        runBuf = new Array[Char](math.max(until - from + 1, 256))
+      var k = lo
+      if (runBuf == null || runBuf.length < hi - lo + 1)
+        runBuf = new Array[Char](math.max(hi - lo + 1, 256))
       val buf = runBuf
       var len = 0
-      while (k < until) {
-        val c = src.charAt(k)
+      while (k < hi) {
+        val c = s.charAt(k)
         if (isWs(c)) {
           pendingWs = true
           k += 1
@@ -335,8 +313,8 @@ object HtmlExtract {
             if (linkDepth > 0) current.linkChars += 1
           }
           var e = k + 1
-          while (e < until && !isWs(src.charAt(e))) e += 1
-          src.getChars(k, e, buf, len)
+          while (e < hi && !isWs(s.charAt(e))) e += 1
+          s.getChars(k, e, buf, len)
           len += e - k
           if (linkDepth > 0) current.linkChars += e - k
           started = true
@@ -370,78 +348,82 @@ object HtmlExtract {
           var j = i + (if (close) 2 else 1)
           val nameStart = j
           while (j < n && (html.charAt(j).isLetterOrDigit)) j += 1
-          // In-place classification replaces the per-tag substring +
-          // toLowerCase + set lookups (classifyTag is property-checked
-          // against the sets); unknown tags never needed the name string.
-          val cls = classifyTag(html, nameStart, j)
-          // Find the tag end with quote awareness: '>' inside quoted
-          // attribute values (e.g. href="x?a>b") must not terminate the tag.
-          var k = j
-          var quote: Char = 0
-          var gtEnd = -1
-          while (k < n && gtEnd < 0) {
-            val ch = html.charAt(k)
-            if (quote != 0) { if (ch == quote) quote = 0 }
-            else if (ch == '"' || ch == '\'') quote = ch
-            else if (ch == '>') gtEnd = k
-            k += 1
-          }
-          val tagEnd = if (gtEnd < 0) n else gtEnd + 1
-          // "<svg/>" etc: an open tag that closes itself has no subtree to
-          // skip and must not move any depth counter (it would never be
-          // balanced by a close tag).
-          val selfClosing = !close && gtEnd > 0 && html.charAt(gtEnd - 1) == '/'
           if (j == nameStart) {
-            // Broken tag like "< " or "<>": treat '<' as text.
-            appendText("<")
+            // Broken tag like "< " or "<>": treat '<' as text, without
+            // looking for a tag end (that search would rescan the rest of
+            // the page for every stray '<').
+            appendRun(html, i, i + 1)
             i += 1
-          } else if (selfClosing) {
-            if ((cls & TagBlock) != 0) flushBlock()
-            i = tagEnd
-          } else if (!close && (cls & TagRaw) != 0) {
-            // Skip the raw-text subtree: find the matching close tag. The
-            // prefix match alone would accept "</scripty>" for "</script";
-            // require the name to END there (">", whitespace or "/").
-            val closeTag = "</" + rawNames(rawIndex(cls))
-            var searchFrom = tagEnd
-            var idx = -1
-            while (idx < 0 && searchFrom < n) {
-              val cand = indexOfIgnoreCase(html, closeTag, searchFrom)
-              if (cand < 0) searchFrom = n
-              else {
-                val after = cand + closeTag.length
-                val ac = if (after < n) html.charAt(after) else '>'
-                if (ac == '>' || ac == '/' || ac == ' ' || ac == '\t' ||
-                  ac == '\r' || ac == '\n' || ac == '\f') idx = cand
-                else searchFrom = cand + 1
-              }
-            }
-            if (idx < 0) i = n
-            else {
-              val gt = html.indexOf('>', idx)
-              i = if (gt < 0) n else gt + 1
-            }
           } else {
-            if ((cls & TagBlock) != 0) flushBlock()
-            // Missing-</title> recovery: a page whose <title> never closes
-            // would otherwise route the ENTIRE body into the title and
-            // bypass every block heuristic — close it when the head clearly
-            // ends.
-            if (inTitle && ((cls & TagBody) != 0 || (close && (cls & TagHead) != 0)))
-              inTitle = false
-            if ((cls & TagTitle) != 0)
-              inTitle = !close
-            else if ((cls & TagA) != 0) {
-              if (close) linkDepth = math.max(0, linkDepth - 1) else linkDepth += 1
-            } else if ((cls & TagBoiler) != 0) {
-              if (close) boilerDepth = math.max(0, boilerDepth - 1) else boilerDepth += 1
-            } else if ((cls & TagContent) != 0) {
-              if (close) contentDepth = math.max(0, contentDepth - 1) else contentDepth += 1
+            // In-place classification replaces the per-tag substring +
+            // toLowerCase + set lookups (classifyTag is property-checked
+            // against the sets); unknown tags never needed the name string.
+            val cls = classifyTag(html, nameStart, j)
+            // Find the tag end with quote awareness: '>' inside quoted
+            // attribute values (e.g. href="x?a>b") must not terminate the tag.
+            var k = j
+            var quote: Char = 0
+            var gtEnd = -1
+            while (k < n && gtEnd < 0) {
+              val ch = html.charAt(k)
+              if (quote != 0) { if (ch == quote) quote = 0 }
+              else if (ch == '"' || ch == '\'') quote = ch
+              else if (ch == '>') gtEnd = k
+              k += 1
             }
-            if (!close && (cls & TagHeading) != 0) current.heading = true
-            current.inContent = contentDepth > 0
-            current.boilerplate = boilerDepth > 0
-            i = tagEnd
+            val tagEnd = if (gtEnd < 0) n else gtEnd + 1
+            // "<svg/>" etc: an open tag that closes itself has no subtree to
+            // skip and must not move any depth counter (it would never be
+            // balanced by a close tag).
+            val selfClosing = !close && gtEnd > 0 && html.charAt(gtEnd - 1) == '/'
+            if (selfClosing) {
+              if ((cls & TagBlock) != 0) flushBlock()
+              i = tagEnd
+            } else if (!close && (cls & TagRaw) != 0) {
+              // Skip the raw-text subtree: find the matching close tag. The
+              // prefix match alone would accept "</scripty>" for "</script";
+              // require the name to END there (">", whitespace or "/").
+              val closeTag = "</" + rawNames(rawIndex(cls))
+              var searchFrom = tagEnd
+              var idx = -1
+              while (idx < 0 && searchFrom < n) {
+                val cand = indexOfIgnoreCase(html, closeTag, searchFrom)
+                if (cand < 0) searchFrom = n
+                else {
+                  val after = cand + closeTag.length
+                  val ac = if (after < n) html.charAt(after) else '>'
+                  if (ac == '>' || ac == '/' || ac == ' ' || ac == '\t' ||
+                    ac == '\r' || ac == '\n' || ac == '\f') idx = cand
+                  else searchFrom = cand + 1
+                }
+              }
+              if (idx < 0) i = n
+              else {
+                val gt = html.indexOf('>', idx)
+                i = if (gt < 0) n else gt + 1
+              }
+            } else {
+              if ((cls & TagBlock) != 0) flushBlock()
+              // Missing-</title> recovery: a page whose <title> never closes
+              // would otherwise route the ENTIRE body into the title and
+              // bypass every block heuristic — close it when the head clearly
+              // ends.
+              if (inTitle && ((cls & TagBody) != 0 || (close && (cls & TagHead) != 0)))
+                inTitle = false
+              if ((cls & TagTitle) != 0)
+                inTitle = !close
+              else if ((cls & TagA) != 0) {
+                if (close) linkDepth = math.max(0, linkDepth - 1) else linkDepth += 1
+              } else if ((cls & TagBoiler) != 0) {
+                if (close) boilerDepth = math.max(0, boilerDepth - 1) else boilerDepth += 1
+              } else if ((cls & TagContent) != 0) {
+                if (close) contentDepth = math.max(0, contentDepth - 1) else contentDepth += 1
+              }
+              if (!close && (cls & TagHeading) != 0) current.heading = true
+              current.inContent = contentDepth > 0
+              current.boilerplate = boilerDepth > 0
+              i = tagEnd
+            }
           }
         }
       } else {
@@ -468,7 +450,7 @@ object HtmlExtract {
       if (keep) Some(text) else None
     }
 
-    HtmlResult(title.trim, kept)
+    HtmlResult(collapseWs(title.toString).trim, kept)
   }
 
   private def indexOfIgnoreCase(hay: String, needle: String, from: Int): Int = {
@@ -483,7 +465,7 @@ object HtmlExtract {
   }
 
   private def collapseWs(s: String): String =
-    s.split("[ \t\r\n\f]+").filter(_.nonEmpty).mkString(" ")
+    s.split("[ \t\r\n\f\u000b]+").filter(_.nonEmpty).mkString(" ")
 
   /** Common named entities beyond the XML five (the set that actually shows
     * up in web text: punctuation, quotes, currency, Latin-1 accents).
@@ -518,8 +500,12 @@ object HtmlExtract {
     while (i < s.length) {
       val c = s.charAt(i)
       if (c == '&') {
-        val semi = s.indexOf(';', i + 1)
-        if (semi > i && semi - i <= 10) {
+        // Only a ';' within 10 chars of the '&' ends an entity: search that
+        // window alone, not the rest of the run.
+        var semi = i + 1
+        val semiEnd = math.min(s.length, i + 11)
+        while (semi < semiEnd && s.charAt(semi) != ';') semi += 1
+        if (semi < semiEnd) {
           val ent = s.substring(i + 1, semi)
           val decoded: String = ent match {
             case "amp"  => "&"

@@ -222,8 +222,8 @@ object TableIO {
       pages: DataFrame,
       warehouse: String,
       runId: String,
-      numBuckets: Int = 16,
-      batchBuckets: Int = 4,
+      numBuckets: Int,
+      batchBuckets: Int,
       failAfterBatches: Int = -1,
       maxBytesPerDoc: Int = graft.Extract.DefaultMaxBytesPerDoc,
       timeoutMs: Long = graft.Extract.DefaultTimeoutMs): Snapshot = {

@@ -248,4 +248,44 @@ class HtmlSpec extends AnyFunSuite {
     for ((html, golden) <- cases)
       assert(HtmlExtract.extract(html) == golden, s"diverges on: ${html.take(60)}")
   }
+
+  // Hostile shapes: each is linear work, and each must finish well inside a
+  // 2 s per-document budget. A super-linear scan turns them into timeouts,
+  // or into slow ok rows where the scan sits inside one text run, between
+  // two polls of the deadline.
+  private def extractFast(html: String): graft.ExtractResult = {
+    val t0 = System.nanoTime()
+    val r = Extract(html.getBytes(UTF_8), 64 << 20, timeoutMs = 2000)
+    val ms = (System.nanoTime() - t0) / 1000000
+    assert(ms < 2000, s"took $ms ms")
+    r
+  }
+
+  test("64k tag-separated runs inside <title> extract in linear time") {
+    val n = 65536
+    val r = extractFast("<html><head><title>" + ("ab<b>" * n) + "</title></head></html>")
+    assert(r.status == "ok", r.error)
+    assert(r.text == Seq.fill(n)("ab").mkString(" "))
+  }
+
+  test("an entity-free body of 256k tag-separated runs extracts in linear time") {
+    val n = 262144
+    val r = extractFast("<html><body><p>" + ("w <i>" * n) + "</p></body></html>")
+    assert(r.status == "ok", r.error)
+    assert(r.text == Seq.fill(n)("w").mkString(" "))
+  }
+
+  test("400k bare ampersands in one paragraph extract in linear time") {
+    val n = 400000
+    val r = extractFast("<html><body><p>" + ("&a " * n) + "</p></body></html>")
+    assert(r.status == "ok", r.error)
+    assert(r.text == Seq.fill(n)("&a").mkString(" "))
+  }
+
+  test("64k stray '<' with no '>' after them extract in linear time") {
+    val n = 65536
+    val r = extractFast("<html><body><p>" + ("< " * n))
+    assert(r.status == "ok", r.error)
+    assert(r.text == Seq.fill(n)("<").mkString(" "))
+  }
 }

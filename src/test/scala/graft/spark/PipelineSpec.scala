@@ -198,7 +198,8 @@ class PipelineSpec extends AnyFunSuite {
     // Resuming with a DIFFERENT bucket count must fail fast: it would
     // silently remap url->bucket and duplicate/miss documents.
     val e = intercept[IllegalArgumentException] {
-      TableIO.runResumable(spark, pages, whKill, "wrong-buckets", numBuckets = 16)
+      TableIO.runResumable(spark, pages, whKill, "wrong-buckets", numBuckets = 16,
+        batchBuckets = 2)
     }
     assert(e.getMessage.contains("numBuckets"))
   }
