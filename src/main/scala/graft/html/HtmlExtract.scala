@@ -24,12 +24,8 @@ import scala.collection.mutable
   */
 object HtmlExtract {
 
-  final case class HtmlResult(title: String, blocks: Seq[String]) {
-    def text: String =
-      if (title.nonEmpty && blocks.nonEmpty) title + "\n" + blocks.mkString("\n")
-      else if (title.nonEmpty) title
-      else blocks.mkString("\n")
-  }
+  /** `Extract` joins the title (if any) and the blocks with '\n'. */
+  final case class HtmlResult(title: String, blocks: Seq[String])
 
   private[html] val rawTextTags = Set("script", "style", "noscript", "template", "svg", "iframe")
   private[html] val boilerplateTags = Set("nav", "header", "footer", "aside", "form")

@@ -14,7 +14,7 @@ import org.apache.spark.sql.SparkSession
   * }}}
   *
   * Reads the Common-Crawl-shaped pages table, runs the resumable extraction
-  * job (dedup -> salted kernel -> snapshot-committed output + lineage), and
+  * job (dedup -> kernel -> snapshot-committed output + lineage), and
   * prints a one-line JSON summary. Re-running after a kill resumes from the
   * last committed snapshot. The cumulative status histogram is
   * `TableIO.readData(spark, warehouse).get.groupBy("status").count()`.

@@ -14,16 +14,18 @@ final case class PageRow(
 
 /** Kernel input projection: ONLY the columns extraction reads. Keeping the
   * pages table's `text`/`lang` out of the kernel scan prunes ~12 KB/doc of
-  * dead parquet decode (and, on the opt-in repartition path, shuffle bytes)
-  * — the kernel consumes url/warc_ts/html and drops the rest anyway.
+  * dead parquet decode — the kernel consumes url/warc_ts/html and drops the
+  * rest anyway.
   */
 final case class KernelInRow(
     url: String,
     warc_ts: Timestamp,
     html: Array[Byte])
 
-/** Output table row (SURVEY.md §1.2). `text` is the UTF-8 view; `text_bytes`
-  * carries the exact extracted bytes for the byte-identity invariant.
+/** Output table row (SURVEY.md §1.2). `text_bytes` carries the exact
+  * extracted bytes for the byte-identity invariant; `text` is their lossy
+  * UTF-8 view, `new String(text_bytes, UTF_8)`. The committed data files store
+  * the text only as `text_bytes`; `TableIO.readData` derives `text` on read.
   */
 final case class ExtractedRow(
     url: String,

@@ -9,7 +9,7 @@ import scala.jdk.CollectionConverters._
 import com.fasterxml.jackson.databind.{DeserializationFeature, JsonNode, PropertyNamingStrategies}
 import com.fasterxml.jackson.databind.json.JsonMapper
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.CollectionAccumulator
 
@@ -17,7 +17,9 @@ import org.apache.spark.util.CollectionAccumulator
   * sandbox, so the warehouse implements the same semantics directly:
   *
   *   warehouse/
-  *     data/<batch-dir>/part-*.parquet       (immutable once committed)
+  *     data/<batch-dir>/part-*.parquet       (immutable once committed; every
+  *                                            `ExtractedRow` column but `text`,
+  *                                            which `readData` derives)
   *     metadata/v{N}.json                    (snapshot manifest)
   *     metadata/version-hint.text            (atomic pointer to current N)
   *
@@ -158,11 +160,32 @@ object TableIO {
     next
   }
 
-  /** Read the committed output table (union of committed data dirs). */
+  /** Read the committed output table (union of committed data dirs) with
+    * `ExtractedRow`'s columns, in its order. The data files store the text
+    * once, as `text_bytes`; `text` is derived here as `new String(b, UTF_8)`,
+    * the kernel's own `ExtractResult.text`. Spark's `cast` and
+    * `make_valid_utf8` disagree with Java on invalid UTF-8, so the decode is
+    * Java's. The `text` column that data dirs written before this layout
+    * still hold is dropped unread.
+    */
   def readData(spark: SparkSession, warehouse: String): Option[DataFrame] =
     currentSnapshot(warehouse).filter(_.dataDirs.nonEmpty).map { s =>
-      spark.read.parquet(s.dataDirs: _*)
+      spark.read.parquet(s.dataDirs: _*).drop("text")
+        .withColumn("text", utf8Text(col("text_bytes")))
+        .select(tableColumns.map(col): _*)
     }
+
+  private val utf8Text =
+    udf((b: Array[Byte]) => if (b == null) null else new String(b, UTF_8))
+  private val tableColumns: Seq[String] = Encoders.product[ExtractedRow].schema.fieldNames.toSeq
+
+  /** The rows of a batch's data files: `text` is left out, since `readData`
+    * derives it from `text_bytes`. Spark's `ObjectSerializerPruning` then
+    * drops its serializer from the kernel's output, so the write does not
+    * re-encode every document's text either.
+    */
+  private[spark] def dataFileRows(extracted: Dataset[ExtractedRow]): DataFrame =
+    extracted.drop("text")
 
   /** Every committed lineage row, read from manifests v1..v{current}. */
   def lineage(warehouse: String): Seq[LineageRow] =
@@ -179,21 +202,19 @@ object TableIO {
     * written once and read by every consumer, so it is stored as compactly
     * as the columns allow:
     *  - zstd (Iceberg's default codec) instead of Spark's snappy;
-    *  - no dictionary on `url`, `text` and `text_bytes`: their values never
+    *  - no dictionary on `url` and `text_bytes`: their values never
     *    repeat, so the writer hashed every value only to throw the
     *    dictionary away again; `status`, `error` and `partition_id` keep it;
-    *  - no min/max statistics on `text` and `text_bytes`: untruncated, they
-    *    copy whole documents into every footer, and a min/max range of
-    *    document texts prunes almost nothing;
+    *  - no min/max statistics on `text_bytes`: untruncated, they copy whole
+    *    documents into every footer, and a min/max range of document texts
+    *    prunes almost nothing;
     *  - no `_SUCCESS` marker: the snapshot manifest is the commit record.
     * The read side needs no option: the footers say all of this.
     */
   private val DataFileOptions: Map[String, String] = Map(
     "compression" -> "zstd",
     "parquet.enable.dictionary#url" -> "false",
-    "parquet.enable.dictionary#text" -> "false",
     "parquet.enable.dictionary#text_bytes" -> "false",
-    "parquet.column.statistics.enabled#text" -> "false",
     "parquet.column.statistics.enabled#text_bytes" -> "false",
     "mapreduce.fileoutputcommitter.marksuccessfuljobs" -> "false")
 
@@ -261,7 +282,7 @@ object TableIO {
         val extracted = Pipeline.extract(spark, subset, runId,
           maxBytesPerDoc = maxBytesPerDoc, lineageAcc = lineageAcc, timeoutMs = timeoutMs)
         val dataDir = s"$warehouse/data/batch-${snap.version + 1}-${java.util.UUID.randomUUID().toString.take(8)}"
-        extracted.write.mode(SaveMode.ErrorIfExists).options(DataFileOptions).parquet(dataDir)
+        dataFileRows(extracted).write.mode(SaveMode.ErrorIfExists).options(DataFileOptions).parquet(dataDir)
         // Task retries / speculation can flush duplicate lineage rows (Spark
         // only guarantees exactly-once accumulator updates inside actions):
         // keep the LAST attempt per partition.

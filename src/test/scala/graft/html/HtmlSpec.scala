@@ -22,9 +22,11 @@ class HtmlSpec extends AnyFunSuite {
     val res = HtmlExtract.extract(page)
     assert(res.title == "Test Article Title")
     assert(res.blocks == paras)
-    assert(!res.text.contains("Site Header Boilerplate"))
-    assert(!res.text.contains("Copyright 2026"))
-    assert(!res.text.contains("Home"))
+    val text = Extract(page).text
+    assert(text == ("Test Article Title" +: paras).mkString("\n"))
+    assert(!text.contains("Site Header Boilerplate"))
+    assert(!text.contains("Copyright 2026"))
+    assert(!text.contains("Home"))
   }
 
   test("h02: link-farm sidebar dropped, long-text main kept") {
@@ -47,9 +49,10 @@ class HtmlSpec extends AnyFunSuite {
         |</body></html>""".stripMargin
     val res = HtmlExtract.extract(html)
     assert(res.blocks == Seq("Real visible content of reasonable length stays in the output."))
-    assert(!res.text.contains("injected"))
-    assert(!res.text.contains("color"))
-    assert(!res.text.contains("comment"))
+    val text = Extract(html.getBytes(UTF_8)).text
+    assert(!text.contains("injected"))
+    assert(!text.contains("color"))
+    assert(!text.contains("comment"))
   }
 
   test("h04: deeply nested DOM terminates") {
@@ -167,8 +170,9 @@ class HtmlSpec extends AnyFunSuite {
     val res = HtmlExtract.extract(html)
     assert(res.blocks.length == 1)
     assert(res.blocks.head.contains("link text here and a paragraph"))
-    assert(!res.text.contains("href"))
-    assert(!res.text.contains("b&c"))
+    val text = Extract(html.getBytes(UTF_8)).text
+    assert(!text.contains("href"))
+    assert(!text.contains("b&c"))
   }
 
   test("extended named entities decode") {
@@ -215,8 +219,9 @@ class HtmlSpec extends AnyFunSuite {
       "<H1>HdNg</H1></ARTICLE></BODY></HTML>"
     val res = HtmlExtract.extract(html)
     assert(res.blocks.contains("mixed case article body text here"))
-    assert(!res.text.contains("dropped"))
-    assert(!res.text.contains("menu"))
+    val text = Extract(html.getBytes(UTF_8)).text
+    assert(!text.contains("dropped"))
+    assert(!text.contains("menu"))
     assert(res.blocks.contains("HdNg")) // heading inside article/main kept
   }
 

@@ -1,5 +1,6 @@
 package graft.spark
 
+import java.nio.charset.StandardCharsets.{US_ASCII, UTF_8}
 import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
@@ -208,16 +209,51 @@ class PipelineSpec extends AnyFunSuite {
     * statuses and duplicate url, staged as parquet: a local relation would
     * let the optimizer fold filters into the data, out of the plan.
     */
-  private def stagedRotationPages(dir: String): org.apache.spark.sql.DataFrame = {
+  private def stagedRotationPages(dir: String, extra: Seq[PageRow] = Nil): org.apache.spark.sql.DataFrame = {
     import spark.implicits._
     val docs = (0 until 48).map { i =>
       val v = i % PagesGen.PdfVariants
       PageRow(f"https://rot/doc-$i%03d", new java.sql.Timestamp(PagesGen.BaseTs + i),
         PagesGen.payloadFor(i.toLong, s"rotation doc $i family $v", v), "", "en")
     }
-    docs.toDF().union(PagesGen.smokeTable(spark)).write.parquet(s"$dir/pages")
+    (docs ++ extra).toDF().union(PagesGen.smokeTable(spark)).write.parquet(s"$dir/pages")
     spark.read.parquet(s"$dir/pages")
   }
+
+  /** PDFs whose extracted text bytes are not valid UTF-8 (a font without an
+    * encoding emits the string's raw bytes). The first is a sequence on
+    * which Spark's `make_valid_utf8` and Java's decoder disagree.
+    */
+  private val invalidUtf8Texts: Seq[Array[Byte]] = Seq(
+    Array(0xf4, 0xff, 0xed, 0x98, 0xed, 0xa0, 0xe0, 0xbf),
+    Array(0x41, 0xc3, 0x28, 0xed, 0xa0, 0x80, 0x42),
+    Array(0xf8, 0x88, 0x80, 0x80, 0x80, 0xc0, 0xaf)).map(_.map(_.toByte))
+
+  private def invalidUtf8Pages: Seq[PageRow] = invalidUtf8Texts.zipWithIndex.map { case (t, i) =>
+    val hex = t.map(b => f"${b & 0xff}%02x").mkString
+    PageRow(s"https://bad-utf8/doc-$i", new java.sql.Timestamp(PagesGen.BaseTs + i),
+      PdfFixtures.s07Content(s"BT /F1 12 Tf <$hex> Tj ET".getBytes(US_ASCII)),
+      "", "en")
+  }
+
+  private def isValidUtf8(b: Array[Byte]): Boolean =
+    try {
+      UTF_8.newDecoder().decode(java.nio.ByteBuffer.wrap(b))
+      true
+    } catch { case _: java.nio.charset.CharacterCodingException => false }
+
+  /** The columns of one committed data file, from its footer. */
+  private def footerColumns(file: String): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+      new org.apache.hadoop.fs.Path(file), spark.sessionState.newHadoopConf())
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+    try reader.getFooter.getFileMetaData.getSchema.getFields.asScala.map(_.getName).toSeq
+    finally reader.close()
+  }
+
+  private def parquetFiles(dir: String): Seq[String] =
+    new java.io.File(dir).list().filter(_.endsWith(".parquet")).map(f => s"$dir/$f").toSeq
 
   test("committed data files are zstd with plain, statistics-free text columns") {
     import org.apache.parquet.column.Encoding
@@ -227,20 +263,23 @@ class PipelineSpec extends AnyFunSuite {
     import scala.jdk.CollectionConverters._
     import spark.implicits._
     val dir = Files.createTempDirectory("wh-files").toString
-    val pages = stagedRotationPages(dir)
+    val pages = stagedRotationPages(dir, invalidUtf8Pages)
     val wh = s"$dir/wh"
     val snap = TableIO.runResumable(spark, pages, wh, "files", numBuckets = 4, batchBuckets = 2)
     assert(snap.dataDirs.length == 2)
     val conf = spark.sessionState.newHadoopConf()
-    val plain = Set("url", "text", "text_bytes")
+    val plain = Set("url", "text_bytes")
     val dictionary = Set("status", "error", "partition_id")
-    val noStats = Set("text", "text_bytes")
+    val noStats = Set("text_bytes")
     var files = 0
     for (d <- snap.dataDirs) {
       val names = new java.io.File(d).list().toSet
       assert(!names.contains("_SUCCESS") && !names.contains("._SUCCESS.crc"), names)
       for (f <- names.filter(_.endsWith(".parquet"))) {
         files += 1
+        // The text is stored once, as text_bytes; readData derives `text`.
+        val columns = footerColumns(s"$d/$f")
+        assert(!columns.contains("text") && columns.contains("text_bytes"), s"$f: $columns")
         val path = new org.apache.hadoop.fs.Path(s"$d/$f")
         val reader = ParquetFileReader.open(HadoopInputFile.fromPath(path, conf))
         try for (block <- reader.getFooter.getBlocks.asScala; c <- block.getColumns.asScala) {
@@ -262,10 +301,76 @@ class PipelineSpec extends AnyFunSuite {
       (r.url, r.warc_ts, r.text, r.text_bytes.toSeq, r.spans, r.status, r.error)
     val committed = TableIO.readData(spark, wh).get.as[ExtractedRow].collect().map(key).sortBy(_._1)
     val inMemory = Pipeline.run(spark, pages, "files").collect().map(key).sortBy(_._1)
-    assert(committed.length == 55)
+    assert(committed.length == 58)
     assert(committed.toSeq == inMemory.toSeq)
     assert(committed.map(_._6).toSet == Set("ok", "error", "empty"))
+    // The derived text of invalid UTF-8 is Java's decode, as in the kernel.
+    val bad = committed.filter(_._1.startsWith("https://bad-utf8/"))
+    assert(bad.map(_._4).toSeq == invalidUtf8Texts.map(_.toSeq), bad.map(_._4))
+    assert(bad.forall(r => !isValidUtf8(r._4.toArray)))
+    assert(bad.forall(r => r._3 == new String(r._4.toArray, UTF_8)))
+    // Inside Spark too the derived text holds Java's re-encoding, not the
+    // invalid bytes (a `cast` to string would keep them).
+    val sparkText = TableIO.readData(spark, wh).get.filter(col("url").startsWith("https://bad-utf8/"))
+      .select(col("url"), col("text").cast("binary"), length(col("text"))).collect()
+      .map(r => r.getString(0) -> (r.getAs[Array[Byte]](1).toSeq, r.getInt(2))).toMap
+    for (r <- bad)
+      assert(sparkText(r._1) == (r._3.getBytes(UTF_8).toSeq, r._3.codePointCount(0, r._3.length)), r._1)
     TableIO.deleteRecursively(new java.io.File(dir))
+  }
+
+  test("readData derives text from text_bytes, also over data dirs that still store text") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("wh-mixed").toString
+    val pages = stagedRotationPages(dir, invalidUtf8Pages)
+    def key(r: ExtractedRow) =
+      (r.url, r.warc_ts, r.text, r.text_bytes.toSeq, r.spans, r.status, r.error)
+    val inMemory = Pipeline.run(spark, pages, "mixed").collect().map(key).sortBy(_._1).toSeq
+    // readData's schema, recorded from the layout that stored `text`.
+    val schemaJson = """{"type":"struct","fields":[{"name":"url","type":"string","nullable":true,"metadata":{}},{"name":"warc_ts","type":"timestamp","nullable":true,"metadata":{}},{"name":"text","type":"string","nullable":true,"metadata":{}},{"name":"text_bytes","type":"binary","nullable":true,"metadata":{}},{"name":"spans","type":{"type":"array","elementType":{"type":"struct","fields":[{"name":"page","type":"integer","nullable":true,"metadata":{}},{"name":"start","type":"long","nullable":true,"metadata":{}},{"name":"end","type":"long","nullable":true,"metadata":{}}]},"containsNull":true},"nullable":true,"metadata":{}},{"name":"status","type":"string","nullable":true,"metadata":{}},{"name":"error","type":"string","nullable":true,"metadata":{}},{"name":"partition_id","type":"integer","nullable":true,"metadata":{}}]}"""
+    // One batch in the layout that stored `text` (with a wrong value, so only
+    // a derived text can pass) and one written by runResumable, in either
+    // commit order.
+    for (legacyFirst <- Seq(true, false)) {
+      val wh = s"$dir/wh-$legacyFirst"
+      def commitLegacy(buckets: Seq[Int]): Unit = {
+        val legacyDir = s"$wh/data/batch-legacy"
+        Pipeline.extract(spark, TableIO.pendingInput(pages, 4, buckets).drop("__bucket"), "legacy")
+          .withColumn("text", lit("stale text")).write.parquet(legacyDir)
+        TableIO.commit(wh, buckets.toSet, legacyDir, Nil, 4)
+      }
+      if (legacyFirst) {
+        commitLegacy(Seq(0, 1))
+        TableIO.runResumable(spark, pages, wh, "mixed", numBuckets = 4, batchBuckets = 2)
+      } else {
+        intercept[RuntimeException] {
+          TableIO.runResumable(spark, pages, wh, "mixed", numBuckets = 4, batchBuckets = 2,
+            failAfterBatches = 1)
+        }
+        commitLegacy(Seq(2, 3))
+      }
+      val snap = TableIO.currentSnapshot(wh).get
+      assert(snap.committedBuckets == Seq(0, 1, 2, 3) && snap.dataDirs.length == 2, snap)
+      assert(snap.dataDirs.map(d => parquetFiles(d).exists(footerColumns(_).contains("text"))) ==
+        Seq(legacyFirst, !legacyFirst))
+      val read = TableIO.readData(spark, wh).get
+      assert(read.schema.json == schemaJson)
+      val committed = read.as[ExtractedRow].collect().map(key).sortBy(_._1).toSeq
+      assert(committed == inMemory, s"legacyFirst=$legacyFirst")
+    }
+    TableIO.deleteRecursively(new java.io.File(dir))
+  }
+
+  test("the data-file write serializes no text: its serializer is pruned from the kernel's output") {
+    import org.apache.spark.sql.catalyst.plans.logical.SerializeFromObject
+    val extracted = Pipeline.extract(spark, PagesGen.smokeTable(spark), "write-plan")
+    val rows = TableIO.dataFileRows(extracted)
+    assert(rows.columns.toSeq == Seq("url", "warc_ts", "text_bytes", "spans", "status", "error", "partition_id"))
+    val plan = rows.queryExecution.optimizedPlan
+    val serialized = plan.collect { case s: SerializeFromObject => s.serializer.map(_.name) }
+    assert(serialized.length == 1, plan)
+    assert(serialized.head.contains("text_bytes"), plan)
+    assert(!serialized.head.contains("text"), plan)
   }
 
   test("resume dedups only the pending buckets: their filter sits below the window's exchange") {
