@@ -14,8 +14,8 @@ final case class Span(page: Int, start: Long, end: Long)
 /** Kernel output for one document.
   *
   *  - textBytes carries the EXACT extracted bytes (the byte-identity unit of
-  *    the north rule); `text` is its UTF-8 (lossy) string view for the Spark
-  *    string column.
+  *    the north rule); `text` is their lossy UTF-8 string view,
+  *    `Extract.textOf`.
   *  - status: ok | error | empty | skipped_oversize | timeout
   *  - error: message for status=error (text still holds the partial output).
   */
@@ -24,7 +24,7 @@ final case class ExtractResult(
     spans: Seq[Span],
     status: String,
     error: String) {
-  def text: String = new String(textBytes, UTF_8)
+  def text: String = Extract.textOf(textBytes)
 }
 
 /** Top-level per-document extraction: payload dispatch (PDF magic vs HTML),
@@ -43,6 +43,13 @@ object Extract {
     * documents become status=timeout rows instead of stragglers.
     */
   val DefaultTimeoutMs: Long = 30000L
+
+  /** The string view of extracted bytes: Java's lossy UTF-8 decode. Spark's
+    * `cast` and `make_valid_utf8` replace invalid sequences differently, so
+    * the kernel, `extract_text` and the table's derived `text` column
+    * (`TableIO.readData`) all decode through this one function.
+    */
+  def textOf(textBytes: Array[Byte]): String = new String(textBytes, UTF_8)
 
   def apply(payload: Array[Byte], maxBytesPerDoc: Int = DefaultMaxBytesPerDoc,
             timeoutMs: Long = DefaultTimeoutMs): ExtractResult =

@@ -114,8 +114,9 @@ object SparkEntry {
     */
   def entry(spark: SparkSession): DataFrame = {
     val pages = PagesGen.pagesMixed(spark, "/root/testdata/sf0.001").toDF()
-    Pipeline.run(spark, pages, runId = "entry").toDF()
-      .select("url", "status", "text")
+    Pipeline.run(spark, pages, runId = "entry")
+      .select(col("url"), col("status"),
+        graft.spark.TableIO.textOf(col("text_bytes")).as("text"))
   }
 
   /** doc_id of a PagesGen url: the digits after its LAST '-' (robust to ids

@@ -13,8 +13,8 @@ import graft.Extract
 
 /** Native Catalyst expression for the extraction kernel:
   *
-  *   extract_text(binary) -> struct<text string, status string, error string,
-  *                                  n_spans int>
+  *   extract_text(binary) -> struct<text string, text_bytes binary,
+  *                                  status string, error string, n_spans int>
   *
   * A scalar Expression (not a Scala UDF): it evaluates directly on the
   * internal binary value with no Row encoding round-trip, is null-safe, and

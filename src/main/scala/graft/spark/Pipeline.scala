@@ -84,7 +84,6 @@ object Pipeline {
         ExtractedRow(
           url = row.url,
           warc_ts = row.warc_ts,
-          text = r.text,
           text_bytes = r.textBytes,
           spans = r.spans,
           status = r.status,

@@ -22,15 +22,14 @@ final case class KernelInRow(
     warc_ts: Timestamp,
     html: Array[Byte])
 
-/** Output table row (SURVEY.md §1.2). `text_bytes` carries the exact
-  * extracted bytes for the byte-identity invariant; `text` is their lossy
-  * UTF-8 view, `new String(text_bytes, UTF_8)`. The committed data files store
-  * the text only as `text_bytes`; `TableIO.readData` derives `text` on read.
+/** The kernel's output row and the committed data-file row (SURVEY.md §1.2).
+  * `text_bytes` carries the exact extracted bytes for the byte-identity
+  * invariant. The table's `text` column, their lossy UTF-8 view, is not
+  * stored: `TableIO.readData` derives it on read.
   */
 final case class ExtractedRow(
     url: String,
     warc_ts: Timestamp,
-    text: String,
     text_bytes: Array[Byte],
     spans: Seq[graft.Span],
     status: String,

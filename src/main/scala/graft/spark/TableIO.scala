@@ -9,7 +9,8 @@ import scala.jdk.CollectionConverters._
 import com.fasterxml.jackson.databind.{DeserializationFeature, JsonNode, PropertyNamingStrategies}
 import com.fasterxml.jackson.databind.json.JsonMapper
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.CollectionAccumulator
 
@@ -17,9 +18,9 @@ import org.apache.spark.util.CollectionAccumulator
   * sandbox, so the warehouse implements the same semantics directly:
   *
   *   warehouse/
-  *     data/<batch-dir>/part-*.parquet       (immutable once committed; every
-  *                                            `ExtractedRow` column but `text`,
-  *                                            which `readData` derives)
+  *     data/<batch-dir>/part-*.parquet       (immutable once committed;
+  *                                            `ExtractedRow`s; `readData`
+  *                                            derives `text`)
   *     metadata/v{N}.json                    (snapshot manifest)
   *     metadata/version-hint.text            (atomic pointer to current N)
   *
@@ -161,42 +162,32 @@ object TableIO {
   }
 
   /** Read the committed output table (union of committed data dirs) with
-    * `ExtractedRow`'s columns, in its order. The data files store the text
-    * once, as `text_bytes`; `text` is derived here as `new String(b, UTF_8)`,
-    * the kernel's own `ExtractResult.text`. Spark's `cast` and
-    * `make_valid_utf8` disagree with Java on invalid UTF-8, so the decode is
-    * Java's. The `text` column that data dirs written before this layout
-    * still hold is dropped unread.
+    * `tableColumns`, in their order. The data files hold `ExtractedRow`s;
+    * `text` is derived here from `text_bytes`. The `text` column that data
+    * dirs written before this layout still hold is dropped unread.
     */
   def readData(spark: SparkSession, warehouse: String): Option[DataFrame] =
     currentSnapshot(warehouse).filter(_.dataDirs.nonEmpty).map { s =>
       spark.read.parquet(s.dataDirs: _*).drop("text")
-        .withColumn("text", utf8Text(col("text_bytes")))
+        .withColumn("text", textOf(col("text_bytes")))
         .select(tableColumns.map(col): _*)
     }
 
-  private val utf8Text =
-    udf((b: Array[Byte]) => if (b == null) null else new String(b, UTF_8))
-  private val tableColumns: Seq[String] = Encoders.product[ExtractedRow].schema.fieldNames.toSeq
-
-  /** The rows of a batch's data files: `text` is left out, since `readData`
-    * derives it from `text_bytes`. Spark's `ObjectSerializerPruning` then
-    * drops its serializer from the kernel's output, so the write does not
-    * re-encode every document's text either.
+  /** The table's `text` column: the kernel's own decode of `text_bytes`
+    * (`Extract.textOf`), null-safe.
     */
-  private[spark] def dataFileRows(extracted: Dataset[ExtractedRow]): DataFrame =
-    extracted.drop("text")
+  private[graft] val textOf: UserDefinedFunction =
+    udf((b: Array[Byte]) => if (b == null) null else graft.Extract.textOf(b))
+
+  /** The table's columns: `ExtractedRow`'s, with `text` after `warc_ts`. */
+  private val tableColumns: Seq[String] =
+    Seq("url", "warc_ts", "text", "text_bytes", "spans", "status", "error", "partition_id")
 
   /** Every committed lineage row, read from manifests v1..v{current}. */
   def lineage(warehouse: String): Seq[LineageRow] =
     currentSnapshot(warehouse).toSeq
       .flatMap(s => (1 to s.version).flatMap(readManifest(warehouse, _)))
       .flatMap(_.lineage)
-
-  def readLineage(spark: SparkSession, warehouse: String): Option[DataFrame] = {
-    import spark.implicits._
-    Some(lineage(warehouse)).filter(_.nonEmpty).map(_.toDF())
-  }
 
   /** Parquet writer options of every committed data file. The table is
     * written once and read by every consumer, so it is stored as compactly
@@ -282,7 +273,7 @@ object TableIO {
         val extracted = Pipeline.extract(spark, subset, runId,
           maxBytesPerDoc = maxBytesPerDoc, lineageAcc = lineageAcc, timeoutMs = timeoutMs)
         val dataDir = s"$warehouse/data/batch-${snap.version + 1}-${java.util.UUID.randomUUID().toString.take(8)}"
-        dataFileRows(extracted).write.mode(SaveMode.ErrorIfExists).options(DataFileOptions).parquet(dataDir)
+        extracted.write.mode(SaveMode.ErrorIfExists).options(DataFileOptions).parquet(dataDir)
         // Task retries / speculation can flush duplicate lineage rows (Spark
         // only guarantees exactly-once accumulator updates inside actions):
         // keep the LAST attempt per partition.

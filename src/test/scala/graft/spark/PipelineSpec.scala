@@ -3,6 +3,7 @@ package graft.spark
 import java.nio.charset.StandardCharsets.{US_ASCII, UTF_8}
 import java.nio.file.Files
 
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -19,15 +20,17 @@ class PipelineSpec extends AnyFunSuite {
     import spark.implicits._
     val pages = PagesGen.smokeTable(spark)
     val out = Pipeline.run(spark, pages, "t1").collect().map(r => r.url -> r).toMap
+    def text(url: String) = out(url).text_bytes.toSeq
+    def utf8(s: String) = s.getBytes(UTF_8).toSeq
 
     assert(out.size == 7) // 8 rows, 1 duplicate url collapsed
     assert(out("https://t/ok-pdf").status == "ok")
-    assert(out("https://t/ok-pdf").text == "Hello World")
-    assert(out("https://t/ok-flate").text == "compressed")
+    assert(text("https://t/ok-pdf") == utf8("Hello World"))
+    assert(text("https://t/ok-flate") == utf8("compressed"))
     assert(out("https://t/ok-html").status == "ok")
-    assert(out("https://t/dup").text == "new capture") // latest warc_ts wins
+    assert(text("https://t/dup") == utf8("new capture")) // latest warc_ts wins
     assert(out("https://t/err").status == "error")
-    assert(out("https://t/err").text == "partial")
+    assert(text("https://t/err") == utf8("partial"))
     assert(out("https://t/empty").status == "empty")
     // Byte identity: text_bytes match the kernel run directly.
     val direct = graft.Extract(PdfFixtures.s01("Hello World"))
@@ -192,9 +195,8 @@ class PipelineSpec extends AnyFunSuite {
     assert(resumed.length == 200) // no missing
     assert(resumed.map(_._1).distinct.length == 200) // no dups
     assert(resumed.toSeq == full.toSeq) // identical output
-    // Lineage table covers both runs.
-    val lineage = TableIO.readLineage(spark, whKill).get
-    assert(lineage.agg(sum("input_rows")).head().getLong(0) == 200)
+    // The committed lineage covers both runs.
+    assert(TableIO.lineage(whKill).map(_.input_rows).sum == 200)
 
     // Resuming with a DIFFERENT bucket count must fail fast: it would
     // silently remap url->bucket and duplicate/miss documents.
@@ -255,6 +257,17 @@ class PipelineSpec extends AnyFunSuite {
   private def parquetFiles(dir: String): Seq[String] =
     new java.io.File(dir).list().filter(_.endsWith(".parquet")).map(f => s"$dir/$f").toSeq
 
+  /** A row's document columns. partition_id is left out: it names the task,
+    * not the document.
+    */
+  private def key(r: ExtractedRow) =
+    (r.url, r.warc_ts, r.text_bytes.toSeq, r.spans, r.status, r.error)
+
+  /** Every `text` that readData returns is Java's decode of its `text_bytes`. */
+  private def assertTextDerived(table: DataFrame): Unit =
+    for (r <- table.select("url", "text", "text_bytes").collect())
+      assert(r.getString(1) == new String(r.getAs[Array[Byte]](2), UTF_8), r.getString(0))
+
   test("committed data files are zstd with plain, statistics-free text columns") {
     import org.apache.parquet.column.Encoding
     import org.apache.parquet.hadoop.ParquetFileReader
@@ -277,9 +290,10 @@ class PipelineSpec extends AnyFunSuite {
       assert(!names.contains("_SUCCESS") && !names.contains("._SUCCESS.crc"), names)
       for (f <- names.filter(_.endsWith(".parquet"))) {
         files += 1
-        // The text is stored once, as text_bytes; readData derives `text`.
+        // A data file holds exactly the kernel's rows: the text is stored
+        // once, as text_bytes, and readData derives `text`.
         val columns = footerColumns(s"$d/$f")
-        assert(!columns.contains("text") && columns.contains("text_bytes"), s"$f: $columns")
+        assert(columns == Encoders.product[ExtractedRow].schema.fieldNames.toSeq, s"$f: $columns")
         val path = new org.apache.hadoop.fs.Path(s"$d/$f")
         val reader = ParquetFileReader.open(HadoopInputFile.fromPath(path, conf))
         try for (block <- reader.getFooter.getBlocks.asScala; c <- block.getColumns.asScala) {
@@ -296,26 +310,26 @@ class PipelineSpec extends AnyFunSuite {
     }
     assert(files > 0)
     // The committed rows are the in-memory pipeline's rows, byte for byte.
-    // partition_id is left out: it names the task, not the document.
-    def key(r: ExtractedRow) =
-      (r.url, r.warc_ts, r.text, r.text_bytes.toSeq, r.spans, r.status, r.error)
-    val committed = TableIO.readData(spark, wh).get.as[ExtractedRow].collect().map(key).sortBy(_._1)
+    val table = TableIO.readData(spark, wh).get
+    val committed = table.as[ExtractedRow].collect().map(key).sortBy(_._1)
     val inMemory = Pipeline.run(spark, pages, "files").collect().map(key).sortBy(_._1)
     assert(committed.length == 58)
     assert(committed.toSeq == inMemory.toSeq)
-    assert(committed.map(_._6).toSet == Set("ok", "error", "empty"))
+    assert(committed.map(_._5).toSet == Set("ok", "error", "empty"))
     // The derived text of invalid UTF-8 is Java's decode, as in the kernel.
     val bad = committed.filter(_._1.startsWith("https://bad-utf8/"))
-    assert(bad.map(_._4).toSeq == invalidUtf8Texts.map(_.toSeq), bad.map(_._4))
-    assert(bad.forall(r => !isValidUtf8(r._4.toArray)))
-    assert(bad.forall(r => r._3 == new String(r._4.toArray, UTF_8)))
+    assert(bad.map(_._3).toSeq == invalidUtf8Texts.map(_.toSeq), bad.map(_._3))
+    assert(bad.forall(r => !isValidUtf8(r._3.toArray)))
+    assertTextDerived(table)
     // Inside Spark too the derived text holds Java's re-encoding, not the
     // invalid bytes (a `cast` to string would keep them).
-    val sparkText = TableIO.readData(spark, wh).get.filter(col("url").startsWith("https://bad-utf8/"))
+    val sparkText = table.filter(col("url").startsWith("https://bad-utf8/"))
       .select(col("url"), col("text").cast("binary"), length(col("text"))).collect()
       .map(r => r.getString(0) -> (r.getAs[Array[Byte]](1).toSeq, r.getInt(2))).toMap
-    for (r <- bad)
-      assert(sparkText(r._1) == (r._3.getBytes(UTF_8).toSeq, r._3.codePointCount(0, r._3.length)), r._1)
+    for (r <- bad) {
+      val text = new String(r._3.toArray, UTF_8)
+      assert(sparkText(r._1) == (text.getBytes(UTF_8).toSeq, text.codePointCount(0, text.length)), r._1)
+    }
     TableIO.deleteRecursively(new java.io.File(dir))
   }
 
@@ -323,8 +337,6 @@ class PipelineSpec extends AnyFunSuite {
     import spark.implicits._
     val dir = Files.createTempDirectory("wh-mixed").toString
     val pages = stagedRotationPages(dir, invalidUtf8Pages)
-    def key(r: ExtractedRow) =
-      (r.url, r.warc_ts, r.text, r.text_bytes.toSeq, r.spans, r.status, r.error)
     val inMemory = Pipeline.run(spark, pages, "mixed").collect().map(key).sortBy(_._1).toSeq
     // readData's schema, recorded from the layout that stored `text`.
     val schemaJson = """{"type":"struct","fields":[{"name":"url","type":"string","nullable":true,"metadata":{}},{"name":"warc_ts","type":"timestamp","nullable":true,"metadata":{}},{"name":"text","type":"string","nullable":true,"metadata":{}},{"name":"text_bytes","type":"binary","nullable":true,"metadata":{}},{"name":"spans","type":{"type":"array","elementType":{"type":"struct","fields":[{"name":"page","type":"integer","nullable":true,"metadata":{}},{"name":"start","type":"long","nullable":true,"metadata":{}},{"name":"end","type":"long","nullable":true,"metadata":{}}]},"containsNull":true},"nullable":true,"metadata":{}},{"name":"status","type":"string","nullable":true,"metadata":{}},{"name":"error","type":"string","nullable":true,"metadata":{}},{"name":"partition_id","type":"integer","nullable":true,"metadata":{}}]}"""
@@ -357,20 +369,81 @@ class PipelineSpec extends AnyFunSuite {
       assert(read.schema.json == schemaJson)
       val committed = read.as[ExtractedRow].collect().map(key).sortBy(_._1).toSeq
       assert(committed == inMemory, s"legacyFirst=$legacyFirst")
+      assertTextDerived(read)
     }
     TableIO.deleteRecursively(new java.io.File(dir))
   }
 
   test("the data-file write serializes no text: its serializer is pruned from the kernel's output") {
     import org.apache.spark.sql.catalyst.plans.logical.SerializeFromObject
+    // runResumable writes the kernel's Dataset as it is, so the write's one
+    // serializer is the kernel's own, and `ExtractedRow` has no `text` field.
     val extracted = Pipeline.extract(spark, PagesGen.smokeTable(spark), "write-plan")
-    val rows = TableIO.dataFileRows(extracted)
-    assert(rows.columns.toSeq == Seq("url", "warc_ts", "text_bytes", "spans", "status", "error", "partition_id"))
-    val plan = rows.queryExecution.optimizedPlan
+    assert(extracted.columns.toSeq == Seq("url", "warc_ts", "text_bytes", "spans", "status", "error", "partition_id"))
+    val plan = extracted.queryExecution.optimizedPlan
     val serialized = plan.collect { case s: SerializeFromObject => s.serializer.map(_.name) }
     assert(serialized.length == 1, plan)
     assert(serialized.head.contains("text_bytes"), plan)
     assert(!serialized.head.contains("text"), plan)
+  }
+
+  /** The committed table of `stagedRotationPages(dir, invalidUtf8Pages)`,
+    * written in two batches: the first run stops after one, and a resume
+    * commits the other.
+    */
+  private def resumedRotationTable(dir: String): DataFrame = {
+    val pages = stagedRotationPages(dir, invalidUtf8Pages)
+    val wh = s"$dir/wh"
+    intercept[RuntimeException] {
+      TableIO.runResumable(spark, pages, wh, "pinned", numBuckets = 4, batchBuckets = 2,
+        failAfterBatches = 1)
+    }
+    TableIO.runResumable(spark, pages, wh, "pinned-resumed", numBuckets = 4, batchBuckets = 2)
+    TableIO.readData(spark, wh).get
+  }
+
+  test("the committed table is pinned: SHA-256 of every readData column but partition_id") {
+    val dir = Files.createTempDirectory("wh-pinned").toString
+    val rows = resumedRotationTable(dir).collect().sortBy(_.getAs[String]("url"))
+    val sha = java.security.MessageDigest.getInstance("SHA-256")
+    val out = new java.io.DataOutputStream(
+      new java.security.DigestOutputStream(java.io.OutputStream.nullOutputStream(), sha))
+    def bytes(b: Array[Byte]): Unit =
+      if (b == null) out.writeInt(-1) else { out.writeInt(b.length); out.write(b) }
+    def string(s: String): Unit = bytes(if (s == null) null else s.getBytes(UTF_8))
+    for (r <- rows) {
+      string(r.getAs[String]("url"))
+      out.writeLong(r.getAs[java.sql.Timestamp]("warc_ts").getTime)
+      string(r.getAs[String]("text"))
+      bytes(r.getAs[Array[Byte]]("text_bytes"))
+      val spans = r.getAs[collection.Seq[Row]]("spans")
+      out.writeInt(spans.length)
+      for (s <- spans) { out.writeInt(s.getInt(0)); out.writeLong(s.getLong(1)); out.writeLong(s.getLong(2)) }
+      string(r.getAs[String]("status"))
+      string(r.getAs[String]("error"))
+    }
+    out.flush()
+    val digest = sha.digest().map(b => f"${b & 0xff}%02x").mkString
+    // Recorded from the table written while the kernel's row still carried
+    // `text`: a change that moves both the table and the in-memory rows
+    // fails here.
+    assert((rows.length, digest) == (58, "7b297b9b68f24e147ef26cf41b4c4d2a1973adc53c9a5cba76abf355c3de0c0a"))
+    TableIO.deleteRecursively(new java.io.File(dir))
+  }
+
+  test("extract_text and the committed table agree on text that is not valid UTF-8") {
+    GraftFunctions.register(spark)
+    val dir = Files.createTempDirectory("wh-sql").toString
+    val table = resumedRotationTable(dir)
+    spark.read.parquet(s"$dir/pages").createOrReplaceTempView("pages_bad_utf8")
+    def byUrl(df: DataFrame) = df.filter(col("url").startsWith("https://bad-utf8/")).collect()
+      .map(r => r.getString(0) -> (r.getString(1), r.getAs[Array[Byte]](2).toSeq)).toMap
+    val sql = byUrl(spark.sql(
+      "SELECT url, extract_text(html).text, extract_text(html).text_bytes FROM pages_bad_utf8"))
+    assert(sql.size == invalidUtf8Texts.length)
+    assert(sql.values.forall { case (_, b) => !isValidUtf8(b.toArray) })
+    assert(sql == byUrl(table.select("url", "text", "text_bytes")))
+    TableIO.deleteRecursively(new java.io.File(dir))
   }
 
   test("resume dedups only the pending buckets: their filter sits below the window's exchange") {
@@ -573,7 +646,7 @@ class PipelineSpec extends AnyFunSuite {
     val joined = extracted.join(broadcast(golden), "url")
     val total = joined.count()
     assert(total == 100)
-    val matched = joined.filter(col("text") === col("expected")).count()
+    val matched = joined.filter(col("text_bytes") === col("expected").cast("binary")).count()
     assert(matched == total) // byte-identical match rate = 1.0
     assert(joined.filter(col("status") =!= "ok").count() == 0)
   }
