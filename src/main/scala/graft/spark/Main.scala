@@ -33,14 +33,25 @@ object Main {
     // only apply when launched standalone.
     val spark = SparkSession.builder()
       .appName("graft-extract")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
+      .config(SessionConf)
       .getOrCreate()
     GraftFunctions.register(spark) // expose extract_text to SQL users too
     try println(run(spark, args))
     finally spark.stop()
   }
+
+  /** The session settings of `main`: AQE, with partition coalescing and
+    * skew splitting. Multi-batch runs read the dedup output that
+    * `TableIO.runResumable` persists, and Spark keeps a cached plan's output
+    * partitioning unless `canChangeCachedPlanOutputPartitioning` is set: at
+    * the default 200 shuffle partitions every batch then ran 200 kernel
+    * tasks and wrote a data file and a lineage row per non-empty one.
+    */
+  private[spark] val SessionConf: Map[String, String] = Map(
+    "spark.sql.adaptive.enabled" -> "true",
+    "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
+    "spark.sql.adaptive.skewJoin.enabled" -> "true",
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true")
 
   /** Runs the job on `spark` and returns the one-line JSON summary. */
   def run(spark: SparkSession, args: Array[String]): String = {

@@ -85,7 +85,7 @@ object Pipeline {
           url = row.url,
           warc_ts = row.warc_ts,
           text_bytes = r.textBytes,
-          spans = r.spans,
+          span_ends = TableIO.spanEnds(r.spans),
           status = r.status,
           error = r.error,
           partition_id = pid)

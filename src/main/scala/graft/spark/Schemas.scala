@@ -25,13 +25,15 @@ final case class KernelInRow(
 /** The kernel's output row and the committed data-file row (SURVEY.md §1.2).
   * `text_bytes` carries the exact extracted bytes for the byte-identity
   * invariant. The table's `text` column, their lossy UTF-8 view, is not
-  * stored: `TableIO.readData` derives it on read.
+  * stored, and the kernel's spans are stored as their end offsets only
+  * (`TableIO.spanEnds`): `TableIO.readData` derives `text` and `spans` on
+  * read.
   */
 final case class ExtractedRow(
     url: String,
     warc_ts: Timestamp,
     text_bytes: Array[Byte],
-    spans: Seq[graft.Span],
+    span_ends: Array[Long],
     status: String,
     error: String,
     partition_id: Int)

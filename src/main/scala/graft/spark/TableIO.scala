@@ -9,9 +9,10 @@ import scala.jdk.CollectionConverters._
 import com.fasterxml.jackson.databind.{DeserializationFeature, JsonNode, PropertyNamingStrategies}
 import com.fasterxml.jackson.databind.json.JsonMapper
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StructType}
 import org.apache.spark.util.CollectionAccumulator
 
 /** Iceberg-shaped table I/O (SURVEY.md §7.3). No Iceberg jars exist in the
@@ -20,7 +21,7 @@ import org.apache.spark.util.CollectionAccumulator
   *   warehouse/
   *     data/<batch-dir>/part-*.parquet       (immutable once committed;
   *                                            `ExtractedRow`s; `readData`
-  *                                            derives `text`)
+  *                                            derives `text` and `spans`)
   *     metadata/v{N}.json                    (snapshot manifest)
   *     metadata/version-hint.text            (atomic pointer to current N)
   *
@@ -163,13 +164,16 @@ object TableIO {
 
   /** Read the committed output table (union of committed data dirs) with
     * `tableColumns`, in their order. The data files hold `ExtractedRow`s;
-    * `text` is derived here from `text_bytes`. The `text` column that data
-    * dirs written before this layout still hold is dropped unread.
+    * `text` is derived here from `text_bytes`, and `spans` from
+    * `span_ends`. The files are read with `storedSchema`, so the `text` that
+    * data dirs of older layouts still hold is never read, and the `spans`
+    * they hold instead of `span_ends` are kept as stored.
     */
   def readData(spark: SparkSession, warehouse: String): Option[DataFrame] =
     currentSnapshot(warehouse).filter(_.dataDirs.nonEmpty).map { s =>
-      spark.read.parquet(s.dataDirs: _*).drop("text")
+      spark.read.schema(storedSchema).parquet(s.dataDirs: _*)
         .withColumn("text", textOf(col("text_bytes")))
+        .withColumn("spans", coalesce(col("spans"), spansOf(col("span_ends"))))
         .select(tableColumns.map(col): _*)
     }
 
@@ -179,7 +183,48 @@ object TableIO {
   private[graft] val textOf: UserDefinedFunction =
     udf((b: Array[Byte]) => if (b == null) null else graft.Extract.textOf(b))
 
-  /** The table's columns: `ExtractedRow`'s, with `text` after `warc_ts`. */
+  /** The stored form of the kernel's spans: each span's end offset only.
+    * `Extract` joins a document's lines with one '\n' and makes span `i`
+    * line `i`, so `page` is the span's index and `start` is 0 for the first
+    * span and the previous end plus 1 after it; `spansOf` derives both back.
+    */
+  private[spark] def spanEnds(spans: Seq[graft.Span]): Array[Long] = {
+    val ends = new Array[Long](spans.length)
+    var i = 0
+    for (sp <- spans) {
+      require(sp.page == i && sp.start == (if (i == 0) 0L else ends(i - 1) + 1),
+        s"span $i is not line $i of the joined text: $spans")
+      ends(i) = sp.end
+      i += 1
+    }
+    ends
+  }
+
+  /** The spans that `spanEnds` stored, as `spansType`: `Span(i, start, end)`
+    * per end offset, with `start` = the previous end + 1 (0 for `i` = 0).
+    */
+  private def spansOf(spanEnds: Column): Column =
+    transform(spanEnds, (end, i) => struct(
+      i.as("page"),
+      coalesce(get(spanEnds, i - 1) + 1, lit(0L)).as("start"),
+      end.as("end"))).cast(spansType)
+
+  /** The table's `spans` type, as the data files of the layout that stored
+    * `Span` structs read back.
+    */
+  private val spansType: DataType = ArrayType(new StructType()
+    .add("page", IntegerType).add("start", LongType).add("end", LongType))
+
+  /** The data files' read schema: `ExtractedRow`'s columns, plus the
+    * `spans` column that data dirs written before `span_ends` hold in its
+    * place. A column that a file does not hold reads as null.
+    */
+  private val storedSchema: StructType =
+    Encoders.product[ExtractedRow].schema.add("spans", spansType)
+
+  /** The table's columns: `ExtractedRow`'s, with `text` after `warc_ts` and
+    * `spans` in place of `span_ends`.
+    */
   private val tableColumns: Seq[String] =
     Seq("url", "warc_ts", "text", "text_bytes", "spans", "status", "error", "partition_id")
 
@@ -193,12 +238,13 @@ object TableIO {
     * written once and read by every consumer, so it is stored as compactly
     * as the columns allow:
     *  - zstd (Iceberg's default codec) instead of Spark's snappy;
-    *  - no dictionary on `url` and `text_bytes`: their values never
-    *    repeat, so the writer hashed every value only to throw the
-    *    dictionary away again; `status`, `error` and `partition_id` keep it;
-    *  - no min/max statistics on `text_bytes`: untruncated, they copy whole
-    *    documents into every footer, and a min/max range of document texts
-    *    prunes almost nothing;
+    *  - no dictionary on `url`, `text_bytes` and `span_ends`: their values
+    *    rarely repeat, so the writer hashed every value only to throw the
+    *    dictionary away again, or, on `span_ends`, to write a larger column;
+    *    `status`, `error` and `partition_id` keep it;
+    *  - no min/max statistics on `text_bytes` and `span_ends`: untruncated,
+    *    the text ones copy whole documents into every footer, and a min/max
+    *    range of document texts or offsets prunes almost nothing;
     *  - no `_SUCCESS` marker: the snapshot manifest is the commit record.
     * The read side needs no option: the footers say all of this.
     */
@@ -206,7 +252,9 @@ object TableIO {
     "compression" -> "zstd",
     "parquet.enable.dictionary#url" -> "false",
     "parquet.enable.dictionary#text_bytes" -> "false",
+    "parquet.enable.dictionary#span_ends.list.element" -> "false",
     "parquet.column.statistics.enabled#text_bytes" -> "false",
+    "parquet.column.statistics.enabled#span_ends.list.element" -> "false",
     "mapreduce.fileoutputcommitter.marksuccessfuljobs" -> "false")
 
   /** The deduped input rows of the `todo` buckets, tagged with their

@@ -165,6 +165,30 @@ class PipelineSpec extends AnyFunSuite {
     TableIO.deleteRecursively(new java.io.File(dir))
   }
 
+  test("spark.Main: at Spark's default shuffle partitions, a batch writes one data file") {
+    import spark.implicits._
+    val docs = (0 until 120).map { i =>
+      PageRow(f"https://main-files/doc-$i%04d", new java.sql.Timestamp(PagesGen.BaseTs + i),
+        PdfFixtures.s01(s"main files doc $i"), "", "en")
+    }
+    val dir = Files.createTempDirectory("main-files").toString
+    docs.toDF().write.parquet(s"$dir/pages")
+    // Main's own session settings, on a session of their own.
+    val session = spark.newSession()
+    Main.SessionConf.foreach { case (k, v) => session.conf.set(k, v) }
+    session.conf.set("spark.sql.shuffle.partitions", "200")
+    Main.run(session, Array("--input", s"$dir/pages", "--warehouse", s"$dir/wh",
+      "--run-id", "files", "--buckets", "4", "--batch-buckets", "1"))
+    val snap = TableIO.currentSnapshot(s"$dir/wh").get
+    assert(snap.dataDirs.length == 4)
+    // The persisted dedup output is coalesced, so each batch is one kernel
+    // task, one data file and one lineage row.
+    assert(snap.dataDirs.map(parquetFiles(_).length) == Seq(1, 1, 1, 1))
+    assert(TableIO.lineage(s"$dir/wh").map(_.input_rows).sum == 120)
+    assert(TableIO.lineage(s"$dir/wh").length == 4)
+    TableIO.deleteRecursively(new java.io.File(dir))
+  }
+
   test("t3 kill/resume: killed job restarts from last committed snapshot, no dups/missing") {
     import spark.implicits._
     val docs = (0 until 200).map { i =>
@@ -257,11 +281,27 @@ class PipelineSpec extends AnyFunSuite {
   private def parquetFiles(dir: String): Seq[String] =
     new java.io.File(dir).list().filter(_.endsWith(".parquet")).map(f => s"$dir/$f").toSeq
 
-  /** A row's document columns. partition_id is left out: it names the task,
-    * not the document.
+  /** A row's document columns, with its spans. partition_id is left out: it
+    * names the task, not the document.
     */
-  private def key(r: ExtractedRow) =
-    (r.url, r.warc_ts, r.text_bytes.toSeq, r.spans, r.status, r.error)
+  private type Key = (String, java.sql.Timestamp, Seq[Byte], Seq[graft.Span], String, String)
+
+  /** A kernel row's key; its spans are rebuilt from the stored end offsets by
+    * the layout's rule: span i is line i, starting one byte after span i-1.
+    */
+  private def key(r: ExtractedRow): Key = {
+    val e = r.span_ends
+    val spans = e.indices.map(i => graft.Span(i, if (i == 0) 0L else e(i - 1) + 1, e(i)))
+    (r.url, r.warc_ts, r.text_bytes.toSeq, spans, r.status, r.error)
+  }
+
+  /** The keys of `readData`'s rows, sorted by url. */
+  private def tableKeys(table: DataFrame): Seq[Key] = {
+    import spark.implicits._
+    table.select("url", "warc_ts", "text_bytes", "spans", "status", "error")
+      .as[(String, java.sql.Timestamp, Array[Byte], Seq[graft.Span], String, String)].collect()
+      .map { case (u, ts, b, sp, st, err) => (u, ts, b.toSeq, sp, st, err) }.sortBy(_._1).toSeq
+  }
 
   /** Every `text` that readData returns is Java's decode of its `text_bytes`. */
   private def assertTextDerived(table: DataFrame): Unit =
@@ -281,9 +321,9 @@ class PipelineSpec extends AnyFunSuite {
     val snap = TableIO.runResumable(spark, pages, wh, "files", numBuckets = 4, batchBuckets = 2)
     assert(snap.dataDirs.length == 2)
     val conf = spark.sessionState.newHadoopConf()
-    val plain = Set("url", "text_bytes")
+    val plain = Set("url", "text_bytes", "span_ends")
     val dictionary = Set("status", "error", "partition_id")
-    val noStats = Set("text_bytes")
+    val noStats = Set("text_bytes", "span_ends")
     var files = 0
     for (d <- snap.dataDirs) {
       val names = new java.io.File(d).list().toSet
@@ -291,7 +331,8 @@ class PipelineSpec extends AnyFunSuite {
       for (f <- names.filter(_.endsWith(".parquet"))) {
         files += 1
         // A data file holds exactly the kernel's rows: the text is stored
-        // once, as text_bytes, and readData derives `text`.
+        // once, as text_bytes, the spans as their end offsets, and readData
+        // derives `text` and `spans`.
         val columns = footerColumns(s"$d/$f")
         assert(columns == Encoders.product[ExtractedRow].schema.fieldNames.toSeq, s"$f: $columns")
         val path = new org.apache.hadoop.fs.Path(s"$d/$f")
@@ -311,10 +352,11 @@ class PipelineSpec extends AnyFunSuite {
     assert(files > 0)
     // The committed rows are the in-memory pipeline's rows, byte for byte.
     val table = TableIO.readData(spark, wh).get
-    val committed = table.as[ExtractedRow].collect().map(key).sortBy(_._1)
-    val inMemory = Pipeline.run(spark, pages, "files").collect().map(key).sortBy(_._1)
+    val committed = tableKeys(table)
+    val inMemory = Pipeline.run(spark, pages, "files").collect().map(key).sortBy(_._1).toSeq
     assert(committed.length == 58)
-    assert(committed.toSeq == inMemory.toSeq)
+    assert(committed == inMemory)
+    assert(committed.exists(_._4.length > 1), committed.map(_._4.length))
     assert(committed.map(_._5).toSet == Set("ok", "error", "empty"))
     // The derived text of invalid UTF-8 is Java's decode, as in the kernel.
     val bad = committed.filter(_._1.startsWith("https://bad-utf8/"))
@@ -340,37 +382,92 @@ class PipelineSpec extends AnyFunSuite {
     val inMemory = Pipeline.run(spark, pages, "mixed").collect().map(key).sortBy(_._1).toSeq
     // readData's schema, recorded from the layout that stored `text`.
     val schemaJson = """{"type":"struct","fields":[{"name":"url","type":"string","nullable":true,"metadata":{}},{"name":"warc_ts","type":"timestamp","nullable":true,"metadata":{}},{"name":"text","type":"string","nullable":true,"metadata":{}},{"name":"text_bytes","type":"binary","nullable":true,"metadata":{}},{"name":"spans","type":{"type":"array","elementType":{"type":"struct","fields":[{"name":"page","type":"integer","nullable":true,"metadata":{}},{"name":"start","type":"long","nullable":true,"metadata":{}},{"name":"end","type":"long","nullable":true,"metadata":{}}]},"containsNull":true},"nullable":true,"metadata":{}},{"name":"status","type":"string","nullable":true,"metadata":{}},{"name":"error","type":"string","nullable":true,"metadata":{}},{"name":"partition_id","type":"integer","nullable":true,"metadata":{}}]}"""
-    // One batch in the layout that stored `text` (with a wrong value, so only
-    // a derived text can pass) and one written by runResumable, in either
-    // commit order.
+    // Data files of the two earlier layouts, from the kernel's own results:
+    // both store `spans` as `Span` structs, and the older one also a `text`
+    // (a wrong value, so only a derived text can pass).
+    def commitLegacy(wh: String, buckets: Seq[Int], withText: Boolean): Unit = {
+      val legacyDir = s"$wh/data/batch-legacy-${if (withText) "text" else "spans"}"
+      val rows = TableIO.pendingInput(pages, 6, buckets).select("url", "warc_ts", "html")
+        .as[KernelInRow].map { p =>
+          val r = graft.Extract(p.html)
+          (p.url, p.warc_ts, r.textBytes, r.spans, r.status, r.error, 0)
+        }.toDF("url", "warc_ts", "text_bytes", "spans", "status", "error", "partition_id")
+      (if (withText) rows.withColumn("text", lit("stale text"))
+        .select("url", "warc_ts", "text", "text_bytes", "spans", "status", "error", "partition_id")
+      else rows).write.parquet(legacyDir)
+      TableIO.commit(wh, buckets.toSet, legacyDir, Nil, 6)
+    }
+    // One batch in each earlier layout and one written by runResumable, with
+    // the new layout committed last or first.
     for (legacyFirst <- Seq(true, false)) {
       val wh = s"$dir/wh-$legacyFirst"
-      def commitLegacy(buckets: Seq[Int]): Unit = {
-        val legacyDir = s"$wh/data/batch-legacy"
-        Pipeline.extract(spark, TableIO.pendingInput(pages, 4, buckets).drop("__bucket"), "legacy")
-          .withColumn("text", lit("stale text")).write.parquet(legacyDir)
-        TableIO.commit(wh, buckets.toSet, legacyDir, Nil, 4)
-      }
       if (legacyFirst) {
-        commitLegacy(Seq(0, 1))
-        TableIO.runResumable(spark, pages, wh, "mixed", numBuckets = 4, batchBuckets = 2)
+        commitLegacy(wh, Seq(0, 1), withText = true)
+        commitLegacy(wh, Seq(2, 3), withText = false)
+        TableIO.runResumable(spark, pages, wh, "mixed", numBuckets = 6, batchBuckets = 2)
       } else {
         intercept[RuntimeException] {
-          TableIO.runResumable(spark, pages, wh, "mixed", numBuckets = 4, batchBuckets = 2,
+          TableIO.runResumable(spark, pages, wh, "mixed", numBuckets = 6, batchBuckets = 2,
             failAfterBatches = 1)
         }
-        commitLegacy(Seq(2, 3))
+        commitLegacy(wh, Seq(2, 3), withText = false)
+        commitLegacy(wh, Seq(4, 5), withText = true)
       }
       val snap = TableIO.currentSnapshot(wh).get
-      assert(snap.committedBuckets == Seq(0, 1, 2, 3) && snap.dataDirs.length == 2, snap)
-      assert(snap.dataDirs.map(d => parquetFiles(d).exists(footerColumns(_).contains("text"))) ==
-        Seq(legacyFirst, !legacyFirst))
+      assert(snap.committedBuckets == (0 until 6) && snap.dataDirs.length == 3, snap)
+      def stores(column: String) = snap.dataDirs.map(d => parquetFiles(d).exists(footerColumns(_).contains(column)))
+      val layouts = if (legacyFirst) Seq("text", "spans", "span_ends") else Seq("span_ends", "spans", "text")
+      assert(stores("text") == layouts.map(_ == "text"))
+      assert(stores("spans") == layouts.map(_ != "span_ends"))
+      assert(stores("span_ends") == layouts.map(_ == "span_ends"))
       val read = TableIO.readData(spark, wh).get
       assert(read.schema.json == schemaJson)
-      val committed = read.as[ExtractedRow].collect().map(key).sortBy(_._1).toSeq
-      assert(committed == inMemory, s"legacyFirst=$legacyFirst")
+      assert(tableKeys(read) == inMemory, s"legacyFirst=$legacyFirst")
       assertTextDerived(read)
     }
+    TableIO.deleteRecursively(new java.io.File(dir))
+  }
+
+  test("readData's spans are the kernel's spans, for every status") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("wh-spans").toString
+    val maxBytes = 1 << 20
+    val timeoutMs = 2000L
+    val lines = Seq("first line of the page", "second (line) & <more>", "third")
+    val families = (0 to PagesGen.PdfVariants).map(v =>
+      s"family-$v" -> PagesGen.payloadFor(v.toLong, s"spans doc $v", v))
+    val multiLine = (0 to 3).map(v => s"multiLinePdf-$v" -> PdfFixtures.multiLinePdf(lines, v))
+    val payloads: Seq[(String, Array[Byte])] = families ++ multiLine ++ Seq(
+      "s02" -> PdfFixtures.s02(), "s03" -> PdfFixtures.s03(), "s04" -> PdfFixtures.s04(),
+      "s05" -> PdfFixtures.s05(), "s08" -> PdfFixtures.s08(), "s09" -> PdfFixtures.s09(),
+      "s10" -> PdfFixtures.s10(), "s13" -> PdfFixtures.s13(), "s14" -> PdfFixtures.s14(),
+      "twoPages" -> PdfFixtures.twoPages("page one", "page two"),
+      "inheritedResources" -> PdfFixtures.inheritedResources(),
+      "htmlMultiPara" -> PdfFixtures.htmlMultiPara(lines),
+      "empty" -> Array.emptyByteArray,
+      "oversize" -> Array.fill[Byte](maxBytes + 1)('x'),
+      "timeout" -> PdfFixtures.sHostile(),
+      "error-no-spans" -> "%PDF-garbage".getBytes(US_ASCII),
+      "error-partial" -> PdfFixtures.s16())
+    val pages = payloads.zipWithIndex.map { case ((name, payload), i) =>
+      PageRow(s"https://spans/$name", new java.sql.Timestamp(PagesGen.BaseTs + i), payload, "", "en")
+    }.toDF()
+    val wh = s"$dir/wh"
+    TableIO.runResumable(spark, pages, wh, "spans", numBuckets = 4, batchBuckets = 2,
+      maxBytesPerDoc = maxBytes, timeoutMs = timeoutMs)
+    val table = TableIO.readData(spark, wh).get.select("url", "status", "spans")
+      .as[(String, String, Seq[graft.Span])].collect()
+      .map { case (url, status, spans) => url.stripPrefix("https://spans/") -> (status, spans) }.toMap
+    val kernel = payloads.map { case (name, payload) =>
+      val r = graft.Extract(payload, maxBytes, timeoutMs)
+      name -> (r.status, r.spans)
+    }.toMap
+    assert(table == kernel)
+    assert(table.values.map(_._1).toSet == Set("ok", "error", "empty", "skipped_oversize", "timeout"))
+    assert(table("error-partial")._1 == "error" && table("error-partial")._2.nonEmpty)
+    assert(table("error-no-spans")._1 == "error" && table("error-no-spans")._2.isEmpty)
+    assert(table("htmlMultiPara")._2.length == lines.length)
+    assert(table("twoPages")._2.length == 2)
     TableIO.deleteRecursively(new java.io.File(dir))
   }
 
@@ -379,7 +476,7 @@ class PipelineSpec extends AnyFunSuite {
     // runResumable writes the kernel's Dataset as it is, so the write's one
     // serializer is the kernel's own, and `ExtractedRow` has no `text` field.
     val extracted = Pipeline.extract(spark, PagesGen.smokeTable(spark), "write-plan")
-    assert(extracted.columns.toSeq == Seq("url", "warc_ts", "text_bytes", "spans", "status", "error", "partition_id"))
+    assert(extracted.columns.toSeq == Seq("url", "warc_ts", "text_bytes", "span_ends", "status", "error", "partition_id"))
     val plan = extracted.queryExecution.optimizedPlan
     val serialized = plan.collect { case s: SerializeFromObject => s.serializer.map(_.name) }
     assert(serialized.length == 1, plan)
