@@ -19,68 +19,87 @@ final case class ContentOp(operand: String, params: mutable.ArrayBuffer[PdfObj])
   *  - references "N G R" are not recognized;
   *  - hex strings keep only hex chars (the file layer keeps all non-ws);
   *  - "BI" triggers inline-image parsing with the <ws>EI<ws> state machine.
+  *
+  * It streams: `next()` lexes one operation into `operand` and a reused
+  * param buffer, so a caller holds one operation at a time. `parse()`
+  * collects every operation, as the reference's `Parse` does.
   */
 final class ContentParser(content0: Array[Byte]) {
   import PdfTokens.eofExit
   // virtual trailing '\n' (parser.go:32) without copying the payload
   private val cur = new ByteCursor(content0, trailingNewline = true)
 
-  // Two-entry MRU over operand byte patterns: real streams alternate a tiny
-  // operand set (Td/Tj runs), so most ops skip the per-op String allocation
-  // + intern lookup entirely. Misses delegate to the original path.
-  private var mruA: Array[Byte] = null
-  private var mruAs: String = null
-  private var mruB: Array[Byte] = null
-  private var mruBs: String = null
+  private var opCount = 0
+  private var op: String = null
+  private var params = new Array[PdfObj](8)
+  private var nParams = 0
+  // byte range of the operand token that parseObject last returned null for
+  private var tokStart = 0
+  private var tokEnd = 0
 
-  private def internOperand(bytes: Array[Byte]): String = {
-    if (mruA != null && java.util.Arrays.equals(mruA, bytes)) return mruAs
-    if (mruB != null && java.util.Arrays.equals(mruB, bytes)) {
-      // promote to front
-      val tb = mruB; val ts = mruBs
-      mruB = mruA; mruBs = mruAs
-      mruA = tb; mruAs = ts
-      return mruAs
-    }
-    val s = ContentParser.operandString(bytes)
-    mruB = mruA; mruBs = mruAs
-    mruA = bytes; mruAs = s
-    s
+  /** The current operation's operand keyword (null before the first
+    * `next()` and after the end of stream).
+    */
+  def operand: String = op
+  def paramCount: Int = nParams
+  /** Param `i` of the current operation; valid until the next `next()`. */
+  def param(i: Int): PdfObj = {
+    if (i < 0 || i >= nParams) throw new IndexOutOfBoundsException(s"param $i of $nParams")
+    params(i)
   }
 
-  /** Parse all operations (pdf/contentstream/parser.go:39-73). */
+  private def push(obj: PdfObj): Unit = {
+    if (nParams == params.length) params = java.util.Arrays.copyOf(params, nParams * 2)
+    params(nParams) = obj
+    nParams += 1
+  }
+
+  /** Lex the next operation (one turn of pdf/contentstream/parser.go:39-73's
+    * loop). False at the clean end of stream, which drops a dangling
+    * operation's params.
+    */
+  def next(): Boolean = {
+    opCount += 1
+    if ((opCount & 0x3ff) == 0) Deadline.check()
+    nParams = 0
+    // the clean end after the last operation, without parseObject's EofExit
+    cur.skipWhitespace()
+    if (cur.remaining < 2) { op = null; return false }
+    try {
+      var obj = parseObject()
+      while (obj != null) { push(obj); obj = parseObject() }
+    } catch {
+      case _: EofExit => op = null; nParams = 0; return false
+    }
+    op = ContentParser.operator(cur.data, tokStart, tokEnd - tokStart)
+    // EOF INSIDE an inline image is an error, not a clean stream end:
+    // the reference's ParseInlineImage returns io.EOF as an error and
+    // Parse() propagates it (only a bare EOF at the top of the token
+    // loop ends parsing successfully) — a truncated BI..ID payload must
+    // abort with partial text, not extract as ok.
+    if (op eq "BI") // a known keyword is always its one shared literal
+      push(try parseInlineImage()
+        catch { case _: EofExit => throw new PdfError("EOF in inline image") })
+    true
+  }
+
+  /** Parse all operations (pdf/contentstream/parser.go:39-73), each with a
+    * copy of its params.
+    */
   def parse(): mutable.ArrayBuffer[ContentOp] = {
     val operations = mutable.ArrayBuffer.empty[ContentOp]
-    try {
-      var opCount = 0
-      while (true) {
-        opCount += 1
-        if ((opCount & 0x3ff) == 0) Deadline.check()
-        val params = mutable.ArrayBuffer.empty[PdfObj]
-        var operand: String = null
-        while (operand == null) {
-          val (obj, isOperand) = parseObject()
-          if (isOperand) operand = internOperand(obj.asInstanceOf[PdfStr].bytes)
-          else params += obj
-        }
-        val op = ContentOp(operand, params)
-        operations += op
-        // EOF INSIDE an inline image is an error, not a clean stream end:
-        // the reference's ParseInlineImage returns io.EOF as an error and
-        // Parse() propagates it (only a bare EOF at the top of the token
-        // loop ends parsing successfully) — a truncated BI..ID payload must
-        // abort with partial text, not extract as ok.
-        if (operand == "BI") {
-          op.params +=
-            (try parseInlineImage()
-            catch { case _: EofExit => throw new PdfError("EOF in inline image") })
-        }
-      }
-    } catch {
-      case _: EofExit => // successful exit point
+    while (next()) {
+      val ps = new mutable.ArrayBuffer[PdfObj](nParams)
+      var i = 0
+      while (i < nParams) { ps += params(i); i += 1 }
+      operations += ContentOp(op, ps)
     }
     operations
   }
+
+  /** An operand token inside an array or dict is kept as its bytes. */
+  private def valueOf(obj: PdfObj): PdfObj =
+    if (obj != null) obj else new PdfStr(java.util.Arrays.copyOfRange(cur.data, tokStart, tokEnd))
 
   private def parseNumber(): PdfObj = ObjLexer.parseNumberFrom(cur)
 
@@ -100,8 +119,7 @@ final class ContentParser(content0: Array[Byte]) {
       if (b == -1) throw new EofExit
       if (b == ']') { cur.readByte(); done = true }
       else {
-        val (obj, _) = parseObject()
-        arr.items += obj
+        arr.items += valueOf(parseObject())
       }
     }
     arr
@@ -146,8 +164,7 @@ final class ContentParser(content0: Array[Byte]) {
         }
         if (!handled) {
           cur.skipWhitespace()
-          val (v, _) = parseObject()
-          dict.set(keyName, v)
+          dict.set(keyName, valueOf(parseObject()))
         }
       }
     }
@@ -155,13 +172,14 @@ final class ContentParser(content0: Array[Byte]) {
   }
 
   /** parser.go:497-516: operand = run of non-ws non-delimiter bytes; EOF
-    * mid-operand drops the operand (clean stream end).
+    * mid-operand drops the operand (clean stream end). Sets the token range
+    * and returns null, parseObject's mark of an operand.
     */
-  private def parseOperand(): PdfStr = {
-    // Direct span scan over the backing array (one copy, no BAOS); the
-    // virtual trailing '\n' at pos == data.length is whitespace and
-    // terminates the operand exactly like the original loop. A true EOF
-    // (pos == size, only possible without the virtual byte) still EOF-exits.
+  private def parseOperand(): PdfObj = {
+    // Direct span scan over the backing array; the virtual trailing '\n' at
+    // pos == data.length is whitespace and terminates the operand exactly
+    // like the original loop. A true EOF (pos == size, only possible
+    // without the virtual byte) still EOF-exits.
     val data = cur.data
     val dlen = data.length
     val start = cur.pos
@@ -175,36 +193,38 @@ final class ContentParser(content0: Array[Byte]) {
       if (isDelimiter(c) || isWhiteSpace(c)) done = true
       else p += 1
     }
-    val out = java.util.Arrays.copyOfRange(data, start, math.min(p, dlen))
+    if (p == start) throw new PdfError("Invalid operand")
+    tokStart = start
+    tokEnd = math.min(p, dlen)
     cur.pos = p
-    new PdfStr(out)
+    null
   }
 
-  /** parser.go:521-591. Returns (object, isOperand). */
-  def parseObject(): (PdfObj, Boolean) = {
+  /** parser.go:521-591. Returns the object, or null for an operand token,
+    * whose bytes are `cur.data` over [tokStart, tokEnd).
+    */
+  private def parseObject(): PdfObj = {
     cur.skipWhitespace()
     while (true) {
       if (cur.remaining < 2) throw new EofExit
       val b0 = cur.peekByte; val b1 = cur.peekAt(1)
       if (b0 == '%') cur.skipComments(eofExit)
-      else if (b0 == '/') return (PdfName(PdfTokens.name(cur, eofExit)), false)
-      else if (b0 == '(') return (new PdfStr(PdfTokens.literalString(cur, eofExit)), false)
-      else if (b0 == '<' && b1 != '<') return (new PdfStr(PdfTokens.hexDigits(cur, eofExit)), false)
-      else if (b0 == '[') return (parseArray(), false)
-      else if (isFloatDigit(b0) || (b0 == '-' && isFloatDigit(b1))) return (parseNumber(), false)
-      else if (b0 == '<' && b1 == '<') return (parseDict(), false)
+      else if (b0 == '/') return PdfName(PdfTokens.name(cur, eofExit))
+      else if (b0 == '(') return new PdfStr(PdfTokens.literalString(cur, eofExit))
+      else if (b0 == '<' && b1 != '<') return new PdfStr(PdfTokens.hexDigits(cur, eofExit))
+      else if (b0 == '[') return parseArray()
+      else if (isFloatDigit(b0) || (b0 == '-' && isFloatDigit(b1))) return parseNumber()
+      else if (b0 == '<' && b1 == '<') return parseDict()
       else {
         val rem = cur.remaining
         @inline def at(i: Int): Int = cur.peekAt(i)
         if (rem > 3 && at(0) == 'n' && at(1) == 'u' && at(2) == 'l' && at(3) == 'l')
-          return (parseNull(), false)
+          return parseNull()
         if (rem > 4 && at(0) == 'f' && at(1) == 'a' && at(2) == 'l' && at(3) == 's' && at(4) == 'e')
-          return (parseBool(), false)
+          return parseBool()
         if (rem > 3 && at(0) == 't' && at(1) == 'r' && at(2) == 'u' && at(3) == 'e')
-          return (parseBool(), false)
-        val operand = parseOperand()
-        if (operand.bytes.length < 1) throw new PdfError("Invalid operand")
-        return (operand, true)
+          return parseBool()
+        return parseOperand()
       }
     }
     throw new IllegalStateException("unreachable")
@@ -218,14 +238,14 @@ final class ContentParser(content0: Array[Byte]) {
     val props = new PdfDict
     while (true) {
       cur.skipWhitespace()
-      val (obj, isOperand) = parseObject()
-      if (!isOperand) {
+      val obj = parseObject()
+      if (obj != null) {
         val param = obj match {
           case n: PdfName => n.name
           case _ => throw new PdfError("Invalid inline image property (expecting name)")
         }
-        val (valueObj, valIsOp) = parseObject()
-        if (valIsOp) throw new PdfError("Not expecting an operand")
+        val valueObj = parseObject()
+        if (valueObj == null) throw new PdfError("Not expecting an operand")
         param match {
           case "BPC" | "BitsPerComponent" => props.set("BitsPerComponent", valueObj)
           case "CS" | "ColorSpace"        => props.set("ColorSpace", valueObj)
@@ -240,7 +260,7 @@ final class ContentParser(content0: Array[Byte]) {
           case other => throw new PdfError(s"Unknown inline image parameter $other")
         }
       } else {
-        val operand = new String(obj.asInstanceOf[PdfStr].bytes, ISO_8859_1)
+        val operand = ContentParser.operator(cur.data, tokStart, tokEnd - tokStart)
         if (operand == "EI") return new InlineImage(props, Array.emptyByteArray)
         else if (operand == "ID") {
           // Skip one whitespace byte if present.
@@ -284,24 +304,50 @@ final class ContentParser(content0: Array[Byte]) {
 }
 
 object ContentParser {
-  /** Known operand keywords interned to avoid a String allocation per op
-    * (Table A.1 operator summary; unknown operands still allocate).
+  /** Operand keywords of Table A.1's operator summary. All are 1-3 bytes,
+    * so each is keyed by its bytes packed into an Int with the length in the
+    * top byte, in an open-addressing table.
     */
-  private val knownOperands: java.util.HashMap[String, String] = {
-    val m = new java.util.HashMap[String, String]()
-    Seq("b", "B", "b*", "B*", "BDC", "BI", "BMC", "BT", "BX", "c", "cm",
-      "CS", "cs", "d", "d0", "d1", "Do", "DP", "EI", "EMC", "ET", "EX", "f",
-      "F", "f*", "G", "g", "gs", "h", "i", "ID", "j", "J", "K", "k", "l",
-      "m", "M", "MP", "n", "q", "Q", "re", "RG", "rg", "ri", "s", "S", "SC",
-      "sc", "SCN", "scn", "sh", "T*", "Tc", "Td", "TD", "Tf", "Tj", "TJ",
-      "TL", "Tm", "Tr", "Ts", "Tw", "Tz", "v", "w", "W", "W*", "y", "'",
-      "\"").foreach(op => m.put(op, op))
-    m
+  private val known = Seq("b", "B", "b*", "B*", "BDC", "BI", "BMC", "BT", "BX", "c", "cm",
+    "CS", "cs", "d", "d0", "d1", "Do", "DP", "EI", "EMC", "ET", "EX", "f",
+    "F", "f*", "G", "g", "gs", "h", "i", "ID", "j", "J", "K", "k", "l",
+    "m", "M", "MP", "n", "q", "Q", "re", "RG", "rg", "ri", "s", "S", "SC",
+    "sc", "SCN", "scn", "sh", "T*", "Tc", "Td", "TD", "Tf", "Tj", "TJ",
+    "TL", "Tm", "Tr", "Ts", "Tw", "Tz", "v", "w", "W", "W*", "y", "'",
+    "\"")
+  private final val Slots = 256
+  private val keys = new Array[Int](Slots) // 0 = empty: a key's length byte is >= 1
+  private val names = new Array[String](Slots)
+
+  private def key(data: Array[Byte], from: Int, len: Int): Int = {
+    var k = len << 24
+    var i = 0
+    while (i < len) { k |= (data(from + i) & 0xff) << (8 * i); i += 1 }
+    k
+  }
+  private def slot(k: Int): Int = (k * 0x9e3779b1) >>> 24
+
+  for (name <- known) {
+    val k = key(name.getBytes(ISO_8859_1), 0, name.length)
+    var s = slot(k)
+    while (keys(s) != 0) s = (s + 1) & (Slots - 1)
+    keys(s) = k
+    names(s) = name
   }
 
-  private[pdf] def operandString(bytes: Array[Byte]): String = {
-    val s = new String(bytes, java.nio.charset.StandardCharsets.ISO_8859_1)
-    val interned = knownOperands.get(s)
-    if (interned != null) interned else s
+  /** The operand keyword over data[from, from + len): a known keyword is
+    * its shared String, read from the bytes without a copy; any other is a
+    * new String.
+    */
+  private def operator(data: Array[Byte], from: Int, len: Int): String = {
+    if (len <= 3) {
+      val k = key(data, from, len)
+      var s = slot(k)
+      while (keys(s) != 0) {
+        if (keys(s) == k) return names(s)
+        s = (s + 1) & (Slots - 1)
+      }
+    }
+    new String(data, from, len, ISO_8859_1)
   }
 }

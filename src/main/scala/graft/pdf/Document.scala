@@ -252,19 +252,23 @@ final class PdfFileParser(val data: Array[Byte]) {
   }
 
   /** Backward windowed scan (1000 bytes) for the LAST %%EOF; returns its
-    * start offset (pdf/core/parser.go:1079-1117).
+    * start offset (pdf/core/parser.go:1079-1117). Windows are walked from
+    * the end, and each is scanned backward for the last marker wholly
+    * inside it, so a marker that straddles two windows is found in neither,
+    * as in the reference.
     */
-  private def seekToEOFMarker(fSize: Long): Long = {
+  private[pdf] def seekToEOFMarker(fSize: Long): Long = {
     var offset = 0L
     var buflen = 1000L
     while (offset < fSize) {
       if (fSize <= buflen + offset) buflen = fSize - offset
       val start = (fSize - offset - buflen).toInt
-      val s = new String(data, start, buflen.toInt, ISO_8859_1)
-      val m = eof.matcher(s)
-      var lastIdx = -1
-      while (m.find()) lastIdx = m.start()
-      if (lastIdx >= 0) return start + lastIdx
+      var i = start + buflen.toInt - 5
+      while (i >= start) {
+        if (data(i) == '%' && data(i + 1) == '%' && data(i + 2) == 'E' &&
+            data(i + 3) == 'O' && data(i + 4) == 'F') return i
+        i -= 1
+      }
       offset += buflen
     }
     throw new PdfError("EOF not found")

@@ -462,47 +462,51 @@ object Filters {
     def name = "ASCII85Decode"
     /** Faithful port of the reference's group loop (encoding.go:1349-1424):
       * 'z' only at group start, '~>' EOD with pad-with-u(84) partial groups,
-      * embedded whitespace skipped.
+      * embedded whitespace skipped. A group that input runs out in keeps its
+      * missing codes at 0 and writes 4 bytes. Each group accumulates its
+      * base-85 value in place and writes into one output array, sized for
+      * 5 codes per 4 bytes and grown only when 'z' groups outrun that.
       */
     def decodeBytes(encoded: Array[Byte]): Array[Byte] = {
-      val decoded = new ByteArrayOutputStream()
+      val len = encoded.length
+      var out = new Array[Byte](4 * ((len + 4) / 5))
+      var n = 0
       var i = 0
       var eod = false
-      while (i < encoded.length && !eod) {
-        val codes = new Array[Int](5)
+      while (i < len && !eod) {
+        if (n + 4 > out.length) out = java.util.Arrays.copyOf(out, math.max(2 * out.length, n + 4))
+        var value = 0L
+        var count = 0 // codes read in this group
         var spaces = 0
         var j = 0
         var toWrite = 4
         var break = false
         while (j < 5 + spaces && !break) {
-          if (i + j == encoded.length) break = true
+          if (i + j == len) break = true
           else {
-            var code = encoded(i + j) & 0xff
+            val code = encoded(i + j) & 0xff
             if (PdfObjs.isWhiteSpace(code)) { spaces += 1; j += 1 }
-            else if (code == '~' && i + j + 1 < encoded.length && (encoded(i + j + 1) & 0xff) == '>') {
-              toWrite = (j - spaces) - 1
-              if (toWrite < 0) toWrite = 0
+            else if (code == '~' && i + j + 1 < len && (encoded(i + j + 1) & 0xff) == '>') {
+              toWrite = math.max(count - 1, 0)
               eod = true; break = true
             } else if (code >= '!' && code <= 'u') {
-              code -= '!'
-              codes(j - spaces) = code
+              value = value * 85 + (code - '!')
+              count += 1
               j += 1
-            } else if (code == 'z' && j - spaces == 0) {
-              toWrite = 4; j += 1; break = true
+            } else if (code == 'z' && count == 0) {
+              j += 1; break = true
             } else throw new PdfError("Invalid code encountered")
           }
         }
         i += j
-        var m = toWrite + 1
-        while (m < 5) { codes(m) = 84; m += 1 }
-        val value = codes(0).toLong * 85 * 85 * 85 * 85 + codes(1).toLong * 85 * 85 * 85 +
-          codes(2).toLong * 85 * 85 + codes(3).toLong * 85 + codes(4).toLong
+        // missing codes: 84 past toWrite (the EOD pad), 0 up to it
+        var k = count
+        while (k < 5) { value = value * 85 + (if (k > toWrite) 84 else 0); k += 1 }
         val v = value.toInt
-        val db = Array[Byte](((v >> 24) & 0xff).toByte, ((v >> 16) & 0xff).toByte,
-          ((v >> 8) & 0xff).toByte, (v & 0xff).toByte)
-        decoded.write(db, 0, math.max(0, math.min(toWrite, 4)))
+        var b = 0
+        while (b < toWrite) { out(n) = (v >>> (24 - 8 * b)).toByte; n += 1; b += 1 }
       }
-      decoded.toByteArray
+      if (n == out.length) out else java.util.Arrays.copyOf(out, n)
     }
   }
 

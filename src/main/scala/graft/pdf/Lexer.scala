@@ -6,8 +6,8 @@ import java.util.regex.Pattern
 
 import PdfObjs._
 
-/** Regexes of the file-layer parser's cold paths (version, EOF, startxref
-  * and xref markers). These mirror the reference's object-signature regexes
+/** Regexes of the file-layer parser's cold paths (version, startxref and
+  * xref markers). These mirror the reference's object-signature regexes
   * (pdf/core/parser.go:23-33); `\s` is written as an explicit class to match
   * Go's definition ([\t\n\f\r ]) rather than Java's. The shapes read once
   * per token or line (references, numbers, object headers, xref-table
@@ -17,7 +17,6 @@ import PdfObjs._
 object PdfPatterns {
   private final val S = "[\\t\\n\\f\\r ]"
   val pdfVersion: Pattern = Pattern.compile("%PDF-(\\d)\\.(\\d)")
-  val eof: Pattern = Pattern.compile("%%EOF")
   val xrefTable: Pattern = Pattern.compile(s"$S*xref$S*")
   val startXref: Pattern = Pattern.compile(s"startx?ref$S*(\\d+)")
   val repairXrefTable: Pattern = Pattern.compile(s"[\\r\\n]$S*(xref)$S*[\\r\\n]")
@@ -430,7 +429,7 @@ object ObjLexer {
           if (d < 0 || d > 9) { ok = false; j = end }
           else { v = v * 10 + d; j += 1 }
         }
-        if (ok) return PdfInt(if (neg) -v else v)
+        if (ok) return PdfInt.of(if (neg) -v else v)
       }
     }
     val str = new String(cur.data, start, len, java.nio.charset.StandardCharsets.ISO_8859_1)

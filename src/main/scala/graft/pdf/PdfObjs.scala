@@ -17,6 +17,13 @@ sealed trait PdfObj
 
 final case class PdfBool(value: Boolean) extends PdfObj
 final case class PdfInt(value: Long) extends PdfObj
+object PdfInt {
+  private val small = Array.tabulate(1280)(i => new PdfInt(i - 256L))
+  /** The lexers' PdfInt: one shared box per value in [-256, 1024), the
+    * coordinates and counts that content streams repeat.
+    */
+  def of(v: Long): PdfInt = if (v >= -256 && v < 1024) small((v + 256).toInt) else new PdfInt(v)
+}
 final case class PdfReal(value: Double) extends PdfObj
 
 /** Raw byte string. MUST NOT be converted to a JVM String: byte identity of

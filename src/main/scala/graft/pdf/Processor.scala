@@ -14,44 +14,37 @@ final case class GraphicsState(
     var colorStroking: AnyRef,
     var colorNonStroking: AnyRef)
 
-/** Content-stream processor (pdf/contentstream/processor.go:197-262): handles
-  * q/Q and the color operators internally, then dispatches every operation to
-  * the registered handler. Handler or internal errors abort processing.
+/** Content-stream processor (pdf/contentstream/processor.go:197-262), one
+  * operation at a time: `step` handles q/Q and the color operators, and the
+  * caller then runs its own handler on the same operation. Errors of either
+  * abort processing.
   */
-final class ContentProcessor(operations: Seq[ContentOp]) {
+final class ContentProcessor(resources: PdfResources) {
 
   private val stack = mutable.Stack.empty[GraphicsState]
-  private var gs: GraphicsState = GraphicsState(CsDeviceGray, CsDeviceGray, null, null)
+  private var gs: GraphicsState = GraphicsState(CsDeviceGray, CsDeviceGray, grayZero, grayZero)
 
-  type Handler = (ContentOp, GraphicsState, PdfResources) => Unit
-
-  /** Process with an all-operands handler. Throws PdfError on abort. */
-  def process(resources: PdfResources, handler: Handler): Unit = {
-    gs = GraphicsState(CsDeviceGray, CsDeviceGray, grayZero, grayZero)
-    for (op <- operations) {
-      op.operand match {
-        case "q" => stack.push(gs.copy())
-        case "Q" =>
-          // the reference panics on an unmatched Q (slice underflow); we
-          // surface it as the standard abort error (partial text preserved)
-          if (stack.isEmpty) throw new PdfError("graphics state stack underflow (unmatched Q)")
-          gs = stack.pop()
-        case "CS" => handleCS(op, resources, stroking = true)
-        case "cs" => handleCS(op, resources, stroking = false)
-        case "SC" => handleSC(op, stroking = true, allowPattern = false)
-        case "SCN" => handleSC(op, stroking = true, allowPattern = true)
-        case "sc" => handleSC(op, stroking = false, allowPattern = false)
-        case "scn" => handleSC(op, stroking = false, allowPattern = true)
-        case "G" => handleShortcut(op, CsDeviceGray, stroking = true)
-        case "g" => handleShortcut(op, CsDeviceGray, stroking = false)
-        case "RG" => handleShortcut(op, CsDeviceRGB, stroking = true)
-        case "rg" => handleShortcut(op, CsDeviceRGB, stroking = false)
-        case "K" => handleShortcut(op, CsDeviceCMYK, stroking = true)
-        case "k" => handleShortcut(op, CsDeviceCMYK, stroking = false)
-        case _ => ()
-      }
-      handler(op, gs, resources)
-    }
+  /** Process the parser's current operation. Throws PdfError on abort. */
+  def step(op: ContentParser): Unit = op.operand match {
+    case "q" => stack.push(gs.copy())
+    case "Q" =>
+      // the reference panics on an unmatched Q (slice underflow); we
+      // surface it as the standard abort error (partial text preserved)
+      if (stack.isEmpty) throw new PdfError("graphics state stack underflow (unmatched Q)")
+      gs = stack.pop()
+    case "CS" => handleCS(op, stroking = true)
+    case "cs" => handleCS(op, stroking = false)
+    case "SC" => handleSC(op, stroking = true, allowPattern = false)
+    case "SCN" => handleSC(op, stroking = true, allowPattern = true)
+    case "sc" => handleSC(op, stroking = false, allowPattern = false)
+    case "scn" => handleSC(op, stroking = false, allowPattern = true)
+    case "G" => handleShortcut(op, CsDeviceGray, stroking = true)
+    case "g" => handleShortcut(op, CsDeviceGray, stroking = false)
+    case "RG" => handleShortcut(op, CsDeviceRGB, stroking = true)
+    case "rg" => handleShortcut(op, CsDeviceRGB, stroking = false)
+    case "K" => handleShortcut(op, CsDeviceCMYK, stroking = true)
+    case "k" => handleShortcut(op, CsDeviceCMYK, stroking = false)
+    case _ => ()
   }
 
   private def grayZero: AnyRef = Array(0.0)
@@ -61,7 +54,7 @@ final class ContentProcessor(operations: Seq[ContentOp]) {
     * resources unconditionally in the reference (a panic on nil there); we
     * surface that as an abort error.
     */
-  private def getColorspace(name: String, resources: PdfResources): PdfColorspace = {
+  private def getColorspace(name: String): PdfColorspace = {
     name match {
       case "DeviceGray" => return CsDeviceGray
       case "DeviceRGB"  => return CsDeviceRGB
@@ -122,14 +115,14 @@ final class ContentProcessor(operations: Seq[ContentOp]) {
     case CsPattern => null // a pattern has no initial color
   }
 
-  private def handleCS(op: ContentOp, resources: PdfResources, stroking: Boolean): Unit = {
-    if (op.params.length < 1) throw new PdfError("Too few parameters")
-    if (op.params.length > 1) throw new PdfError("Too many parameters")
-    val name = op.params(0) match {
+  private def handleCS(op: ContentParser, stroking: Boolean): Unit = {
+    if (op.paramCount < 1) throw new PdfError("Too few parameters")
+    if (op.paramCount > 1) throw new PdfError("Too many parameters")
+    val name = op.param(0) match {
       case PdfName(n) => n
       case _          => throw new PdfError("Type check error")
     }
-    val cs = getColorspace(name, resources)
+    val cs = getColorspace(name)
     val color = getInitialColor(cs)
     if (stroking) { gs.colorspaceStroking = cs; gs.colorStroking = color }
     else { gs.colorspaceNonStroking = cs; gs.colorNonStroking = color }
@@ -138,21 +131,21 @@ final class ContentProcessor(operations: Seq[ContentOp]) {
   /** SC/SCN/sc/scn (processor.go:331-421): param count must equal component
     * count (pattern-space exempt under SCN/scn only).
     */
-  private def handleSC(op: ContentOp, stroking: Boolean, allowPattern: Boolean): Unit = {
+  private def handleSC(op: ContentParser, stroking: Boolean, allowPattern: Boolean): Unit = {
     val cs = if (stroking) gs.colorspaceStroking else gs.colorspaceNonStroking
     val isPattern = cs == CsPattern
     if (!(allowPattern && isPattern)) {
-      if (op.params.length != cs.numComponents)
+      if (op.paramCount != cs.numComponents)
         throw new PdfError("Invalid number of parameters")
     }
-    val color = colorFromObjects(cs, op.params.toSeq)
+    val color = colorFromParams(cs, op)
     if (stroking) gs.colorStroking = color else gs.colorNonStroking = color
   }
 
-  private def handleShortcut(op: ContentOp, cs: PdfColorspace, stroking: Boolean): Unit = {
-    if (op.params.length != cs.numComponents)
+  private def handleShortcut(op: ContentParser, cs: PdfColorspace, stroking: Boolean): Unit = {
+    if (op.paramCount != cs.numComponents)
       throw new PdfError("Invalid number of parameters")
-    val color = colorFromObjects(cs, op.params.toSeq)
+    val color = colorFromParams(cs, op)
     if (stroking) { gs.colorspaceStroking = cs; gs.colorStroking = color }
     else { gs.colorspaceNonStroking = cs; gs.colorNonStroking = color }
   }
@@ -167,14 +160,14 @@ final class ContentProcessor(operations: Seq[ContentOp]) {
     * params converted to floats, then the family's ColorFromFloats. Pattern
     * takes a trailing name.
     */
-  private def colorFromObjects(cs: PdfColorspace, params: Seq[PdfObj]): AnyRef = cs match {
+  private def colorFromParams(cs: PdfColorspace, op: ContentParser): AnyRef = cs match {
     case CsPattern =>
-      if (params.length < 1) throw new PdfError("Invalid number of parameters")
-      params.last match {
+      if (op.paramCount < 1) throw new PdfError("Invalid number of parameters")
+      op.param(op.paramCount - 1) match {
         case PdfName(n) => n
         case _          => throw new PdfError("Type check error")
       }
-    case _ => colorFromFloats(cs, params.map(num).toArray)
+    case _ => colorFromFloats(cs, Array.tabulate(op.paramCount)(i => num(op.param(i))))
   }
 
   /** ColorFromFloats per family (pdf/model/colorspace.go): [0,1] range

@@ -657,6 +657,60 @@ class DocumentSpec extends AnyFunSuite {
     assert(r.status == "ok", r.error)
     assert(r.text == "many streams")
   }
+
+  test("%%EOF scan: the last marker of the last window holding one; a marker across two windows is in neither") {
+    // The reference's scan (pdf/core/parser.go:1079-1117): the %%EOF regex
+    // over each 1000-byte window, windows walked from the end. -1 = none.
+    def regexScan(data: Array[Byte]): Long = {
+      val eof = java.util.regex.Pattern.compile("%%EOF")
+      val fSize = data.length.toLong
+      var offset = 0L
+      var buflen = 1000L
+      while (offset < fSize) {
+        if (fSize <= buflen + offset) buflen = fSize - offset
+        val start = (fSize - offset - buflen).toInt
+        val m = eof.matcher(new String(data, start, buflen.toInt, ISO_8859_1))
+        var last = -1
+        while (m.find()) last = m.start()
+        if (last >= 0) return start + last
+        offset += buflen
+      }
+      -1L
+    }
+    def scan(data: Array[Byte]): Long =
+      try new PdfFileParser(data).seekToEOFMarker(data.length.toLong)
+      catch { case e: PdfError if e.getMessage == "EOF not found" => -1L }
+    def withMarkers(size: Int, at: Int*): Array[Byte] = {
+      val d = Array.fill[Byte](size)('x'.toByte)
+      for (p <- at) "%%EOF".getBytes(ISO_8859_1).copyToArray(d, p)
+      d
+    }
+    // several markers in the last window [2000, 3000): the last one
+    assert(scan(withMarkers(3000, 2100, 2500, 2995)) == 2995)
+    // none in the last window: the last marker of [1000, 2000)
+    assert(scan(withMarkers(3000, 100, 1100, 1500)) == 1500)
+    // across [1000, 2000) | [2000, 3000): in neither window
+    assert(scan(withMarkers(3000, 500, 1997)) == 500)
+    assert(scan(withMarkers(3000, 1997)) == -1)
+    // size 1003: windows [3, 1003), then the short [0, 3)
+    assert(scan(withMarkers(1003, 1)) == -1)
+    assert(scan(withMarkers(1003, 3)) == 3)
+    assert(scan(withMarkers(4)) == -1)
+    // seeded layouts: bytes of the marker alphabet plus planted markers, many
+    // near a window edge, against the regex scan
+    val rnd = new scala.util.Random(1079)
+    val alphabet = "%%EOFx".getBytes(ISO_8859_1)
+    for (_ <- 0 until 3000) {
+      val size = rnd.nextInt(3200)
+      val d = Array.fill[Byte](size)(alphabet(rnd.nextInt(alphabet.length)))
+      for (_ <- 0 until rnd.nextInt(4) if size >= 5) {
+        val edge = size - 1000 * (1 + rnd.nextInt(3)) - rnd.nextInt(6)
+        val at = if (rnd.nextBoolean() && edge >= 0 && edge + 5 <= size) edge else rnd.nextInt(size - 4)
+        "%%EOF".getBytes(ISO_8859_1).copyToArray(d, at)
+      }
+      assert(scan(d) == regexScan(d), new String(d, ISO_8859_1))
+    }
+  }
 }
 
 /** Oracles and inputs for the file-layer matcher specs: the reference's

@@ -4,6 +4,9 @@ import java.nio.charset.StandardCharsets.{ISO_8859_1, UTF_8}
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.Extract
+import graft.fixtures.PdfFixtures
+
 /** Extractor goldens ported from /root/reference/pdf/extractor/text_test.go
   * and /root/reference/pdf/contentstream/contentstream_test.go.
   */
@@ -126,5 +129,69 @@ endbfrange
     val r = TextExtractor.extractText(content.getBytes(ISO_8859_1), res)
     assert(r.error.isEmpty)
     assert(new String(r.bytes, UTF_8) == "AB☺")
+  }
+
+  private def extract(content: String): PageExtract =
+    TextExtractor.extractText(content.getBytes(ISO_8859_1), null)
+
+  // The reference lexes the whole stream before it processes any of it, so
+  // a lex error anywhere wins over a processing error before it.
+  test("precedence: a lex error after a processing error gives empty text and the lex error") {
+    val r = extract("BT (partial) Tj ET 0.5 0.5 g BT (after) Tj ET ] Tj")
+    assert(r.error.contains("Invalid operand"))
+    assert(r.bytes.isEmpty)
+    val r2 = extract("BT (partial) Tj ET 0.5 0.5 g BI /W 1 /Bogus 2 ID x EI BT (after) Tj ET")
+    assert(r2.error.contains("Unknown inline image parameter Bogus"))
+    assert(r2.bytes.isEmpty)
+  }
+
+  test("precedence: a processing error followed by a clean end gives the partial text and the processing error") {
+    // the unterminated string is a clean end of stream that drops its op
+    val r = extract("BT (partial) Tj ET 0.5 0.5 g BT (after) Tj ET BT (dangling")
+    assert(r.error.contains("Invalid number of parameters"))
+    assert(new String(r.bytes, UTF_8) == "partial")
+  }
+
+  test("a truncated BI ... ID after a Tj gives empty text and the inline-image EOF error") {
+    val r = extract("BT (before) Tj ET BI /W 2 /H 1 /CS /G /BPC 8 ID \u0001\u0002")
+    assert(r.error.contains("EOF in inline image"))
+    assert(r.bytes.isEmpty)
+    val r2 = extract("BT (before) Tj ET Q BI /W 2 /H 1 ID \u0001")
+    assert(r2.error.contains("EOF in inline image"))
+    assert(r2.bytes.isEmpty)
+  }
+
+  test("an unmatched Q after text keeps the text before it, unless the rest fails to lex") {
+    val r = extract("BT (text) Tj ET Q BT (more) Tj ET")
+    assert(r.error.contains("graphics state stack underflow (unmatched Q)"))
+    assert(new String(r.bytes, UTF_8) == "text")
+    val r2 = extract("BT (text) Tj ET Q BT (more) Tj ET ]")
+    assert(r2.error.contains("Invalid operand"))
+    assert(r2.bytes.isEmpty)
+  }
+
+  test("a stream of over a million operators extracts through Extract with bounded per-op state") {
+    val lines = (0 until 550000).map(i => s"w$i")
+    val ops = 2L * lines.length + 2 // BT, Tf, then Tj or Td + Tj per line, ET
+    val pdf = PdfFixtures.multiLinePdf(lines, 0)
+    val doc = PdfDocument.open(pdf)
+    val parser = new ContentParser(doc.allContentStreams(doc.pages.head))
+    var n = 0L
+    while (parser.next()) n += 1
+    assert(n == ops)
+    // Extract allocates about 50 B per operation: the decoded stream, the
+    // text and each op's params, and holds one operation at a time. An
+    // operation list, with a Tuple2, buffer and ContentOp per op, took
+    // about 380 B.
+    val mx = java.lang.management.ManagementFactory.getThreadMXBean
+      .asInstanceOf[com.sun.management.ThreadMXBean]
+    assume(mx.isThreadAllocatedMemorySupported && mx.isThreadAllocatedMemoryEnabled)
+    val tid = Thread.currentThread().getId
+    val before = mx.getThreadAllocatedBytes(tid)
+    val r = Extract(pdf)
+    val perOp = (mx.getThreadAllocatedBytes(tid) - before).toDouble / ops
+    assert(r.status == "ok", r.error)
+    assert(java.util.Arrays.equals(r.textBytes, lines.mkString("\n").getBytes(ISO_8859_1)))
+    assert(perOp < 160, f"$perOp%.1f B allocated per operation")
   }
 }
