@@ -13,8 +13,9 @@ import graft.spark.PagesGen
   * Modes (args(0)):
   *  - "queries" [names...]: noop-time each named SparkEntry gate (default:
   *    the Bench headline set), cold + 2 warm reps, one JSON line each.
-  *  - "micro": single-threaded per-variant microbench of payload BUILD and
-  *    kernel EXTRACT cost (the two sides of every extraction query).
+  *  - "micro": single-threaded PdfWriter.rewrite + Extract time per
+  *    rotation variant (x42's shape), one JSON line each. The kernel's own
+  *    cost per layer is perfbench's kernel probe.
   *  - "plan" <name> <outFile>: write .explain("formatted") of a query.
   *
   * The end-to-end production-path profile (stage and kernel-layer tables)
@@ -71,39 +72,14 @@ object BenchExtra {
 
       case "micro" =>
         import spark.implicits._
-        // One local (driver-side) pass: per-variant build + extract cost over
-        // the sf docs, single-threaded so the numbers are per-core truth.
-        val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-          .select("doc_id", "text").as[(Long, String)].collect()
-        val nDocs = math.min(docs.length, 500)
-        val sample = docs.take(nDocs)
-        // pagesBench shape: 40 perturbed lines, variants 0..4
-        for (variant <- 0 until 5) {
-          val lines0 = (0 until 40)
-          var built: Array[Array[Byte]] = null
-          val tBuild = timed {
-            built = sample.map { case (id, text) =>
-              val lines = lines0.map(k => s"[p$k r0 d$id] $text")
-              if (variant == 4) graft.fixtures.PdfFixtures.htmlMultiPara(lines)
-              else graft.fixtures.PdfFixtures.multiLinePdf(lines, variant)
-            }
-          }
-          val bytes = built.map(_.length.toLong).sum
-          val tExtract = timed { built.foreach(p => Extract(p)) }
-          println(f"""{"micro":"bench_v$variant","n":$nDocs,"build_s":$tBuild%.3f,"extract_s":$tExtract%.3f,"payload_bytes":$bytes}""")
-        }
-        // x10/x42 shape: the 24 rotation variants, one doc each family
+        // x42's shape, single-threaded: each of the 24 rotation variants of
+        // 100 sf docs, rewritten by PdfWriter and extracted again.
+        val sample = spark.read.parquet(s"$sfDir/documents.parquet")
+          .select("doc_id", "text").as[(Long, String)].collect().take(100)
         for (variant <- 0 until PagesGen.PdfVariants) {
-          val sub = sample.take(100)
-          var built: Array[Array[Byte]] = null
-          val tBuild = timed {
-            built = sub.map { case (id, text) =>
-              PagesGen.payloadFor(id, text, variant)
-            }
-          }
-          val tExtract = timed { built.foreach(p => Extract(p)) }
+          val built = sample.map { case (id, text) => PagesGen.payloadFor(id, text, variant) }
           val tRewrite = timed {
-            built.zip(sub).foreach { case (p, (id, _)) =>
+            built.zip(sample).foreach { case (p, (id, _)) =>
               import graft.pdf.PdfWriter
               val enc = (id % 3) match {
                 case 1 => Some(PdfWriter.WriterEncrypt(
@@ -115,7 +91,7 @@ object BenchExtra {
               Extract(PdfWriter.rewrite(p, Nil, enc))
             }
           }
-          println(f"""{"micro":"rot_v$variant","n":${sub.length},"build_s":$tBuild%.3f,"extract_s":$tExtract%.3f,"rewrite_extract_s":$tRewrite%.3f}""")
+          println(f"""{"micro":"rot_v$variant","n":${sample.length},"rewrite_extract_s":$tRewrite%.3f}""")
         }
 
       case "plan" =>

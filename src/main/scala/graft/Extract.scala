@@ -16,15 +16,24 @@ final case class Span(page: Int, start: Long, end: Long)
   *  - textBytes carries the EXACT extracted bytes (the byte-identity unit of
   *    the north rule); `text` is their lossy UTF-8 string view,
   *    `Extract.textOf`.
+  *  - spanEnds: the end offset of each line of textBytes. Lines are joined
+  *    with one '\n', so line i starts one byte after line i-1 ends; `spans`
+  *    is that view.
   *  - status: ok | error | empty | skipped_oversize | timeout
   *  - error: message for status=error (text still holds the partial output).
   */
 final case class ExtractResult(
     textBytes: Array[Byte],
-    spans: Seq[Span],
+    spanEnds: Array[Long],
     status: String,
     error: String) {
   def text: String = Extract.textOf(textBytes)
+
+  /** One Span(i, start, end) per line: `start` is 0 for line 0 and the
+    * previous end + 1 after it.
+    */
+  def spans: Seq[Span] =
+    spanEnds.indices.map(i => Span(i, if (i == 0) 0L else spanEnds(i - 1) + 1, spanEnds(i)))
 }
 
 /** Top-level per-document extraction: payload dispatch (PDF magic vs HTML),
@@ -59,7 +68,7 @@ object Extract {
     }
 
   private val failedResult: (String, String) => ExtractResult =
-    (status, msg) => ExtractResult(Array.emptyByteArray, Nil, status, msg)
+    (status, msg) => ExtractResult(Array.emptyByteArray, Array.emptyLongArray, status, msg)
 
   /** The per-document guard of every kernel path (text and image
     * extraction): empty and oversize payloads short-circuit, `body` runs
@@ -138,24 +147,24 @@ object Extract {
     joinLines(lines.iterator.map(_.getBytes(UTF_8)).toIndexedSeq, None)
   }
 
-  /** The one line join of both branches: `parts` joined with '\n', one
-    * Span(i, start, end) per part, status error if `error` is set. A single
-    * part is the output itself, uncopied.
+  /** The one line join of both branches: `parts` joined with '\n', the end
+    * offset of each part, status error if `error` is set. A single part is
+    * the output itself, uncopied.
     */
   private def joinLines(parts: collection.IndexedSeq[Array[Byte]], error: Option[String]): ExtractResult = {
     val bytes =
       if (parts.length == 1) parts(0)
       else new Array[Byte](math.max(0, parts.length - 1) + parts.iterator.map(_.length).sum)
-    val spans = List.newBuilder[Span]
+    val ends = new Array[Long](parts.length)
     var off = 0
     for (i <- parts.indices) {
       if (i > 0) { bytes(off) = '\n'; off += 1 }
       val p = parts(i)
       if (p ne bytes) System.arraycopy(p, 0, bytes, off, p.length)
-      spans += Span(i, off.toLong, (off + p.length).toLong)
       off += p.length
+      ends(i) = off
     }
-    ExtractResult(bytes, spans.result(), if (error.isEmpty) "ok" else "error", error.getOrElse(""))
+    ExtractResult(bytes, ends, if (error.isEmpty) "ok" else "error", error.getOrElse(""))
   }
 
   private def safeMsg(e: Throwable): String = {

@@ -146,20 +146,23 @@ object PdfImages {
         }
       } catch { case t: PdfTimeout => throw t
         case _: Exception => errors += 1 }
-      // ---- inline images, in content order
+      // ---- inline images, in content order: the page is lexed one
+      // operation at a time, keeping only its inline images, and they are
+      // decoded after the clean end of stream, so a lex error anywhere on
+      // the page costs its inline images and one counted error.
       try {
-        val content = doc.allContentStreams(page)
-        val ops = new ContentParser(content).parse()
-        for (op <- ops if op.operand == "BI") {
-          op.params.lastOption match {
-            case Some(ii: InlineImage) =>
-              try {
-                out += inlineImage(doc, page, ii, pageIdx, idx)
-                idx += 1
-              } catch { case _: Exception => errors += 1 }
-            case _ => ()
+        val parser = new ContentParser(doc.allContentStreams(page))
+        val inline = mutable.ArrayBuffer.empty[InlineImage]
+        while (parser.next())
+          if (parser.operand == "BI") parser.param(parser.paramCount - 1) match {
+            case ii: InlineImage => inline += ii
+            case _               => ()
           }
-        }
+        for (ii <- inline)
+          try {
+            out += inlineImage(doc, page, ii, pageIdx, idx)
+            idx += 1
+          } catch { case _: Exception => errors += 1 }
       } catch { case t: PdfTimeout => throw t
         case _: Exception => errors += 1 }
     }

@@ -58,7 +58,7 @@ object ExtractTextEval {
       r.textBytes,
       UTF8String.fromString(r.status),
       UTF8String.fromString(r.error),
-      r.spans.length)
+      r.spanEnds.length)
   }
 }
 

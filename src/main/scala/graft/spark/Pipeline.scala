@@ -20,8 +20,8 @@ import graft.Extract
   *    partition beats range-by-size, which would cluster the whales);
   *    per-doc byte cap (skipped_oversize) bounds the worst straggler;
   *  - lineage: accumulated per task partition (one row per partition —
-  *    thousands of rows at cluster scale, trivially collectible; TableIO
-  *    commits them in the batch's snapshot manifest).
+  *    thousands of rows at cluster scale, trivially collectible; the
+  *    batch's snapshot manifest records them).
   */
 object Pipeline {
 
@@ -85,7 +85,7 @@ object Pipeline {
           url = row.url,
           warc_ts = row.warc_ts,
           text_bytes = r.textBytes,
-          span_ends = TableIO.spanEnds(r.spans),
+          span_ends = r.spanEnds,
           status = r.status,
           error = r.error,
           partition_id = pid)

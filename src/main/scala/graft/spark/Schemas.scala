@@ -26,8 +26,8 @@ final case class KernelInRow(
   * `text_bytes` carries the exact extracted bytes for the byte-identity
   * invariant. The table's `text` column, their lossy UTF-8 view, is not
   * stored, and the kernel's spans are stored as their end offsets only
-  * (`TableIO.spanEnds`): `TableIO.readData` derives `text` and `spans` on
-  * read.
+  * (`ExtractResult.spanEnds`): `TableIO.readData` derives `text` and `spans`
+  * on read.
   */
 final case class ExtractedRow(
     url: String,

@@ -141,16 +141,26 @@ object TableIO {
   }
 
   /** Commit a new snapshot: previous content + this batch's buckets, data
-    * dir and lineage rows. Atomic via write-manifest-then-rename-hint.
+    * dir and lineage rows. Atomic via write-manifest-then-rename-hint. A
+    * batch whose buckets the current snapshot already holds (a run planned
+    * from an older snapshot) is refused before anything is written, as
+    * Delta Lake's commit refuses a conflicting transaction: committing it
+    * would hold those buckets' rows twice.
     */
   def commit(warehouse: String, buckets: Set[Int], dataDir: String,
              lineage: Seq[LineageRow], numBuckets: Int): Snapshot = {
     Files.createDirectories(metaDir(warehouse))
     val prev = currentSnapshot(warehouse)
+    prev.foreach { s =>
+      val conflict = s.committedBuckets.filter(buckets)
+      if (conflict.nonEmpty)
+        throw new IllegalStateException(s"snapshot v${s.version} of $warehouse already " +
+          s"commits buckets ${conflict.mkString(", ")}; refusing to commit $dataDir")
+    }
     val next = Snapshot(
       version = prev.map(_.version + 1).getOrElse(1),
       numBuckets = numBuckets,
-      committedBuckets = (prev.map(_.committedBuckets).getOrElse(Nil) ++ buckets).distinct.sorted,
+      committedBuckets = (prev.map(_.committedBuckets).getOrElse(Nil) ++ buckets).sorted,
       dataDirs = prev.map(_.dataDirs).getOrElse(Nil) :+ dataDir,
       lineage = lineage.sortBy(_.partition_id))
     val manifest = metaDir(warehouse).resolve(s"v${next.version}.json")
@@ -183,25 +193,9 @@ object TableIO {
   private[graft] val textOf: UserDefinedFunction =
     udf((b: Array[Byte]) => if (b == null) null else graft.Extract.textOf(b))
 
-  /** The stored form of the kernel's spans: each span's end offset only.
-    * `Extract` joins a document's lines with one '\n' and makes span `i`
-    * line `i`, so `page` is the span's index and `start` is 0 for the first
-    * span and the previous end plus 1 after it; `spansOf` derives both back.
-    */
-  private[spark] def spanEnds(spans: Seq[graft.Span]): Array[Long] = {
-    val ends = new Array[Long](spans.length)
-    var i = 0
-    for (sp <- spans) {
-      require(sp.page == i && sp.start == (if (i == 0) 0L else ends(i - 1) + 1),
-        s"span $i is not line $i of the joined text: $spans")
-      ends(i) = sp.end
-      i += 1
-    }
-    ends
-  }
-
-  /** The spans that `spanEnds` stored, as `spansType`: `Span(i, start, end)`
-    * per end offset, with `start` = the previous end + 1 (0 for `i` = 0).
+  /** The spans of the stored end offsets (`ExtractResult.spanEnds`), as
+    * `spansType`: `Span(i, start, end)` per end offset, with `start` = the
+    * previous end + 1 (0 for `i` = 0), as `ExtractResult.spans` derives them.
     */
   private def spansOf(spanEnds: Column): Column =
     transform(spanEnds, (end, i) => struct(

@@ -117,16 +117,21 @@ class ImagesSpec extends AnyFunSuite {
     assert(g.images.isEmpty && g.nErrors == 1)
   }
 
+  /** A one-page PDF whose page has `content` and no resources. */
+  private def onePageContent(content: Array[Byte]): Array[Byte] = {
+    val bld = new PdfFixtures.Builder()
+    bld.obj(1, "<< /Type /Catalog /Pages 2 0 R >>")
+    bld.obj(2, "<< /Type /Pages /Kids [3 0 R] /Count 1 /MediaBox [0 0 612 792] >>")
+    bld.obj(3, "<< /Type /Page /Parent 2 0 R /Contents 4 0 R >>")
+    bld.stream(4, s"<< /Length ${content.length} >>", content)
+    bld.build()
+  }
+
+  /** A 2x1 gray inline image, unfiltered: samples 'a' and 'b'. */
+  private val inlineImage = "BI /W 2 /H 1 /BPC 8 ID ab EI "
+
   test("inline image mask and unknown filter semantics") {
     // IM true -> 1 bpc / 1 component regardless of BPC
-    def onePageContent(content: Array[Byte]): Array[Byte] = {
-      val bld = new PdfFixtures.Builder()
-      bld.obj(1, "<< /Type /Catalog /Pages 2 0 R >>")
-      bld.obj(2, "<< /Type /Pages /Kids [3 0 R] /Count 1 /MediaBox [0 0 612 792] >>")
-      bld.obj(3, "<< /Type /Page /Parent 2 0 R /Contents 4 0 R >>")
-      bld.stream(4, s"<< /Length ${content.length} >>", content)
-      bld.build()
-    }
     val maskContent = {
       val bos = new java.io.ByteArrayOutputStream()
       bos.write("BI /W 8 /H 2 /IM true ID ".getBytes(ISO_8859_1))
@@ -143,5 +148,37 @@ class ImagesSpec extends AnyFunSuite {
     val bad = PdfImages.imagesOf(onePageContent(
       "BI /W 2 /H 2 /BPC 8 /F /NoSuchFilter ID abcd EI ".getBytes(ISO_8859_1)))
     assert(bad.images.isEmpty && bad.nErrors == 1)
+  }
+
+  test("a lex error after an inline image costs the page's inline images and one error") {
+    val ok = PdfImages.imagesOf(onePageContent((inlineImage + "0 g").getBytes(ISO_8859_1)))
+    assert(ok.nErrors == 0)
+    assert(ok.images.map(i => (i.source, i.width, i.height, i.samples.toSeq)) ==
+      Seq(("inline", 2, 1, Seq('a'.toInt, 'b'.toInt))))
+    // '#zz' is not a hex escape: the name fails to lex after the image
+    val bad = PdfImages.imagesOf(onePageContent((inlineImage + "/Bad#zz Tj").getBytes(ISO_8859_1)))
+    assert(bad.images.isEmpty && bad.nErrors == 1)
+  }
+
+  test("a page of over a million operators returns its one inline image, holding no operation list") {
+    val ops = 1100000
+    val content = new java.io.ByteArrayOutputStream()
+    content.write(inlineImage.getBytes(ISO_8859_1))
+    val op = "1 w ".getBytes(ISO_8859_1)
+    for (_ <- 0 until ops) content.write(op)
+    val doc = PdfDocument.open(onePageContent(content.toByteArray))
+    val mx = java.lang.management.ManagementFactory.getThreadMXBean
+      .asInstanceOf[com.sun.management.ThreadMXBean]
+    assume(mx.isThreadAllocatedMemorySupported && mx.isThreadAllocatedMemoryEnabled)
+    val tid = Thread.currentThread().getId
+    val before = mx.getThreadAllocatedBytes(tid)
+    val scan = PdfImages.imagesOf(doc)
+    val perOp = (mx.getThreadAllocatedBytes(tid) - before).toDouble / ops
+    assert(scan.nErrors == 0)
+    assert(scan.images.map(i => (i.source, i.width, i.height)) == Seq(("inline", 2, 1)))
+    // The scan keeps only the inline images: it allocated under 1 B per
+    // operation. Collecting the operation list, with a ContentOp and a param
+    // buffer per operation, allocated about 87 B.
+    assert(perOp < 16, f"$perOp%.1f B allocated per operation")
   }
 }

@@ -231,6 +231,27 @@ class PipelineSpec extends AnyFunSuite {
     assert(e.getMessage.contains("numBuckets"))
   }
 
+  test("commit refuses a batch whose buckets the current snapshot already holds") {
+    import spark.implicits._
+    val pages = PagesGen.smokeTable(spark)
+    val wh = Files.createTempDirectory("wh-overlap").toString
+    val first = TableIO.runResumable(spark, pages, wh, "first", numBuckets = 4, batchBuckets = 4)
+    // A second run planned from the empty snapshot extracted every bucket
+    // again; its commit of buckets 1..3 comes after the first run's.
+    val lateDir = s"$wh/data/batch-1-late"
+    Pipeline.run(spark, pages, "late").write.parquet(lateDir)
+    val e = intercept[IllegalStateException] {
+      TableIO.commit(wh, Set(3, 1, 2), lateDir, Nil, 4)
+    }
+    assert(e.getMessage.contains(s"snapshot v${first.version} "), e.getMessage)
+    assert(e.getMessage.contains("buckets 1, 2, 3;"), e.getMessage)
+    assert(TableIO.currentSnapshot(wh).get == first)
+    assert(!new java.io.File(s"$wh/metadata/v${first.version + 1}.json").exists())
+    val urls = TableIO.readData(spark, wh).get.select("url").as[String].collect()
+    assert(urls.length == 7 && urls.distinct.length == 7, urls.toSeq)
+    TableIO.deleteRecursively(new java.io.File(wh))
+  }
+
   /** 48 rotation documents (two of each PDF family) plus the smoke table's
     * statuses and duplicate url, staged as parquet: a local relation would
     * let the optimizer fold filters into the data, out of the plan.
@@ -444,6 +465,8 @@ class PipelineSpec extends AnyFunSuite {
       "twoPages" -> PdfFixtures.twoPages("page one", "page two"),
       "inheritedResources" -> PdfFixtures.inheritedResources(),
       "htmlMultiPara" -> PdfFixtures.htmlMultiPara(lines),
+      "emptyMiddlePage" -> threePagesMiddleEmpty("page one", "page three"),
+      "htmlNoLines" -> "<html><head></head><body></body></html>".getBytes(US_ASCII),
       "empty" -> Array.emptyByteArray,
       "oversize" -> Array.fill[Byte](maxBytes + 1)('x'),
       "timeout" -> PdfFixtures.sHostile(),
@@ -468,7 +491,27 @@ class PipelineSpec extends AnyFunSuite {
     assert(table("error-no-spans")._1 == "error" && table("error-no-spans")._2.isEmpty)
     assert(table("htmlMultiPara")._2.length == lines.length)
     assert(table("twoPages")._2.length == 2)
+    // An empty page is a zero-length span between its neighbours.
+    assert(table("emptyMiddlePage") ==
+      ("ok", Seq(graft.Span(0, 0, 8), graft.Span(1, 9, 9), graft.Span(2, 10, 20))))
+    // An HTML page with no title and no kept block is ok with no line.
+    assert(table("htmlNoLines") == ("ok", Nil))
     TableIO.deleteRecursively(new java.io.File(dir))
+  }
+
+  /** Three pages whose middle one has an empty content stream; the others
+    * show one line of raw Tj text each (no fonts).
+    */
+  private def threePagesMiddleEmpty(first: String, last: String): Array[Byte] = {
+    val bld = new PdfFixtures.Builder()
+    def text(t: String) = s"BT ($t) Tj ET".getBytes(US_ASCII)
+    bld.obj(1, "<< /Type /Catalog /Pages 2 0 R >>")
+    bld.obj(2, "<< /Type /Pages /Kids [3 0 R 5 0 R 7 0 R] /Count 3 /MediaBox [0 0 612 792] >>")
+    for ((content, i) <- Seq(text(first), Array.emptyByteArray, text(last)).zipWithIndex) {
+      bld.obj(3 + 2 * i, s"<< /Type /Page /Parent 2 0 R /Contents ${4 + 2 * i} 0 R >>")
+      bld.stream(4 + 2 * i, s"<< /Length ${content.length} >>", content)
+    }
+    bld.build()
   }
 
   test("the data-file write serializes no text: its serializer is pruned from the kernel's output") {
